@@ -7,7 +7,10 @@ reference: Airflow/dags/Sec_data_pipeline.py + rdbms_transformation.py):
 
 Loads the quarter's TSVs (COPY semantics), runs the data-quality suite
 (dbt test parity), builds the star schema + JSON documents through the
-model registry, and writes fact tables to the warehouse.
+model registry, and writes fact tables to the warehouse. As a failing
+``dbt test`` fails the reference's Airflow run (rdbms_transformation.py:
+147-152), the exit status is 1 when any check fails; the warehouse is
+still written, as the reference's models run before its tests.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ def main(argv: list[str] | None = None) -> int:
     print(f"[secspark] loaded quarter {label}: " +
           ", ".join(f"{k}={v.count()}" for k, v in raw.items()))
 
+    failed = []
     if not args.skip_checks:
         results = run_checks(
             sec_quarter_suite(raw["sub"], raw["tag"], raw["num"], raw["pre"])
@@ -49,7 +53,7 @@ def main(argv: list[str] | None = None) -> int:
                  "financial_statements_json"):
         print(f"[secspark] {name}: {built[name].count()} rows")
     spark.stop()
-    return 0
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

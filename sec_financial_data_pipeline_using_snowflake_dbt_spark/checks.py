@@ -8,18 +8,20 @@ testing_for_date_validity.sql, Notes.md:367-404) maps to a check here.
 
 A check is a function DataFrame → DataFrame of *violating rows* (dbt's
 contract: a test passes iff the generated query returns zero rows).
-``run_checks`` mirrors ``dbt test``: evaluates a suite, reports
-violation counts, optionally raises.
+``run_checks`` mirrors ``dbt test``: evaluates a suite and reports
+violation counts; ``assert_checks`` raises on any failure.
 
 Scale posture: each check is one aggregation/anti-join over the table —
 shuffle-light (count-style checks are map-side combinable), no
-collects; ``run_checks`` can evaluate a suite in one pass per table if
-the checks are count-based (``summarize``).
+collects. ``run_checks`` runs a whole suite as ONE Spark query (the
+violation frames, tagged by name, unioned and counted per name), which
+returns one row per failing check.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
@@ -127,19 +129,22 @@ class CheckResult:
         return self.violations == 0
 
 
-def run_checks(
-    suite: dict[str, Callable[[], DataFrame]], fail_fast: bool = False
-) -> list[CheckResult]:
+def run_checks(suite: dict[str, Callable[[], DataFrame]]) -> list[CheckResult]:
     """Evaluate a named suite of zero-arg check thunks; mirrors the dbt
     test runner (reference Airflow/dags/rdbms_transformation.py:147-152:
-    nonzero rows ⇒ fail)."""
-    results = []
-    for name, thunk in suite.items():
-        n = thunk().count()
-        results.append(CheckResult(name, n))
-        if fail_fast and n:
-            break
-    return results
+    nonzero rows ⇒ fail).
+
+    Every thunk's violation frame is tagged with its check name and the
+    tagged frames are unioned into one ``groupBy("check").count()``: one
+    query for the whole suite. A check absent from the result has no
+    violations."""
+    if not suite:
+        return []
+    tagged = [
+        thunk().select(F.lit(name).alias("check")) for name, thunk in suite.items()
+    ]
+    counts = dict(reduce(DataFrame.union, tagged).groupBy("check").count().collect())
+    return [CheckResult(name, counts.get(name, 0)) for name in suite]
 
 
 def assert_checks(suite: dict[str, Callable[[], DataFrame]]) -> None:

@@ -10,7 +10,9 @@ declared dependencies and a materialization:
               plan; Catalyst optimizes across model boundaries.
 - ``cache`` — ``persist()`` (≙ the reference's "staging as table for
               performance", dbt_project.yml:33): hot intermediates
-              shared by several downstreams.
+              shared by several downstreams. A re-run replaces the
+              entry an earlier run cached (``session.persist_fresh``),
+              so re-landed sources never meet stale staging rows.
 - ``table`` — written to the warehouse as Parquet, with the
               ``cluster_by`` analogue ``repartition(keys)
               .sortWithinPartitions(keys)`` (X7: Snowflake cluster_by on
@@ -28,6 +30,8 @@ from graphlib import TopologicalSorter
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import persist_fresh
 
 
 @dataclass
@@ -149,7 +153,7 @@ class Registry:
                 raise KeyError(f"model {name}: missing inputs {missing}")
             df = m.fn(built)
             if m.materialization == "cache":
-                df = df.persist()
+                df = persist_fresh(df)
             elif m.materialization == "table":
                 if not warehouse_dir:
                     raise ValueError(

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Spark-side default parallelism. On a 1000-executor cluster you would set
 # spark.sql.shuffle.partitions ~ 2-3x total cores (or rely on AQE
@@ -140,3 +140,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def persist_fresh(df: DataFrame) -> DataFrame:
+    """``df.persist()`` that replaces any cached entry with an equal plan.
+
+    Spark's cache manager matches plans, and a file scan's plan names its
+    root path, not the files under it. A plain ``persist()`` of a re-read
+    of re-landed files therefore keeps serving the rows cached from the
+    old files. Unpersisting first drops that entry; with none cached it
+    is a no-op.
+    """
+    df.unpersist()
+    return df.persist()

@@ -25,7 +25,11 @@ the row: short/long rows and type-conversion failures all populate
 the in-struct corrupt-record field deterministically. NULL_IF
 literals are rewritten in the raw line *before* parsing (Snowflake
 applies NULL_IF pre-conversion), so 'NULL' in a numeric column loads
-as NULL rather than an error. One linear scan, no cache, codegen'd.
+as NULL rather than an error. One linear scan, and the parse runs once
+per row: rows are selected inside the generator that emits the parsed
+struct, where the optimizer cannot duplicate ``from_csv`` into a
+pushed-down filter. ``read_sec_quarter`` persists what it loads, so the
+counts, the checks and the model DAG all read one parse.
 """
 
 from __future__ import annotations
@@ -35,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import SEC_SCHEMAS
+from ..session import persist_fresh
 
 NULL_LITERALS = ("", "NULL", "null")
 _CORRUPT = "_corrupt_record"
@@ -101,10 +106,11 @@ def parse_tsv_lines(
     line = F.when(has_quote, line).otherwise(
         F.regexp_replace(line, f"(?<=^|{sep_q})(?:{null_alt})(?={sep_q}|$)", "")
     )
+    rows = lines.select(line.alias("_l"), has_quote.alias("_q"))
 
     # SKIP_HEADER=1: the header line carries the schema's column names
     header_line = sep.join(f.name for f in schema.fields)
-    not_header = F.lower(line) != header_line.lower()
+    not_header = F.lower(F.col("_l")) != header_line.lower()
 
     parse_schema = T.StructType(
         list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())]
@@ -120,11 +126,21 @@ def parse_tsv_lines(
         "mode": "PERMISSIVE",
         "columnNameOfCorruptRecord": _CORRUPT,
     }
-    rows = lines.filter(not_header).select(
-        F.from_csv(line, parse_schema.simpleString(), opts).alias("_r"),
-        has_quote.alias("_q"),
+    parsed = F.from_csv(F.col("_l"), parse_schema.simpleString(), opts)
+
+    def keep(r: F.Column) -> F.Column:
+        if on_error_continue:
+            return not_header & r[_CORRUPT].isNull()
+        return not_header
+
+    # Row selection happens inside ONE generator over the parsed struct.
+    # A Filter on the struct (or on the prepared line) would be pushed
+    # below the projection that computes it, and the optimizer would
+    # then evaluate from_csv (and the regex chain) once in the filter
+    # and again in the projection.
+    rows = rows.select(
+        F.explode(F.filter(F.array(parsed), keep)).alias("_r"), "_q"
     )
-    bad = F.col(f"_r.{_CORRUPT}").isNotNull()
 
     def _out(f: T.StructField) -> F.Column:
         c = F.col(f"_r.{f.name}")
@@ -139,7 +155,7 @@ def parse_tsv_lines(
 
     out_cols = [_out(f) for f in schema.fields]
     if on_error_continue:
-        return rows.filter(~bad).select(*out_cols)
+        return rows.select(*out_cols)
     audit = corrupt_record_col or _CORRUPT
     return rows.select(*out_cols, F.col(f"_r.{_CORRUPT}").alias(audit))
 
@@ -149,16 +165,22 @@ def read_sec_quarter(
 ) -> dict[str, DataFrame]:
     """Load a quarter's four SEC TSVs from a landing directory using
     per-table filename routing (≙ the reference's per-table COPY INTO
-    PATTERN='.*sub\\.txt': Sec_data_pipeline.py:426-448)."""
+    PATTERN='.*sub\\.txt': Sec_data_pipeline.py:426-448).
+
+    Like COPY INTO a RAW table, this is a real load: each table is
+    persisted (replacing any cache of an earlier load of the same
+    directory), so every reader after it shares one parse."""
     return {
-        name: read_tsv(
-            spark,
-            landing_dir,
-            SEC_SCHEMAS[name],
-            path_glob=f"*{name}.txt",
-            on_error_continue=on_error_continue,
+        name: persist_fresh(
+            read_tsv(
+                spark,
+                landing_dir,
+                schema,
+                path_glob=f"*{name}.txt",
+                on_error_continue=on_error_continue,
+            )
         )
-        for name in ("sub", "tag", "num", "pre")
+        for name, schema in SEC_SCHEMAS.items()
     }
 
 

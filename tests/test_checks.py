@@ -55,6 +55,35 @@ def test_dirty_fixture_flags_planted_violations(dirty):
     assert res["num.tag_version.fk_tag"] >= 1  # orphan (tag, version)
 
 
+@pytest.mark.parametrize("fixture", ["clean", "dirty"])
+def test_run_checks_counts_equal_each_thunk(fixture, request):
+    """The one-query runner reports, per check, exactly the row count of
+    that check's own violation frame."""
+    tables = request.getfixturevalue(fixture)
+    suite = C.sec_quarter_suite(
+        tables["sub"], tables["tag"], tables["num"], tables["pre"]
+    )
+    expected = {name: thunk().count() for name, thunk in suite.items()}
+    got = _results(tables)
+    assert got == expected
+    assert list(got) == list(suite)  # suite order kept
+
+
+def test_run_checks_empty_suite():
+    assert C.run_checks({}) == []
+
+
+def test_run_checks_is_one_sql_execution(spark, dirty):
+    suite = C.sec_quarter_suite(
+        dirty["sub"], dirty["tag"], dirty["num"], dirty["pre"]
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsCount()
+    results = C.run_checks(suite)
+    assert store.executionsCount() - before == 1
+    assert len(results) == len(suite)
+
+
 def test_relationships_multi_column(dirty):
     orphans = C.relationships(
         dirty["num"], dirty["tag"], ["tag", "version"]

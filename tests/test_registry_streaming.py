@@ -45,6 +45,29 @@ def test_registry_topology_and_run(spark, raw, tmp_path_factory):
     assert spark.read.parquet(f"{wh}/fct_balance_sheet").count() > 0
 
 
+def test_registry_rerun_after_relanding_is_fresh(spark, tmp_path):
+    """A second run over a re-landed directory must rebuild its cached
+    models from the new files, not keep the rows an earlier run cached
+    under an equal plan."""
+    import shutil
+
+    land, fresh = str(tmp_path / "land"), str(tmp_path / "fresh")
+    generate_sec_quarter(land)
+    reg = sec_registry()
+    first = reg.run(spark, dict(read_sec_quarter(spark, land)), str(tmp_path / "wh1"))
+    n_before = first["stg_num"].count()
+    with open(f"{land}/num.txt") as fh:
+        head = fh.readlines()[: n_before // 3]
+    with open(f"{land}/num.txt", "w") as fh:
+        fh.writelines(head)
+    shutil.copytree(land, fresh)
+    rerun = reg.run(spark, dict(read_sec_quarter(spark, land)), str(tmp_path / "wh1"))
+    want = reg.run(spark, dict(read_sec_quarter(spark, fresh)), str(tmp_path / "wh2"))
+    for name in ("stg_num", "fact_spine", "fct_balance_sheet", "fct_income_statement"):
+        assert rerun[name].count() == want[name].count(), name
+    assert rerun["stg_num"].count() < n_before
+
+
 def test_registry_select_subtree(spark, raw, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("warehouse2"))
     reg = sec_registry()

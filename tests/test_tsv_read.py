@@ -63,6 +63,36 @@ def test_on_error_continue_drops_malformed(spark, dirty_dir):
     assert row is not None and row.qtrs is None and float(row.value) == 7.5
 
 
+@pytest.mark.parametrize("on_error_continue", [True, False])
+def test_parse_runs_from_csv_once(spark, dirty_dir, on_error_continue):
+    """Row selection must not make the optimizer evaluate the parse a
+    second time in a pushed-down filter."""
+    df = read_tsv(
+        spark, f"{dirty_dir}/num.txt", NUM_SCHEMA, on_error_continue=on_error_continue
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_csv(") == 1, plan
+
+
+def test_reread_after_relanding_sees_new_files(spark, tmp_path):
+    """read_sec_quarter persists its tables; a second load of the same
+    directory after the files changed must not be served the rows
+    cached from the old files."""
+    import shutil
+
+    land, fresh = str(tmp_path / "land"), str(tmp_path / "fresh")
+    generate_sec_quarter(land)
+    assert read_sec_quarter(spark, land)["num"].count() > 30
+    with open(f"{land}/num.txt") as fh:
+        head = fh.readlines()[:31]  # header + 30 rows
+    with open(f"{land}/num.txt", "w") as fh:
+        fh.writelines(head)
+    shutil.copytree(land, fresh)
+    want = {k: v.count() for k, v in read_sec_quarter(spark, fresh).items()}
+    got = {k: v.count() for k, v in read_sec_quarter(spark, land).items()}
+    assert got == want and want["num"] <= 30
+
+
 def test_quarter_glob_routing(spark, dirty_dir):
     tables = read_sec_quarter(spark, dirty_dir)
     assert set(tables) == {"sub", "tag", "num", "pre"}
