@@ -9,7 +9,7 @@ Architecture (Spark-first, not a port):
                     (sub/tag/num/pre) + weather demo table.
 - ``sources``     — readers implementing the reference's load semantics
                     (TSV "COPY INTO" options, CSV, JSON/VARIANT) and the
-                    materialization sink (view/table/cluster_by).
+                    materialization sink (view/cache/table/cluster_by).
 - ``functions``   — scalar Column helpers: dbt_utils surrogate keys,
                     null-default coalesces, ticker extraction, text and
                     vector math used by the extension operators.

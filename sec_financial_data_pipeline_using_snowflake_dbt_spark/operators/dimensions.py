@@ -9,8 +9,7 @@ Scale notes:
   result-identical, and the join sides shrink from |NUM| rows to
   |distinct (version_tag, uom)|.
 - dim_company/dim_address replicate the reference's name-join fan-out
-  (SURVEY §4 gotcha 4) because parity requires it; the corrected
-  variant is a flag away.
+  (SURVEY §4 gotcha 4) because parity requires it.
 """
 
 from __future__ import annotations
@@ -37,18 +36,12 @@ def dim_address(stg_sub: DataFrame) -> DataFrame:
     )
 
 
-def dim_company(
-    dim_address_df: DataFrame, stg_sub_df: DataFrame, dedup_addresses: bool = False
-) -> DataFrame:
+def dim_company(dim_address_df: DataFrame, stg_sub_df: DataFrame) -> DataFrame:
     """reference dim_company.sql:6-23: DISTINCT over dim_address ⋈ stg_sub
-    on company *name* (fan-out preserved for parity; ``dedup_addresses``
-    collapses the many-to-many growth first — the corrected mode)."""
-    addr = dim_address_df
-    if dedup_addresses:
-        addr = addr.dropDuplicates(["company_name", "comp_address_sk"])
+    on company *name* (fan-out preserved for parity)."""
     # explicit aliases: dim_address derives from stg_sub, so this is a
     # self-join from Spark's perspective
-    a, s = addr.alias("addr"), stg_sub_df.alias("subx")
+    a, s = dim_address_df.alias("addr"), stg_sub_df.alias("subx")
     return (
         a.join(s, F.col("addr.company_name") == F.col("subx.name"))
         .select(
@@ -99,29 +92,26 @@ def dim_filings(
     ).distinct()
 
 
-def dim_date(
-    spark: SparkSession,
-    n_days: int = 11323,
-    start: str = "2000-01-01",
-    weekend_bug_compat: bool = False,
-) -> DataFrame:
+#: The reference's calendar: 11323 days from 2000-01-01 (dim_date.sql:7-9).
+DIM_DATE_START = "2000-01-01"
+DIM_DATE_DAYS = 11323
+
+
+def dim_date(spark: SparkSession) -> DataFrame:
     """reference dim_date.sql:7-31.
 
     ``spark.range(n)`` replaces ROW_NUMBER() OVER (ORDER BY NULL) on a
     GENERATOR — no single-partition global sort (SURVEY §2.5 W1).
 
     Weekend flag: the reference tests Snowflake DOW IN (6,7), but DOW is
-    0-6 — only Saturday ever matched (SURVEY §4 gotcha 1). Default fixes
-    the intent (Sat+Sun); ``weekend_bug_compat=True`` reproduces the
-    Saturday-only behavior bit-for-bit.
+    0-6 — only Saturday ever matched (SURVEY §4 gotcha 1). We implement
+    the intent: Saturday and Sunday.
     """
-    full_dt = F.date_add(F.lit(start).cast("date"), F.col("id").cast("int"))
+    full_dt = F.date_add(F.lit(DIM_DATE_START).cast("date"), F.col("id").cast("int"))
     m = F.month(full_dt)
     # Spark dayofweek: Sun=1 .. Sat=7
-    weekend = (
-        F.dayofweek(full_dt) == 7 if weekend_bug_compat else F.dayofweek(full_dt).isin(1, 7)
-    )
-    return spark.range(0, n_days).select(
+    weekend = F.dayofweek(full_dt).isin(1, 7)
+    return spark.range(0, DIM_DATE_DAYS).select(
         F.date_format(full_dt, "yyyyMMdd").cast("long").alias("date_sk"),
         full_dt.alias("full_dt"),
         F.year(full_dt).alias("year"),

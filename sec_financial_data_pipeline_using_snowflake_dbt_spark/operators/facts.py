@@ -8,9 +8,8 @@ Fidelity notes:
   stg_sub (fct_balanceSheet.sql:12-15) — invalid SQL as written; the
   evident intent (CIK/FILED arrive via the ADSH broadcast-join to
   stg_sub) is what we implement.
-- The LIMIT 100000 "testing" guard (fct_balanceSheet.sql:37) is exposed
-  as ``dev_limit`` (default off: it's nondeterministic — SURVEY §4
-  gotcha 2).
+- The LIMIT 100000 "testing" guard (fct_balanceSheet.sql:37) is not
+  reproduced: it's nondeterministic (SURVEY §4 gotcha 2).
 - The post-left-join IS NOT NULL filters (fct_balanceSheet.sql:55-57)
   make those joins de-facto inner; we keep left+filter for parity (the
   optimizer rewrites them to inner anyway).
@@ -22,89 +21,48 @@ NO explicit hint — dim_filings is a 4-way distinct over (tag, version,
 stmt, uom, filed) whose cardinality grows with history, so the
 broadcast decision is left to AQE's measured sizes (same contract as
 the dedup operators; see test_no_unbounded_broadcast). The three facts
-share one cached spine (``build_fact_inputs``) instead of re-reading
-NUM three times (improves the reference's thread-level parallelism,
-X11).
+share one spine (``fact_spine``, the registry's ``fact_spine`` cache
+model) instead of re-reading NUM three times (improves the reference's
+thread-level parallelism, X11).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import staging as S
-from . import dimensions as D
 
-
-@dataclass
-class FactInputs:
-    """The shared upstream of all three facts."""
-
-    spine: DataFrame  # NUM ⋈ PRE ⋈ SUB (unfiltered by stmt)
-    dim_company: DataFrame
-    dim_filings: DataFrame
-    dim_date: DataFrame
-
-
-def build_fact_inputs(
-    spark: SparkSession,
-    sub: DataFrame,
-    tag: DataFrame,
-    num: DataFrame,
-    pre: DataFrame,
-    cache: bool = True,
-) -> FactInputs:
-    """Stage once, join once, share across the three facts."""
-    ssub, stag = S.stg_sub(sub), S.stg_tag(tag)
-    snum, spre = S.stg_num(num), S.stg_pre(pre)
-
-    # NUM ⋈ PRE on (ADSH, TAG) (fct_balanceSheet.sql:16-21), then
-    # broadcast-join SUB on ADSH (fct_balanceSheet.sql:25-37, X1 hint).
-    spine = (
-        snum.alias("n")
-        .join(
-            spre.select("adsh", "tag", "stmt").alias("p"),
-            ["adsh", "tag"],
-            "inner",
-        )
-        .join(
-            F.broadcast(ssub.select("adsh", "cik", "filed").alias("s")),
-            "adsh",
-            "inner",
-        )
+def fact_spine(
+    stg_num: DataFrame, stg_pre: DataFrame, stg_sub: DataFrame
+) -> DataFrame:
+    """The stmt-unfiltered upstream of all three facts: NUM ⋈ PRE on
+    (ADSH, TAG) (fct_balanceSheet.sql:16-21), then broadcast-join SUB on
+    ADSH (fct_balanceSheet.sql:25-37, X1 hint)."""
+    return (
+        stg_num.join(stg_pre.select("adsh", "tag", "stmt"), ["adsh", "tag"])
+        .join(F.broadcast(stg_sub.select("adsh", "cik", "filed")), "adsh")
         .select("value", "adsh", "cik", F.col("filed").alias("filed_date"), "stmt")
     )
-    dim_addr = D.dim_address(ssub)
-    dims = FactInputs(
-        spine=spine.persist() if cache else spine,
-        dim_company=D.dim_company(dim_addr, ssub),
-        dim_filings=D.dim_filings(spre, stag, snum, ssub),
-        dim_date=D.dim_date(spark),
-    )
-    if cache:
-        dims.dim_company = dims.dim_company.persist()
-        dims.dim_filings = dims.dim_filings.persist()
-    return dims
 
 
 def build_fact(
-    inputs: FactInputs, stmt: str, dev_limit: int | None = None
+    spine: DataFrame,
+    dim_company: DataFrame,
+    dim_filings: DataFrame,
+    dim_date: DataFrame,
+    stmt: str,
 ) -> DataFrame:
-    """One fact table (BS / IS / CF / ...) from the shared inputs.
+    """One fact table (BS / IS / CF / ...) from the shared spine and dims.
 
-    Plan shape: σ(stmt) → [dev limit] → ⟕ dims (company by CIK, filings
-    by (stmt, filed), date by to_date expr key: J3/J4/J5) → null-reject →
-    ⋈ dims by SK (J6) → Γ 6 keys → ROUND(SUM(value), 2).
+    Plan shape: σ(stmt) → ⟕ dims (company by CIK, filings by (stmt,
+    filed), date by to_date expr key: J3/J4/J5) → null-reject → ⋈ dims
+    by SK (J6) → Γ 6 keys → ROUND(SUM(value), 2).
     """
-    src = inputs.spine.filter(F.col("stmt") == stmt)
-    if dev_limit:
-        src = src.limit(dev_limit)
+    src = spine.filter(F.col("stmt") == stmt)
 
-    dc = inputs.dim_company.alias("dc")
-    df_ = inputs.dim_filings.alias("df")
-    dd = inputs.dim_date.alias("dd")
+    dc = dim_company.alias("dc")
+    df_ = dim_filings.alias("df")
+    dd = dim_date.alias("dd")
 
     key_data = (
         src.alias("src")
@@ -135,8 +93,8 @@ def build_fact(
         )
     )
 
-    dc2 = inputs.dim_company.alias("dc2")
-    df2 = inputs.dim_filings.alias("df2")
+    dc2 = dim_company.alias("dc2")
+    df2 = dim_filings.alias("df2")
     return (
         key_data.alias("k")
         .join(dc2, F.col("k.company_sk") == F.col("dc2.company_sk"))
@@ -160,18 +118,3 @@ def build_fact(
             "version",
         )
     )
-
-
-def build_all_facts(
-    spark: SparkSession,
-    sub: DataFrame,
-    tag: DataFrame,
-    num: DataFrame,
-    pre: DataFrame,
-    statements: tuple[str, ...] = ("BS", "IS", "CF"),
-    dev_limit: int | None = None,
-) -> dict[str, DataFrame]:
-    """The three facts (reference runs them as parallel Airflow tasks;
-    here they share one cached spine and Spark schedules the rest)."""
-    inputs = build_fact_inputs(spark, sub, tag, num, pre)
-    return {s: build_fact(inputs, s, dev_limit) for s in statements}

@@ -4,8 +4,8 @@ models/json/financial_statements_json.sql).
 
 OBJECT_CONSTRUCT → F.struct; ARRAY_AGG → F.collect_list(struct).
 ARRAY_AGG order is engine-unspecified in both systems (SURVEY §4
-gotcha 7): ``deterministic=True`` sorts the array for reproducible
-output/hashing.
+gotcha 7): ``financial_statements_json`` sorts the array for
+reproducible output/hashing.
 """
 
 from __future__ import annotations
@@ -166,12 +166,12 @@ def capped_staged(staged: DataFrame, max_facts_per_doc: int) -> DataFrame:
 
 
 def financial_statements_json(
-    staged: DataFrame,
-    deterministic: bool = True,
-    max_facts_per_doc: int | None = None,
+    staged: DataFrame, max_facts_per_doc: int | None = None
 ) -> DataFrame:
     """reference financial_statements_json.sql:1-34: per-filing nested doc
-    {filing_id, company_info{...}, financial_data[{...}×9], ...}.
+    {filing_id, company_info{...}, financial_data[{...}×9], ...}, with
+    each ``financial_data`` array sorted (``array_sort``) so the output
+    is reproducible.
 
     ``max_facts_per_doc`` bounds each filing's ``financial_data`` array
     to the first N entries IN THE DETERMINISTIC ENTRY ORDER (the same
@@ -184,20 +184,12 @@ def financial_statements_json(
     into each of a fixed 1000 filings) otherwise builds ~12 MB arrays
     and kills the executor. The filter runs BEFORE the groupBy — a
     post-hoc ``slice`` would bound the output but not the buffer.
-    Requires ``deterministic=True`` (the cap is defined by that order).
     """
-    if max_facts_per_doc is not None and not deterministic:
-        raise ValueError("max_facts_per_doc requires deterministic=True")
-    entry = doc_entry_struct()
-    group_keys = DOC_GROUP_KEYS
     if max_facts_per_doc is not None:
         staged = capped_staged(staged, max_facts_per_doc).drop("__rn")
-    arr = F.collect_list(entry)
-    if deterministic:
-        arr = F.array_sort(arr)
     return (
-        staged.groupBy(*group_keys)
-        .agg(arr.alias("financial_data"))
+        staged.groupBy(*DOC_GROUP_KEYS)
+        .agg(F.array_sort(F.collect_list(doc_entry_struct())).alias("financial_data"))
         .select(
             F.col("adsh").alias("filing_id"),
             F.struct("company_name", "cik", "sic").alias("company_info"),

@@ -38,9 +38,9 @@ def stg_sub(sub: DataFrame) -> DataFrame:
 
 def stg_num(num: DataFrame) -> DataFrame:
     """reference stg_num.sql:8-19: projection + VERSION_TAG derived key.
-    The reference clusters by ['ADSH','TAG','VERSION_TAG'] (X7); our
-    analogue is applied at materialization (repartition+sortWithinPartitions
-    in plans/registry.py), not here."""
+    The reference clusters by ['ADSH','TAG','VERSION_TAG'] (X7); the
+    registry caches stg_num rather than writing it, so there is no file
+    layout to cluster."""
     return num.select(
         "adsh",
         "tag",

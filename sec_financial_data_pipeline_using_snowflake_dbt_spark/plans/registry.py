@@ -4,19 +4,20 @@ Airflow/dags/rdbms_transformation.py:202-211 `dbt_debug >> dbt_deps >>
 staging >> dimensions >> [3 facts] >> test >> docs`).
 
 A model is a named function ``dict[name, DataFrame] -> DataFrame`` with
-declared dependencies and a materialization:
+declared dependencies and a materialization, which
+``sources.catalog.materialize`` carries out:
 
 - ``view``  — lazy lineage (≙ dbt view): downstream models compose the
               plan; Catalyst optimizes across model boundaries.
-- ``cache`` — ``persist()`` (≙ the reference's "staging as table for
+- ``cache`` — persisted (≙ the reference's "staging as table for
               performance", dbt_project.yml:33): hot intermediates
               shared by several downstreams. A re-run replaces the
-              entry an earlier run cached (``session.persist_fresh``),
-              so re-landed sources never meet stale staging rows.
+              entry an earlier run cached, so re-landed sources never
+              meet stale staging rows.
 - ``table`` — written to the warehouse as Parquet, with the
               ``cluster_by`` analogue ``repartition(keys)
               .sortWithinPartitions(keys)`` (X7: Snowflake cluster_by on
-              stg_num / facts) so later scans get co-located keys.
+              the facts) so later scans get co-located keys.
 
 Model-level parallelism (dbt --threads 8 / parallel Airflow tasks, X11)
 is deliberately absent: models share one lineage graph, so Spark's own
@@ -31,7 +32,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import persist_fresh
+from ..sources.catalog import materialize
 
 
 @dataclass
@@ -131,9 +132,13 @@ class Registry:
         select: list[str] | None = None,
     ) -> dict[str, DataFrame]:
         """Execute the DAG (≙ `dbt run`). ``select`` limits to the named
-        models + their ancestors (≙ dbt --models selectors)."""
+        models + their ancestors (≙ dbt --models selectors); a selected
+        name that is neither a model nor a source raises ``KeyError``."""
         wanted: set[str] | None = None
         if select:
+            unknown = [n for n in select if n not in self.models and n not in sources]
+            if unknown:
+                raise KeyError(f"select: unknown models {unknown}")
             wanted = set()
             stack = list(select)
             while stack:
@@ -151,24 +156,9 @@ class Registry:
             missing = [d for d in m.deps if d not in built]
             if missing:
                 raise KeyError(f"model {name}: missing inputs {missing}")
-            df = m.fn(built)
-            if m.materialization == "cache":
-                df = persist_fresh(df)
-            elif m.materialization == "table":
-                if not warehouse_dir:
-                    raise ValueError(
-                        f"model {name} is table-materialized; pass warehouse_dir"
-                    )
-                path = f"{warehouse_dir}/{name}"
-                out = df
-                if m.cluster_by:
-                    out = df.repartition(*m.cluster_by).sortWithinPartitions(
-                        *m.cluster_by
-                    )
-                out.write.mode("overwrite").parquet(path)
-                df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            built[name] = df
+            built[name] = materialize(
+                m.fn(built), name, m.materialization, warehouse_dir, m.cluster_by
+            )
         return built
 
 
@@ -185,9 +175,7 @@ def sec_registry() -> Registry:
 
     r.model("stg_sub", ["sub"], "cache")(lambda t: S.stg_sub(t["sub"]))
     r.model("stg_tag", ["tag"])(lambda t: S.stg_tag(t["tag"]))
-    r.model("stg_num", ["num"], "cache", cluster_by=["adsh", "tag"])(
-        lambda t: S.stg_num(t["num"])
-    )
+    r.model("stg_num", ["num"], "cache")(lambda t: S.stg_num(t["num"]))
     r.model("stg_pre", ["pre"])(lambda t: S.stg_pre(t["pre"]))
 
     r.model("dim_address", ["stg_sub"])(lambda t: D.dim_address(t["stg_sub"]))
@@ -201,24 +189,8 @@ def sec_registry() -> Registry:
         lambda t: D.dim_date(SparkSession.getActiveSession())
     )
 
-    def _inputs(t: dict[str, DataFrame]) -> FCT.FactInputs:
-        return FCT.FactInputs(
-            spine=t["fact_spine"],
-            dim_company=t["dim_company"],
-            dim_filings=t["dim_filings"],
-            dim_date=t["dim_date"],
-        )
-
-    from pyspark.sql import functions as F
-
     r.model("fact_spine", ["stg_num", "stg_pre", "stg_sub"], "cache")(
-        lambda t: t["stg_num"]
-        .join(t["stg_pre"].select("adsh", "tag", "stmt"), ["adsh", "tag"])
-        .join(
-            F.broadcast(t["stg_sub"].select("adsh", "cik", "filed")),
-            "adsh",
-        )
-        .select("value", "adsh", "cik", F.col("filed").alias("filed_date"), "stmt")
+        lambda t: FCT.fact_spine(t["stg_num"], t["stg_pre"], t["stg_sub"])
     )
     for stmt, name in (("BS", "fct_balance_sheet"), ("IS", "fct_income_statement"), ("CF", "fct_cashflows")):
         r.model(
@@ -226,7 +198,11 @@ def sec_registry() -> Registry:
             ["fact_spine", "dim_company", "dim_filings", "dim_date"],
             "table",
             cluster_by=["company_name"],
-        )(lambda t, s=stmt: FCT.build_fact(_inputs(t), s))
+        )(
+            lambda t, s=stmt: FCT.build_fact(
+                t["fact_spine"], t["dim_company"], t["dim_filings"], t["dim_date"], s
+            )
+        )
 
     r.model("stg_financial_data", ["sub", "num", "tag", "pre"])(
         lambda t: JD.stg_financial_data(t["sub"], t["num"], t["tag"], t["pre"])

@@ -6,6 +6,10 @@ models/Staging/stg_num.sql:2-6, models/Facts/fct_balanceSheet.sql:1-6)
 onto Spark's storage primitives:
 
 - ``view``                → temp view (lazy lineage)
+- ``cache``               → ``session.persist_fresh`` + temp view (a
+                            re-run replaces the entry an earlier run
+                            cached, so re-landed sources never meet
+                            stale rows)
 - ``table``               → Parquet write; ``cluster_by`` becomes
                             repartition+sortWithinPartitions (co-located,
                             sorted runs inside each file — the micro-
@@ -25,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import persist_fresh
+
 
 def materialize(
     df: DataFrame,
@@ -35,13 +41,22 @@ def materialize(
     bucket_by: tuple[int, list[str]] | None = None,
 ) -> DataFrame:
     """Materialize ``df`` as ``name`` per the requested strategy and
-    return a re-readable DataFrame registered as a temp view."""
+    return a re-readable DataFrame registered as a temp view.
+
+    ``cluster_by`` and ``bucket_by`` lay out written files, so they
+    need ``table``: a ``view`` or ``cache`` writes nothing to lay out.
+    """
     spark = df.sparkSession
-    if mode == "view":
-        df.createOrReplaceTempView(name)
-        return df
-    if mode != "table":
+    if mode not in ("view", "cache", "table"):
         raise ValueError(f"unknown materialization {mode!r}")
+    if mode != "table":
+        if cluster_by or bucket_by:
+            raise ValueError(
+                f"{name}: cluster_by/bucket_by need table materialization, not {mode!r}"
+            )
+        out = persist_fresh(df) if mode == "cache" else df
+        out.createOrReplaceTempView(name)
+        return out
     if bucket_by:
         n, keys = bucket_by
         # a previous session may have left the managed location behind
@@ -60,7 +75,7 @@ def materialize(
         out = spark.table(name)
     else:
         if not warehouse_dir:
-            raise ValueError("table materialization needs warehouse_dir")
+            raise ValueError(f"{name}: table materialization needs warehouse_dir")
         out_df = df
         if cluster_by:
             out_df = df.repartition(*cluster_by).sortWithinPartitions(*cluster_by)

@@ -43,20 +43,22 @@ from ..session import persist_fresh
 
 NULL_LITERALS = ("", "NULL", "null")
 _CORRUPT = "_corrupt_record"
+#: The SEC file format: FIELD_DELIMITER and DATE_FORMAT of the
+#: reference's COPY file format (Sec_data_pipeline.py:379-398).
+SEP = "\t"
+DATE_FORMAT = "yyyyMMdd"
+TIMESTAMP_FORMAT = "yyyy-MM-dd HH:mm:ss"
 
 
 def read_tsv(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    date_format: str = "yyyyMMdd",
-    timestamp_format: str = "yyyy-MM-dd HH:mm:ss",
     on_error_continue: bool = True,
     path_glob: str | None = None,
     corrupt_record_col: str | None = None,
-    sep: str = "\t",
 ) -> DataFrame:
-    """Load a delimited file with COPY INTO semantics.
+    """Load a tab-separated SEC file with COPY INTO semantics.
 
     ``on_error_continue=True`` ≙ ON_ERROR='CONTINUE': rows with
     structural errors (wrong token count) or type-conversion failures
@@ -70,22 +72,16 @@ def read_tsv(
     return parse_tsv_lines(
         lines,
         schema,
-        date_format=date_format,
-        timestamp_format=timestamp_format,
         on_error_continue=on_error_continue,
         corrupt_record_col=corrupt_record_col,
-        sep=sep,
     )
 
 
 def parse_tsv_lines(
     lines: DataFrame,
     schema: T.StructType,
-    date_format: str = "yyyyMMdd",
-    timestamp_format: str = "yyyy-MM-dd HH:mm:ss",
     on_error_continue: bool = True,
     corrupt_record_col: str | None = None,
-    sep: str = "\t",
 ) -> DataFrame:
     """The COPY-semantics parse over a ``value``-column line source —
     pure Column work, so it runs identically on a BATCH text scan
@@ -101,7 +97,7 @@ def parse_tsv_lines(
     # to quote-free lines; quoted lines get per-field NULL_IF after
     # from_csv instead (see below).
     null_alt = "|".join(lit for lit in NULL_LITERALS if lit)
-    sep_q = "\\Q" + sep + "\\E"
+    sep_q = "\\Q" + SEP + "\\E"
     has_quote = line.contains('"')
     line = F.when(has_quote, line).otherwise(
         F.regexp_replace(line, f"(?<=^|{sep_q})(?:{null_alt})(?={sep_q}|$)", "")
@@ -109,19 +105,19 @@ def parse_tsv_lines(
     rows = lines.select(line.alias("_l"), has_quote.alias("_q"))
 
     # SKIP_HEADER=1: the header line carries the schema's column names
-    header_line = sep.join(f.name for f in schema.fields)
+    header_line = SEP.join(f.name for f in schema.fields)
     not_header = F.lower(F.col("_l")) != header_line.lower()
 
     parse_schema = T.StructType(
         list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())]
     )
     opts = {
-        "sep": sep,
+        "sep": SEP,
         "quote": '"',
         "escape": '"',
-        "dateFormat": date_format,
-        "timestampFormat": timestamp_format,
-        "timestampNTZFormat": timestamp_format,
+        "dateFormat": DATE_FORMAT,
+        "timestampFormat": TIMESTAMP_FORMAT,
+        "timestampNTZFormat": TIMESTAMP_FORMAT,
         "nullValue": "",
         "mode": "PERMISSIVE",
         "columnNameOfCorruptRecord": _CORRUPT,
@@ -160,9 +156,7 @@ def parse_tsv_lines(
     return rows.select(*out_cols, F.col(f"_r.{_CORRUPT}").alias(audit))
 
 
-def read_sec_quarter(
-    spark: SparkSession, landing_dir: str, on_error_continue: bool = True
-) -> dict[str, DataFrame]:
+def read_sec_quarter(spark: SparkSession, landing_dir: str) -> dict[str, DataFrame]:
     """Load a quarter's four SEC TSVs from a landing directory using
     per-table filename routing (≙ the reference's per-table COPY INTO
     PATTERN='.*sub\\.txt': Sec_data_pipeline.py:426-448).
@@ -172,13 +166,7 @@ def read_sec_quarter(
     directory), so every reader after it shares one parse."""
     return {
         name: persist_fresh(
-            read_tsv(
-                spark,
-                landing_dir,
-                schema,
-                path_glob=f"*{name}.txt",
-                on_error_continue=on_error_continue,
-            )
+            read_tsv(spark, landing_dir, schema, path_glob=f"*{name}.txt")
         )
         for name, schema in SEC_SCHEMAS.items()
     }

@@ -50,6 +50,17 @@ def test_clustered_parquet_roundtrip(spark, tmp_path_factory):
     assert out.count() == o.count()
 
 
+@pytest.mark.parametrize("mode", ["view", "cache"])
+def test_layout_needs_table_materialization(spark, mode):
+    """cluster_by/bucket_by lay out written files: a view or cache
+    writes none, so asking for a layout there is an error."""
+    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
+    with pytest.raises(ValueError, match="need table"):
+        materialize(o, "orders_laid_out", mode, cluster_by=["o_custkey"])
+    with pytest.raises(ValueError, match="need table"):
+        materialize(o, "orders_laid_out", mode, bucket_by=(8, ["o_custkey"]))
+
+
 def test_write_training_shards_layout_and_manifest(spark, tmp_path_factory):
     """The terminal write stage of the pack pipeline: pack_token_ids →
     write_training_shards must produce (a) one Hive partition directory

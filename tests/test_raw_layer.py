@@ -96,30 +96,27 @@ def test_schema_evolution_across_quarters(spark, tmp_path_factory):
     assert rows["a-1"] is None and rows["b-1"] == "new-col"
 
 
-def test_multi_quarter_star_build(spark, raw_dir):
+def test_multi_quarter_star_build(spark, raw_dir, tmp_path):
     """raw layer → star schema across quarters: the fact build consumes
     the union of quarters transparently (partition columns dropped)."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
-        facts as FCT,
-    )
-
-    tables = {
-        t: read_raw(spark, raw_dir, t).drop("quarter")
-        for t in ("sub", "tag", "num", "pre")
-    }
-    facts = FCT.build_all_facts(
-        spark, tables["sub"], tables["tag"], tables["num"], tables["pre"]
-    )
     from pyspark.sql import functions as F
 
-    all_bs = facts["BS"]
-    q1 = {
-        t: read_raw(spark, raw_dir, t, "2024q1").drop("quarter")
-        for t in ("sub", "tag", "num", "pre")
-    }
-    q1_bs = FCT.build_all_facts(
-        spark, q1["sub"], q1["tag"], q1["num"], q1["pre"]
-    )["BS"]
+    from sec_financial_data_pipeline_using_snowflake_dbt_spark.plans.registry import (
+        sec_registry,
+    )
+
+    def balance_sheet(quarter, wh):
+        tables = {
+            t: read_raw(spark, raw_dir, t, quarter).drop("quarter")
+            for t in ("sub", "tag", "num", "pre")
+        }
+        built = sec_registry().run(
+            spark, tables, warehouse_dir=str(tmp_path / wh), select=["fct_balance_sheet"]
+        )
+        return built["fct_balance_sheet"]
+
+    all_bs = balance_sheet(None, "all")
+    q1_bs = balance_sheet("2024q1", "q1")
     # both quarters share the fixture's key structure (seeds vary only the
     # values) → same groups, but the union aggregates strictly more value
     assert all_bs.count() == q1_bs.count() > 0

@@ -76,6 +76,17 @@ def test_registry_select_subtree(spark, raw, tmp_path_factory):
     assert "fct_balance_sheet" not in built
 
 
+def test_registry_rejects_unknown_names(spark, raw):
+    """A misspelt select name and a materialization no sink implements
+    both raise, instead of building a partial DAG or a lazy view."""
+    reg = sec_registry()
+    with pytest.raises(KeyError, match="fct_balance_shet"):
+        reg.run(spark, dict(raw), select=["fct_balance_shet"])
+    reg.models["dim_date"].materialization = "tabel"
+    with pytest.raises(ValueError, match="tabel"):
+        reg.run(spark, dict(raw), select=["dim_date"])
+
+
 def test_registry_lineage_artifact(tmp_path_factory):
     import json
 

@@ -13,6 +13,9 @@ from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
     json_doc as JD,
     staging as S,
 )
+from sec_financial_data_pipeline_using_snowflake_dbt_spark.plans.registry import (
+    sec_registry,
+)
 from sec_financial_data_pipeline_using_snowflake_dbt_spark.sources.tsv import (
     read_sec_quarter,
 )
@@ -195,12 +198,18 @@ def test_dim_date_parity(spark, oracle):
     assert not compare(got, exp, "dim_date")
 
 
-@pytest.mark.parametrize("stmt", ["BS", "IS", "CF"])
-def test_fact_parity(spark, raw, oracle, stmt):
-    inputs = FCT.build_fact_inputs(
-        spark, raw["sub"], raw["tag"], raw["num"], raw["pre"], cache=True
+@pytest.fixture(scope="module")
+def fact_inputs(spark, raw):
+    """The spine and dims as the CLI builds them: the registry's models."""
+    built = sec_registry().run(
+        spark, dict(raw), select=["fact_spine", "dim_company", "dim_filings", "dim_date"]
     )
-    got = FCT.build_fact(inputs, stmt).select(
+    return [built[n] for n in ("fact_spine", "dim_company", "dim_filings", "dim_date")]
+
+
+@pytest.mark.parametrize("stmt", ["BS", "IS", "CF"])
+def test_fact_parity(fact_inputs, oracle, stmt):
+    got = FCT.build_fact(*fact_inputs, stmt).select(
         FCT.F.col("fct_value").cast("double").alias("fct_value"),
         "company_name",
         FCT.F.col("filed_date").cast("string").alias("filed_date"),
@@ -302,16 +311,13 @@ def test_json_document_roundtrip(spark, raw):
     assert back == orig
 
 
-def test_fact_plan_single_broadcast_hint(spark, raw):
+def test_fact_plan_single_broadcast_hint(fact_inputs):
     """The SEC fact path carries exactly ONE explicit broadcast hint —
     the reference's own stg_sub hint (X1, fct_balanceSheet.sql:26). The
     dim sides (dim_company/dim_filings/dim_date) must be hint-free:
     dim_filings' cardinality grows with filing history, so the
     broadcast decision belongs to AQE's measured sizes (VERDICT r2)."""
-    inputs = FCT.build_fact_inputs(
-        spark, raw["sub"], raw["tag"], raw["num"], raw["pre"], cache=False
-    )
-    fact = FCT.build_fact(inputs, "BS")
+    fact = FCT.build_fact(*fact_inputs, "BS")
     logical = fact._jdf.queryExecution().analyzed().toString()
     assert logical.count("ResolvedHint") == 1, logical
     assert "UnresolvedHint" not in logical
@@ -337,8 +343,3 @@ def test_financial_statements_json_max_facts_cap(raw):
     assert set(capped) == set(full)  # no filing dropped
     for fid, arr in capped.items():
         assert arr == full[fid][:cap], fid
-    # the cap is defined by the deterministic order
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="deterministic"):
-        JD.financial_statements_json(staged, deterministic=False, max_facts_per_doc=3)
