@@ -7,7 +7,11 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
    "queries": {"q_...": sec, ...}, "sf": 0.1}
 
 Each query is forced end-to-end with the no-op sink (full computation,
-no driver materialization).
+no driver materialization). The on-disk artifact
+(artifacts/bench_latest.json) carries the same payload plus ``layers``:
+per query, its best rep's ``build_s`` (the query function call),
+``force_s`` (the no-op write) and Spark counters (jobs, tasks, input,
+shuffle and spill bytes) from perfbench's span tracer.
 """
 
 from __future__ import annotations
@@ -17,7 +21,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+from run import contending_processes
+from spans import Tracer
 
 from sec_financial_data_pipeline_using_snowflake_dbt_spark.session import get_spark
 from sec_financial_data_pipeline_using_snowflake_dbt_spark.workload import QUERIES
@@ -161,51 +170,13 @@ CANARY = ("q_fingerprint", "q_text_quality", "q_window_topk")
 CANARY_DRIFT_WARN = 1.25
 
 
+#: Spark counters kept per query in the artifact's ``layers`` map (the
+#: noop sink writes no bytes, so perfbench's ``bytes_written`` is left out).
+LAYER_COUNTERS = ("jobs", "tasks", "input_bytes", "shuffle_bytes", "spill_bytes")
+
+
 def force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
-
-
-def contending_processes() -> list[str]:
-    """Other harness processes alive on the box right now.
-
-    VERDICT r9 What's wrong #2: BENCH_r09 was measured while a
-    serialized sf10 oracle_sweep child (49 min of CPU) ran, inflating
-    the suite ~13% uniformly and making r8→r9 comparison impossible
-    from the driver's numbers alone.  The measurement-hygiene rule is
-    now enforced in the harness itself: scan /proc for oracle_sweep /
-    pytest / other bench.py cmdlines (excluding our own process tree)
-    and surface them.  The artifact gains a ``contended_by`` field and
-    a loud stderr warning; under SPARK_GRAFT_BENCH_STRICT=1 a contended
-    run refuses to measure at all (rc=3)."""
-    markers = ("oracle_sweep", "pytest", "bench.py", "make_sfN")
-    # exclude our own ancestor chain: the shell that launched this
-    # bench.py carries "bench.py" in its own cmdline
-    ancestors = set()
-    pid = os.getpid()
-    while pid > 1 and pid not in ancestors:
-        ancestors.add(pid)
-        try:
-            with open(f"/proc/{pid}/stat") as fh:
-                pid = int(fh.read().rsplit(")", 1)[1].split()[1])
-        except (OSError, ValueError, IndexError):
-            break
-    hits: list[str] = []
-    for pid_s in os.listdir("/proc"):
-        if not pid_s.isdigit() or int(pid_s) in ancestors:
-            continue
-        try:
-            with open(f"/proc/{pid_s}/cmdline", "rb") as fh:
-                argv = fh.read().split(b"\x00")
-        except OSError:
-            continue
-        cmd = b" ".join(a for a in argv if a).decode(errors="replace")
-        # only a python PROCESS counts (argv[0] is the interpreter) — a
-        # shell whose -c string merely mentions a marker is not load
-        if not argv or b"python" not in argv[0]:
-            continue
-        if any(m in cmd for m in markers):
-            hits.append(f"pid={pid_s}: {cmd[:160]}")
-    return hits
 
 
 def load_budgets() -> dict[str, float]:
@@ -213,7 +184,7 @@ def load_budgets() -> dict[str, float]:
     r3/r4 min x1.5 (with a +1.0 s absolute floor) at sf0.1. Violations
     are self-flagged in the output's ``over_budget`` field; under
     SPARK_GRAFT_BENCH_STRICT=1 they also fail the run (rc=2)."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_budgets.json")
+    path = os.path.join(ROOT, "bench_budgets.json")
     if not os.path.exists(path):
         # missing file disables the gate LOUDLY, never silently
         print("WARNING: bench_budgets.json missing - budget gate disabled", file=sys.stderr)
@@ -298,12 +269,30 @@ def main() -> None:
         dedup as DD,
     )
 
+    # Each rep runs in a span: its job group is set before t0 and its
+    # Spark counters are read after the force, outside the timed region.
+    # Jobs started from a helper thread (the ThreadPoolExecutor stages in
+    # similarity.py, dedup.py and dataprep.py) may not inherit the job
+    # group, so their counters can be missing from that query's row.
+    tracer = Tracer(spark, enabled=True)
+    best_layers: dict[str, dict] = {}  # per query: best rep of its latest measure()
+
     def measure(name: str) -> float:
         best = float("inf")
         for _ in range(BENCH_REPS):
-            t0 = time.perf_counter()
-            force(QUERIES[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
+            with tracer.span(name) as sp:
+                t0 = time.perf_counter()
+                df = QUERIES[name](spark, sf_dir)
+                t1 = time.perf_counter()
+                force(df)
+                t2 = time.perf_counter()
+            if t2 - t0 < best:
+                best = t2 - t0
+                best_layers[name] = {
+                    "build_s": round(t1 - t0, 3),
+                    "force_s": round(t2 - t1, 3),
+                    **{k: sp.counters[k] for k in LAYER_COUNTERS},
+                }
         # drain persisted state between queries: operators persist
         # intermediates (dedup signatures, fact spine, cleaned corpus)
         # per call, and across 24 queries x 3 reps the accumulated
@@ -323,6 +312,7 @@ def main() -> None:
     canary_start = {n: round(measure(n), 3) for n in CANARY}
 
     timings = {name: round(measure(name), 3) for name in headline}
+    layers = {name: best_layers[name] for name in headline}
 
     canary_end = {n: round(measure(n), 3) for n in CANARY}
     canary_drift = round(
@@ -351,6 +341,7 @@ def main() -> None:
     # visible in ``noise_spikes`` — cross-round diffs stay honest.
     for n, v in noise.items():
         timings[n] = round(min(v["recorded"], v["remeasured"]), 3)
+        layers[n] = best_layers[n]  # noise: the re-measure is the lower
 
     total = round(sum(timings.values()), 3)
     result = {
@@ -377,12 +368,14 @@ def main() -> None:
     # "parsed": null from exactly that; BENCH_r10's stdout line was
     # never parsed despite rc=0 — VERDICT r11 #1 makes the on-disk
     # artifact the canonical handoff).
+    # The per-query layers (each best rep's build/force split and Spark
+    # counters) go to the artifact only: the stdout line keeps its keys.
     try:
-        art_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "artifacts")
+        art_dir = os.path.join(ROOT, "artifacts")
         os.makedirs(art_dir, exist_ok=True)
         art_path = os.path.join(art_dir, "bench_latest.json")
         with open(art_path, "w") as fh:
-            json.dump(result, fh, indent=1)
+            json.dump({**result, "layers": layers}, fh, indent=1)
         print(f"BENCH ARTIFACT: {art_path}", file=sys.stderr)
     except OSError as exc:  # a read-only checkout must not fail the bench
         print(f"WARNING: could not write artifacts/bench_latest.json: {exc}",

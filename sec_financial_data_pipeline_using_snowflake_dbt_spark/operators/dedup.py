@@ -316,15 +316,6 @@ def bloom_dedup(
     )
 
 
-def token_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Inverted index: one row per (doc, distinct lowercase token)."""
-    return docs.select(
-        F.col(id_col), F.explode(TX.distinct_tokens(text_col)).alias("token")
-    )
-
-
 DEFAULT_MAX_POSTINGS = 5000
 
 

@@ -9,16 +9,17 @@ Streamlit/Redis data-explorer backend (reference: Frontend/app.py).
                           enforced on the *parsed plan*, not a string
                           prefix — `WITH ... INSERT` can't sneak through
 - ``ResultCache``       — TTL result cache keyed on the optimized plan's
-                          semantic hash (X13: app.py:98-133; plan-keyed
-                          instead of SQL-text-keyed, so equivalent
-                          spellings share an entry)
+                          semantic hash and the input files (X13:
+                          app.py:98-133; plan-keyed instead of
+                          SQL-text-keyed, so equivalent spellings share
+                          an entry)
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import lru_cache, reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -70,12 +71,15 @@ def filtered_read(
 ) -> DataFrame:
     """Filter + paginate. A deterministic sort is mandatory: the
     reference paginates unordered SELECTs (app.py:198), which reshuffles
-    between pages; we default to sorting by every projected column."""
+    between pages; we default to sorting by every projected column.
+
+    The default sort key skips columns whose type transitively contains
+    a MapType (map, array<map>, struct with a map field, …): they are
+    not orderable and would fail at plan time. With no orderable column
+    the page is an unsorted limit. An explicit caller ``sort`` is passed
+    through untouched and may still raise. Spark plans sort + limit as
+    one TakeOrderedAndProject, not a full sort."""
     out = df.filter(build_predicate(filters or []))
-    # default sort: every ORDERABLE projected column — a map-bearing
-    # column in the default key would fail at plan time (the same
-    # _orderable guard ResultCache.fetch applies); an explicit caller
-    # sort is passed through untouched and may still raise.
     sort_cols = sort or [
         f.name for f in df.schema.fields if _orderable(f.dataType)
     ]
@@ -236,11 +240,19 @@ class _Entry:
     value: Any
 
 
+@lru_cache(maxsize=1)
+def _string_of(jvm):
+    """``ScalaRunTime.stringOf``, looked up once per gateway: the lookup
+    costs three py4j round-trips, the call one."""
+    return jvm.scala.runtime.ScalaRunTime.stringOf
+
+
 @dataclass
 class ResultCache:
-    """TTL result cache keyed by the DataFrame's semantic hash — two
-    queries with the same optimized plan share one entry (stronger than
-    the reference's normalized-SQL-text key, app.py:151,303)."""
+    """TTL result cache keyed by the DataFrame's semantic hash and its
+    input files — two queries with the same optimized plan over the same
+    files share one entry (stronger than the reference's
+    normalized-SQL-text key, app.py:151,303)."""
 
     ttl_seconds: float = 3600.0
     _store: dict[Any, dict[int, _Entry]] = field(default_factory=dict)
@@ -249,6 +261,15 @@ class ResultCache:
 
     @staticmethod
     def key_for(df: DataFrame):
+        """The cache key: the optimized plan and the frame's input files.
+
+        The plan names a table's path, not its files. Spark names every
+        file it writes with a fresh write UUID, so an overwrite changes
+        the input file set, and a re-read of overwritten data misses
+        instead of serving the old rows. A file rewritten in place under
+        the same name is not detected; no writer in the package does
+        that.
+        """
         # hash the OPTIMIZED plan: trivially-different spellings (extra
         # projections, reordered filters) collapse to one key;
         # df.semanticHash() hashes the analyzed plan and would not.
@@ -257,6 +278,8 @@ class ResultCache:
         # ten thousand distinct cached plans, so the key also carries an
         # md5 of the CANONICALIZED plan string (canonicalization
         # normalizes expr ids, so equivalent spellings still collapse).
+        # The file set comes back as one string from one JVM call, in
+        # listing order: a reordered listing can only cost a miss.
         # Spark Connect DataFrames carry no _jdf — fall back to the
         # analyzed-plan hash there (weaker dedup of equivalent plans,
         # still a correct cache key).
@@ -265,23 +288,21 @@ class ResultCache:
         try:
             plan = df._jdf.queryExecution().optimizedPlan()
         except AttributeError:
-            return ("connect", df.semanticHash())
+            return ("connect", df.semanticHash(), tuple(sorted(df.inputFiles())))
+        files = _string_of(df.sparkSession._jvm)(df._jdf.inputFiles())
         return (
             plan.semanticHash(),
             hashlib.md5(plan.canonicalized().toString().encode()).hexdigest(),
+            hashlib.md5(files.encode()).hexdigest(),
         )
 
     def fetch(self, df: DataFrame, limit: int = 5000):
         """Collect (bounded) through the cache; returns list[Row].
 
-        Sorts by every sortable column before the limit (Spark plans it
-        as one TakeOrderedAndProject, not a full sort) so two sessions
-        filling the cache from the same plan hold the same rows — an
-        unordered limit is free to return any subset. Columns whose type
-        transitively contains a MapType (map, array<map>, struct with a
-        map field, …) aren't orderable and are skipped from the sort
-        key; with no orderable column at all, falls back to the
-        unsorted limit.
+        The value is ``filtered_read(df, limit=limit)``'s deterministic
+        first page, so two sessions filling the cache from the same plan
+        hold the same rows — an unordered limit is free to return any
+        subset.
         """
         plan_key = self.key_for(df)
         now = time.monotonic()
@@ -290,9 +311,7 @@ class ResultCache:
             self.hits += 1
             return entry.value
         self.misses += 1
-        sort_cols = [f.name for f in df.schema.fields if _orderable(f.dataType)]
-        bounded = (df.orderBy(*sort_cols) if sort_cols else df).limit(limit)
-        value = bounded.collect()
+        value = filtered_read(df, limit=limit).collect()
         self._store.setdefault(plan_key, {})[limit] = _Entry(
             now + self.ttl_seconds, value
         )

@@ -136,10 +136,6 @@ def write_training_shards(
     )
 
 
-def list_tables(spark: SparkSession, db: str = "default") -> list[str]:
-    return [t.name for t in spark.catalog.listTables(db)]
-
-
 def compact_files(
     spark: SparkSession,
     in_path: str,

@@ -132,12 +132,6 @@ def revenue_expr() -> Column:
     return dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
 
 
-def charge_expr() -> Column:
-    """revenue * (1 + l_tax), exact decimal (scale bounded to stay exact
-    on both engines)."""
-    return revenue_expr().cast(T.DecimalType(18, 4)) * (F.lit(1) + dec("l_tax"))
-
-
 # SQL-side equivalents (DuckDB dialect)
 SQL_REVENUE = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 SQL_CHARGE = (

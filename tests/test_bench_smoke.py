@@ -43,9 +43,31 @@ def test_bench_emits_json_line():
     with open(art_path) as fh:
         on_disk = json.load(fh)
     assert on_disk["queries"] == out["queries"]
+    # per-query layers (artifact only): the best rep's build/force split
+    # of the recorded time and the Spark jobs its span counted
+    assert "layers" not in out
+    assert set(on_disk["layers"]) == set(out["queries"])
+    for name, row in on_disk["layers"].items():
+        assert row["jobs"] >= 1, name
+        assert abs(row["build_s"] + row["force_s"] - out["queries"][name]) <= 0.0015, name
     # budgets only apply at their own scale (sf0.1); at sf0.001 the
     # field must be present and empty
     assert out["over_budget"] == {}
+
+
+def test_contention_check_sees_perfbench():
+    """bench.py and perfbench share one contention rule: a running
+    perfbench/run.py is a contender for bench.py too."""
+    import bench
+
+    proc = subprocess.Popen(
+        [sys.executable, "-c", "import time; time.sleep(120)", "perfbench/run.py"]
+    )
+    try:
+        assert any(h.startswith(f"pid={proc.pid}: ") for h in bench.contending_processes())
+    finally:
+        proc.kill()
+        proc.wait(timeout=30)
 
 
 def test_budget_violation_requires_confirming_remeasure():

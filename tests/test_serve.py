@@ -151,6 +151,22 @@ def test_result_cache_hit_and_invalidate(orders):
     assert cache.misses == 2
 
 
+def test_result_cache_misses_after_overwrite(spark, tmp_path):
+    """A cached answer never outlives the files it came from: after the
+    table is overwritten, the same filter on a re-read returns the
+    uncached answer; a re-read of unchanged data still hits."""
+    path = str(tmp_path / "t")
+    cache = serve.ResultCache(ttl_seconds=60)
+    spark.range(5).write.parquet(path)
+    assert [r.id for r in cache.fetch(spark.read.parquet(path).filter("id < 3"))] == [0, 1, 2]
+    assert [r.id for r in cache.fetch(spark.read.parquet(path).filter("id < 3"))] == [0, 1, 2]
+    assert cache.hits == 1 and cache.misses == 1
+    spark.range(100, 105).write.mode("overwrite").parquet(path)
+    fresh = spark.read.parquet(path).filter("id < 3")
+    assert cache.fetch(fresh) == fresh.collect() == []
+    assert cache.misses == 2
+
+
 def test_result_cache_degrades_without_private_api(orders):
     """Under Spark Connect there is no _jdf; ResultCache.key_for must
     fall back to the analyzed-plan semanticHash instead of raising
