@@ -69,12 +69,9 @@ def accepted_values(df: DataFrame, col: str, values: list) -> DataFrame:
 # --- dbt_expectations-style checks -----------------------------------------
 
 
-def values_between(
-    df: DataFrame, col: str, lo, hi, inclusive: bool = True
-) -> DataFrame:
+def values_between(df: DataFrame, col: str, lo, hi) -> DataFrame:
     c = F.col(col)
-    ok = c.between(lo, hi) if inclusive else (c > lo) & (c < hi)
-    return df.filter(~ok & c.isNotNull())
+    return df.filter(~c.between(lo, hi) & c.isNotNull())
 
 
 def matches_regex(df: DataFrame, col: str, pattern: str) -> DataFrame:
@@ -102,12 +99,10 @@ def column_type_is(df: DataFrame, col: str, type_name: str) -> DataFrame:
 # --- custom / singular checks (reference-specific) --------------------------
 
 
-def not_null_except_zero(
-    df: DataFrame, col: str, guard_col: str = "fy"
-) -> DataFrame:
+def not_null_except_zero(df: DataFrame, col: str) -> DataFrame:
     """reference json_transform/tests/testing_for_date_validity.sql:1-6:
-    NULL allowed only where ``guard_col`` = 0."""
-    return df.filter(F.col(col).isNull() & (F.col(guard_col) != 0))
+    NULL allowed only where ``fy`` = 0 (the missing-year sentinel)."""
+    return df.filter(F.col(col).isNull() & (F.col("fy") != 0))
 
 
 def expression_holds(df: DataFrame, expr: Column) -> DataFrame:
@@ -176,7 +171,7 @@ def sec_quarter_suite(
         ),
         "sub.aciks.regex": lambda: matches_regex(sub, "aciks", r"^[0-9,]*$"),
         "sub.period.not_null_except_zero": lambda: not_null_except_zero(
-            sub, "period", "fy"
+            sub, "period"
         ),
         # tag_source.yml
         "tag.tag.not_null": lambda: not_null(tag, "tag"),

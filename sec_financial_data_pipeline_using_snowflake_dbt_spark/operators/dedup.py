@@ -423,66 +423,6 @@ def _minhash_sig(
     )
 
 
-def minhash_plan(
-    threshold: float,
-    num_hashes: int,
-    min_capture: float = 0.9,
-) -> dict:
-    """Choose the banding for ``minhash_lsh_pairs`` at a similarity
-    threshold — the S-curve design step every MinHash deployment does by
-    hand (Leskovec et al., MMDS ch.3). For each divisor split
-    ``num_hashes = bands x rows``, the probability a pair of true
-    Jaccard s becomes a candidate is ``p(s) = 1 - (1 - s^rows)^bands``;
-    the advisor returns the split that, among splits capturing at least
-    ``min_capture`` at the threshold, admits the FEWEST sub-threshold
-    pairs (smallest area under p below the threshold — the precision
-    cost q_dedup_recall measures empirically: recall 0.9999 at
-    precision 0.345 for 8 = 4x2 at 0.8). Falls back to the
-    highest-capture split when no split reaches ``min_capture`` (small
-    signature budgets). Pure driver-side arithmetic — no Spark job.
-
-    Returns {bands, rows, capture_at_threshold, subthreshold_area,
-    candidates}: ``candidates`` lists every divisor split with its
-    capture so callers can see the trade-off table.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0,1), got {threshold}")
-    if num_hashes < 1:
-        raise ValueError("num_hashes must be >= 1")
-
-    def capture(bands: int, rows: int, s: float) -> float:
-        return 1.0 - (1.0 - s ** rows) ** bands
-
-    def area_below(bands: int, rows: int, n: int = 200) -> float:
-        # trapezoid ∫_0^t p(s) ds — the sub-threshold candidate mass
-        # under a uniform similarity prior; only its ORDERING matters
-        xs = [threshold * i / n for i in range(n + 1)]
-        ys = [capture(bands, rows, x) for x in xs]
-        return sum((ys[i] + ys[i + 1]) / 2 for i in range(n)) * (threshold / n)
-
-    splits = [
-        (b, num_hashes // b)
-        for b in range(1, num_hashes + 1)
-        if num_hashes % b == 0
-    ]
-    rows_out = [
-        {
-            "bands": b,
-            "rows": r,
-            "capture_at_threshold": capture(b, r, threshold),
-            "subthreshold_area": area_below(b, r),
-        }
-        for b, r in splits
-    ]
-    ok = [c for c in rows_out if c["capture_at_threshold"] >= min_capture]
-    best = (
-        min(ok, key=lambda c: c["subthreshold_area"])
-        if ok
-        else max(rows_out, key=lambda c: c["capture_at_threshold"])
-    )
-    return {**best, "candidates": rows_out}
-
-
 def minhash_band_table(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -109,19 +109,6 @@ def stg_financial_data(
     )
 
 
-FINANCIAL_DATA_FIELDS = (
-    "tag",
-    "tag_label",
-    "tag_description",
-    "value",
-    "unit_of_measure",
-    "period_end_date",
-    "quarters_duration",
-    "statement_type",
-    "presentation_label",
-)
-
-
 #: Per-filing grouping keys of the nested financial document — THE
 #: single definition shared by ``financial_statements_json`` and the
 #: fused row-shaped build in workload/sec_star.py (ADVICE r11: a

@@ -10,14 +10,11 @@ This is the 100 TB-scale plumbing for multimodal training data:
   ``mapInPandas`` stages: per-partition Arrow batches, no per-row
   Python overhead, memory bounded by
   ``spark.sql.execution.arrow.maxRecordsPerBatch``;
-- format sniffing, image dimensions AND wav audio metadata are REAL
-  byte parsing (PNG IHDR, GIF logical screen descriptor, JPEG SOFn
-  scan, BMP DIB header, PNM header, RIFF fmt/data chunk walk — no codec
-  library needed);
-- UNCOMPRESSED payloads are decoded for real, as pure byte math:
-  WAV integer PCM sample stats (mean amplitude / RMS / peak via
-  ``wav_pcm_stats``) and BMP/PPM/PGM pixel statistics (mean luma via
-  ``pixel_stats``);
+- format sniffing and image dimensions are REAL byte parsing (PNG
+  IHDR, GIF logical screen descriptor, JPEG SOFn scan, BMP DIB header,
+  PNM header — no codec library needed);
+- UNCOMPRESSED images are decoded for real, as pure byte math:
+  BMP/PPM/PGM pixel statistics (mean luma via ``pixel_stats``);
 - PNG pixels are decoded for REAL with the stdlib alone (r8:
   ``png_pixel_stats`` — chunk walk, bounded IDAT zlib inflate,
   None/Sub/Up/Average/Paeth scanline unfilter, palette resolution;
@@ -33,12 +30,12 @@ This is the 100 TB-scale plumbing for multimodal training data:
   the luma plane, restart markers) for baseline/extended sequential
   scans, and (r10) for PROGRESSIVE scans too (``_jpeg_progressive_stats``
   — spectral selection + successive approximation per T.81 Annex G);
-- only the remaining COMPRESSED codecs (mp3 samples, mp4 frames — both
-  with REAL metadata/frame-walk parsing) stay behind a deterministic
-  fake, since the actual codecs (PIL/librosa/av) are not in this
-  container (``use_real_codecs=True`` raises NotImplementedError). The
-  Spark-side contract — schemas, batch iteration, partitioning — is
-  real and tested.
+- mp4 frames are sampled through a REAL sample-table walk
+  (``parse_mp4_sample_table``) but not decoded, and the image decode
+  hands other compressed pixels to Pillow only on request
+  (``use_real_codecs=True`` raises NotImplementedError where it is not
+  installed). The Spark-side contract — schemas, batch iteration,
+  partitioning — is real and tested.
 
 ``spark.read.format("binaryFile")`` is the ingestion path for loose
 files (reference's S2 ZIP-extract analogue for media); ``pack_assets``
@@ -55,25 +52,6 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("source_path", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                    T.StructField("content_hash", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 # magic-byte sniffing — real, not stubbed (pure byte inspection)
 _MAGICS: list[tuple[bytes, str, str]] = [
@@ -1432,10 +1410,9 @@ def _decode_image(payload: bytes, use_real_codecs: bool = False) -> dict[str, An
 
 
 IMAGE_FEATURE_SCHEMA = (
-    # width/height/timescale are LONG: PNG dims and mvhd timescale are
-    # uint32 on the wire, and a hostile 4-billion-pixel header must
-    # produce a (absurd but reportable) row, not an Arrow int32
-    # overflow that kills the task
+    # width/height are LONG: PNG dims are uint32 on the wire, and a
+    # hostile 4-billion-pixel header must produce a (absurd but
+    # reportable) row, not an Arrow int32 overflow that kills the task
     "asset_id string, format string, width long, height long, "
     "mean_luma double, n_bytes long"
 )
@@ -1498,47 +1475,6 @@ FRAME_SCHEMA = (
     "asset_id string, frame_index long, frame_hash string, "
     "pts_seconds double, n_bytes long, keyframe boolean"
 )
-
-
-def parse_mp4_mvhd(payload: bytes) -> dict[str, int | float] | None:
-    """ISO BMFF box walk to moov/mvhd — REAL byte parsing, no codec:
-    (timescale, duration_units, duration_seconds). Top-level boxes are
-    (uint32 size, 4cc type); the movie header lives at moov/mvhd with
-    version 0 (32-bit times, offset 12/16 past the version byte) or
-    version 1 (64-bit). None when no mvhd is present (e.g. a bare ftyp
-    fragment or a truncated stream)."""
-
-    def walk(buf: bytes, want: bytes) -> bytes | None:
-        i, n = 0, len(buf)
-        while i + 8 <= n:
-            (size,) = struct.unpack(">I", buf[i : i + 4])
-            box = buf[i + 4 : i + 8]
-            if size < 8:
-                return None
-            if box == want:
-                return buf[i + 8 : i + size]
-            i += size
-        return None
-
-    moov = walk(payload, b"moov")
-    if moov is None:
-        return None
-    mvhd = walk(moov, b"mvhd")
-    if mvhd is None or len(mvhd) < 4:
-        return None
-    version = mvhd[0]
-    if version == 0 and len(mvhd) >= 20:
-        timescale, duration = struct.unpack(">II", mvhd[12:20])
-    elif version == 1 and len(mvhd) >= 32:
-        (timescale,) = struct.unpack(">I", mvhd[20:24])
-        (duration,) = struct.unpack(">Q", mvhd[24:32])
-    else:
-        return None
-    return {
-        "timescale": timescale,
-        "duration_units": duration,
-        "duration_seconds": round(duration / timescale, 6) if timescale else None,
-    }
 
 
 def _mp4_boxes(buf: bytes, i: int = 0, end: int | None = None):
@@ -1813,300 +1749,3 @@ def sample_video_frames(
             )
 
     return assets.select("asset_id", "payload").mapInPandas(batches, FRAME_SCHEMA)
-
-
-VIDEO_FEATURE_SCHEMA = (
-    "asset_id string, format string, timescale long, "
-    "duration_seconds double, n_bytes long"
-)
-
-
-def decode_video_features(assets: DataFrame) -> DataFrame:
-    """Video container metadata as a ``mapInPandas`` stage: the mvhd
-    timescale/duration box walk is REAL (``parse_mp4_mvhd``); streams
-    without a moov box (fragments, truncations) report nulls. Actual
-    frame DECODING stays behind the codec boundary — see
-    ``sample_video_frames`` for the explode-shaped stub."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                modality, fmt = sniff_format(payload)
-                if modality != "video":
-                    continue
-                hdr = parse_mp4_mvhd(payload)
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "format": fmt,
-                        "timescale": hdr["timescale"] if hdr else None,
-                        "duration_seconds": (
-                            hdr["duration_seconds"] if hdr else None
-                        ),
-                        "n_bytes": len(payload),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "format", "timescale",
-                    "duration_seconds", "n_bytes",
-                ],
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        batches, VIDEO_FEATURE_SCHEMA
-    )
-
-
-def classify_modality(assets: DataFrame) -> DataFrame:
-    """Fill the modality column by magic-byte sniffing (mapInPandas —
-    byte slicing is awkward in Column expressions; the batch-wise UDF
-    reads only the first bytes of each payload)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mods, fmts = [], []
-            for payload in pdf["payload"]:
-                m, f_ = sniff_format(bytes(payload) if payload is not None else None)
-                mods.append(m)
-                fmts.append(f_)
-            out = pdf[["asset_id"]].copy()
-            out["modality"] = mods
-            out["format"] = fmts
-            yield out
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        batches, "asset_id string, modality string, format string"
-    )
-
-
-def parse_wav_header(payload: bytes) -> dict[str, int | None] | None:
-    """Canonical-WAV fmt/data chunk walk — REAL byte parsing, no codec:
-    (n_channels, sample_rate, bits_per_sample, n_data_bytes). None when
-    the payload isn't RIFF/WAVE or the fmt chunk is truncated;
-    data_offset/audio_format are None when those chunks are absent."""
-    if len(payload) < 12 or payload[0:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    i, n = 12, len(payload)
-    fmt = None
-    audio_format = None
-    data_bytes = None
-    data_offset = None
-    while i + 8 <= n:
-        cid = payload[i : i + 4]
-        (clen,) = struct.unpack("<I", payload[i + 4 : i + 8])
-        body = payload[i + 8 : i + 8 + clen]
-        if cid == b"fmt " and len(body) >= 16:
-            (audio_format,) = struct.unpack("<H", body[0:2])
-            channels, rate = struct.unpack("<HI", body[2:8])
-            (bits,) = struct.unpack("<H", body[14:16])
-            fmt = (channels, rate, bits)
-        elif cid == b"data":
-            data_bytes = clen
-            data_offset = i + 8
-        i += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if fmt is None:
-        return None
-    channels, rate, bits = fmt
-    return {
-        "n_channels": channels,
-        "sample_rate": rate,
-        "bits_per_sample": bits,
-        "n_data_bytes": data_bytes if data_bytes is not None else 0,
-        "data_offset": data_offset,
-        "audio_format": audio_format,
-    }
-
-
-def wav_pcm_stats(payload: bytes) -> dict[str, Any] | None:
-    """REAL PCM sample decode — pure byte math via numpy, no codec
-    library (VERDICT r4 #4): normalized amplitude statistics for
-    uncompressed integer-PCM WAV (8/16/24/32-bit). Samples are scaled to
-    [-1, 1]; returns {n_samples (per channel), mean_abs, rms, peak}.
-    None for non-WAV, non-PCM (audio_format != 1), truncated-data, or
-    float-PCM payloads — the real codec boundary."""
-    import numpy as np
-
-    hdr = parse_wav_header(payload)
-    if (
-        hdr is None
-        or hdr["data_offset"] is None
-        or not hdr["n_data_bytes"]
-        or hdr.get("audio_format") != 1  # 1 = integer PCM
-    ):
-        return None
-    off = hdr["data_offset"]
-    data = payload[off : off + hdr["n_data_bytes"]]
-    bits = hdr["bits_per_sample"]
-    if bits == 8:  # unsigned, midpoint 128
-        x = (np.frombuffer(data, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    elif bits == 16:
-        usable = len(data) // 2 * 2
-        x = np.frombuffer(data[:usable], dtype="<i2").astype(np.float64) / 32768.0
-    elif bits == 24:  # packed 3-byte little-endian two's-complement
-        usable = len(data) // 3 * 3
-        b3 = np.frombuffer(data[:usable], dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-        v = b3[:, 0] | (b3[:, 1] << 8) | (b3[:, 2] << 16)
-        v = np.where(v >= 1 << 23, v - (1 << 24), v)
-        x = v.astype(np.float64) / float(1 << 23)
-    elif bits == 32:
-        usable = len(data) // 4 * 4
-        x = np.frombuffer(data[:usable], dtype="<i4").astype(np.float64) / float(1 << 31)
-    else:
-        return None
-    if x.size == 0:
-        return None
-    return {
-        "n_samples": int(x.size // max(hdr["n_channels"], 1)),
-        "mean_abs": float(np.abs(x).mean()),
-        "rms": float(np.sqrt((x * x).mean())),
-        "peak": float(np.abs(x).max()),
-    }
-
-
-# MPEG audio frame tables (ISO/IEC 11172-3 / 13818-3, public): Layer III
-# bitrates in kbps by (version-group, index) and sample rates by
-# (version, index). Index 0 is "free format", 15 invalid.
-_MP3_BITRATES_V1 = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-_MP3_BITRATES_V2 = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
-_MP3_RATES = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000), 0: (11025, 12000, 8000)}
-
-
-def parse_mp3_frames(payload: bytes) -> dict[str, int | float] | None:
-    """Layer III frame walk — REAL byte parsing, no codec: skip any ID3v2
-    tag (syncsafe length), then step frame-by-frame through the headers
-    (sync, version, bitrate/samplerate indices, padding), summing
-    per-frame sample counts into a duration. None when no valid Layer
-    III frame is found. VBR streams are handled naturally (each frame
-    carries its own bitrate; ``bitrate_kbps`` reports the first frame's)."""
-    i, n = 0, len(payload)
-    if payload[:3] == b"ID3" and n >= 10:
-        size = (
-            (payload[6] & 0x7F) << 21 | (payload[7] & 0x7F) << 14
-            | (payload[8] & 0x7F) << 7 | (payload[9] & 0x7F)
-        )
-        i = 10 + size
-    n_frames = 0
-    duration = 0.0
-    first = None
-    while i + 4 <= n:
-        if payload[i] != 0xFF or (payload[i + 1] & 0xE0) != 0xE0:
-            break
-        version = (payload[i + 1] >> 3) & 0x3   # 3=MPEG1, 2=MPEG2, 0=MPEG2.5
-        layer = (payload[i + 1] >> 1) & 0x3     # 1 = Layer III
-        br_idx = (payload[i + 2] >> 4) & 0xF
-        sr_idx = (payload[i + 2] >> 2) & 0x3
-        padding = (payload[i + 2] >> 1) & 0x1
-        mode = (payload[i + 3] >> 6) & 0x3      # 3 = mono
-        if version == 1 or layer != 1 or br_idx in (0, 15) or sr_idx == 3:
-            break
-        bitrate = (
-            _MP3_BITRATES_V1 if version == 3 else _MP3_BITRATES_V2
-        )[br_idx] * 1000
-        rate = _MP3_RATES[version][sr_idx]
-        samples = 1152 if version == 3 else 576
-        frame_len = samples // 8 * bitrate // rate + padding
-        if frame_len <= 4:
-            break
-        if first is None:
-            first = (1 if mode == 3 else 2, rate, bitrate // 1000)
-        n_frames += 1
-        duration += samples / rate
-        i += frame_len
-    if first is None:
-        return None
-    channels, rate, kbps = first
-    return {
-        "n_channels": channels,
-        "sample_rate": rate,
-        "bitrate_kbps": kbps,
-        "n_frames": n_frames,
-        "duration_seconds": round(duration, 6),
-    }
-
-
-AUDIO_FEATURE_SCHEMA = (
-    "asset_id string, format string, n_channels int, sample_rate int, "
-    "bits_per_sample int, duration_seconds double, "
-    "mean_amplitude double, rms double, n_bytes long"
-)
-
-
-def decode_audio_features(assets: DataFrame) -> DataFrame:
-    """Audio metadata + sample stats as a ``mapInPandas`` stage. WAV
-    headers AND mp3 Layer III frame walks are parsed for REAL (WAV:
-    duration = data bytes / byte rate; mp3: per-frame sample counts
-    summed across the frame sequence — VBR-correct). Integer-PCM WAV
-    payloads additionally get a REAL sample decode (``wav_pcm_stats``):
-    mean_amplitude / rms over normalized samples. Only compressed-codec
-    sample decoding (mp3) remains outside scope — those columns are
-    null there."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                modality, fmt = sniff_format(payload)
-                if modality != "audio":
-                    continue
-                row = {
-                    "asset_id": asset_id,
-                    "format": fmt,
-                    "n_channels": None,
-                    "sample_rate": None,
-                    "bits_per_sample": None,
-                    "duration_seconds": None,
-                    "mean_amplitude": None,
-                    "rms": None,
-                    "n_bytes": len(payload),
-                }
-                if fmt == "mp3" and (mp3 := parse_mp3_frames(payload)):
-                    row.update(
-                        n_channels=mp3["n_channels"],
-                        sample_rate=mp3["sample_rate"],
-                        bits_per_sample=None,  # compressed: no PCM width
-                        duration_seconds=mp3["duration_seconds"],
-                    )
-                elif fmt == "wav" and (hdr := parse_wav_header(payload)):
-                    byte_rate = (
-                        hdr["sample_rate"]
-                        * hdr["n_channels"]
-                        * max(hdr["bits_per_sample"], 1)
-                        // 8
-                    )
-                    row.update(
-                        n_channels=hdr["n_channels"],
-                        sample_rate=hdr["sample_rate"],
-                        bits_per_sample=hdr["bits_per_sample"],
-                        duration_seconds=(
-                            round(hdr["n_data_bytes"] / byte_rate, 6)
-                            if byte_rate
-                            else None
-                        ),
-                    )
-                    if pcm := wav_pcm_stats(payload):
-                        row.update(
-                            mean_amplitude=round(pcm["mean_abs"], 6),
-                            rms=round(pcm["rms"], 6),
-                        )
-                rows.append(row)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "format", "n_channels", "sample_rate",
-                    "bits_per_sample", "duration_seconds",
-                    "mean_amplitude", "rms", "n_bytes",
-                ],
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        batches, AUDIO_FEATURE_SCHEMA
-    )

@@ -394,7 +394,6 @@ def ivf_assign(
     round_means: int | None = None,
     early_stop_eps: float | None = None,
     assign_strategy: str = "auto",
-    return_first_n: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic Lloyd iterations.
 
@@ -443,14 +442,37 @@ def ivf_assign(
     unrolled CTE chain; on a converged corpus the early-stopped result
     is identical to the full run anyway (a fixed point stays fixed), so
     the same oracle still matches when enabled.
-
-    ``return_first_n`` (r12, VERDICT r11 #3 "fused init"): when > 0 the
-    function returns a THIRD element — the first ``return_first_n``
-    rows of the projected corpus by id ASC — collected in the SAME
-    driver job as the centroid init (the init collect just widens its
-    limit), so a caller that needs a lowest-id training sample (ivfpq's
-    PQ codebooks) pays zero extra jobs for it.
     """
+    assignments, cents, _ = _ivf_fit(
+        corpus, dim, n_centroids, n_iters, id_col, vec_col, round_means,
+        early_stop_eps, assign_strategy,
+    )
+    centroids = corpus.sparkSession.createDataFrame(
+        [(cell, cvec) for cell, cvec in cents], "cell INT, cvec ARRAY<DOUBLE>"
+    )
+    return assignments, centroids
+
+
+def _ivf_fit(
+    corpus: DataFrame,
+    dim: int,
+    n_centroids: int = 8,
+    n_iters: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_means: int | None = None,
+    early_stop_eps: float | None = None,
+    assign_strategy: str = "auto",
+    n_first: int = 0,
+) -> tuple[DataFrame, list[tuple[int, list[float]]], list]:
+    """The Lloyd fit behind ``ivf_assign``: returns (assignments, the
+    driver-side (cell, cvec) centroid list, the first ``n_first`` rows
+    of the projected corpus by id ASC). The centroid list is already on
+    the driver, so the ANN/cluster operators build their probe and
+    lookup literals from it without a collect. The first rows come from
+    the SAME job as the centroid init (r12 "fused init": the init
+    collect just widens its limit), so ivfpq's lowest-id PQ training
+    sample costs no extra job."""
     from .dedup import _needs_spread, _persist
 
     # the projected corpus is scanned once per Lloyd iteration plus the
@@ -477,7 +499,7 @@ def ivf_assign(
     c = _persist(proj)
     if rebalance:
         c = c.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    first_rows = c.orderBy("id").limit(max(n_centroids, return_first_n)).collect()
+    first_rows = c.orderBy("id").limit(max(n_centroids, n_first)).collect()
     cents: list[tuple[int, list[float]]] = [
         (i + 1, list(r.v)) for i, r in enumerate(first_rows[:n_centroids])
     ]
@@ -522,8 +544,6 @@ def ivf_assign(
         return vecs.join(best_per_v, F.col("v") == F.col("_bv")).select(
             "id", "v", "cell"
         )
-
-    cent_schema = "cell INT, cvec ARRAY<DOUBLE>"
 
     def _mean_step(assigned: DataFrame) -> DataFrame:
         # new centroid = element-wise mean of member vectors
@@ -580,27 +600,7 @@ def ivf_assign(
             )
             if moved <= early_stop_eps:
                 break
-    centroids = spark.createDataFrame(
-        [(cell, cvec) for cell, cvec in cents], cent_schema
-    )
-    # the centroid rows are already driver-side — attach them so
-    # consumers (ivf_topk/ivfpq_topk probe construction) skip the
-    # ~0.5 s LocalTableScan collect round-trip (_centroid_rows)
-    centroids._ivf_local_cents = cents
-    if return_first_n:
-        return assign(c), centroids, first_rows[:return_first_n]
-    return assign(c), centroids
-
-
-def _centroid_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
-    """Driver-side (cell, cvec) list of a centroid table WITHOUT a
-    collect round-trip when ``ivf_assign`` built it (the list is
-    attached — it was collected to the driver to become plan literals
-    anyway); falls back to a real collect for frames built elsewhere."""
-    local = getattr(centroids, "_ivf_local_cents", None)
-    if local is not None:
-        return [(cell, list(cvec)) for cell, cvec in local]
-    return [(r.cell, list(r.cvec)) for r in centroids.collect()]
+    return assign(c), cents, first_rows[:n_first]
 
 
 def ivf_topk(
@@ -630,15 +630,14 @@ def ivf_topk(
     switches to the Arrow/numpy arms (_gemm_assign/_gemm_probes) above
     GEMM_ASSIGN_MIN_TERMS centroid terms — at large n_centroids the
     per-element lambda cost of the folds dominates the whole query."""
-    assignments, centroids = ivf_assign(
+    # centroid rows come straight off the fit's driver-side list (a
+    # LocalTableScan collect cost ~0.5 s of query execution per call —
+    # measured r12)
+    assignments, cents, _ = _ivf_fit(
         corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col,
         round_means=round_means, assign_strategy=assign_strategy,
     )
     use_gemm = _use_gemm(assign_strategy, n_centroids * dim)
-    # centroid rows come straight off the driver-side list ivf_assign
-    # attached (a LocalTableScan collect still cost ~0.5 s of query
-    # execution per call — measured r12)
-    cents = _centroid_rows(centroids)
     members = assignments.select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "cell"
     ).withColumn("cn", V.norm(F.col("cv")))
@@ -742,8 +741,7 @@ def cluster_sample(
         raise ValueError(f"mode must be 'prototypes' or 'spread', got {mode!r}")
     if per_cell < 1:
         raise ValueError("per_cell must be >= 1")
-    spark = corpus.sparkSession
-    assignments, centroids = ivf_assign(
+    assignments, cents, _ = _ivf_fit(
         corpus, dim, n_centroids=n_cells, n_iters=n_iters, id_col=id_col,
         vec_col=vec_col, round_means=round_means,
         assign_strategy=assign_strategy,
@@ -753,9 +751,7 @@ def cluster_sample(
     # table: same _sqdist fold over the same literal doubles, one
     # BroadcastHashJoin fewer, and it sidesteps the Spark 4.1
     # pushed-fold binding bug (_centroid_lookup_expr docstring)
-    cvec = F.element_at(
-        _centroid_lookup_expr(_centroid_rows(centroids)), F.col("cell").cast("int")
-    )
+    cvec = F.element_at(_centroid_lookup_expr(cents), F.col("cell").cast("int"))
     d2 = _sqdist(F.col("v"), cvec)
     # 'spread' negates the sort key instead of reversing the sort, so
     # one struct ordering serves both modes with the id asc tie-break
@@ -825,7 +821,7 @@ def kmeans_quality(
     resident by construction) + one map-side-combined groupBy(cell) —
     the exact shape of a Lloyd mean step; output is n_centroids rows.
     """
-    assignments, centroids = ivf_assign(
+    assignments, cents, _ = _ivf_fit(
         corpus, dim, n_centroids=n_centroids, n_iters=n_iters, id_col=id_col,
         vec_col=vec_col, round_means=round_means,
         assign_strategy=assign_strategy,
@@ -833,9 +829,7 @@ def kmeans_quality(
     # literal cell→cvec map lookup instead of the broadcast join — same
     # fold over the same literal doubles, one BroadcastHashJoin fewer,
     # and no pushed-fold binding bug (_centroid_lookup_expr docstring)
-    cvec = F.element_at(
-        _centroid_lookup_expr(_centroid_rows(centroids)), F.col("cell").cast("int")
-    )
+    cvec = F.element_at(_centroid_lookup_expr(cents), F.col("cell").cast("int"))
     d2 = F.round(_sqdist(F.col("v"), cvec), round_to)
     return (
         assignments
@@ -1173,7 +1167,7 @@ def ivfpq_topk(
         # and train the PQ on cells that disagree with the engine's)
         strategy = "auto"
         use_gemm = _use_gemm(strategy, n_centroids * dim)
-        res = ivf_assign(
+        assignments, cents, first_rows = _ivf_fit(
             corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col,
             round_means=round_means, assign_strategy=strategy,
             # fused init (VERDICT r11 #3): the PQ training sample is the
@@ -1181,15 +1175,9 @@ def ivfpq_topk(
             # widen that collect instead of running a second job (the
             # gemm arm keeps its own engine-cell collect below: pruning
             # cannot skip an opaque mapInPandas)
-            return_first_n=0 if use_gemm else n_train,
+            n_first=0 if use_gemm else n_train,
         )
-        if use_gemm:
-            assignments, centroids = res
-            first_rows = None
-        else:
-            assignments, centroids, first_rows = res
         _q_collected = _qfut.result()
-    cents = _centroid_rows(centroids)
     cent_map = {cell: cvec for cell, cvec in cents}
     sub = dim // m
     if residual:
@@ -1224,7 +1212,7 @@ def ivfpq_topk(
         # (v, cents) — _sqdist_py is the same left-to-right fold as the
         # Column expression and min((dist, cell)) is the same
         # (dist asc, cell asc) tie-break. The rows themselves came back
-        # with the init collect (return_first_n — the identical
+        # with the init collect (n_first — the identical
         # TakeOrdered over the persisted projection, one job earlier),
         # so this arm now runs zero jobs.
         sample_rows = [

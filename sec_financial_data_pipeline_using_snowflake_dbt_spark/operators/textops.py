@@ -78,55 +78,44 @@ def fingerprints(
     )
 
 
-def split_bucket(id_col: str = "doc_id", buckets: int = 100) -> F.Column:
+#: The split policy: md5 bucket of the row id in [0, SPLIT_BUCKETS);
+#: buckets below TRAIN_BUCKETS are train, the next VAL_BUCKETS are val,
+#: the rest test.
+SPLIT_BUCKETS = 100
+TRAIN_BUCKETS = 90
+VAL_BUCKETS = 5
+
+
+def split_bucket(id_col: str = "doc_id") -> F.Column:
     """The deterministic split bucket of an id — first 4 hex digits of
-    md5(id) mod ``buckets``, an INT column. THE single spelling of the
-    bucket arithmetic: ``assign_split`` builds its bucket/split columns
-    from it, and compositions that only need a bucket PREDICATE (e.g.
-    "keep the train split") can filter on it directly instead of
-    joining ``assign_split``'s projected output back onto the corpus —
-    row-identical, minus a join."""
+    md5(id) mod ``SPLIT_BUCKETS``, an INT column. THE single spelling of
+    the bucket arithmetic: ``assign_split`` builds its bucket/split
+    columns from it, and compositions that only need a bucket PREDICATE
+    (e.g. "keep the train split": ``split_bucket(...) < TRAIN_BUCKETS``)
+    can filter on it directly instead of joining ``assign_split``'s
+    projected output back onto the corpus — row-identical, minus a
+    join."""
     h = F.md5(F.col(id_col).cast("string"))
-    return F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % buckets
+    return F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % SPLIT_BUCKETS
 
 
-def assign_split(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    train: int = 90,
-    val: int = 5,
-    buckets: int = 100,
-) -> DataFrame:
+def assign_split(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic train/val/test assignment for corpus building.
 
-    Bucket = first 4 hex digits of md5(id) mod ``buckets`` — a pure
-    function of the row id: stable across runs, engines, partitionings,
-    and cluster sizes (unlike ``rand()`` or Spark's ``hash()``), so a
-    document never migrates between splits as the corpus grows.
+    Bucket = ``split_bucket(id)`` — a pure function of the row id:
+    stable across runs, engines, partitionings, and cluster sizes
+    (unlike ``rand()`` or Spark's ``hash()``), so a document never
+    migrates between splits as the corpus grows.
     """
-    bucket = split_bucket(id_col, buckets).alias("bucket")
+    bucket = split_bucket(id_col).alias("bucket")
     split = (
-        F.when(F.col("bucket") < train, "train")
-        .when(F.col("bucket") < train + val, "val")
+        F.when(F.col("bucket") < TRAIN_BUCKETS, "train")
+        .when(F.col("bucket") < TRAIN_BUCKETS + VAL_BUCKETS, "val")
         .otherwise("test")
     )
     return docs.select(F.col(id_col), bucket).select(
         id_col, F.col("bucket").cast("int").alias("bucket"), split.alias("split")
     )
-
-
-def stratified_sample(
-    docs: DataFrame,
-    strata_col: str,
-    fractions: dict[str, float],
-    seed: int = 42,
-) -> DataFrame:
-    """Per-stratum sampling (e.g. language rebalancing for a training
-    mix): ``sampleBy`` with a fixed seed. Deterministic for a fixed
-    partitioning, but NOT across engines/layouts — prefer
-    ``stratified_sample_hash`` when reproducibility across runs,
-    engines, or cluster sizes matters (it usually does)."""
-    return docs.sampleBy(strata_col, fractions, seed)
 
 
 def stratified_sample_hash(
@@ -2012,39 +2001,6 @@ _BPE_SEP = "\x1f"
 MAX_DRIVER_WORDS = 200_000
 
 
-def _bpe_train_driver(
-    rows: list[tuple[str, int]], n_merges: int
-) -> list[tuple[int, str, str, str, int]]:
-    """Sequential BPE over a collected (word, count) table — the same
-    greedy semantics and tie-break (count DESC, pair lexicographic ASC)
-    as the distributed rounds, byte-identical by the shared property
-    test. One pass per merge over the vocabulary dict."""
-    words: dict[str, list[str]] = {w: list(w) for w, _ in rows}
-    freq = {w: c for w, c in rows}
-    merges: list[tuple[int, str, str, str, int]] = []
-    for step in range(1, n_merges + 1):
-        pairs: dict[tuple[str, str], int] = {}
-        for w, syms in words.items():
-            c = freq[w]
-            for a, b in zip(syms, syms[1:]):
-                pairs[(a, b)] = pairs.get((a, b), 0) + c
-        if not pairs:
-            break
-        (s1, s2), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((step, s1, s2, s1 + s2, c))
-        for w, syms in words.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == s1 and syms[i + 1] == s2:
-                    out.append(s1 + s2)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            words[w] = out
-    return merges
-
-
 def _bpe_train_incremental(
     rows: list[tuple[str, int]], n_merges: int
 ) -> list[tuple[int, str, str, str, int]]:
@@ -2054,8 +2010,8 @@ def _bpe_train_incremental(
     and each merge touches ONLY the words that contain the merged pair
     (an inverted pair→word index) instead of re-scanning the whole
     vocabulary. Per-merge cost is O(total length of affected words +
-    heap ops) — flat enough for real 32k-merge vocabularies where the
-    plain one-pass-per-merge reference (``_bpe_train_driver``) is
+    heap ops) — flat enough for real 32k-merge vocabularies where a
+    plain one-pass-per-merge trainer (the property test's reference) is
     O(V · merges).
 
     Semantics are byte-identical to the reference arm — same greedy

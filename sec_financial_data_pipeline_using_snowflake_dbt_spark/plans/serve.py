@@ -90,9 +90,14 @@ def filtered_read(
     return out.limit(limit)
 
 
-def filter_widget_probe(df: DataFrame, max_categories: int = 15) -> dict[str, dict]:
+#: A column with fewer distinct values than this gets a categorical
+#: filter widget (reference app.py:485-505).
+MAX_CATEGORIES = 15
+
+
+def filter_widget_probe(df: DataFrame) -> dict[str, dict]:
     """Derive per-column filter-widget specs the way the UI does
-    (reference app.py:485-505): categorical when < max_categories
+    (reference app.py:485-505): categorical when < ``MAX_CATEGORIES``
     distinct values, otherwise min/max range for numerics and dates.
 
     Exactly TWO jobs regardless of column count: one aggregate pass for
@@ -117,7 +122,7 @@ def filter_widget_probe(df: DataFrame, max_categories: int = 15) -> dict[str, di
         for n, _ in df.dtypes
         # collect_set needs a hashable/orderable type — map-bearing
         # columns fall through to the "search" widget
-        if stats[f"{n}__card"] < max_categories and _orderable(df.schema[n].dataType)
+        if stats[f"{n}__card"] < MAX_CATEGORIES and _orderable(df.schema[n].dataType)
     ]
     cat_vals: dict[str, list] = {}
     if cat_cols:
@@ -131,7 +136,7 @@ def filter_widget_probe(df: DataFrame, max_categories: int = 15) -> dict[str, di
             vals = list(map(str, cat_vals[name]))
             if stats[f"{name}__has_null"]:
                 vals.append(str(None))  # parity with the old distinct() path
-            vals = sorted(vals)[:max_categories]
+            vals = sorted(vals)[:MAX_CATEGORIES]
             widgets[name] = {"kind": "categorical", "values": vals}
         elif f"{name}__min" in stats:
             widgets[name] = {

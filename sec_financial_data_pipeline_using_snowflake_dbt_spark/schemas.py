@@ -141,6 +141,3 @@ SEC_SCHEMAS: dict[str, T.StructType] = {
     "num": NUM_SCHEMA,
     "pre": PRE_SCHEMA,
 }
-
-# Valid statement codes (reference: Airflow/dags/Sec_data_pipeline.py:365).
-STATEMENT_CODES = ("BS", "IS", "CF", "EQ", "CI", "SI", "UN")

@@ -27,7 +27,7 @@ biggest cost in the star build.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..session import persist_fresh
 
@@ -134,72 +134,3 @@ def write_training_shards(
         )
         .orderBy(shard_col)
     )
-
-
-def compact_files(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    order_cols: list[str] | None = None,
-    zorder_cols: list[str] | None = None,
-) -> dict:
-    """OPTIMIZE for plain parquet — the small-file maintenance pass every
-    lake needs (streaming sinks and incremental appends accrete kilobyte
-    files; at 100 TB, scan cost is dominated by file-open overhead and
-    lost row-group parallelism long before bytes).
-
-    Rewrites ``in_path`` into ``out_path`` as ``ceil(bytes/target_bytes)``
-    files. Layout options, mutually exclusive:
-
-    - default: round-robin ``repartition`` (even file sizes, no ordering);
-    - ``order_cols``: range-partition + in-partition sort — linear
-      clustering, single-column pruning preserved across the rewrite;
-    - ``zorder_cols``: re-cluster through ``operators/layout.zorder_layout``
-      — compaction and multi-dimensional re-clustering in the same single
-      shuffle (the Delta ``OPTIMIZE ZORDER BY`` composition).
-
-    Sizes come from the Hadoop FileSystem of whatever scheme ``in_path``
-    lives on (content summary — no driver listing of file contents).  The
-    write lands in ``out_path`` (never in place: an in-place rewrite that
-    dies mid-job destroys the table); the read-back row count must equal
-    the input or this raises, leaving the input untouched.  Returns the
-    manifest a maintenance job records: files/bytes before and after.
-    """
-    if order_cols and zorder_cols:
-        raise ValueError("order_cols and zorder_cols are mutually exclusive")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(in_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    bytes_before = fs.getContentSummary(hpath).getLength()
-    df = spark.read.parquet(in_path)
-    files_before = len(df.inputFiles())
-    n_rows = df.count()
-    n_out = max(1, -(-bytes_before // target_bytes))
-    if zorder_cols:
-        from ..operators.layout import zorder_layout
-
-        out = zorder_layout(df, zorder_cols, n_files=n_out)
-    elif order_cols:
-        out = df.repartitionByRange(n_out, *order_cols).sortWithinPartitions(
-            *order_cols
-        )
-    else:
-        out = df.repartition(n_out)
-    out.write.mode("overwrite").parquet(out_path)
-    back = spark.read.parquet(out_path)
-    rows_after = back.count()
-    if rows_after != n_rows:
-        raise RuntimeError(
-            f"compaction row-count mismatch: {n_rows} in, {rows_after} out "
-            f"({out_path} kept for inspection; input untouched)"
-        )
-    opath = jvm.org.apache.hadoop.fs.Path(out_path)
-    return {
-        "rows": n_rows,
-        "files_before": files_before,
-        "files_after": len(back.inputFiles()),
-        "bytes_before": int(bytes_before),
-        "bytes_after": int(fs.getContentSummary(opath).getLength()),
-        "target_files": int(n_out),
-    }

@@ -9,8 +9,8 @@ offers three strengths of the same idea, all here:
                                subquery against the existing target).
 2. ``incremental_append``    — watermark-filtered append to a target
                                path (the dbt incremental materialization).
-3. ``stream_sec_quarter`` /  — Structured Streaming with
-   ``stream_hourly_events``   Trigger.AvailableNow over the landing
+3. ``stream_sec_quarter``    — Structured Streaming with
+                               Trigger.AvailableNow over the landing
                                directory: exactly-once file ingest with
                                checkpointed progress — the scale-correct
                                replacement for "reprocess everything
@@ -98,24 +98,6 @@ def stream_sec_quarter(
     q.awaitTermination()
 
 
-def hourly_event_aggregate(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked tumbling-window aggregate over an event stream —
-    late rows beyond the watermark are dropped, state is bounded."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("window.start").alias("hour_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
 def sessionized_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows per user (dynamic-gap sessionization) — the
     streaming analogue of the batch lag/cumsum sessionization in the
@@ -130,102 +112,6 @@ def sessionized_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
             "user_id",
             "n_events",
         )
-    )
-
-
-def stateful_user_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    per-user running (event count, value total) maintained in explicit
-    state across micro-batches — the arbitrary-state API that windowed
-    aggregation can't express (e.g. conditional resets, per-key
-    accounting).
-
-    State schema: (n long, total double). Emits one row per user per
-    micro-batch with the post-batch totals.
-    """
-    import pandas as pd
-
-    def update(key, pdfs, state):
-        n, total = state.get() if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "value_total": [round(total, 2)]}
-        )
-
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id long, n_events long, value_total double",
-            stateStructType="n long, total double",
-            outputMode="update",
-            timeoutConf=f"{timeout}",
-        )
-    )
-
-
-def stream_merge_sink(
-    stream: DataFrame,
-    target_path: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-) -> None:
-    """Exactly-once upsert sink via ``foreachBatch``: each micro-batch is
-    deduplicated on ``key_cols`` against the existing target before
-    appending (the MERGE-INTO emulation for plain Parquet — with Delta,
-    this body becomes one MERGE statement).
-
-    foreachBatch + checkpointing gives at-least-once batch delivery with
-    a deterministic batch id; the anti-join makes the append idempotent,
-    so re-processing a batch after a crash cannot duplicate keys.
-    """
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = batch_df.dropDuplicates(key_cols)
-        try:
-            existing = spark.read.parquet(target_path).select(*key_cols).distinct()
-            fresh = fresh.join(existing, key_cols, "left_anti")
-        except Exception:  # noqa: BLE001 — first batch: no target yet
-            pass
-        fresh.write.mode("append").parquet(target_path)
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_exact_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of ``dedup.exact_dedup``: the first occurrence of
-    each content hash passes, repeats are dropped as they arrive.
-
-    Two state regimes:
-    - ``ts_col=None`` → ``dropDuplicates`` on the hash: exact forever,
-      but the dedup state grows with the number of DISTINCT hashes —
-      fine for bounded corpora and availableNow backfills.
-    - with ``ts_col`` → ``dropDuplicatesWithinWatermark``: state is
-      bounded by the watermark horizon; a repeat arriving later than the
-      horizon can reappear — the standard state-size/completeness trade
-      for unbounded streams (pair with a batch ``exact_dedup`` sweep
-      downstream for the long tail).
-    """
-    hashed = docs.withColumn("content_hash", F.md5(F.col(text_col)))
-    if ts_col is None:
-        return hashed.dropDuplicates(["content_hash"])
-    return hashed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["content_hash"]
     )
 
 

@@ -1381,7 +1381,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on: row-identical (canon ids are unique; the join neither added
     # nor removed rows), and the join + its duplicate canon subtree
     # disappear from the plan (guide §2.4).
-    final = canon.filter(TO.split_bucket("doc_id") < 90)
+    final = canon.filter(TO.split_bucket("doc_id") < TO.TRAIN_BUCKETS)
     return TO.pack_sequences(
         final, budget=_PACK_BUDGET, n_shards=_PACK_SHARDS
     )

@@ -8,15 +8,39 @@ import os
 import subprocess
 import sys
 
+import pytest
 
-def test_bench_emits_json_line():
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH_ARTIFACT = os.path.join(REPO, "artifacts", "bench_latest.json")
+
+
+@pytest.fixture
+def keep_bench_artifact():
+    """bench.py rewrites the tracked artifacts/bench_latest.json: put its
+    bytes back after the test, or remove it if it did not exist."""
+    try:
+        with open(BENCH_ARTIFACT, "rb") as fh:
+            saved = fh.read()
+    except FileNotFoundError:
+        saved = None
+    try:
+        yield
+    finally:
+        if saved is not None:
+            with open(BENCH_ARTIFACT, "wb") as fh:
+                fh.write(saved)
+        elif os.path.exists(BENCH_ARTIFACT):
+            os.remove(BENCH_ARTIFACT)
+
+
+def test_bench_emits_json_line(keep_bench_artifact):
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
     env["SPARK_GRAFT_CPUS"] = "8"
     env["SPARK_GRAFT_BENCH_REPS"] = "1"  # smoke: shape, not timing
     proc = subprocess.run(
         [sys.executable, "bench.py"],
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        cwd=REPO,
         env=env,
         capture_output=True,
         text=True,
@@ -102,8 +126,7 @@ def test_budgets_file_covers_headline():
     its recorded baseline."""
     import bench
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "bench_budgets.json")) as fh:
+    with open(os.path.join(REPO, "bench_budgets.json")) as fh:
         data = json.load(fh)
     budgets, baseline = data["budget"], data["baseline"]
     assert set(bench.HEADLINE) <= set(budgets)

@@ -130,67 +130,3 @@ def test_write_training_shards_layout_and_manifest(spark, tmp_path_factory):
         "PartitionFilters: [isnotnull(shard" in norm
         or "shard" in plan.split("PartitionFilters")[1][:80]
     )
-
-
-def test_compact_files_bin_packs_and_preserves_content(spark, tmp_path):
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.sources.catalog import (
-        compact_files,
-    )
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    src = str(tmp_path / "small")
-    li.repartition(64).write.parquet(src)  # the accreted-small-files shape
-    out = str(tmp_path / "packed")
-    m = compact_files(spark, src, out, target_bytes=64 * 1024)
-    assert m["files_before"] == 64
-    assert m["files_after"] == m["target_files"] < 32
-    assert m["rows"] == li.count()
-    # content identical (orderless compare via groupBy-count hash)
-    a = spark.read.parquet(src).groupBy(*li.columns).count()
-    b = spark.read.parquet(out).groupBy(*li.columns).count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_compact_files_zorder_recluster_and_errors(spark, tmp_path):
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.sources.catalog import (
-        compact_files,
-    )
-    import pyarrow.parquet as pq
-    import glob as g
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    src = str(tmp_path / "small")
-    li.repartition(32).write.parquet(src)
-    out = str(tmp_path / "zpacked")
-    m = compact_files(
-        spark, src, out, target_bytes=16 * 1024, zorder_cols=["l_partkey", "l_suppkey"]
-    )
-    assert m["files_after"] > 1
-
-    def boxes(path):
-        out_boxes = []
-        for f in sorted(g.glob(f"{path}/part-*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            span = []
-            for ci in (0, 1):  # l_partkey, l_suppkey
-                lo = min(md.row_group(i).column(ci).statistics.min
-                         for i in range(md.num_row_groups))
-                hi = max(md.row_group(i).column(ci).statistics.max
-                         for i in range(md.num_row_groups))
-                span.append(hi - lo + 1)
-            out_boxes.append(span[0] * span[1])
-        return out_boxes
-
-    plain = str(tmp_path / "plainpacked")
-    compact_files(spark, src, plain, target_bytes=16 * 1024)
-    z_area = sum(boxes(out)) / m["files_after"]
-    p_area = sum(boxes(plain)) / len(boxes(plain))
-    # re-clustering is real: the mean per-file (partkey x suppkey)
-    # bounding box shrinks vs round-robin compaction
-    assert z_area < 0.6 * p_area, (z_area, p_area)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="mutually exclusive"):
-        compact_files(spark, src, out, order_cols=["l_partkey"], zorder_cols=["l_suppkey"])

@@ -359,23 +359,9 @@ def test_assign_split_rates_and_stability(spark, docs):
     # its assign_split join-back for this predicate)
     direct = {
         r.doc_id
-        for r in docs.filter(TO.split_bucket("doc_id") < 90).collect()
+        for r in docs.filter(TO.split_bucket("doc_id") < TO.TRAIN_BUCKETS).collect()
     }
     assert direct == {d for d, s in m1.items() if s == "train"}
-
-
-def test_stratified_sample_rates(spark, docs):
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
-        textops as TO,
-    )
-
-    sampled = TO.stratified_sample(
-        docs, "lang", {"en": 0.5, "de": 1.0, "es": 1.0, "fr": 1.0, "zh": 1.0}
-    )
-    full = {r.lang: r.cnt for r in docs.groupBy("lang").count().withColumnRenamed("count", "cnt").collect()}
-    got = {r.lang: r.cnt for r in sampled.groupBy("lang").count().withColumnRenamed("count", "cnt").collect()}
-    assert got["de"] == full["de"]  # fraction 1.0 keeps everything
-    assert 0.2 < got["en"] / full["en"] < 0.8  # ~0.5 within tolerance
 
 
 def test_stratified_sample_hash_rates_and_stability(spark, docs):
@@ -1398,43 +1384,6 @@ def test_bloom_and_classifier_null_text_match_oracle(spark):
     nulldoc = {r.doc_id: r for r in cls.collect()}[1]
     assert nulldoc.logit == 0.0 and nulldoc.label == 0 and nulldoc.n_tokens == 0
     con.close()
-
-
-def test_minhash_plan_advisor():
-    """The banding advisor must (a) reproduce the textbook S-curve
-    probability, (b) pick the least-subthreshold-area split among those
-    capturing >= min_capture (brute-force verified over every divisor
-    split), (c) fall back to max capture when the budget can't reach
-    min_capture, and (d) endorse the workload's own 8 = 4x2 at 0.8
-    (capture ~0.983 — the q_dedup_recall configuration)."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.dedup import (
-        minhash_plan,
-    )
-
-    plan = minhash_plan(0.8, 8)
-    assert (plan["bands"], plan["rows"]) == (4, 2)
-    assert abs(plan["capture_at_threshold"] - (1 - (1 - 0.8**2) ** 4)) < 1e-12
-
-    # brute-force the selection rule over a bigger budget
-    for threshold, nh in ((0.7, 16), (0.9, 12), (0.5, 16)):
-        plan = minhash_plan(threshold, nh)
-        cands = plan["candidates"]
-        assert sorted((c["bands"], c["rows"]) for c in cands) == sorted(
-            (b, nh // b) for b in range(1, nh + 1) if nh % b == 0
-        )
-        ok = [c for c in cands if c["capture_at_threshold"] >= 0.9]
-        if ok:
-            want = min(ok, key=lambda c: c["subthreshold_area"])
-            assert (plan["bands"], plan["rows"]) == (want["bands"], want["rows"])
-        # the chosen split is always a real divisor split
-        assert plan["bands"] * plan["rows"] == nh
-
-    # tiny budget at a low threshold: nothing reaches 0.9 -> max capture
-    plan = minhash_plan(0.3, 2, min_capture=0.9)
-    cands = plan["candidates"]
-    assert plan["capture_at_threshold"] == max(
-        c["capture_at_threshold"] for c in cands
-    )
 
 
 def test_simhash_auto_width_dispatch(spark, docs):

@@ -50,17 +50,15 @@ def test_pack_assets_schema(assets):
     assert assets.count() == 5
     meta = assets.select("meta.n_bytes", "meta.content_hash").first()
     assert meta.n_bytes > 0 and len(meta.content_hash) == 32
-
-
-def test_classify_modality(assets):
-    mods = {
-        r.format: r.modality for r in MM.classify_modality(assets).collect()
+    # the packed payloads are the files' bytes: each sniffs to its format
+    sniffed = {MM.sniff_format(bytes(r.payload)) for r in assets.collect()}
+    assert sniffed == {
+        ("image", "png"), ("image", "jpeg"), ("audio", "wav"),
+        ("video", "mp4"), ("unknown", "unknown"),
     }
-    assert mods["png"] == "image"
-    assert mods["jpeg"] == "image"
-    assert mods["wav"] == "audio"
-    assert mods["mp4"] == "video"
-    assert mods["unknown"] == "unknown"
+    # raw MPEG1 Layer III frames without an ID3 tag sniff by frame sync
+    mp3 = (b"\xff\xfb\x90\x00" + bytes(413)) * 3
+    assert MM.sniff_format(mp3) == ("audio", "mp3")
 
 
 def test_decode_image_features(assets):
@@ -214,153 +212,10 @@ def test_q_multimodal_features_reports_header_dims(spark):
     )
 
 
-def test_decode_audio_features_real_wav_header(spark, tmp_path_factory):
-    """WAV fmt/data chunks parse to real channel/rate/bits/duration."""
-    import struct as st
-
-    d = tmp_path_factory.mktemp("audio")
-    rate, channels, bits, seconds = 16000, 2, 16, 3
-    n_data = rate * channels * (bits // 8) * seconds
-    fmt_body = st.pack("<HHIIHH", 1, channels, rate,
-                       rate * channels * bits // 8, channels * bits // 8, bits)
-    wav = (
-        b"RIFF" + st.pack("<I", 36 + n_data) + b"WAVE"
-        + b"fmt " + st.pack("<I", len(fmt_body)) + fmt_body
-        + b"data" + st.pack("<I", n_data) + bytes(64)  # payload truncated: header math only
-    )
-    (d / "t.wav").write_bytes(wav)
-    assets = MM.pack_assets(spark.read.format("binaryFile").load(str(d)))
-    row = MM.decode_audio_features(assets).collect()[0]
-    assert (row.n_channels, row.sample_rate, row.bits_per_sample) == (2, 16000, 16)
-    assert row.duration_seconds == 3.0
-    assert row.format == "wav"
-
-
-def _mp3_frames(n_frames: int = 10, with_id3: bool = True) -> bytes:
-    """MPEG1 Layer III, 128 kbps, 44100 Hz, stereo, no padding:
-    frame_len = 1152/8 * 128000 // 44100 = 417 bytes."""
-    frame = b"\xff\xfb\x90\x00" + bytes(417 - 4)
-    id3 = b"ID3\x03\x00\x00\x00\x00\x00\x00" if with_id3 else b""
-    return id3 + frame * n_frames
-
-
-def test_parse_mp3_frames_known_math():
-    got = MM.parse_mp3_frames(_mp3_frames(10))
-    assert got["n_channels"] == 2 and got["sample_rate"] == 44100
-    assert got["bitrate_kbps"] == 128 and got["n_frames"] == 10
-    assert got["duration_seconds"] == round(10 * 1152 / 44100, 6)
-    # raw stream without ID3 sniffs and parses too
-    assert MM.sniff_format(_mp3_frames(3, with_id3=False)) == ("audio", "mp3")
-    assert MM.parse_mp3_frames(_mp3_frames(3, with_id3=False))["n_frames"] == 3
-    # garbage after the sync byte is rejected
-    assert MM.parse_mp3_frames(b"\xff\xe0\x00\x00" + bytes(100)) is None
-
-
-def test_decode_audio_features_mp3(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("mp3")
-    (d / "t.mp3").write_bytes(_mp3_frames(20))
-    assets = MM.pack_assets(spark.read.format("binaryFile").load(str(d)))
-    row = MM.decode_audio_features(assets).collect()[0]
-    assert row.format == "mp3"
-    assert (row.n_channels, row.sample_rate) == (2, 44100)
-    assert row.bits_per_sample is None
-    assert row.duration_seconds == round(20 * 1152 / 44100, 6)
-
-
-def _mp4_with_mvhd(seconds: int = 7, timescale: int = 600) -> bytes:
-    mvhd_body = b"\x00" + b"\x00\x00\x00" + struct.pack(
-        ">IIII", 0, 0, timescale, seconds * timescale
-    )  # version 0, flags, ctime, mtime, timescale, duration
-    mvhd = struct.pack(">I", 8 + len(mvhd_body)) + b"mvhd" + mvhd_body
-    moov = struct.pack(">I", 8 + len(mvhd)) + b"moov" + mvhd
-    ftyp = struct.pack(">I", 16) + b"ftypmp42" + b"\x00\x00\x00\x00"
-    return ftyp + moov
-
-
-def test_parse_mp4_mvhd_known_duration():
-    got = MM.parse_mp4_mvhd(_mp4_with_mvhd(seconds=7))
-    assert got == {"timescale": 600, "duration_units": 4200,
-                   "duration_seconds": 7.0}
-    assert MM.parse_mp4_mvhd(_mp4(256)) is None  # bare ftyp fragment
-
-
-def test_decode_video_features(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("video")
-    (d / "real.mp4").write_bytes(_mp4_with_mvhd(seconds=3))
-    (d / "frag.mp4").write_bytes(_mp4(512))
-    assets = MM.pack_assets(spark.read.format("binaryFile").load(str(d)))
-    got = MM.decode_video_features(assets).collect()
-    # asset_id is md5(path); tell the two apart by size (frag is larger)
-    real = min(got, key=lambda r: r.n_bytes)
-    frag = max(got, key=lambda r: r.n_bytes)
-    assert real.duration_seconds == 3.0 and real.timescale == 600
-    assert frag.duration_seconds is None
-
-
 # ---------------------------------------------------------------------------
 # r5 (VERDICT r4 #4): REAL byte-math decode for uncompressed payloads —
-# golden tests with synthesized PCM / BMP / PNM bytes of KNOWN stats.
+# golden tests with synthesized BMP / PNM bytes of KNOWN stats.
 # ---------------------------------------------------------------------------
-
-
-def _pcm_wav(samples: list[int], bits: int = 16, rate: int = 8000,
-             channels: int = 1) -> bytes:
-    """Canonical PCM WAV with exactly the given integer samples."""
-    if bits == 8:
-        data = bytes(s & 0xFF for s in samples)
-    elif bits == 16:
-        data = b"".join(struct.pack("<h", s) for s in samples)
-    elif bits == 24:
-        data = b"".join((s & 0xFFFFFF).to_bytes(3, "little") for s in samples)
-    elif bits == 32:
-        data = b"".join(struct.pack("<i", s) for s in samples)
-    else:
-        raise ValueError(bits)
-    fmt_body = struct.pack(
-        "<HHIIHH", 1, channels, rate,
-        rate * channels * bits // 8, channels * bits // 8, bits,
-    )
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-
-def test_wav_pcm_stats_square_wave_16bit():
-    """±16384 square wave: every |sample| = 0.5 → mean_abs = rms = peak
-    = 0.5 exactly."""
-    wav = _pcm_wav([16384, -16384] * 50)
-    got = MM.wav_pcm_stats(wav)
-    assert got["n_samples"] == 100
-    assert got["mean_abs"] == 0.5
-    assert got["rms"] == 0.5
-    assert got["peak"] == 0.5
-
-
-def test_wav_pcm_stats_8_and_24_and_32bit():
-    # 8-bit unsigned: 128 is silence (0.0), 255 → (255-128)/128
-    got8 = MM.wav_pcm_stats(_pcm_wav([128, 255, 128, 255], bits=8))
-    assert got8["peak"] == (255 - 128) / 128.0
-    assert round(got8["mean_abs"], 9) == round((0 + (127 / 128)) / 2, 9)
-    # 24-bit: half-scale positive and negative
-    half24 = 1 << 22
-    got24 = MM.wav_pcm_stats(_pcm_wav([half24, -half24] * 4, bits=24))
-    assert got24["mean_abs"] == 0.5 and got24["rms"] == 0.5
-    # 32-bit full-scale negative
-    got32 = MM.wav_pcm_stats(_pcm_wav([-(1 << 31), 0], bits=32))
-    assert got32["peak"] == 1.0
-    # stereo counts frames, not interleaved samples
-    st = MM.wav_pcm_stats(_pcm_wav([0, 0, 0, 0], bits=16, channels=2))
-    assert st["n_samples"] == 2
-
-
-def test_wav_pcm_stats_rejects_non_pcm():
-    wav = bytearray(_pcm_wav([0, 0]))
-    # audio_format: IEEE float (3) — not integer PCM → codec boundary
-    wav[20:22] = struct.pack("<H", 3)
-    assert MM.wav_pcm_stats(bytes(wav)) is None
-    assert MM.wav_pcm_stats(b"RIFF\x00\x00\x00\x00WAVE") is None
 
 
 def _bmp24(rows_bgr: list[list[tuple[int, int, int]]]) -> bytes:
@@ -419,19 +274,10 @@ def test_decode_image_features_real_luma_for_uncompressed(spark, tmp_path_factor
     assert got["ppm"].mean_luma == 0.0
 
 
-def test_decode_audio_features_pcm_stats(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("pcm")
-    (d / "sq.wav").write_bytes(_pcm_wav([16384, -16384] * 100))
-    assets = MM.pack_assets(spark.read.format("binaryFile").load(str(d)))
-    row = MM.decode_audio_features(assets).collect()[0]
-    assert row.mean_amplitude == 0.5 and row.rms == 0.5
-
-
 def test_hostile_uint32_dimensions_survive(spark):
-    """A crafted PNG IHDR with ~4-billion-pixel dimensions (and an mp4
-    mvhd with a >int32 timescale) must come back as absurd-but-present
-    rows — uint32 wire values overflow an int32 Arrow column and would
-    otherwise kill the whole task."""
+    """A crafted PNG IHDR with ~4-billion-pixel dimensions must come back
+    as an absurd-but-present row — uint32 wire values overflow an int32
+    Arrow column and would otherwise kill the whole task."""
     import struct as st
 
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
@@ -441,19 +287,9 @@ def test_hostile_uint32_dimensions_survive(spark):
     png = b"\x89PNG\r\n\x1a\n" + st.pack(">I", 13) + b"IHDR" + st.pack(
         ">IIBBBBB", 0xFFFFFFF0, 0xFFFFFFF1, 8, 2, 0, 0, 0
     )
-    mvhd = st.pack(">B3x", 0) + st.pack(">IIII", 0, 0, 0xFFFFFFF2, 600)
-    mp4 = (
-        st.pack(">I", 16) + b"ftypisom" + b"\x00\x00\x00\x00"
-        + st.pack(">I", 8 + 8 + len(mvhd)) + b"moov"
-        + st.pack(">I", 8 + len(mvhd)) + b"mvhd" + mvhd
-    )
-    assets = spark.createDataFrame(
-        [("a", png), ("b", mp4)], "asset_id string, payload binary"
-    )
+    assets = spark.createDataFrame([("a", png)], "asset_id string, payload binary")
     img = MM.decode_image_features(assets).collect()
     assert len(img) == 1 and img[0].width == 0xFFFFFFF0
-    vid = MM.decode_video_features(assets).collect()
-    assert len(vid) == 1 and vid[0].timescale == 0xFFFFFFF2
 
 
 # ---------------------------------------------------------------------------

@@ -577,6 +577,39 @@ def test_bpe_train_arms_agree(spark, texts, n_merges):
     assert drv == dist
 
 
+def _bpe_train_reference(
+    rows: list[tuple[str, int]], n_merges: int
+) -> list[tuple[int, str, str, str, int]]:
+    """Sequential BPE over a (word, count) table — greedy, tie-break
+    count DESC then pair lexicographic ASC. One pass per merge over the
+    vocabulary dict: the plain reference the incremental trainer must
+    match."""
+    words: dict[str, list[str]] = {w: list(w) for w, _ in rows}
+    freq = {w: c for w, c in rows}
+    merges: list[tuple[int, str, str, str, int]] = []
+    for step in range(1, n_merges + 1):
+        pairs: dict[tuple[str, str], int] = {}
+        for w, syms in words.items():
+            c = freq[w]
+            for a, b in zip(syms, syms[1:]):
+                pairs[(a, b)] = pairs.get((a, b), 0) + c
+        if not pairs:
+            break
+        (s1, s2), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((step, s1, s2, s1 + s2, c))
+        for w, syms in words.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == s1 and syms[i + 1] == s2:
+                    out.append(s1 + s2)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            words[w] = out
+    return merges
+
+
 @given(
     words=st.lists(
         st.tuples(
@@ -601,11 +634,10 @@ def test_bpe_incremental_trainer_matches_reference(words, n_merges):
     pairs that vanish and REAPPEAR at lower counts after intermediate
     merges (the stale-entry case the lazy heap must discard)."""
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.textops import (
-        _bpe_train_driver,
         _bpe_train_incremental,
     )
 
-    assert _bpe_train_incremental(words, n_merges) == _bpe_train_driver(
+    assert _bpe_train_incremental(words, n_merges) == _bpe_train_reference(
         words, n_merges
     )
 
@@ -1354,7 +1386,7 @@ def test_funnel_retention_hot_user_skew(spark):
     holds 9000 of 10000 events). The production operators must agree
     exactly with the rank-window formulation they avoid (the window
     arm is the SLOW spelling under skew, never a different answer —
-    scripts/funnel_skew_bench.py measures the gap at 4M events)."""
+    NOTES_r8 §7 records the gap at 4M events)."""
     from pyspark.sql import Window
 
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (

@@ -172,33 +172,6 @@ def test_events_ts_normalized_to_timestamp(spark):
         assert mism == 0
 
 
-def test_hourly_watermark_stream(spark):
-    from tests.conftest import SF_SMOKE
-
-    # events_stream owns the runtime-version ts dtype logic (bigint on
-    # pre-4.1 nanosAsLong readers, timestamp_ntz natively on 4.1+)
-    stream = COMMON.events_stream(spark, SF_SMOKE)
-    agg = INC.hourly_event_aggregate(stream)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("hourly_wm_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("hourly_wm_test")
-    # append mode emits only windows sealed by the watermark; with
-    # availableNow the final watermark seals all but the tail window(s)
-    batch = (
-        COMMON.read_events(spark, SF_SMOKE)
-        .groupBy(F.date_trunc("hour", "ts"), "event_type")
-        .count()
-    )
-    assert out.count() > 0
-    assert out.count() <= batch.count()
-
-
 def test_sessionized_stream(spark):
     from tests.conftest import SF_SMOKE
 
@@ -215,117 +188,6 @@ def test_sessionized_stream(spark):
     out = spark.table("sessions_test")
     assert out.count() > 0
     assert out.filter(F.col("n_events") <= 0).count() == 0
-
-
-def test_stateful_user_totals(spark):
-    from tests.conftest import SF_SMOKE
-
-    stream = COMMON.events_stream(spark, SF_SMOKE)
-    q = (
-        INC.stateful_user_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stateful_totals_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("stateful_totals_test")
-    batch = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("t"))
-    )
-    got = {r.user_id: (r.n_events, r.value_total) for r in out.collect()}
-    exp = {r.user_id: (r.n, r.t) for r in batch.collect()}
-    # final state per user matches the batch aggregate (one micro-batch)
-    assert got == exp
-
-
-def test_stream_merge_sink_idempotent(spark, fixture_dir, tmp_path_factory):
-    import sec_financial_data_pipeline_using_snowflake_dbt_spark.schemas as SCH
-
-    base = str(tmp_path_factory.mktemp("merge_sink"))
-    target, ckpt = f"{base}/target", f"{base}/ckpt"
-
-    def run(ckpt_dir):
-        stream = (
-            spark.readStream.schema(
-                spark.createDataFrame([], SCH.SUB_SCHEMA).schema
-            )
-            .option("pathGlobFilter", "*sub.txt")
-            .format("csv")
-            .option("sep", "\t")
-            .option("header", True)
-            .option("dateFormat", "yyyyMMdd")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss")
-            .load(fixture_dir)
-        )
-        INC.stream_merge_sink(stream, target, ckpt_dir, ["adsh"])
-
-    run(ckpt)
-    n1 = spark.read.parquet(target).count()
-    # simulate a redelivery: NEW checkpoint, same files → batch re-runs,
-    # but the anti-join keeps the target key-unique
-    run(f"{base}/ckpt2")
-    n2 = spark.read.parquet(target).count()
-    assert n1 == n2
-    dupes = (
-        spark.read.parquet(target)
-        .groupBy("adsh")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-    )
-    assert dupes == 0
-
-
-def test_streaming_exact_dedup_matches_batch(spark, tmp_path_factory):
-    """Streamed first-occurrence dedup keeps exactly one row per content
-    hash — both regimes (global state / watermark-bounded state) agree
-    with the batch exact_dedup on a single availableNow pass."""
-    from tests.conftest import SF_SMOKE
-
-    docs_schema = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(SF_SMOKE)
-    )
-    batch_hashes = (
-        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        .select(F.md5("text").alias("h"))
-        .distinct()
-        .count()
-    )
-
-    out = INC.streaming_exact_dedup(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_dedup_global")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("stream_dedup_global")
-    assert got.count() == batch_hashes
-    assert got.groupBy("content_hash").count().filter(F.col("count") > 1).count() == 0
-
-    # watermark-bounded regime: all events inside one horizon → exact
-    with_ts = stream.withColumn(
-        "ts", F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id") % 60)
-    )
-    out_wm = INC.streaming_exact_dedup(with_ts, ts_col="ts", watermark="1 hour")
-    q2 = (
-        out_wm.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_dedup_wm")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    assert spark.table("stream_dedup_wm").count() == batch_hashes
 
 
 def test_narrow_corpus_ops_run_on_streams(spark):

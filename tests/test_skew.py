@@ -47,39 +47,6 @@ def test_skew_split_with_forced_smj(spark, skewed):
         spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
 
 
-def test_salted_join_exact_and_spread(spark, skewed):
-    """salted_join matches the plain join exactly (inner + left) and
-    actually spreads the hot key across salt buckets."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.skew import (
-        deterministic_salt,
-        salted_join,
-    )
-
-    facts, dim = skewed
-    plain = facts.join(dim, "k").groupBy("name").agg(F.count(F.lit(1)).alias("n"))
-    salted = (
-        salted_join(facts, dim, on="k", buckets=8)
-        .groupBy("name")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert {(r.name, r.n) for r in salted.collect()} == {
-        (r.name, r.n) for r in plain.collect()
-    }
-    # left join keeps unmatched fact rows exactly once
-    dim_partial = dim.filter(F.col("k") < 50)
-    left_plain = facts.join(dim_partial, "k", "left").count()
-    left_salted = salted_join(facts, dim_partial, on="k", buckets=8, how="left").count()
-    assert left_salted == left_plain == facts.count()
-    # the hot key's rows really land in multiple salt buckets
-    spread = (
-        facts.filter(F.col("k") == 7)
-        .select(deterministic_salt([F.col("k"), F.col("v")], 8).alias("s"))
-        .distinct()
-        .count()
-    )
-    assert spread > 1
-
-
 def test_keep_canonical_end_to_end(spark):
     """pairs → clusters → keep_canonical keeps exactly one doc per
     component plus all singletons."""
