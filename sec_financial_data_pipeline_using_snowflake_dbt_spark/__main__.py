@@ -20,7 +20,7 @@ import sys
 
 from .checks import run_checks, sec_quarter_suite
 from .plans.registry import sec_registry
-from .session import get_spark
+from .session import get_spark, jvm_cost
 from .sources.tsv import read_sec_quarter
 
 
@@ -52,6 +52,7 @@ def main(argv: list[str] | None = None) -> int:
     for name in ("fct_balance_sheet", "fct_income_statement", "fct_cashflows",
                  "financial_statements_json"):
         print(f"[secspark] {name}: {built[name].count()} rows")
+    print(f"[secspark] jvm: {jvm_cost(spark)}")
     spark.stop()
     return 1 if failed else 0
 

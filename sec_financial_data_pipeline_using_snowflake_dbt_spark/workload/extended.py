@@ -1236,8 +1236,10 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm = hist.groupBy(*k).agg(
         F.min("scd_id").alias("min_scd_id"),
         F.max("scd_id").alias("max_scd_id"),
-    )
-    return main.join(mm, k).select(
+    ).select(*[F.col(c).alias(f"mm_{c}") for c in k], "min_scd_id", "max_scd_id")
+    # null-safe: a NULL flag or status is a group of its own, as in the SQL
+    on = [main[c].eqNullSafe(mm[f"mm_{c}"]) for c in k]
+    return main.join(mm, on).select(
         "l_returnflag", "l_linestatus", "is_current", "n_versions",
         "n_keys", "n_obs", "first_from", "last_from", "last_to",
         "n_scd_ids", "min_scd_id", "max_scd_id",

@@ -264,3 +264,34 @@ def test_rejects_bad_strategy(spark):
     )
     with pytest.raises(ValueError):
         scd2_merge(hist, batch, KEY, STATE, "observed_at", strategy="ts")
+
+
+def test_scd2_history_keeps_null_keyed_groups(spark, tmp_path):
+    """``q_scd2_history`` splits its aggregate in two and re-joins the
+    halves on the group keys; a NULL flag or status must still be one
+    group, as in the DuckDB SQL."""
+    import datetime as dt
+
+    import duckdb
+
+    from sec_financial_data_pipeline_using_snowflake_dbt_spark.workload.extended import (
+        _SCD2_SQL,
+        q_scd2_history,
+    )
+
+    from .oracle_harness import compare
+
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 2, 1)
+    rows = [(1, d1, 1, "A", "F"), (1, d2, 1, None, "F"), (2, d1, 1, None, "O"),
+            (3, d1, 1, "N", None), (3, d2, 2, "N", None), (4, d1, 1, "A", "F")]
+    spark.createDataFrame(
+        rows, "l_orderkey BIGINT, l_shipdate DATE, l_linenumber INT, "
+              "l_returnflag STRING, l_linestatus STRING",
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+
+    got = q_scd2_history(spark, str(tmp_path))
+    keys = {(r["l_returnflag"], r["l_linestatus"], r["is_current"]) for r in got.collect()}
+    assert (None, "F", True) in keys and (None, "O", True) in keys and ("N", None, True) in keys
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet/*.parquet'")
+    assert compare(got, con.execute(_SCD2_SQL).df(), "q_scd2_history") == []
