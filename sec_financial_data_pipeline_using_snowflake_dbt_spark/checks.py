@@ -9,7 +9,7 @@ testing_for_date_validity.sql, Notes.md:367-404) maps to a check here.
 A check is a function DataFrame → DataFrame of *violating rows* (dbt's
 contract: a test passes iff the generated query returns zero rows).
 ``run_checks`` mirrors ``dbt test``: evaluates a suite and reports
-violation counts; ``assert_checks`` raises on any failure.
+violation counts; the CLI exits non-zero when any check fails.
 
 Scale posture: each check is one aggregation/anti-join over the table —
 shuffle-light (count-style checks are map-side combinable), no
@@ -140,16 +140,6 @@ def run_checks(suite: dict[str, Callable[[], DataFrame]]) -> list[CheckResult]:
     ]
     counts = dict(reduce(DataFrame.union, tagged).groupBy("check").count().collect())
     return [CheckResult(name, counts.get(name, 0)) for name in suite]
-
-
-def assert_checks(suite: dict[str, Callable[[], DataFrame]]) -> None:
-    results = run_checks(suite)
-    failed = [r for r in results if not r.passed]
-    if failed:
-        raise AssertionError(
-            "data-quality failures: "
-            + ", ".join(f"{r.name}={r.violations}" for r in failed)
-        )
 
 
 def sec_quarter_suite(

@@ -30,7 +30,3 @@ def norm(a: str | Column) -> Column:
     v = as_double(a)
     sq = F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
     return F.sqrt(sq)
-
-
-def cosine(a: str | Column, b: str | Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))

@@ -21,16 +21,12 @@ Entry points:
   of updates — the classic CDC skew shape) is reduced map-side by partial
   aggregation instead of being sorted in one un-splittable window
   partition.
-- :func:`cdc_merge` — fold ONE later batch into an existing snapshot (the
-  incremental nightly-run path): the batch is compacted with
-  :func:`cdc_apply`, surviving keys anti-join out of the snapshot, upserts
-  append.  The snapshot side is touched only by a key equi-join against the
-  (small, broadcastable) batch — at 100 TB the snapshot stays partitioned
-  on disk and only matching keys rewrite.
-- :func:`cdc_state_merge` — the sequence-aware, TOMBSTONE-BEARING fold
-  used by the streaming sink: keeps winning deletes as tombstones so a
-  replayed or out-of-order batch can never regress state or resurrect a
-  deleted key.
+- :func:`cdc_state_merge` — fold ONE later batch into existing state (the
+  streaming sink's incremental path): sequence-aware and
+  TOMBSTONE-BEARING, so a replayed or out-of-order batch can never regress
+  state or resurrect a deleted key.  The state side is touched only by a
+  key join against the (small, broadcast) batch — only matching keys
+  re-compact.
 - :func:`cdc_snapshot` — the live view of tombstone-bearing state
   (tombstones filtered, op column dropped).
 - :func:`cdc_expire_tombstones` — retention pass that drops tombstones at
@@ -44,9 +40,9 @@ non-null; null sequences would sort below every real change on both
 engines but signal a broken feed, so :func:`cdc_apply` rejects them with
 ``validate_seq=True`` (default off — it costs a pass).
 
-The fold == replay property (``cdc_merge(cdc_apply(prefix), suffix)`` ==
-``cdc_apply(whole)`` for any seq-consistent split) is pytest-enforced on
-randomized changelogs in tests/test_cdc.py.
+The fold == replay property (``cdc_snapshot(cdc_state_merge(cdc_apply(
+prefix, keep_op=True), suffix))`` == ``cdc_apply(whole)`` for any split)
+is pytest-enforced on randomized changelogs in tests/test_cdc.py.
 """
 
 from __future__ import annotations
@@ -116,14 +112,11 @@ def cdc_state_merge(
     seq_cols: Sequence[str],
     op_col: str = "op",
     delete_op: str = "D",
-    broadcast_batch: bool = True,
 ) -> DataFrame:
-    """Sequence-AWARE merge over TOMBSTONE-BEARING state: unlike
-    :func:`cdc_merge` (which trusts every batch change to be later than
-    the snapshot), winners are chosen by comparing sequences, so an
-    out-of-order or replayed batch can never regress the state — the
-    property a streaming sink needs, where micro-batch boundaries don't
-    respect event order.
+    """Sequence-AWARE merge over TOMBSTONE-BEARING state: winners are
+    chosen by comparing sequences, so an out-of-order or replayed batch
+    can never regress the state — the property a streaming sink needs,
+    where micro-batch boundaries don't respect event order.
 
     ``state`` is ``cdc_apply(..., keep_op=True)`` output: one row per key
     INCLUDING deleted keys, carrying the winning sequence and operation.
@@ -141,9 +134,7 @@ def cdc_state_merge(
     compacted = cdc_apply(
         changes, key_cols, seq_cols, op_col=op_col, delete_op=delete_op, keep_op=True
     )
-    touched = compacted.select(*key_cols).distinct()
-    if broadcast_batch:
-        touched = F.broadcast(touched)
+    touched = F.broadcast(compacted.select(*key_cols).distinct())
     untouched = state.join(touched, on=list(key_cols), how="left_anti")
     touched_state = state.join(touched, on=list(key_cols), how="left_semi")
     rematch = cdc_apply(
@@ -186,33 +177,3 @@ def cdc_expire_tombstones(
         (F.col(op_col) != F.lit(delete_op)) | (F.col(seq_col) > F.lit(horizon))
     )
 
-
-def cdc_merge(
-    snapshot: DataFrame,
-    changes: DataFrame,
-    key_cols: Sequence[str],
-    seq_cols: Sequence[str],
-    op_col: str = "op",
-    delete_op: str = "D",
-    broadcast_batch: bool = True,
-) -> DataFrame:
-    """Fold a later change batch into an existing snapshot.
-
-    Every change in ``changes`` must be later (per key, by ``seq_cols``)
-    than the snapshot's state — the normal shape of an incremental feed.
-    The batch is compacted first, then: snapshot rows whose key appears in
-    the batch drop out via LEFT ANTI (broadcast when ``broadcast_batch``),
-    and the batch's surviving upserts append. Snapshot column order is
-    preserved; the batch is projected into it.
-    """
-    compacted = cdc_apply(
-        changes, key_cols, seq_cols, op_col=op_col, delete_op=delete_op, keep_op=True
-    )
-    touched = compacted.select(*key_cols)
-    upserts = compacted.where(F.col(op_col) != F.lit(delete_op)).select(
-        *snapshot.columns
-    )
-    if broadcast_batch:
-        touched = F.broadcast(touched)
-    untouched = snapshot.join(touched, on=list(key_cols), how="left_anti")
-    return untouched.unionByName(upserts)

@@ -197,7 +197,6 @@ def bloom_dedup(
     k: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Bloom-filter ingest dedup: flag each NEW document whose content
     hash is *possibly* already in the EXISTING corpus — the O(m)-memory
@@ -219,14 +218,15 @@ def bloom_dedup(
     - build: existing hashes → k positions each → DISTINCT, output
       bounded by m_bits regardless of corpus rows (one map-side-
       combinable shuffle);
-    - probe, ``strategy='literal'``: the distinct positions collect
-      into an m_bits/64-word bitmap baked as a literal long array, and
-      the per-doc check is a pure Column fold (element_at + getbit) —
-      ZERO joins and zero shuffles over the new batch;
-    - probe, ``strategy='join'``: exploded new positions equi-join the
-      distinct position table (≤ m_bits rows — AQE broadcasts it from
-      its measured size; no baked hint) + one groupBy(doc) count.
-      'auto' takes the literal arm up to BLOOM_LITERAL_MAX_BITS.
+    - probe, literal arm (``m_bits <= BLOOM_LITERAL_MAX_BITS``): the
+      distinct positions collect into an m_bits/64-word bitmap baked as
+      a literal long array, and the per-doc check is a pure Column fold
+      (element_at + getbit) — ZERO joins and zero shuffles over the new
+      batch;
+    - probe, join arm (larger filters): exploded new positions
+      equi-join the distinct position table (≤ m_bits rows — AQE
+      broadcasts it from its measured size; no baked hint) + one
+      groupBy(doc) count.
 
     Both arms are bit-identical (property-tested): n_hit counts hash
     functions (array slots), not distinct positions, so a doc whose k
@@ -244,13 +244,8 @@ def bloom_dedup(
     ingest-dedup deployment shape. The join arm's distinct build makes
     it batch-only.
     """
-    if strategy not in ("auto", "literal", "join"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     if m_bits < 64 or k < 1:
         raise ValueError("need m_bits >= 64 and k >= 1")
-    use_literal = strategy == "literal" or (
-        strategy == "auto" and m_bits <= BLOOM_LITERAL_MAX_BITS
-    )
     nh = new.select(
         F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("h")
     ).withColumn("pos", bloom_positions(F.col("h"), m_bits, k))
@@ -260,7 +255,7 @@ def bloom_dedup(
         .distinct()
     )
 
-    if use_literal:
+    if m_bits <= BLOOM_LITERAL_MAX_BITS:
         # one bounded job: <= m_bits longs back to the driver, packed
         # into an m_bits/64-word bitmap literal (the PQ-codebook /
         # centroid-literal posture)
@@ -430,19 +425,17 @@ def minhash_band_table(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    cache: bool = True,
 ) -> DataFrame:
     """The banded-signature table (id, band, sig) ``minhash_lsh_pairs``
     self-joins — exported so callers can build it ONCE and reuse it:
     the delta-dedup recurrence persists the existing corpus's bands
     across batches, and pipeline compositions can materialize it
     CONCURRENTLY with an independent pass over the same corpus (guide
-    §2.6) before handing it to ``minhash_lsh_pairs(band_sig=...)``.
-    ``cache`` persists it (released by ``release_dedup_caches``)."""
-    band_sig = _band_table(docs, id_col, text_col, num_hashes, bands, shingle_n)
-    if cache:
-        band_sig = _persist(band_sig)
-    return band_sig
+    §2.6) before handing it to ``minhash_lsh_pairs(band_sig=...)``. It
+    is persisted (released by ``release_dedup_caches``)."""
+    return _persist(
+        _band_table(docs, id_col, text_col, num_hashes, bands, shingle_n)
+    )
 
 
 def minhash_lsh_pairs(
@@ -452,17 +445,15 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    cache_signatures: bool = True,
     band_sig: DataFrame | None = None,
 ) -> DataFrame:
     """Banded MinHash-LSH candidate pairs.
 
-    ``cache_signatures`` persists the tiny band table so the self-join
-    doesn't compute the signatures twice (Spark does not reuse the
-    exchange across the two sides here). The cache is NOT auto-released
-    mid-plan — callers running many batches should call
-    ``release_dedup_caches()`` between them or pass False (costs ~2×
-    signature compute).
+    The tiny band table is persisted so the self-join doesn't compute
+    the signatures twice (Spark does not reuse the exchange across the
+    two sides here). The cache is NOT auto-released mid-plan — callers
+    running many batches should call ``release_dedup_caches()`` between
+    them.
 
     Signature of ``num_hashes`` md5-minhashes, split into ``bands`` bands
     of ``num_hashes/bands`` rows; docs sharing any band signature are
@@ -483,8 +474,7 @@ def minhash_lsh_pairs(
     """
     if band_sig is None:
         band_sig = minhash_band_table(
-            docs, id_col, text_col, num_hashes, bands, shingle_n,
-            cache=cache_signatures,
+            docs, id_col, text_col, num_hashes, bands, shingle_n
         )
     a = band_sig.alias("a")
     b = band_sig.alias("b")
@@ -552,7 +542,6 @@ def minhash_lsh_pairs_delta(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """Delta dedup — the production recurrence: candidate near-dup
     pairs for a NEW batch (a fresh crawl) against an EXISTING corpus,
@@ -572,10 +561,10 @@ def minhash_lsh_pairs_delta(
     in a real recurrence persist its band table once and reuse it
     across deltas (it is append-only: new batches' bands union on).
     """
-    nb = _band_table(new_docs, id_col, text_col, num_hashes, bands, shingle_n)
-    eb = _band_table(existing, id_col, text_col, num_hashes, bands, shingle_n)
-    if cache_signatures:
-        nb, eb = _persist(nb), _persist(eb)
+    nb, eb = (
+        _persist(_band_table(d, id_col, text_col, num_hashes, bands, shingle_n))
+        for d in (new_docs, existing)
+    )
     allb = nb.unionByName(eb)
     a, b = nb.alias("a"), allb.alias("b")
     return (
@@ -726,15 +715,13 @@ def simhash_pairs(
     text_col: str = "text",
     block_col: str | None = None,
     max_hamming: int = 3,
-    band_join: bool | None = None,
-    cache_signatures: bool = True,
     n_bits: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
-    Default (``band_join`` unset/True when ``max_hamming < n_bits``):
-    the VALUE-level pigeonhole join. The signature space caps the
-    distinct values at 2^n_bits, so pairing happens on distinct
+    While ``max_hamming < n_bits``: the VALUE-level pigeonhole join.
+    The signature space caps the distinct values at 2^n_bits, so
+    pairing happens on distinct
     (block, simhash) VALUES — a relation bounded by
     min(2^n_bits, corpus) — via the band trick (split the bits into
     ``max_hamming + 1`` exact-match chunks; distance ≤ k ⇒ at least one
@@ -756,14 +743,14 @@ def simhash_pairs(
     rate ~1.3e-6) or 64 (~1e-14); runtime then stays output-bound on
     GENUINE near-dups.
 
-    ``band_join=False`` forces the doc-level all-pairs comparison
-    (within ``block_col`` blocks if given) — the test oracle for the
-    banded path.
+    With ``max_hamming >= n_bits`` every pair qualifies, and the
+    doc-level all-pairs comparison (within ``block_col`` blocks if
+    given) runs instead.
 
-    ``cache_signatures`` persists the (id, simhash) table — one slim
-    row per doc — because the banded plan reads it from five subtrees
-    (value distinct, same-value pair sides, both expansion sides) and
-    Spark would otherwise recompute the tokenize+hash per subtree.
+    The (id, simhash) table — one slim row per doc — is persisted
+    because the banded plan reads it from five subtrees (value
+    distinct, same-value pair sides, both expansion sides) and Spark
+    would otherwise recompute the tokenize+hash per subtree.
     Same contract as ``minhash_lsh_pairs``: not auto-released
     mid-plan; ``release_dedup_caches()`` frees it between batches.
     """
@@ -776,12 +763,9 @@ def simhash_pairs(
         sh = sh.join(
             docs.select(F.col(id_col).alias("id"), F.col(block_col).alias("blk")), "id"
         )
-    if cache_signatures:
-        sh = _persist(sh)
+    sh = _persist(sh)
     keys = ["blk"] if block_col else []
-    if band_join is None:
-        band_join = max_hamming < n_bits
-    if not band_join:
+    if max_hamming >= n_bits:
         a = sh.alias("a")
         b = sh.alias("b")
         cond = F.col("a.blk") == F.col("b.blk") if block_col else F.lit(True)
@@ -889,8 +873,7 @@ def embedding_neardup_pairs(
     skew splitting when it doesn't, so there is no corpus-sized
     broadcast baked into the plan. When blocks themselves grow wide,
     switch the block key to a finer LSH bucket (similarity.lsh_bucket)
-    — finer blocks cut the n² term itself — or route to
-    ``embedding_neardup_pairs_gemm`` (BLAS per block). Norms are
+    — finer blocks cut the n² term itself. Norms are
     computed once per ROW, not per pair; the cosine formula dot/(na·nb)
     is unchanged so values are bit-identical to the naive form.
     """
@@ -906,8 +889,7 @@ def embedding_neardup_pairs(
         # side is the whole corpus, so a broadcast hint is a hard OOM
         # ceiling at scale. AQE broadcasts at runtime when it actually
         # fits (small corpora keep the fast plan), and splits skewed
-        # blocks otherwise; for blocks too wide even for that, use
-        # embedding_neardup_pairs_gemm.
+        # blocks otherwise.
         joined = a.join(b, F.col("a.blk") == F.col("b.blk"))
     else:
         # no block key ⇒ genuine all-pairs: only valid when one side is
@@ -947,58 +929,6 @@ def _np_round_half_up(sims, round_to: int):
             key = tuple(idx)
             rounded[key] = _round_half_up(float(sims[key]), round_to)
     return rounded
-
-
-def embedding_neardup_pairs_gemm(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = None,
-    threshold: float = 0.9,
-    round_to: int = 3,
-) -> DataFrame:
-    """Arrow/numpy variant of ``embedding_neardup_pairs``: per block, one
-    ``applyInPandas`` stage builds the embedding matrix, L2-normalizes,
-    and takes ``N @ N.T`` — a single BLAS GEMM instead of n² per-pair
-    expression folds.
-
-    When to prefer which: the Column-expression version keeps everything
-    JVM-side and composes with Catalyst (filters/pruning around it); the
-    GEMM version wins when blocks are wide (hundreds+ of vectors) and
-    dims are high — dense math belongs in BLAS. Both return the same
-    (id_a, id_b, cos) rows (cos rounded identically to ``round_to``
-    places; the ``cos`` column is double regardless of ``round_to``).
-
-    At scale, blocks must fit in executor memory (a 50k-vector block at
-    dim 1024 is ~200 MB for N + the k×k similarity tile); beyond that,
-    tile the block (loop over row-chunks of N against N.T) inside the
-    same applyInPandas.
-    """
-    import numpy as np
-    import pandas as pd
-
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
-    key = [F.col(block_col).alias("blk")] if block_col else [F.lit(0).alias("blk")]
-    e = emb.select(*key, *cols)
-
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        mat = np.vstack(pdf["v"].to_numpy()).astype("float64")
-        norms = np.sqrt((mat * mat).sum(axis=1, keepdims=True))
-        normed = mat / norms
-        sims = normed @ normed.T
-        iu, ju = np.triu_indices(len(ids), k=1)
-        # Spark F.round semantics so the two arms stay row-identical
-        # on decimal midpoints (the _semantic_near_gemm ADVICE-r6 fix,
-        # now shared)
-        cos = _np_round_half_up(sims[iu, ju], round_to)
-        keep = cos >= threshold
-        a, b = ids[iu[keep]], ids[ju[keep]]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "cos": cos[keep]})
-
-    out_schema = "id_a long, id_b long, cos double"
-    return e.groupBy("blk").applyInPandas(per_block, out_schema)
 
 
 def _star_contract(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
@@ -1403,7 +1333,6 @@ def semantic_dedup(
     round_to: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    strategy: str = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by k-means
     clustering + within-cluster cosine pruning. Embeddings are assigned
@@ -1436,19 +1365,18 @@ def semantic_dedup(
     floats only through the compare, so a last-ulp divergence flips a
     row only if a pair's cosine sits within ~1e-12 of the threshold.
 
-    ``strategy``: 'fold' = Column arms end to end (the oracle-bearing
-    configuration); 'gemm' = Arrow/numpy arms for BOTH the Lloyd assign
-    and the within-cell pair scoring (``embedding_neardup_pairs_gemm``
-    per cell — one BLAS GEMM per cell instead of per-pair lambda
-    folds); 'auto' (default) = fold at or below the oracle-scale term
-    count (``similarity.GEMM_ASSIGN_MIN_TERMS``), gemm above — at
-    20k vectors x 80 cells the fold arms measure ~41 s vs ~2 s for
-    gemm, same output (arm agreement pytest-enforced).
+    Arms: at or below the oracle-scale term count ``n_cells * dim <=
+    similarity.GEMM_ASSIGN_MIN_TERMS`` the Column arms run end to end
+    (the oracle-bearing configuration); above it Arrow/numpy arms run
+    for BOTH the Lloyd assign and the within-cell pair scoring (one
+    BLAS GEMM per cell instead of per-pair lambda folds) — at 20k
+    vectors x 80 cells the fold arms measure ~41 s vs ~2 s for gemm,
+    same output (arm agreement pytest-enforced).
     """
     from .similarity import _use_gemm, ivf_assign  # deferred:
     # mirrors similarity's own deferred import of dedup._persist
 
-    use_gemm = _use_gemm(strategy, n_cells * dim)
+    use_gemm = _use_gemm(n_cells * dim)
     assigned, _ = ivf_assign(
         emb,
         dim,
@@ -1457,7 +1385,6 @@ def semantic_dedup(
         id_col=id_col,
         vec_col=vec_col,
         round_means=round_means,
-        assign_strategy="gemm" if use_gemm else "fold",
     )
     # nrm is only read by the fold arm's cosine — the GEMM kernel
     # normalizes internally from v, so on the large-corpus path the

@@ -14,14 +14,13 @@ Fidelity notes:
   make those joins de-facto inner; we keep left+filter for parity (the
   optimizer rewrites them to inner anyway).
 
-Scale plan (100 TB): NUM⋈PRE shuffles on (adsh, tag) — both sides
-bucketable on adsh at the storage layer; stg_sub keeps the reference's
-own broadcast hint (X1, fct_balanceSheet.sql:26); the DIM sides carry
-NO explicit hint — dim_filings is a 4-way distinct over (tag, version,
-stmt, uom, filed) whose cardinality grows with history, so the
-broadcast decision is left to AQE's measured sizes (same contract as
-the dedup operators; see test_no_unbounded_broadcast). The three facts
-share one spine (``fact_spine``, the registry's ``fact_spine`` cache
+Scale plan (100 TB): NUM⋈PRE shuffles on (adsh, tag); stg_sub keeps
+the reference's own broadcast hint (X1, fct_balanceSheet.sql:26); the
+DIM sides carry NO explicit hint — dim_filings is a 4-way distinct over
+(tag, version, stmt, uom, filed) whose cardinality grows with history,
+so the broadcast decision is left to AQE's measured sizes (same contract
+as the dedup operators; see test_no_unbounded_broadcast). The three
+facts share one spine (``fact_spine``, the registry's ``fact_spine`` cache
 model) instead of re-reading NUM three times (improves the reference's
 thread-level parallelism, X11).
 """

@@ -44,7 +44,6 @@ def funnel_steps(
     ts_col: str = "ts",
     type_col: str = "event_type",
     round_to: int = 6,
-    persist_filtered: bool = True,
 ) -> DataFrame:
     """Ordered conversion funnel: how many users perform ``steps`` in
     order, each step at-or-after the previous step's completion and the
@@ -65,10 +64,8 @@ def funnel_steps(
     Scale: the event table is scanned ONCE — projected to 3 columns and
     filtered to ``et IN steps`` up front, then persisted
     (MEMORY_AND_DISK) so the per-step min-groupBy loop reads the cached
-    funnel-relevant slice instead of rescanning the corpus per step
-    (``persist_filtered=False`` opts out for single-shot plans where
-    the caller manages caching). The conv window runs over len(steps)
-    rows.
+    funnel-relevant slice instead of rescanning the corpus per step.
+    The conv window runs over len(steps) rows.
     """
     if len(steps) < 2:
         raise ValueError(f"a funnel needs >= 2 steps, got {steps!r}")
@@ -82,10 +79,9 @@ def funnel_steps(
         F.col(ts_col).alias("t"),
         F.col(type_col).alias("et"),
     ).filter(F.col("t").isNotNull() & F.col("et").isin(list(steps)))
-    if persist_filtered:
-        # repeated same-plan calls hit Spark's CacheManager (logical-plan
-        # keyed), so this does not accumulate duplicate cache entries
-        ev = ev.persist(StorageLevel.MEMORY_AND_DISK)
+    # repeated same-plan calls hit Spark's CacheManager (logical-plan
+    # keyed), so this does not accumulate duplicate cache entries
+    ev = ev.persist(StorageLevel.MEMORY_AND_DISK)
     bound = F.expr(f"INTERVAL {horizon}")
 
     # t1: first step-1 event per user (anchors the horizon)

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def _bucket(col: Column, width: int) -> Column:
@@ -58,7 +59,6 @@ def interval_join(
     max_buckets_per_interval: int = 65536,
     how: str = "inner",
     left_id: str | None = None,
-    persist_matched: bool = True,
 ) -> DataFrame:
     """All (left, right) pairs whose closed numeric intervals
     ``[lstart, lend]`` × ``[rstart, rend]`` intersect (optionally also
@@ -74,8 +74,7 @@ def interval_join(
     of ``left`` against the matched ids.  The matched subtree is
     referenced twice in the left-outer plan (rows + ids), so it is
     persisted internally (MEMORY_AND_DISK, same discipline as
-    ``funnel_steps``) — the band join executes once, not twice;
-    ``persist_matched=False`` opts out for single-shot small plans."""
+    ``funnel_steps``) — the band join executes once, not twice."""
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     if how == "left" and not left_id:
@@ -123,10 +122,7 @@ def interval_join(
     matched = lexp.join(rexp, cond, "inner").select(*out_cols)
     if how == "inner":
         return matched
-    if persist_matched:
-        from pyspark.storagelevel import StorageLevel
-
-        matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
+    matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
     right_out = [c for c in right.columns if c not in (by or [])]
     unmatched = left.join(
         matched.select(left_id).distinct(), on=left_id, how="left_anti"

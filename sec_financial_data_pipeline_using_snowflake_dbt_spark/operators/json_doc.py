@@ -140,10 +140,14 @@ def capped_staged(staged: DataFrame, max_facts_per_doc: int) -> DataFrame:
     """``staged`` with ``__rn`` = row_number over the entry struct's
     natural ordering within each filing (the same comparator
     ``array_sort`` uses) and rows capped to ``__rn <= N`` — exactly the
-    sorted array's prefix. Callers: ``financial_statements_json``
-    (drops ``__rn`` and aggregates) and the fused workload path
-    (``entry_idx = __rn - 1`` — the nest-then-explode round-trip
-    removed in r11)."""
+    prefix of ``financial_statements_json``'s sorted array. The fused
+    workload path (``q_sec_json_doc``) reads it as ``entry_idx = __rn -
+    1``. The cap exists because ``collect_list`` materializes a filing's
+    whole array in one aggregation buffer, and an UNREALISTIC feed (the
+    synthetic sf10 replication fans 60k facts into each of a fixed 1000
+    filings) otherwise builds ~12 MB arrays and kills the executor; the
+    filter runs BEFORE any groupBy — a post-hoc ``slice`` would bound
+    the output but not the buffer."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(*DOC_GROUP_KEYS).orderBy(doc_entry_struct().asc())
@@ -152,28 +156,11 @@ def capped_staged(staged: DataFrame, max_facts_per_doc: int) -> DataFrame:
     )
 
 
-def financial_statements_json(
-    staged: DataFrame, max_facts_per_doc: int | None = None
-) -> DataFrame:
+def financial_statements_json(staged: DataFrame) -> DataFrame:
     """reference financial_statements_json.sql:1-34: per-filing nested doc
     {filing_id, company_info{...}, financial_data[{...}×9], ...}, with
     each ``financial_data`` array sorted (``array_sort``) so the output
-    is reproducible.
-
-    ``max_facts_per_doc`` bounds each filing's ``financial_data`` array
-    to the first N entries IN THE DETERMINISTIC ENTRY ORDER (the same
-    total order ``array_sort`` produces, so the kept set is the prefix
-    of the sorted array and multiset-stable under ties). Real SEC
-    filings carry at most a few thousand facts, so a bound in that range
-    is a no-op on realistic data; it exists because ``collect_list``
-    materializes a filing's whole array in one aggregation buffer, and
-    an UNREALISTIC feed (the synthetic sf10 replication fans 60k facts
-    into each of a fixed 1000 filings) otherwise builds ~12 MB arrays
-    and kills the executor. The filter runs BEFORE the groupBy — a
-    post-hoc ``slice`` would bound the output but not the buffer.
-    """
-    if max_facts_per_doc is not None:
-        staged = capped_staged(staged, max_facts_per_doc).drop("__rn")
+    is reproducible."""
     return (
         staged.groupBy(*DOC_GROUP_KEYS)
         .agg(F.array_sort(F.collect_list(doc_entry_struct())).alias("financial_data"))

@@ -20,11 +20,8 @@ Everything here is exact integer math (no hashing, no sampling):
   vs DuckDB ``//``), so a DuckDB oracle replays the curve bit-for-bit.
 
 Scale: computing the key is a narrow per-row projection (whole-stage
-codegen, zero shuffles).  :func:`zorder_layout` then range-partitions on the
-key — ONE shuffle, the same cost as the single-column sort any layout job
-already pays — and sorts within partitions, so writers emit files covering
-contiguous z-ranges.  Bounds come from one bounded 2×k-value aggregate (the
-same driver-side posture as the IVF centroid tables).
+codegen, zero shuffles).  Bounds come from one bounded 2×k-value aggregate
+(the same driver-side posture as the IVF centroid tables).
 
 ``bits * len(cols)`` must stay ≤ 62 so the z-value fits a BIGINT; with the
 default 16 bits that is up to 3 columns (use ``bits=15`` for 4).
@@ -37,7 +34,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Output column added by :func:`with_zorder_key` / :func:`zorder_layout`.
+#: Output column added by :func:`with_zorder_key`.
 Z_COL = "__z"
 
 
@@ -129,22 +126,3 @@ def with_zorder_key(
     bounds = bounds or column_bounds(df, cols)
     return df.withColumn(out_col, zorder_key(cols, bounds, bits))
 
-
-def zorder_layout(
-    df: DataFrame,
-    cols: Sequence[str],
-    n_files: int,
-    bits: int = 16,
-    bounds: dict[str, tuple[int, int]] | None = None,
-) -> DataFrame:
-    """Rows arranged for a z-ordered write: range-partitioned into
-    ``n_files`` contiguous z-ranges and sorted by z within each, with the
-    key dropped — ``.write.parquet(...)`` on the result emits one file per
-    partition whose per-column min/max stats are tight in EVERY layout
-    dimension.  One shuffle total (the range exchange)."""
-    keyed = with_zorder_key(df, cols, bits, bounds)
-    return (
-        keyed.repartitionByRange(n_files, Z_COL)
-        .sortWithinPartitions(Z_COL)
-        .drop(Z_COL)
-    )

@@ -31,10 +31,9 @@ This is the 100 TB-scale plumbing for multimodal training data:
   scans, and (r10) for PROGRESSIVE scans too (``_jpeg_progressive_stats``
   — spectral selection + successive approximation per T.81 Annex G);
 - mp4 frames are sampled through a REAL sample-table walk
-  (``parse_mp4_sample_table``) but not decoded, and the image decode
-  hands other compressed pixels to Pillow only on request
-  (``use_real_codecs=True`` raises NotImplementedError where it is not
-  installed). The Spark-side contract — schemas, batch iteration,
+  (``parse_mp4_sample_table``) but not decoded, and other compressed
+  pixels get a deterministic hash-derived luma behind real
+  header-derived dimensions. The Spark-side contract — schemas, batch iteration,
   partitioning — is real and tested.
 
 ``spark.read.format("binaryFile")`` is the ingestion path for loose
@@ -771,11 +770,10 @@ def _jpeg_pixel_stats_unguarded(payload: bytes) -> dict[str, Any] | None:
     :func:`_jpeg_progressive_stats` (r10). Hierarchical,
     arithmetic-coded, 12-bit, non-interleaved-multi-scan sequential, or
     corrupt/truncated streams return None and stay behind the codec
-    boundary (callers fall through to Pillow / the deterministic
-    stub). Dimensions capped at 64 MP per asset.
+    boundary (callers fall through to the deterministic stub).
+    Dimensions capped at 64 MP per asset.
     Perf posture: pure-Python bit-level Huffman is fine for the
-    feature-extraction demo scale this serves; environments with
-    Pillow get the C decoder via ``use_real_codecs=True``."""
+    feature-extraction demo scale this serves."""
     import numpy as np
 
     if not payload.startswith(b"\xff\xd8"):
@@ -1355,38 +1353,12 @@ def _jpeg_progressive_scan(
     return True
 
 
-def _decode_image_pil(payload: bytes) -> dict[str, Any] | None:
-    """Pillow arm for COMPRESSED formats (png/jpeg/gif pixel data —
-    the documented codec boundary, VERDICT r5 #8): real decode when the
-    optional dependency is importable, None otherwise (callers fall
-    back to the deterministic stub). Luma via PIL's 'L' mode — the same
-    Rec.601 weights pixel_stats applies to raw rasters."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError:
-        return None
-    try:
-        import numpy as np
-
-        with Image.open(io.BytesIO(payload)) as im:
-            w, hgt = im.size
-            luma = np.asarray(im.convert("L"), dtype=np.float64) / 255.0
-            return {"width": w, "height": hgt, "mean_luma": float(luma.mean())}
-    except Exception:  # undecodable/truncated stream: let the stub answer
-        return None
-
-
-def _decode_image(payload: bytes, use_real_codecs: bool = False) -> dict[str, Any]:
-    """Image features. Uncompressed rasters (BMP/PPM/PGM) get a REAL
-    pixel decode — width/height/mean_luma from actual bytes
-    (pixel_stats). Compressed formats get REAL header-derived
-    width/height (parse_image_dimensions); their pixels decode through
-    Pillow when ``use_real_codecs`` is set and the library is present
-    (_decode_image_pil), else mean_luma is a deterministic hash-derived
-    fake — the codec boundary covers ONLY formats whose pixel data is
-    actually compressed."""
+def _decode_image(payload: bytes) -> dict[str, Any]:
+    """Image features. Rasters ``pixel_stats`` decodes (BMP/PPM/PGM and
+    the stdlib PNG/GIF/JPEG decoders) get a REAL pixel decode —
+    width/height/mean_luma from actual bytes. Other formats get REAL
+    header-derived width/height (parse_image_dimensions) and a
+    deterministic hash-derived mean_luma — the codec boundary."""
     real = pixel_stats(payload)
     if real is not None:
         return {
@@ -1394,10 +1366,6 @@ def _decode_image(payload: bytes, use_real_codecs: bool = False) -> dict[str, An
             "height": real["height"],
             "mean_luma": real["mean_luma"],
         }
-    if use_real_codecs:
-        via_pil = _decode_image_pil(payload)
-        if via_pil is not None:
-            return via_pil
     h = hashlib.sha256(payload).digest()
     dims = parse_image_dimensions(payload)
     if dims is None:  # unrecognized/truncated header: stable pseudo-dims
@@ -1418,9 +1386,7 @@ IMAGE_FEATURE_SCHEMA = (
 )
 
 
-def decode_image_features(
-    assets: DataFrame, use_real_codecs: bool = False
-) -> DataFrame:
+def decode_image_features(assets: DataFrame) -> DataFrame:
     """Image decode + feature extraction as a ``mapInPandas`` stage.
 
     Arrow ships (asset_id, payload) batches to Python; each batch is
@@ -1428,15 +1394,6 @@ def decode_image_features(
     per-image regardless of engine). Only image-modality or
     unknown-but-image-magic payloads are decoded.
     """
-    if use_real_codecs:
-        try:
-            import PIL  # noqa: F401
-        except ImportError:
-            raise NotImplementedError(
-                "real image decoding needs Pillow, which is not in this "
-                "environment; run with use_real_codecs=False for the "
-                "deterministic stub"
-            ) from None
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1448,7 +1405,7 @@ def decode_image_features(
                 modality, fmt = sniff_format(payload)
                 if modality != "image":
                     continue
-                feats = _decode_image(payload, use_real_codecs=use_real_codecs)
+                feats = _decode_image(payload)
                 rows.append(
                     {
                         "asset_id": asset_id,

@@ -13,21 +13,14 @@ implies, with dbt's documented semantics:
   ours is the F5 ``surrogate_key`` over key fields + valid_from — the same
   construction and the same dbt_utils null sentinel).
 
-Two entry points:
+The entry point, :func:`scd2_from_changelog`, replays a full changelog
+(many observations per key, totally ordered within the key) into the SCD2
+history in one batch — dbt's snapshot rebuilt from scratch.
 
-- :func:`scd2_from_changelog` — replay a full changelog (many observations per
-  key, totally ordered within the key) into the SCD2 history in one batch.
-  This is the backfill / initial-build path.
-- :func:`scd2_merge` — dbt's incremental run: fold ONE new observation batch
-  (at most one state per key) into an existing history. Close changed current
-  rows, append new versions, pass unchanged rows through untouched.
-
-Scale: both paths shuffle once on the snapshot key and use only key-local
-windows (lag/lead within a key's own observations — skew-bounded by the
-per-key version count, never by corpus size). No global sort, no driver
-state, no Python UDFs. ``scd2_merge`` touches history rows only via a
-key-equi join against the (small) batch — at 100 TB the history side stays
-partitioned on disk and only matching keys rewrite.
+Scale: one shuffle on the snapshot key and only key-local windows
+(lag/lead within a key's own observations — skew-bounded by the per-key
+version count, never by corpus size). No global sort, no driver state, no
+Python UDFs.
 """
 
 from __future__ import annotations
@@ -60,16 +53,10 @@ def scd2_from_changelog(
     key_cols: Sequence[str],
     order_cols: Sequence[str],
     state_cols: Sequence[str],
-    strategy: str = "check",
 ) -> DataFrame:
-    """Collapse a changelog into SCD Type-2 history.
-
-    ``strategy`` mirrors dbt's two snapshot strategies: ``"check"`` (default)
-    starts a new version on any null-safe change in ``state_cols``;
-    ``"timestamp"`` starts one whenever ``order_cols[0]`` advanced past the
-    previous observation's value (dbt trusts the source's updated_at and
-    re-versions even if no tracked column moved — observations sharing the
-    same updated_at collapse).
+    """Collapse a changelog into SCD Type-2 history with dbt's ``check``
+    strategy: a new version starts on any null-safe change in
+    ``state_cols``.
 
     ``changelog`` holds one row per OBSERVATION of a key's state;
     ``order_cols`` must totally order observations within a key (ties would
@@ -97,8 +84,6 @@ def scd2_from_changelog(
     overlap = set(state_cols) & set(key_cols)
     if overlap:
         raise ValueError(f"state_cols overlap key_cols: {sorted(overlap)}")
-    if strategy not in ("check", "timestamp"):
-        raise ValueError(f"strategy must be 'check' or 'timestamp', got {strategy!r}")
 
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
     wk = Window.partitionBy(*key_cols)
@@ -113,15 +98,9 @@ def scd2_from_changelog(
     # null-safe state change. Each start row IS its version — its own
     # order value is valid_from and its state is the version state — so
     # the non-start rows simply drop (no island groupBy).
-    if strategy == "timestamp":
-        is_start = F.col("__prev_ord").isNull() | (
-            F.col(order_cols[0]) != F.col("__prev_ord")
-        )
-    else:
-        is_start = F.col("__prev_ord").isNull() | _state_differs(
-            "__prev_", state_cols
-        )
-    starts = lagged.filter(is_start)
+    starts = lagged.filter(
+        F.col("__prev_ord").isNull() | _state_differs("__prev_", state_cols)
+    )
     # Order the version window by __pos — the row_number assigned in the
     # SAME Window node as the change-flag lags — never by order_cols:
     # fully-duplicate rows tie on order_cols, and a later sort that
@@ -152,104 +131,3 @@ def scd2_from_changelog(
         "scd_id",
     )
 
-
-def scd2_merge(
-    history: DataFrame,
-    batch: DataFrame,
-    key_cols: Sequence[str],
-    state_cols: Sequence[str],
-    observed_at_col: str,
-    strategy: str = "check",
-) -> DataFrame:
-    """One dbt snapshot run: fold a new observation batch into ``history``.
-
-    ``history`` has :func:`scd2_from_changelog`'s schema (``n_observations``
-    optional — preserved if present, else synthesized as NULL); ``batch``
-    carries key_cols + state_cols + ``observed_at_col`` with AT MOST one row
-    per key (dbt's snapshot query contract — dbt itself errors on duplicate
-    keys; here duplicates would fan out the join, so callers with untrusted
-    batches should dedupe first or replay via :func:`scd2_from_changelog`).
-
-    Semantics per key in the batch:
-    - key unseen            → insert a new current row (valid_from = observed_at)
-    - state unchanged       → history untouched (dbt does not bump timestamps)
-    - state changed         → close the current row (valid_to = observed_at)
-                              and insert the new current version
-    Keys absent from the batch pass through untouched (a vanished source row
-    is NOT a delete in dbt's default snapshot). Batch rows with a NULL
-    ``observed_at`` are invalid observations and are IGNORED — existing keys
-    pass through, new keys do not insert (dbt itself errors on a NULL
-    updated_at; NULL-presence probing here rides the same column, so a null
-    observation is indistinguishable from absence by design).
-
-    ``strategy="timestamp"`` swaps the change test for dbt's timestamp
-    strategy: the current row re-versions whenever the batch's observed_at
-    is NEWER than the current version's valid_from, regardless of whether
-    any tracked column moved (and never re-versions at the same instant).
-
-    Scale: the closed/current split is a filter; only CURRENT rows join the
-    batch (key-equi, batch side broadcastable when small — the nightly-run
-    shape); closed history is untouched and unioned back by name. One
-    shuffle (or zero with a broadcast batch) regardless of history size.
-    """
-    if strategy not in ("check", "timestamp"):
-        raise ValueError(f"strategy must be 'check' or 'timestamp', got {strategy!r}")
-    hist_cols = history.columns
-    if "n_observations" not in hist_cols:
-        history = history.withColumn(
-            "n_observations", F.lit(None).cast("long")
-        )
-        hist_cols = history.columns
-
-    closed = history.filter(~F.col("is_current"))
-    current = history.filter(F.col("is_current"))
-
-    b = batch.select(
-        *[F.col(c).alias(f"__b_{c}") for c in key_cols],
-        *[F.col(c).alias(f"__b_{c}") for c in state_cols],
-        F.col(observed_at_col).alias("__b_observed_at"),
-    )
-    joined = current.join(
-        b,
-        on=[F.col(k).eqNullSafe(F.col(f"__b_{k}")) for k in key_cols],
-        how="full_outer",
-    )
-
-    if strategy == "timestamp":
-        changed = F.col("__b_observed_at") > F.col("valid_from")
-    else:
-        changed = _state_differs("__b_", state_cols)
-    # eqNullSafe join keys mean a NULL key matches a NULL key, so the
-    # "present on which side" test uses state-independent probe columns:
-    has_hist = F.col("scd_id").isNotNull()
-    has_batch = F.col("__b_observed_at").isNotNull()
-
-    survivors = joined.filter(has_hist).select(
-        *key_cols,
-        *state_cols,
-        "valid_from",
-        F.when(has_batch & changed, F.col("__b_observed_at"))
-        .otherwise(F.col("valid_to"))
-        .alias("valid_to"),
-        (~(has_batch & changed) & F.col("is_current")).alias("is_current"),
-        "n_observations",
-        "scd_id",
-    )
-    inserts = joined.filter(
-        has_batch & (~has_hist | changed)
-    ).select(
-        *[F.col(f"__b_{k}").alias(k) for k in key_cols],
-        *[F.col(f"__b_{c}").alias(c) for c in state_cols],
-        F.col("__b_observed_at").alias("valid_from"),
-        F.lit(None).cast(history.schema["valid_to"].dataType).alias("valid_to"),
-        F.lit(True).alias("is_current"),
-        F.lit(1).cast("long").alias("n_observations"),
-        _scd_id(
-            [f"__b_{k}" for k in key_cols], F.col("__b_observed_at")
-        ).alias("scd_id"),
-    )
-    return (
-        closed.select(*hist_cols)
-        .unionByName(survivors.select(*hist_cols))
-        .unionByName(inserts.select(*hist_cols))
-    )

@@ -176,8 +176,8 @@ MAX_MEAN_COLUMNS = 256
 #: job are gone; both formulations are bit-identical under
 #: ``round_means``, pytest-enforced.)
 
-#: Above this many n_centroids x dim terms, ``assign_strategy='auto'``
-#: routes the Lloyd assign through the Arrow/numpy GEMM arm instead of
+#: Above this many n_centroids x dim terms, the IVF operators route the
+#: Lloyd assign through the Arrow/numpy GEMM arm instead of
 #: the Column fold. The fold's zip_with/aggregate lambdas evaluate per
 #: ELEMENT (~0.2 us each — Catalyst can't codegen across LambdaVariable),
 #: so one assign pass costs rows x n_centroids x dim lambda steps: at
@@ -190,17 +190,13 @@ MAX_MEAN_COLUMNS = 256
 GEMM_ASSIGN_MIN_TERMS = 2048
 
 
-def _use_gemm(strategy: str, n_terms: int) -> bool:
-    """ONE spelling of the fold-vs-gemm dispatch (validation included)
-    shared by ivf_assign, ivf_topk, and dedup.semantic_dedup — three
+def _use_gemm(n_terms: int) -> bool:
+    """ONE spelling of the fold-vs-gemm dispatch shared by the Lloyd
+    fit, ivf_topk's probes, ivfpq_topk and dedup.semantic_dedup —
     hand-copies of the threshold compare could otherwise drift and
     route the corpus assign and the probe selection through different
     arms within a single call."""
-    if strategy not in ("auto", "fold", "gemm"):
-        raise ValueError(f"unknown assign_strategy {strategy!r}")
-    return strategy == "gemm" or (
-        strategy == "auto" and n_terms > GEMM_ASSIGN_MIN_TERMS
-    )
+    return n_terms > GEMM_ASSIGN_MIN_TERMS
 
 
 def _centroid_df(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
@@ -393,7 +389,6 @@ def ivf_assign(
     vec_col: str = "embedding",
     round_means: int | None = None,
     early_stop_eps: float | None = None,
-    assign_strategy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic Lloyd iterations.
 
@@ -425,14 +420,13 @@ def ivf_assign(
     unrolls the same Lloyd iterations in SQL and must land on
     bit-identical centroids.
 
-    ``assign_strategy``: 'fold' = the Column formulations above (bit-
-    exact vs the unrolled SQL oracle — every oracle-bearing query's
-    arm); 'gemm' = the Arrow/numpy argmin arm (``_gemm_assign``: same
-    assignments in practice, distances not bit-identical); 'auto'
-    (default) = fold at or below ``GEMM_ASSIGN_MIN_TERMS`` centroid
-    terms, gemm above — at large n_centroids the fold's per-element
-    lambda cost dominates the whole operator (measured 23 s/pass at
-    20k x 80 x 64 vs ~1 s for gemm).
+    Assign arms: at or below ``GEMM_ASSIGN_MIN_TERMS`` centroid terms
+    the Column formulations above run (bit-exact vs the unrolled SQL
+    oracle — every oracle-bearing query's arm); above it the Arrow/numpy
+    argmin arm (``_gemm_assign``: same assignments in practice,
+    distances not bit-identical) — at large n_centroids the fold's
+    per-element lambda cost dominates the whole operator (measured
+    23 s/pass at 20k x 80 x 64 vs ~1 s for gemm).
 
     ``early_stop_eps`` (opt-in, VERDICT r5 #7): stop the Lloyd loop when
     the max absolute coordinate movement across centroids falls at or
@@ -445,7 +439,7 @@ def ivf_assign(
     """
     assignments, cents, _ = _ivf_fit(
         corpus, dim, n_centroids, n_iters, id_col, vec_col, round_means,
-        early_stop_eps, assign_strategy,
+        early_stop_eps,
     )
     centroids = corpus.sparkSession.createDataFrame(
         [(cell, cvec) for cell, cvec in cents], "cell INT, cvec ARRAY<DOUBLE>"
@@ -462,7 +456,6 @@ def _ivf_fit(
     vec_col: str = "embedding",
     round_means: int | None = None,
     early_stop_eps: float | None = None,
-    assign_strategy: str = "auto",
     n_first: int = 0,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]], list]:
     """The Lloyd fit behind ``ivf_assign``: returns (assignments, the
@@ -505,7 +498,7 @@ def _ivf_fit(
     ]
     spark = corpus.sparkSession
 
-    use_gemm = _use_gemm(assign_strategy, n_centroids * dim)
+    use_gemm = _use_gemm(n_centroids * dim)
 
     def assign(vecs: DataFrame) -> DataFrame:
         # large centroid sets: per-element lambda cost of the fold is the
@@ -614,7 +607,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     round_to: int = 3,
     round_means: int | None = None,
-    assign_strategy: str = "auto",
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their nearest
     centroid's cell; each query probes its ``n_probe`` nearest cells and
@@ -625,19 +617,19 @@ def ivf_topk(
     step: sort the query's per-centroid distance array, slice the first
     ``n_probe``, explode — a narrow map, no join, no window. The member
     join carries no baked hint; AQE broadcasts the probe side at runtime
-    when its measured size allows (VERDICT r3). ``assign_strategy``
-    routes BOTH the corpus assign and the probe selection: 'auto'
-    switches to the Arrow/numpy arms (_gemm_assign/_gemm_probes) above
-    GEMM_ASSIGN_MIN_TERMS centroid terms — at large n_centroids the
+    when its measured size allows (VERDICT r3). One dispatch routes
+    BOTH the corpus assign and the probe selection to the Arrow/numpy
+    arms (_gemm_assign/_gemm_probes) above GEMM_ASSIGN_MIN_TERMS
+    centroid terms — at large n_centroids the
     per-element lambda cost of the folds dominates the whole query."""
     # centroid rows come straight off the fit's driver-side list (a
     # LocalTableScan collect cost ~0.5 s of query execution per call —
     # measured r12)
     assignments, cents, _ = _ivf_fit(
         corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col,
-        round_means=round_means, assign_strategy=assign_strategy,
+        round_means=round_means,
     )
-    use_gemm = _use_gemm(assign_strategy, n_centroids * dim)
+    use_gemm = _use_gemm(n_centroids * dim)
     members = assignments.select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "cell"
     ).withColumn("cn", V.norm(F.col("cv")))
@@ -705,7 +697,6 @@ def cluster_sample(
     round_to: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_strategy: str = "auto",
 ) -> DataFrame:
     """Cluster-balanced corpus selection: k-means the embeddings, then
     keep ``per_cell`` members per cluster — ``mode='prototypes'`` keeps
@@ -744,7 +735,6 @@ def cluster_sample(
     assignments, cents, _ = _ivf_fit(
         corpus, dim, n_centroids=n_cells, n_iters=n_iters, id_col=id_col,
         vec_col=vec_col, round_means=round_means,
-        assign_strategy=assign_strategy,
     )
     # each row's centroid comes from the literal cell→cvec map instead
     # of a broadcast join against the (driver-side anyway) centroid
@@ -794,7 +784,6 @@ def kmeans_quality(
     round_to: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_strategy: str = "auto",
 ) -> DataFrame:
     """Clustering-quality report for one k: per-cell size and inertia —
     the measurements behind the elbow/balance decision every IVF/k-means
@@ -824,7 +813,6 @@ def kmeans_quality(
     assignments, cents, _ = _ivf_fit(
         corpus, dim, n_centroids=n_centroids, n_iters=n_iters, id_col=id_col,
         vec_col=vec_col, round_means=round_means,
-        assign_strategy=assign_strategy,
     )
     # literal cell→cvec map lookup instead of the broadcast join — same
     # fold over the same literal doubles, one BroadcastHashJoin fewer,
@@ -1162,14 +1150,13 @@ def ivfpq_topk(
             .orderBy("id")
             .collect()
         )
-        # ONE strategy decision feeds both ivf_assign and the sample
-        # path below (ADVICE r11: two independent "auto"s could desync
-        # and train the PQ on cells that disagree with the engine's)
-        strategy = "auto"
-        use_gemm = _use_gemm(strategy, n_centroids * dim)
+        # the fit and the sample path below take the same dispatch
+        # (ADVICE r11: two independent decisions could desync and train
+        # the PQ on cells that disagree with the engine's)
+        use_gemm = _use_gemm(n_centroids * dim)
         assignments, cents, first_rows = _ivf_fit(
             corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col,
-            round_means=round_means, assign_strategy=strategy,
+            round_means=round_means,
             # fused init (VERDICT r11 #3): the PQ training sample is the
             # same lowest-id projection the init collect already takes —
             # widen that collect instead of running a second job (the

@@ -1578,7 +1578,6 @@ def corpus_stats(
     text_col: str = "text",
     lang_col: str = "lang",
     round_to: int = 6,
-    approx_distinct: bool = False,
 ) -> DataFrame:
     """Per-stratum corpus report card — the summary table a dataset
     release ships (per source: volume, token budget, language spread,
@@ -1590,18 +1589,8 @@ def corpus_stats(
     md5 content hash) is a flat map; the quality join is id-equi
     (AQE-decided); the only shuffle is the final stratum groupBy —
     strata are few, and COUNT(DISTINCT lang/hash) rides Spark's
-    expand-based distinct aggregation with map-side partials.
-
-    ``approx_distinct=True`` swaps both COUNT(DISTINCT) aggregates for
-    ``approx_count_distinct`` (HyperLogLog++, default rsd 5%): exact
-    distinct rides Spark's EXPAND — the input duplicates once per
-    distinct aggregate, so this groupBy shuffles ~3x the projection
-    (grouping set per distinct column) — while HLL sketches are
-    fixed-size per (stratum, agg) and keep the shuffle at 1x. The
-    exact arm is the oracle-matched default (a hash-gated report must
-    be exact); the approx arm is the 100 TB path where the content-
-    hash column's distinct count is corpus-sized. Estimate-vs-exact
-    tolerance is pytest-pinned on the synthetic corpus.
+    expand-based distinct aggregation with map-side partials. The
+    counts are exact: a hash-gated report must be.
     """
     qf = quality_filter(docs, id_col=id_col, text_col=text_col).select(
         F.col(id_col), F.col("passes")
@@ -1620,28 +1609,11 @@ def corpus_stats(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_toks").cast("long").alias("total_tokens"),
             F.round(F.avg("n_toks"), round_to).alias("mean_tokens"),
-            (
-                F.approx_count_distinct("lang")
-                if approx_distinct
-                else F.countDistinct("lang")
-            )
-            .cast("long")
-            .alias("n_langs"),
+            F.countDistinct("lang").cast("long").alias("n_langs"),
             F.round(F.avg("passes"), round_to).alias("pass_rate"),
-            # clamp at 0: the HLL estimate can overshoot COUNT(*) within
-            # its rsd, and a negative dup rate is impossible in a report
-            # card (the exact arm is bounded at 0 by construction)
             F.round(
-                F.greatest(
-                    F.lit(0.0),
-                    F.lit(1.0)
-                    - (
-                        F.approx_count_distinct("h")
-                        if approx_distinct
-                        else F.countDistinct("h")
-                    ).cast("double")
-                    / F.count(F.lit(1)),
-                ),
+                F.lit(1.0)
+                - F.countDistinct("h").cast("double") / F.count(F.lit(1)),
                 round_to,
             ).alias("dup_rate"),
         )
@@ -1929,7 +1901,6 @@ def budget_select(
     tokens_col: str = "n_tokens",
     id_col: str = "doc_id",
     hist_round: int = 3,
-    include_straddle: bool = True,
 ) -> DataFrame:
     """Token-budget corpus selection — "take the best N tokens": keep
     the highest-``score_col`` documents until their token counts fill
@@ -1942,10 +1913,9 @@ def budget_select(
     ``hist_round`` decimals, per-value token sums groupBy into a
     BOUNDED histogram, the cumulative sum runs score-DESCENDING over
     that histogram, and the selected score values broadcast-join back.
-    Selection is all-or-nothing per quantized score value:
-    ``include_straddle=True`` (default) keeps the budget-straddling
-    value whole (overshoot bounded by one bucket's tokens),
-    ``False`` stops short of it. Rows with NULL score are excluded
+    Selection is all-or-nothing per quantized score value: the
+    budget-straddling value is kept whole (overshoot bounded by one
+    bucket's tokens). Rows with NULL score are excluded
     (unrankable — the brute_force_topk convention).
 
     Returns the selected rows as (id, tokens, q_score); exact-integer
@@ -1968,14 +1938,9 @@ def budget_select(
         Window.orderBy(F.col("q_score").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cut = (
-        F.col("cum") - F.col("bt") < F.lit(int(token_budget))
-        if include_straddle
-        else F.col("cum") <= F.lit(int(token_budget))
-    )
     sel = (
         hist.withColumn("cum", F.sum("bt").over(cumw))
-        .filter(cut)
+        .filter(F.col("cum") - F.col("bt") < F.lit(int(token_budget)))
         .select("q_score")
     )
     return base.join(F.broadcast(sel), "q_score").select(
@@ -1991,7 +1956,7 @@ def budget_select(
 _BPE_SEP = "\x1f"
 
 
-#: ``bpe_train(strategy="auto")`` trains driver-side when the word-
+#: ``bpe_train`` trains driver-side when the word-
 #: frequency table fits comfortably on the driver (the PQ-codebook
 #: posture: training state is vocabulary-sized, O(1) in the corpus) and
 #: falls back to the distributed per-round schedule above it. 200k
@@ -2085,7 +2050,6 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Distributed BPE tokenizer training (Sennrich et al. 2016): learn
     ``n_merges`` merge rules over the corpus's word-frequency table.
@@ -2125,25 +2089,15 @@ def bpe_train(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if strategy not in ("auto", "driver", "distributed"):
-        raise ValueError(f"unknown bpe train strategy: {strategy!r}")
-    if strategy != "distributed":
-        # one job: LIMIT max+1 tells us (a) whether the vocabulary fits
-        # and (b) if it does, hands us ALL of it — no separate count.
-        # A forced strategy="driver" must NOT train on the truncated
-        # probe when the vocabulary overflows the limit — collect it
-        # all (the caller asked for driver-side; honor it honestly).
-        probe = words.limit(MAX_DRIVER_WORDS + 1).collect()
-        if strategy == "driver" and len(probe) > MAX_DRIVER_WORDS:
-            probe = words.collect()
-        if strategy == "driver" or len(probe) <= MAX_DRIVER_WORDS:
-            merges = _bpe_train_incremental(
-                [(r.w, r.cnt) for r in probe], n_merges
-            )
-            return spark.createDataFrame(
-                merges,
-                "step LONG, lhs STRING, rhs STRING, merged STRING, pair_count LONG",
-            )
+    # one job: LIMIT max+1 tells us (a) whether the vocabulary fits
+    # and (b) if it does, hands us ALL of it — no separate count
+    probe = words.limit(MAX_DRIVER_WORDS + 1).collect()
+    if len(probe) <= MAX_DRIVER_WORDS:
+        merges = _bpe_train_incremental([(r.w, r.cnt) for r in probe], n_merges)
+        return spark.createDataFrame(
+            merges,
+            "step LONG, lhs STRING, rhs STRING, merged STRING, pair_count LONG",
+        )
     delim = F.concat_ws(
         "",
         F.transform(
@@ -2192,8 +2146,8 @@ def bpe_train(
     )
 
 
-#: Above this merge-table size ``bpe_encode_counts(strategy="auto")``
-#: switches from the Column replace chain to the Arrow-batched ranked
+#: Above this merge-table size ``bpe_encode_counts`` and
+#: ``bpe_encode_ids`` switch from the Column replace chain to the Arrow-batched ranked
 #: encoder: a real tokenizer ships ~32k merges, and a 32k-deep Column
 #: chain does not plan (Catalyst tree + codegen blow up long before
 #: that — measured: the chain arm is fine at 64, painful past a few
@@ -2207,7 +2161,6 @@ def bpe_encode_counts(
     id_col: str = "doc_id",
     text_col: str = "text",
     round_to: int = 6,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Apply a learned BPE merge table (``bpe_train`` output order
     matters — merges apply sequentially) and report per-document BPE
@@ -2236,8 +2189,8 @@ def bpe_encode_counts(
     would have merged it), so each merge reaches its fixpoint in one
     pass and never needs revisiting; the floor forbids re-applying an
     earlier rank that a later merge resurrects (the replace chain
-    cannot go back either). ``strategy="auto"`` dispatches on
-    ``MAX_CHAIN_MERGES`` like the IVF ``assign_strategy``.
+    cannot go back either). The merge-table size dispatches: chain up
+    to ``MAX_CHAIN_MERGES`` merges, ranked above.
     """
     sep = _BPE_SEP
     # _spread: both arms are per-doc encode maps (codegen'd replace
@@ -2248,14 +2201,10 @@ def bpe_encode_counts(
     from .dedup import _spread
 
     docs = _spread(docs)
-    if strategy == "auto":
-        strategy = "chain" if len(merges) <= MAX_CHAIN_MERGES else "ranked"
-    if strategy == "ranked":
+    if len(merges) > MAX_CHAIN_MERGES:
         return _bpe_encode_counts_ranked(
             docs, merges, id_col, text_col, round_to
         )
-    if strategy != "chain":
-        raise ValueError(f"unknown bpe encode strategy: {strategy!r}")
 
     def encode(word):
         s = F.concat_ws(
@@ -2433,7 +2382,6 @@ def ngram_diversity(
     strata_col: str | None = None,
     text_col: str = "text",
     round_to: int = 6,
-    approx_distinct: bool = False,
 ) -> DataFrame:
     """Corpus distinct-n diversity (the distinct-1/distinct-2 metric of
     Li et al. 2016, standard in generation-quality and corpus-variety
@@ -2458,11 +2406,8 @@ def ngram_diversity(
     so fusing the per-n work into one subtree doesn't serialize 3x the
     CPU onto one task; at 100 TB splits >> cores and the branch is a
     no-op (no added shuffle).
-    COUNT(DISTINCT ngram) is corpus-sized state: the exact arm is the
-    oracle-matched default, ``approx_distinct=True`` swaps in
-    HyperLogLog++ for the 100 TB path (the corpus_stats posture — a
-    distinct count over billions of n-grams is sketch territory).
-    Counts are exact integers; the one ratio is a single rounded IEEE
+    COUNT(DISTINCT ngram) is corpus-sized state, kept exact so the
+    table matches its oracle. Counts are exact integers; the one ratio is a single rounded IEEE
     division. Strata-less mode keeps the per-n global-aggregate
     contract: every n gets a row even at zero occurrences (scaffold
     left-join — the old per-n ``groupBy()`` emitted exactly one row
@@ -2508,14 +2453,9 @@ def ngram_diversity(
     g = base.select(*skeys, F.explode(combined).alias("p")).select(
         *skeys, F.col("p.n").alias("n"), F.col("p.ngram").alias("ngram")
     )
-    distinct = (
-        F.approx_count_distinct("ngram")
-        if approx_distinct
-        else F.countDistinct("ngram")
-    )
     agg = g.groupBy(*skeys, "n").agg(
         F.count(F.lit(1)).cast("long").alias("n_total"),
-        distinct.cast("long").alias("n_distinct"),
+        F.countDistinct("ngram").cast("long").alias("n_distinct"),
     )
     if not strata_col:
         # zero-occurrence n values still report a (n, 0, 0, NULL) row —
@@ -2552,7 +2492,6 @@ def tokenizer_fertility(
     id_col: str = "doc_id",
     text_col: str = "text",
     round_to: int = 6,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Per-stratum tokenizer fertility report — the standard
     multilingual-tokenizer health metric (tokens-per-word by language):
@@ -2573,9 +2512,7 @@ def tokenizer_fertility(
     exact BIGINTs, so the two divisions are single rounded IEEE ops —
     no float-accumulation parity question (the corpus_stats posture).
     """
-    enc = bpe_encode_counts(
-        docs, merges, id_col=id_col, text_col=text_col, strategy=strategy
-    )
+    enc = bpe_encode_counts(docs, merges, id_col=id_col, text_col=text_col)
     base = docs.select(F.col(id_col), F.col(strata_col).alias("stratum"))
     g = (
         enc.join(base, id_col)
@@ -2653,7 +2590,6 @@ def bpe_encode_ids(
     vocab: list[tuple[str, int]] | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """The id-emitting encoder — what a training-data writer actually
     ships: per document the full BPE token-ID SEQUENCE (order
@@ -2677,12 +2613,8 @@ def bpe_encode_ids(
     docs = _spread(docs)
     if vocab is None:
         vocab = bpe_vocab(docs, merges, text_col)
-    if strategy == "auto":
-        strategy = "chain" if len(merges) <= MAX_CHAIN_MERGES else "ranked"
-    if strategy == "ranked":
+    if len(merges) > MAX_CHAIN_MERGES:
         return _bpe_encode_ids_ranked(docs, merges, dict(vocab), id_col, text_col)
-    if strategy != "chain":
-        raise ValueError(f"unknown bpe encode strategy: {strategy!r}")
 
     def encode(word):
         s = F.concat_ws(

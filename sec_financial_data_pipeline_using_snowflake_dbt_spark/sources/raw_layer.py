@@ -17,9 +17,7 @@ Hive-partitioned Parquet dataset:
   tests/test_raw_layer.py by inspecting PartitionFilters).
 
 At 100 TB: quarter partitions bound every reprocessing job to new data,
-`quarter` predicates skip irrelevant years entirely, and within a
-partition the fact table can additionally be bucketed by ``adsh``
-(sources/catalog.py) for shuffle-free star joins.
+and `quarter` predicates skip irrelevant years entirely.
 """
 
 from __future__ import annotations

@@ -23,9 +23,10 @@ columns the downstream query touches. ``from_csv`` parses the full
 declared schema row-locally, so row validity is a pure function of
 the row: short/long rows and type-conversion failures all populate
 the in-struct corrupt-record field deterministically. NULL_IF
-literals are rewritten in the raw line *before* parsing (Snowflake
-applies NULL_IF pre-conversion), so 'NULL' in a numeric column loads
-as NULL rather than an error. One linear scan, and the parse runs once
+literals are rewritten in quote-free raw lines *before* parsing
+(Snowflake applies NULL_IF pre-conversion), so 'NULL' in a numeric
+column loads as NULL rather than an error; quoted lines get NULL_IF per
+string field after the parse. One linear scan, and the parse runs once
 per row: rows are selected inside the generator that emits the parsed
 struct, where the optimizer cannot duplicate ``from_csv`` into a
 pushed-down filter. ``read_sec_quarter`` persists what it loads, so the
@@ -69,25 +70,6 @@ def read_tsv(
     if path_glob:
         reader = reader.option("pathGlobFilter", path_glob)
     lines = reader.text(path)
-    return parse_tsv_lines(
-        lines,
-        schema,
-        on_error_continue=on_error_continue,
-        corrupt_record_col=corrupt_record_col,
-    )
-
-
-def parse_tsv_lines(
-    lines: DataFrame,
-    schema: T.StructType,
-    on_error_continue: bool = True,
-    corrupt_record_col: str | None = None,
-) -> DataFrame:
-    """The COPY-semantics parse over a ``value``-column line source —
-    pure Column work, so it runs identically on a BATCH text scan
-    (``read_tsv``) and a STREAMING one (``stream_sec_quarter``): one
-    spelling is what makes "batch and stream are semantics-identical"
-    true by construction rather than by parallel maintenance."""
     # strip trailing CR (CRLF files)
     line = F.regexp_replace(F.col("value"), "\r$", "")
     # NULL_IF=('NULL','null'): Snowflake applies it per FIELD after quote

@@ -1,24 +1,14 @@
-"""Incremental + Structured Streaming ingest.
+"""Incremental filter and Structured Streaming operators.
 
 The reference's only incremental construct is the high-watermark macro
 (reference: Airflow/json_transform/macros/incremental_filter.sql:1-5,
-``WHERE col >= (SELECT MAX(col) FROM {{ this }})``). Idiomatic Spark
-offers three strengths of the same idea, all here:
+``WHERE col >= (SELECT MAX(col) FROM {{ this }})``);
+``incremental_filter`` is its batch translation (a scalar subquery
+against the existing target).
 
-1. ``incremental_filter``    — the literal batch translation (scalar
-                               subquery against the existing target).
-2. ``incremental_append``    — watermark-filtered append to a target
-                               path (the dbt incremental materialization).
-3. ``stream_sec_quarter``    — Structured Streaming with
-                               Trigger.AvailableNow over the landing
-                               directory: exactly-once file ingest with
-                               checkpointed progress — the scale-correct
-                               replacement for "reprocess everything
-                               newer than MAX(col)".
-
-The streaming TSV path reuses the same ``from_csv`` parse the batch
-reader uses, so batch and stream are semantics-identical by
-construction.
+The streaming operators are ``stream_interval_join`` (a watermarked
+stream-stream interval join) and ``stream_cdc_sink`` (a foreachBatch
+CDC apply into versioned parquet, read back by ``read_cdc_snapshot``).
 """
 
 from __future__ import annotations
@@ -27,7 +17,6 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def incremental_filter(
@@ -49,70 +38,7 @@ def incremental_filter(
     )
 
 
-def incremental_append(
-    spark: SparkSession, new_data: DataFrame, target_path: str, col: str
-) -> DataFrame:
-    """Watermark-filtered append (dbt ``materialized='incremental'``)."""
-    try:
-        existing = spark.read.parquet(target_path)
-    except Exception:  # noqa: BLE001 — first run: target doesn't exist
-        existing = None
-    delta = incremental_filter(new_data, col, existing)
-    delta.write.mode("append").parquet(target_path)
-    return spark.read.parquet(target_path)
-
-
 # --- Structured Streaming ---------------------------------------------------
-
-
-def stream_sec_quarter(
-    spark: SparkSession,
-    landing_dir: str,
-    table: str,
-    checkpoint_dir: str,
-    out_path: str,
-) -> None:
-    """Stream a SEC table's TSVs from the landing dir to Parquet with
-    Trigger.AvailableNow — each file is processed exactly once across
-    restarts (checkpointed), the scale path for "a new quarter landed".
-    """
-    from ..schemas import SEC_SCHEMAS
-    from ..sources.tsv import parse_tsv_lines
-
-    schema = SEC_SCHEMAS[table]
-    lines = (
-        spark.readStream.option("pathGlobFilter", f"*{table}.txt")
-        .text(landing_dir)
-    )
-    # the SAME parse expression the batch reader uses (shared helper —
-    # a hand-copied streaming parse once lacked the quote-gated NULL_IF
-    # rewrite, silently diverging from batch on quoted lines)
-    parsed = parse_tsv_lines(lines, schema)
-    q = (
-        parsed.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def sessionized_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session windows per user (dynamic-gap sessionization) — the
-    streaming analogue of the batch lag/cumsum sessionization in the
-    workload."""
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
 
 
 def stream_interval_join(

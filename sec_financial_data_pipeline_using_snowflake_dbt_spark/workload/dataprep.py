@@ -826,9 +826,8 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corpus distinct-n diversity (Li et al. 2016) per source: the
 # dataset-card variety table. n-grams keep their occurrence
 # multiplicity (unlike the dedup shingles, which are per-doc distinct);
-# the only heavy state is COUNT(DISTINCT ngram) — exact here for the
-# oracle, HLL via approx_distinct=True at corpus scale (the
-# corpus_stats posture).
+# the only heavy state is COUNT(DISTINCT ngram), kept exact for the
+# oracle.
 # ---------------------------------------------------------------------------
 def _ngram_diversity_sql(n_values: tuple[int, ...] = (1, 2, 3)) -> str:
     arms = []

@@ -30,8 +30,7 @@ def q(name: str, sql: str | None):
 
 # ---------------------------------------------------------------------------
 # Batch sessionization: lag + gap-flag + cumulative count (the guide's
-# canonical pattern; streaming twin is streaming/incremental.py
-# sessionized_stream).
+# canonical pattern).
 # ---------------------------------------------------------------------------
 @q(
     "q_sessionization",

@@ -77,8 +77,7 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     readStream(parquet) → window(1 hour) agg → memory sink (complete).
     Watermarking is omitted because the batch oracle must see every row
-    (watermarked streams are exercised by q_stream_join and
-    tests/test_registry_streaming.py::test_sessionized_stream).
+    (watermarked streams are exercised by q_stream_join).
     """
     name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
     stream = events_stream(spark, sf_dir)

@@ -76,7 +76,7 @@ def test_asof_no_match_keeps_nulls(events):
     assert a.count() == purchases.count()
 
 
-def test_asof_auto_dispatch(events):
+def test_asof_auto_dispatch(events, monkeypatch):
     """asof_join_auto picks by Catalyst's size estimate and both arms
     return identical results (the dispatch must be invisible)."""
     purchases = events.filter(F.col("event_type") == "purchase").select(
@@ -89,13 +89,13 @@ def test_asof_auto_dispatch(events):
 
     # threshold 0 → bucketized arm (its plan carries the per-bucket
     # collect_list aggregate); huge threshold → range-join arm
+    monkeypatch.setattr(asof, "AUTO_RANGE_JOIN_MAX_BYTES", 0)
     bucketed = asof.asof_join_auto(
-        purchases, clicks, on="ts", by="user_id", value_cols=["value"],
-        range_join_max_bytes=0,
+        purchases, clicks, on="ts", by="user_id", value_cols=["value"]
     )
+    monkeypatch.setattr(asof, "AUTO_RANGE_JOIN_MAX_BYTES", 1 << 60)
     ranged = asof.asof_join_auto(
-        purchases, clicks, on="ts", by="user_id", value_cols=["value"],
-        range_join_max_bytes=1 << 60,
+        purchases, clicks, on="ts", by="user_id", value_cols=["value"]
     )
     assert "collect_list" in bucketed._jdf.queryExecution().analyzed().toString()
     assert "collect_list" not in ranged._jdf.queryExecution().analyzed().toString()

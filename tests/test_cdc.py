@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 
 from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.cdc import (
     cdc_apply,
-    cdc_merge,
+    cdc_snapshot,
+    cdc_state_merge,
 )
 
 KEY = ["k"]
@@ -87,7 +88,8 @@ def test_fold_equals_replay_on_random_changelogs(spark, trial):
     prefix = _df(spark, rows[:split])
     suffix = _df(spark, rows[split:])
     replay = cdc_apply(whole, KEY, SEQ)
-    folded = cdc_merge(cdc_apply(prefix, KEY, SEQ), suffix, KEY, SEQ)
+    state = cdc_apply(prefix, KEY, SEQ, keep_op=True)
+    folded = cdc_snapshot(cdc_state_merge(state, suffix, KEY, SEQ))
     assert _snap(replay) == _snap(folded)
 
 
@@ -100,8 +102,8 @@ def test_apply_plan_has_no_window_and_merge_broadcasts(spark):
     # (un-splittable under key skew)
     assert "Window" not in snap_plan
     assert "partial_max" in snap_plan
-    merged = cdc_merge(
-        cdc_apply(_df(spark, rows), KEY, SEQ), _df(spark, rows), KEY, SEQ
+    merged = cdc_state_merge(
+        cdc_apply(_df(spark, rows), KEY, SEQ, keep_op=True), _df(spark, rows), KEY, SEQ
     )
     merge_plan = merged._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in merge_plan and "LeftAnti" in merge_plan

@@ -91,13 +91,6 @@ def test_relationships_multi_column(dirty):
     assert orphans.filter(F.col("tag") == "NoSuchTag").count() == 1
 
 
-def test_assert_checks_raises(dirty):
-    with pytest.raises(AssertionError, match="sub.adsh.unique"):
-        C.assert_checks(
-            {"sub.adsh.unique": lambda: C.unique(dirty["sub"], "adsh")}
-        )
-
-
 def test_expression_holds(clean):
     # singular business rule (reference Notes.md:393-404 flavor):
     # filed date within [2009-01-01, today]

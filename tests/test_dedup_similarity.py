@@ -11,7 +11,7 @@ from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
     similarity as SIM,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, under_thresholds
 
 
 @pytest.fixture(scope="module")
@@ -58,7 +58,7 @@ def test_dedup_plans_hint_no_unbounded_broadcast(spark, docs, emb):
         DD.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.8, exact=True),
         DD.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.8),
         DD.embedding_neardup_pairs(emb, block_col="label", threshold=0.35),
-        DD.minhash_lsh_pairs(docs, cache_signatures=False),
+        DD.minhash_lsh_pairs(docs),
         DD.simhash_pairs(docs, block_col="lang"),
     ):
         logical = df._jdf.queryExecution().analyzed().toString()
@@ -245,13 +245,39 @@ def test_simhash_is_16_bit(spark, docs):
     assert 0 <= r[0] and r[1] < 2**16
 
 
+def _simhash_all_pairs(docs, max_hamming, n_bits=16):
+    """The quadratic scan, in Python: every same-lang pair of
+    signatures within ``max_hamming`` bits."""
+    sigs = (
+        DD.simhash(docs, n_bits=n_bits)
+        .join(docs.select(F.col("doc_id").alias("id"), "lang"), "id")
+        .collect()
+    )
+    mask = (1 << n_bits) - 1
+    out = set()
+    for a in sigs:
+        for b in sigs:
+            if a.id < b.id and a.lang == b.lang:
+                d = bin((a.simhash ^ b.simhash) & mask).count("1")
+                if d <= max_hamming:
+                    out.add((a.id, b.id, d))
+    return out
+
+
 def test_simhash_band_join_matches_all_pairs(spark, docs):
     # pigeonhole banding is exact: same pairs as the quadratic scan
-    banded = DD.simhash_pairs(docs, block_col="lang", max_hamming=3, band_join=True)
-    full = DD.simhash_pairs(docs, block_col="lang", max_hamming=3, band_join=False)
+    banded = DD.simhash_pairs(docs, block_col="lang", max_hamming=3)
     a = {(r.id_a, r.id_b, r.hamming) for r in banded.collect()}
-    b = {(r.id_a, r.id_b, r.hamming) for r in full.collect()}
-    assert a == b and len(a) > 0
+    assert a == _simhash_all_pairs(docs, 3) and len(a) > 0
+
+
+def test_simhash_all_pairs_arm_when_every_pair_qualifies(spark, docs):
+    """max_hamming >= n_bits admits every same-block pair: the
+    dispatch skips the band join for the blocked all-pairs scan."""
+    small = docs.filter(F.col("doc_id") < 40)
+    full = DD.simhash_pairs(small, block_col="lang", max_hamming=16, n_bits=16)
+    a = {(r.id_a, r.id_b, r.hamming) for r in full.collect()}
+    assert a == _simhash_all_pairs(small, 16) and len(a) > 0
 
 
 def test_simhash_chunks_cover_16_bits():
@@ -288,15 +314,9 @@ def test_simhash_wide_band_join_matches_all_pairs(spark, docs):
     pigeonhole band join must stay exact at the wide widths, including
     the 64-bit sign-bit-carrying top chunk."""
     for bits in (32, 64):
-        banded = DD.simhash_pairs(
-            docs, block_col="lang", max_hamming=3, band_join=True, n_bits=bits
-        )
-        full = DD.simhash_pairs(
-            docs, block_col="lang", max_hamming=3, band_join=False, n_bits=bits
-        )
+        banded = DD.simhash_pairs(docs, block_col="lang", max_hamming=3, n_bits=bits)
         a = {(r.id_a, r.id_b, r.hamming) for r in banded.collect()}
-        b = {(r.id_a, r.id_b, r.hamming) for r in full.collect()}
-        assert a == b, f"n_bits={bits}"
+        assert a == _simhash_all_pairs(docs, 3, bits), f"n_bits={bits}"
 
 
 def test_simhash_wide_uses_sign_bit(spark, docs):
@@ -306,23 +326,6 @@ def test_simhash_wide_uses_sign_bit(spark, docs):
     sh = DD.simhash(docs, n_bits=64)
     lo, hi = sh.agg(F.min("simhash"), F.max("simhash")).first()
     assert lo < 0 <= hi
-
-
-def test_gemm_neardup_agrees_with_column_version(spark, emb):
-    col_pairs = DD.embedding_neardup_pairs(
-        emb, block_col="label", threshold=0.3
-    )
-    gemm_pairs = DD.embedding_neardup_pairs_gemm(
-        emb, block_col="label", threshold=0.3
-    )
-    a = {(r.id_a, r.id_b, r.cos) for r in col_pairs.collect()}
-    b = {(r.id_a, r.id_b, r.cos) for r in gemm_pairs.collect()}
-    # identical pair sets; cos equal after rounding (BLAS accumulation
-    # order differs at ~1e-15, far below the 1e-3 rounding)
-    assert {(x, y) for x, y, _ in a} == {(x, y) for x, y, _ in b}
-    ca = {(x, y): c for x, y, c in a}
-    cb = {(x, y): c for x, y, c in b}
-    assert all(abs(ca[k] - cb[k]) <= 0.001 for k in ca)
 
 
 def test_ivf_topk_recall_and_determinism(spark, emb):
@@ -986,6 +989,13 @@ def test_semantic_dedup_extremes(spark, emb):
                 assert m.keep == 0 and m.witness_id == ids[0]
 
 
+def _fold_and_gemm(fn):
+    """``fn()`` built once per arm of the fold-vs-gemm dispatch: a
+    threshold no config reaches keeps the Column fold, a zero threshold
+    routes the Arrow/numpy GEMM arm."""
+    return under_thresholds(SIM, "GEMM_ASSIGN_MIN_TERMS", (1 << 62, 0), fn)
+
+
 def test_ivf_assign_gemm_arm_matches_fold(spark, emb):
     """The Arrow/numpy GEMM assign arm produces the identical
     (id, cell) assignment as the Column fold arm (argmin equivalence:
@@ -996,13 +1006,8 @@ def test_ivf_assign_gemm_arm_matches_fold(spark, emb):
     )
 
     for k in (8, 40):
-        fold, _ = ivf_assign(
-            emb, 64, n_centroids=k, n_iters=2, round_means=6,
-            assign_strategy="fold",
-        )
-        gemm, _ = ivf_assign(
-            emb, 64, n_centroids=k, n_iters=2, round_means=6,
-            assign_strategy="gemm",
+        (fold, _), (gemm, _) = _fold_and_gemm(
+            lambda: ivf_assign(emb, 64, n_centroids=k, n_iters=2, round_means=6)
         )
         a = {r.id: r.cell for r in fold.collect()}
         b = {r.id: r.cell for r in gemm.collect()}
@@ -1010,14 +1015,15 @@ def test_ivf_assign_gemm_arm_matches_fold(spark, emb):
 
 
 def test_semantic_dedup_gemm_strategy_matches_fold(spark, emb):
-    """semantic_dedup(strategy='gemm') (GEMM assign + GEMM pair
-    scoring) returns the same rows as strategy='fold'."""
+    """semantic_dedup's GEMM arm (GEMM assign + GEMM pair scoring)
+    returns the same rows as its Column fold arm."""
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.dedup import (
         semantic_dedup,
     )
 
-    fold = semantic_dedup(emb, dim=64, n_cells=8, threshold=0.4, strategy="fold")
-    gemm = semantic_dedup(emb, dim=64, n_cells=8, threshold=0.4, strategy="gemm")
+    fold, gemm = _fold_and_gemm(
+        lambda: semantic_dedup(emb, dim=64, n_cells=8, threshold=0.4)
+    )
     key = lambda r: (r.vec_id, r.cell, r.n_near, r.witness_id, r.keep)  # noqa: E731
     assert sorted(map(key, fold.collect())) == sorted(map(key, gemm.collect()))
 
@@ -1033,8 +1039,7 @@ def test_ivf_topk_gemm_arm_matches_fold(spark, emb):
 
     qs = emb.filter(SF.col("vec_id") < 8)
     kw = dict(dim=64, k=5, n_centroids=8, n_probe=3, round_means=6)
-    fold = ivf_topk(qs, emb, assign_strategy="fold", **kw)
-    gemm = ivf_topk(qs, emb, assign_strategy="gemm", **kw)
+    fold, gemm = _fold_and_gemm(lambda: ivf_topk(qs, emb, **kw))
     key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.cos)  # noqa: E731
     assert sorted(map(key, fold.collect())) == sorted(map(key, gemm.collect()))
 
@@ -1228,6 +1233,16 @@ def test_cluster_sample_bounds_and_modes(spark, emb):
 # ---------------------------------------------------------------------------
 # bloom_dedup (r7 late batch)
 # ---------------------------------------------------------------------------
+def _bloom_arms(*args, **kw):
+    """bloom_dedup's literal and join arms on one input: filters up to
+    BLOOM_LITERAL_MAX_BITS take the literal arm, and a zero threshold
+    routes the join arm."""
+    return under_thresholds(
+        DD, "BLOOM_LITERAL_MAX_BITS", (DD.BLOOM_LITERAL_MAX_BITS, 0),
+        lambda: DD.bloom_dedup(*args, **kw),
+    )
+
+
 def test_bloom_dedup_no_false_negatives_and_arm_agreement(spark):
     """The Bloom guarantee: an exact duplicate can NEVER be missed
     (maybe_dup must be 1 wherever exact_dup is 1); false positives may
@@ -1235,8 +1250,7 @@ def test_bloom_dedup_no_false_negatives_and_arm_agreement(spark):
     rows = [(i, f"doc body {i % 7}") for i in range(40)]  # heavy dup load
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     new, existing = docs.filter("doc_id >= 20"), docs.filter("doc_id < 20")
-    lit_arm = DD.bloom_dedup(new, existing, m_bits=256, k=4, strategy="literal")
-    join_arm = DD.bloom_dedup(new, existing, m_bits=256, k=4, strategy="join")
+    lit_arm, join_arm = _bloom_arms(new, existing, m_bits=256, k=4)
     got = lit_arm.collect()
     assert len(got) == 20
     for r in got:
@@ -1260,15 +1274,12 @@ def test_bloom_dedup_counts_hash_slots_not_positions(spark):
         "doc_id long, text string",
     )
     new, existing = docs.filter("doc_id >= 2"), docs.filter("doc_id < 2")
-    a = DD.bloom_dedup(new, existing, m_bits=64, k=8, strategy="literal")
-    b = DD.bloom_dedup(new, existing, m_bits=64, k=8, strategy="join")
+    a, b = _bloom_arms(new, existing, m_bits=64, k=8)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     byid = {r.doc_id: r for r in a.collect()}
     assert byid[3].exact_dup == 1 and byid[3].maybe_dup == 1
     with pytest.raises(ValueError):
         DD.bloom_dedup(new, existing, m_bits=32)
-    with pytest.raises(ValueError):
-        DD.bloom_dedup(new, existing, strategy="bitmapish")
 
 
 # ---------------------------------------------------------------------------
@@ -1362,16 +1373,12 @@ def test_bloom_and_classifier_null_text_match_oracle(spark):
         "CREATE VIEW documents AS SELECT * FROM (VALUES (0,'alpha'),"
         "(1,NULL),(2,'beta'),(3,'alpha')) t(doc_id, text)"
     )
-    for strategy in ("literal", "join"):
-        got = DD.bloom_dedup(
-            docs.filter("doc_id >= 1"),
-            docs.filter("doc_id = 0"),
-            m_bits=256,
-            k=3,
-            strategy=strategy,
-        )
+    arms = _bloom_arms(
+        docs.filter("doc_id >= 1"), docs.filter("doc_id = 0"), m_bits=256, k=3
+    )
+    for arm, got in zip(("literal", "join"), arms):
         exp = con.execute(_bloom_sql(m_bits=256, k=3, split=1)).df()
-        assert not compare(got, exp, f"bloom-null-{strategy}")
+        assert not compare(got, exp, f"bloom-null-{arm}")
         rows = {r.doc_id: r for r in got.collect()}
         assert rows[1].n_hit == 0 and rows[1].maybe_dup == 0  # NULL text
         assert rows[3].exact_dup == 1 and rows[3].maybe_dup == 1

@@ -85,11 +85,9 @@ def test_vector_math(spark):
     r = df.select(
         V.dot("a", "b").alias("d"),
         V.norm("a").alias("na"),
-        V.cosine("a", "b").alias("c"),
     ).first()
     assert r.d == 8.0
     assert r.na == 3.0
-    assert math.isclose(r.c, 8.0 / 9.0)
 
 
 def test_weather_csv_path(spark, tmp_path_factory):

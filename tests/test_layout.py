@@ -1,20 +1,13 @@
-"""Z-order layout (operators/layout.py): exact interleave math vs a
-Python reference, bounds clamping, the one-Exchange plan pin, and the
-file-pruning payoff vs linear / unordered layouts on real footer stats."""
+"""Z-order key (operators/layout.py): exact interleave math vs a Python
+reference, bounds clamping, and the shuffle-free key projection."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
-
 from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.layout import (
     Z_COL,
     column_bounds,
     with_zorder_key,
-    zorder_layout,
     zorder_sql_expr,
 )
 
@@ -69,98 +62,4 @@ def test_key_is_pure_projection_and_layout_shuffles_once(spark):
     keyed = with_zorder_key(li, ["l_partkey", "l_suppkey"])
     kplan = keyed._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in kplan  # zero shuffles: codegen projection
-    laid = zorder_layout(li, ["l_partkey", "l_suppkey"], n_files=8)
-    lplan = laid._jdf.queryExecution().executedPlan().toString()
-    assert lplan.count("Exchange") == 1 and "rangepartitioning" in lplan
 
-
-def _file_stats(path_glob: str, cols: list[str]):
-    """Per-file min/max boxes from real parquet footers."""
-    boxes = []
-    for f in sorted(glob.glob(path_glob)):
-        meta = pq.ParquetFile(f).metadata
-        lo = {c: None for c in cols}
-        hi = {c: None for c in cols}
-        for rg in range(meta.num_row_groups):
-            row_group = meta.row_group(rg)
-            for ci in range(row_group.num_columns):
-                col = row_group.column(ci)
-                name = col.path_in_schema
-                if name in cols and col.statistics is not None:
-                    s = col.statistics
-                    lo[name] = s.min if lo[name] is None else min(lo[name], s.min)
-                    hi[name] = s.max if hi[name] is None else max(hi[name], s.max)
-        boxes.append((lo, hi))
-    return boxes
-
-
-def _files_hit(boxes, ranges: dict[str, tuple[int, int]]) -> int:
-    hit = 0
-    for lo, hi in boxes:
-        if all(hi[c] >= r[0] and lo[c] <= r[1] for c, r in ranges.items()):
-            hit += 1
-    return hit
-
-
-def test_zorder_layout_prunes_multidim_queries(spark, tmp_path):
-    """The 100 TB payoff, measured on real footers: a z-ordered write
-    bounds EVERY layout dimension per file, so both a second-dimension
-    filter and a 2-d rectangle prune; a linear sort only prunes its own
-    sort column and an unordered write prunes nothing."""
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    n_files = 16
-    cols = ["l_partkey", "l_suppkey"]
-    dest = {
-        "zorder": str(tmp_path / "z"),
-        "linear": str(tmp_path / "lin"),
-        "unordered": str(tmp_path / "none"),
-    }
-    zorder_layout(li, cols, n_files).write.parquet(dest["zorder"])
-    li.repartitionByRange(n_files, "l_partkey").sortWithinPartitions(
-        "l_partkey"
-    ).write.parquet(dest["linear"])
-    li.repartition(n_files).write.parquet(dest["unordered"])
-
-    boxes = {k: _file_stats(f"{v}/part-*.parquet", cols) for k, v in dest.items()}
-    assert all(len(b) == n_files for b in boxes.values())
-
-    pmin, pmax = [
-        (r["mn"], r["mx"])
-        for r in li.agg(
-            F.min("l_partkey").alias("mn"), F.max("l_partkey").alias("mx")
-        ).collect()
-    ][0]
-    mid = (pmin + pmax) // 2
-    span = max((pmax - pmin) // 10, 1)
-
-    # filter on the SECOND dimension only: linear-by-partkey can't prune
-    supp_q = {"l_suppkey": (3, 3)}
-    z_supp = _files_hit(boxes["zorder"], supp_q)
-    lin_supp = _files_hit(boxes["linear"], supp_q)
-    un_supp = _files_hit(boxes["unordered"], supp_q)
-    assert z_supp < lin_supp and z_supp < un_supp
-    assert z_supp <= n_files // 2
-
-    # 2-d rectangle: z-order prunes on both dimensions at once
-    rect = {"l_partkey": (mid, mid + span), "l_suppkey": (3, 4)}
-    z_rect = _files_hit(boxes["zorder"], rect)
-    un_rect = _files_hit(boxes["unordered"], rect)
-    assert z_rect < un_rect
-    # the rectangle covers ~2% of the key space; range-boundary sampling
-    # wobbles the exact count by a file or two, so pin an upper bound
-    # with margin (observed 3-5 of 16) rather than an exact count
-    assert z_rect <= 6
-
-    # correctness: every layout returns identical rows for the rectangle
-    counts = {
-        k: spark.read.parquet(v)
-        .where(
-            (F.col("l_partkey").between(*rect["l_partkey"]))
-            & (F.col("l_suppkey").between(*rect["l_suppkey"]))
-        )
-        .count()
-        for k, v in dest.items()
-    }
-    assert counts["zorder"] == counts["linear"] == counts["unordered"] > 0

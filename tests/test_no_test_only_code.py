@@ -1,17 +1,27 @@
-"""Guard: no top-level package def is reached from tests alone.
+"""Guard: no package code is reached from tests alone.
 
 An AST and name-reference pass over the program: the package,
-``bench.py``, ``__spark_entry__.py``, ``scripts/`` and ``perfbench/``. A
-top-level def (function, class or module-level name) counts as reached
-when one of those files names it outside its own body, or when it is
-decorated (the workload's ``@q(...)`` registers each query). Anything
-else is test-only code and should be deleted with its tests, unless
-``ALLOWED`` lists it with the reason it stays.
+``bench.py``, ``__spark_entry__.py``, ``scripts/`` and ``perfbench/``.
+Three checks share it:
+
+- a top-level def (function, class or module-level name) counts as
+  reached when one of those files names it outside its own body, or
+  when it is decorated (the workload's ``@q(...)`` registers each query);
+- a public method of a package class counts as reached the same way;
+- an *option* — a defaulted parameter of a public package function with
+  a literal default (a bool, a string or None) that picks a code path:
+  the function branches on it, or passes it on to a parameter that does
+  — counts as reached when a program call passes it a value other than
+  that default.
+
+Anything else is test-only code and should be deleted with its tests,
+unless an allowlist names it with the reason it stays.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -30,20 +40,43 @@ ALLOWED: dict[str, str] = {
     "checks.py:expression_holds": "dbt singular tests",
     "plans/serve.py:list_catalog": "S11 catalog introspection",
     "operators/multimodal.py:pack_assets": "S2 binaryFile ingest of media archives",
-    # library surface named in its module's API docstring; each is a
-    # candidate for the next deletion pass (ROADMAP direction 4)
-    "checks.py:assert_checks": "raising form of run_checks",
-    "functions/vector.py:cosine": "vector helper beside dot/norm",
-    "operators/asof.py:asof_join_pandas": "applyInPandas as-of arm, parity-tested",
-    "operators/cdc.py:cdc_merge": "incremental CDC fold, fold == replay property",
-    "operators/scd.py:scd2_merge": "incremental SCD2 fold (dbt snapshot run)",
-    "operators/dedup.py:embedding_neardup_pairs_gemm": "BLAS arm of embedding_neardup_pairs",
-    "operators/layout.py:zorder_layout": "z-ordered write layout, pruning pinned by test_layout",
-    "sources/catalog.py:write_training_shards": "training-shard writer sink",
-    "streaming/incremental.py:incremental_append": "dbt incremental materialization",
-    "streaming/incremental.py:stream_sec_quarter": "AvailableNow SEC landing ingest",
-    "streaming/incremental.py:sessionized_stream": "session-window stream",
-    "workload/registry.py:DRIVER_WINDOW": "driver window size the registry tests pin",
+    "streaming/incremental.py:incremental_filter": "P11 incremental_filter.sql high-watermark macro",
+    # references and contracts outside the program
+    "operators/asof.py:asof_join_pandas": "merge_asof reference test_asof checks the Spark as-of arms against",
+    "workload/registry.py:DRIVER_WINDOW": "size of the external driver's query window",
+}
+
+#: Test-only public methods that stay, keyed "<module>:<Class>.<method>".
+ALLOWED_METHODS: dict[str, str] = {
+    "plans/registry.py:Registry.emit_docs": (
+        "the reference DAG's terminal `dbt docs generate` task "
+        "(rdbms_transformation.py:202-211)"
+    ),
+}
+
+#: Options only tests set that stay, keyed "<module>:<function>(<param>)".
+ALLOWED_OPTIONS: dict[str, str] = {
+    # kept on purpose
+    "sources/tsv.py:read_tsv(on_error_continue)": (
+        "COPY audit mode: keeps rejected rows, which the load report's "
+        "reject count needs (ROADMAP direction 3)"
+    ),
+    "sources/tsv.py:read_tsv(corrupt_record_col)": "names the COPY audit mode's corrupt-record column",
+    "operators/cdc.py:cdc_apply(validate_seq)": "input validation: rejects a null sequence",
+    "streaming/incremental.py:stream_cdc_sink(expire_horizon)": "bounds tombstone state",
+    "sources/acquire.py:find_zip_links(pattern)": "reference stage: the quarter-zip link filter",
+    "plans/serve.py:filtered_read(sort)": "serve API: a caller-chosen page order",
+    # library arms no run selects; the next pass wires or deletes each
+    # with its tests (ROADMAP direction 4)
+    "operators/fuzzy.py:fuzzy_pairs(max_bucket)": "hot-bucket cap, trading recall for cost",
+    "operators/interval.py:interval_join(by)": "equi-key of a partitioned interval join",
+    "operators/interval.py:interval_join(how)": "LEFT interval join arm",
+    "operators/interval.py:interval_join(left_id)": "unique left key the LEFT arm needs",
+    "operators/layout.py:with_zorder_key(bounds)": "table-level bounds: one curve across batches",
+    "operators/similarity.py:cluster_sample(mode)": "'spread' selection: farthest members per cell",
+    "operators/similarity.py:ivf_assign(early_stop_eps)": "opt-in Lloyd early stop",
+    "operators/textops.py:frequent_items(total)": "caller-supplied row count instead of a count job",
+    "operators/textops.py:hashed_linear_score(weights)": "trained-weights table arm of the classifier",
 }
 
 
@@ -53,6 +86,15 @@ def _program_files() -> list[pathlib.Path]:
     files += sorted((ROOT / "scripts").glob("*.py"))
     files += sorted((ROOT / "perfbench").glob("*.py"))
     return files
+
+
+@functools.lru_cache(maxsize=None)
+def _parse(path: pathlib.Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
+def _trees(paths) -> dict[pathlib.Path, ast.Module]:
+    return {p: _parse(p) for p in paths}
 
 
 def _names(tree: ast.AST, skip: set[int]) -> set[str]:
@@ -87,28 +129,221 @@ def _top_level_defs(tree: ast.Module):
                     yield target.id, node
 
 
-def _unreached() -> dict[str, int]:
-    """Line of every top-level package def no program file reaches,
-    keyed "<module>:<name>"."""
-    trees = {p: ast.parse(p.read_text(), str(p)) for p in _program_files()}
+def _public_methods(tree: ast.Module):
+    for cls in tree.body:
+        if isinstance(cls, ast.ClassDef) and not cls.name.startswith("_"):
+            for node in cls.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    if not node.name.startswith("_") and not node.decorator_list:
+                        yield f"{cls.name}.{node.name}", node
+
+
+def _unreached(defs) -> dict[str, int]:
+    """Line of every def that ``defs(tree)`` yields and no program file
+    names outside the def's own body, keyed "<module>:<name>"."""
+    trees = _trees(_program_files())
     elsewhere = {p: _names(t, set()) for p, t in trees.items()}
     out: dict[str, int] = {}
     for path in sorted(PKG.rglob("*.py")):
         tree = trees[path]
-        for name, node in _top_level_defs(tree):
+        for qualname, node in defs(tree):
             if getattr(node, "decorator_list", None):
                 continue
+            name = qualname.rsplit(".", 1)[-1]
             own = {id(n) for n in ast.walk(node)}
             reached = name in _names(tree, own) or any(
                 name in refs for p, refs in elsewhere.items() if p != path
             )
             if not reached:
-                out[f"{path.relative_to(PKG).as_posix()}:{name}"] = node.lineno
+                out[f"{path.relative_to(PKG).as_posix()}:{qualname}"] = node.lineno
     return out
 
 
+def _params(fn: ast.FunctionDef) -> list[str]:
+    args = fn.args
+    return [a.arg for a in args.posonlyargs + args.args + args.kwonlyargs]
+
+
+def _defaulted(fn: ast.FunctionDef) -> dict[str, tuple[int | None, ast.expr]]:
+    """Defaulted parameters: name → (positional index or None, default)."""
+    args = fn.args
+    pos = args.posonlyargs + args.args
+    out = {
+        a.arg: (pos.index(a), d)
+        for a, d in zip(pos[len(pos) - len(args.defaults):], args.defaults)
+    }
+    out.update(
+        (a.arg, (None, d))
+        for a, d in zip(args.kwonlyargs, args.kw_defaults)
+        if d is not None
+    )
+    return out
+
+
+def _branched_on(fn: ast.FunctionDef) -> set[str]:
+    """Names that pick a path inside ``fn``: read by the test of an
+    ``if``/``while``/conditional expression or a ``match`` subject, or
+    an operand of ``x or y`` / ``x and y``. An ``if`` whose whole body
+    raises is argument validation, not a second path."""
+    out: set[str] = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.If) and all(
+            isinstance(stmt, ast.Raise) for stmt in node.body
+        ) and not node.orelse:
+            continue
+        if isinstance(node, (ast.If, ast.IfExp, ast.While)):
+            tests = [node.test]
+        elif isinstance(node, ast.Match):
+            tests = [node.subject]
+        elif isinstance(node, ast.BoolOp):
+            tests = node.values
+        else:
+            continue
+        for test in tests:
+            out |= {n.id for n in ast.walk(test) if isinstance(n, ast.Name)}
+    return out
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _passed(call: ast.Call, param: str, idx: int | None):
+    """The expression ``call`` passes for ``param``; ``...`` when a
+    ``*args``/``**kwargs`` spread may carry it; None when it is unset."""
+    for kw in call.keywords:
+        if kw.arg is None:
+            return ...
+        if kw.arg == param:
+            return kw.value
+    if idx is not None:
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                return ...
+            if i == idx:
+                return arg
+    return None
+
+
+def _selectors(fns: list[ast.FunctionDef]) -> set[tuple[str, str]]:
+    """(function, parameter) pairs that pick a code path: the function
+    branches on the parameter, or passes it on to a selector of another
+    package function (to a fixed point)."""
+    by_name: dict[str, list[ast.FunctionDef]] = {}
+    for fn in fns:
+        by_name.setdefault(fn.name, []).append(fn)
+    sel = {(fn.name, p) for fn in fns for p in _branched_on(fn) & set(_params(fn))}
+    # (caller, caller parameter, callee, callee parameter) for every
+    # call that passes a caller parameter on by name
+    passes = []
+    for fn in fns:
+        own = set(_params(fn))
+        for call in (n for n in ast.walk(fn) if isinstance(n, ast.Call)):
+            for callee in by_name.get(_callee(call), []):
+                args = callee.args
+                pos = [a.arg for a in args.posonlyargs + args.args]
+                params = [(p, i) for i, p in enumerate(pos)]
+                params += [(a.arg, None) for a in args.kwonlyargs]
+                for param, i in params:
+                    value = _passed(call, param, i)
+                    if isinstance(value, ast.Name) and value.id in own:
+                        passes.append((fn.name, value.id, callee.name, param))
+    while True:
+        grown = sel | {(f, p) for f, p, g, q in passes if (g, q) in sel}
+        if grown == sel:
+            return sel
+        sel = grown
+
+
+def _options() -> dict[str, tuple[str, str, int | None, object, int]]:
+    """Every option of a public top-level package function, keyed
+    "<module>:<function>(<param>)" → (function, param, positional index,
+    default value, line)."""
+    trees = _trees(sorted(PKG.rglob("*.py")))
+    fns = {
+        fn: path
+        for path, tree in trees.items()
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+    }
+    selectors = _selectors(list(fns))
+    out = {}
+    for fn, path in fns.items():
+        if fn.name.startswith("_"):
+            continue
+        for param, (idx, default) in _defaulted(fn).items():
+            literal = isinstance(default, ast.Constant) and (
+                default.value is None or isinstance(default.value, (bool, str))
+            )
+            if literal and (fn.name, param) in selectors:
+                key = f"{path.relative_to(PKG).as_posix()}:{fn.name}({param})"
+                out[key] = (fn.name, param, idx, default.value, fn.lineno)
+    return out
+
+
+def _calls(trees) -> dict[str, list[tuple[ast.Call, str | None, set[str]]]]:
+    """Every call, by called name: (call, name of the enclosing
+    function, that function's defaulted parameters)."""
+    out: dict[str, list] = {}
+
+    def visit(node, encl, params):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            encl, params = node.name, set(_defaulted(node))
+        if isinstance(node, ast.Call) and _callee(node):
+            out.setdefault(_callee(node), []).append((node, encl, params))
+        for child in ast.iter_child_nodes(node):
+            visit(child, encl, params)
+
+    for tree in trees.values():
+        visit(tree, None, set())
+    return out
+
+
+def _setters(options, calls, forwarded) -> set[str]:
+    """Options some call in ``calls`` sets to a non-default value. A
+    call that passes on the enclosing function's own defaulted
+    parameter sets the option only when ``forwarded(function, param)``."""
+    out = set()
+    for key, (fn, param, idx, default, _) in options.items():
+        for call, encl, encl_params in calls.get(fn, []):
+            value = _passed(call, param, idx)
+            if value is None:
+                continue
+            if value is ...:
+                out.add(key)
+            elif isinstance(value, ast.Name) and value.id in encl_params:
+                if forwarded(encl, value.id):
+                    out.add(key)
+            elif not (isinstance(value, ast.Constant) and value.value == default):
+                out.add(key)
+    return out
+
+
+def _test_only_options() -> dict[str, int]:
+    """Line of every option whose non-default value only tests pass."""
+    options = _options()
+    owner = {(o[0], o[1]): k for k, o in options.items()}
+    prog = _calls(_trees(_program_files()))
+    tests = _calls(_trees(sorted((ROOT / "tests").rglob("*.py"))))
+    # passing on an option counts once that option is set by the
+    # program; passing on any other parameter (a method's, a private
+    # helper's) counts as setting
+    by_program: set[str] = set()
+    while True:
+        grown = _setters(
+            options, prog,
+            lambda fn, p: owner.get((fn, p), "") in by_program or (fn, p) not in owner,
+        )
+        if grown <= by_program:
+            break
+        by_program |= grown
+    by_tests = _setters(options, tests, lambda fn, p: False)
+    return {k: options[k][4] for k in sorted(by_tests - by_program)}
+
+
 def test_no_package_def_is_reached_from_tests_alone():
-    unreached = _unreached()
+    unreached = _unreached(_top_level_defs)
     extra = sorted(k for k in unreached if k not in ALLOWED)
     assert not extra, (
         "package defs no query, CLI, bench or script reaches (delete them "
@@ -117,8 +352,32 @@ def test_no_package_def_is_reached_from_tests_alone():
     )
 
 
+def test_no_package_method_is_reached_from_tests_alone():
+    unreached = _unreached(_public_methods)
+    extra = sorted(k for k in unreached if k not in ALLOWED_METHODS)
+    assert not extra, (
+        "public methods no program file calls (delete them with their "
+        "tests, or allowlist one with a reason): "
+        + ", ".join(f"{k} (line {unreached[k]})" for k in extra)
+    )
+
+
+def test_no_option_is_set_from_tests_alone():
+    """An option value that only tests pass selects a code path no run
+    takes: delete the parameter and the arm, and let tests reach a
+    dispatched arm through its input or its threshold constant."""
+    test_only = _test_only_options()
+    extra = sorted(k for k in test_only if k not in ALLOWED_OPTIONS)
+    assert not extra, (
+        "options whose non-default value only tests pass: "
+        + ", ".join(f"{k} (line {test_only[k]})" for k in extra)
+    )
+
+
 def test_allowlist_is_current():
-    """An allowlisted def that is gone, or that program code now reaches,
-    leaves the list."""
-    stale = sorted(set(ALLOWED) - set(_unreached()))
-    assert not stale, f"remove from ALLOWED: {stale}"
+    """An allowlisted def, method or option that is gone, or that
+    program code now reaches, leaves its list."""
+    stale = sorted(set(ALLOWED) - set(_unreached(_top_level_defs)))
+    stale += sorted(set(ALLOWED_METHODS) - set(_unreached(_public_methods)))
+    stale += sorted(set(ALLOWED_OPTIONS) - set(_test_only_options()))
+    assert not stale, f"remove from the allowlist: {stale}"

@@ -21,6 +21,8 @@ from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
     textops as TO,
 )
 
+from .conftest import under_thresholds
+
 import os
 
 _SETTINGS = dict(
@@ -300,6 +302,15 @@ def test_bpe_train_matches_sequential_reference(spark, texts):
     assert got == expected
 
 
+def _bpe_chain_and_ranked(encode):
+    """Rows of ``encode()`` under bpe's chain arm (a threshold no table
+    reaches) and its ranked arm (a threshold every table passes)."""
+    return under_thresholds(
+        TO, "MAX_CHAIN_MERGES", (1 << 30, -1),
+        lambda: {r.doc_id: tuple(r) for r in encode().collect()},
+    )
+
+
 @given(
     texts=st.lists(st.text(alphabet="abc ", min_size=1, max_size=20),
                    min_size=1, max_size=8),
@@ -317,14 +328,9 @@ def test_bpe_encode_arms_agree(spark, texts, n_merges):
     merges = [
         (r.lhs, r.rhs) for r in TO.bpe_train(docs, n_merges=n_merges).collect()
     ]
-    chain = {
-        r.doc_id: tuple(r)
-        for r in TO.bpe_encode_counts(docs, merges, strategy="chain").collect()
-    }
-    ranked = {
-        r.doc_id: tuple(r)
-        for r in TO.bpe_encode_counts(docs, merges, strategy="ranked").collect()
-    }
+    chain, ranked = _bpe_chain_and_ranked(
+        lambda: TO.bpe_encode_counts(docs, merges)
+    )
     assert chain == ranked
 
 
@@ -337,30 +343,25 @@ def test_bpe_encode_rank_resurrection(spark):
         [(0, "abc"), (1, "abc bc a b c")], "doc_id long, text string"
     )
     merges = [("a", "bc"), ("b", "c")]
-    chain = {
-        r.doc_id: tuple(r)
-        for r in TO.bpe_encode_counts(docs, merges, strategy="chain").collect()
-    }
-    ranked = {
-        r.doc_id: tuple(r)
-        for r in TO.bpe_encode_counts(docs, merges, strategy="ranked").collect()
-    }
+    chain, ranked = _bpe_chain_and_ranked(
+        lambda: TO.bpe_encode_counts(docs, merges)
+    )
     assert chain == ranked
     assert chain[0][3] == 2  # n_bpe_tokens: (a)(bc), NOT (abc)
 
 
 def test_bpe_encode_auto_dispatch(spark):
-    """auto == chain at small tables, ranked above MAX_CHAIN_MERGES —
-    and both produce the same rows either way (the 'aaaa' overlap word
+    """chain at small tables, ranked above MAX_CHAIN_MERGES — and both
+    produce the same rows either way (the 'aaaa' overlap word
     exercises greedy non-overlapping replacement in both arms)."""
     docs = spark.createDataFrame([(0, "aaaa aaa aa a")], "doc_id long, text string")
     merges = [("a", "a"), ("aa", "aa"), ("aa", "a")]
-    auto = TO.bpe_encode_counts(docs, merges).collect()
-    chain = TO.bpe_encode_counts(docs, merges, strategy="chain").collect()
-    assert [tuple(r) for r in auto] == [tuple(r) for r in chain]
+    small = TO.bpe_encode_counts(docs, merges)
+    assert "MapInPandas" not in small._jdf.queryExecution().executedPlan().toString()
     big = merges + [(f"x{i}", f"y{i}") for i in range(TO.MAX_CHAIN_MERGES)]
-    auto_big = TO.bpe_encode_counts(docs, big).collect()
-    assert [tuple(r) for r in auto_big] == [tuple(r) for r in chain]
+    ranked = TO.bpe_encode_counts(docs, big)
+    assert "MapInPandas" in ranked._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in ranked.collect()] == [tuple(r) for r in small.collect()]
 
 
 @given(
@@ -382,14 +383,7 @@ def test_bpe_encode_ids_arms_agree_and_match_reference(spark, texts, n_merges):
         (r.lhs, r.rhs) for r in TO.bpe_train(docs, n_merges=n_merges).collect()
     ]
     vocab = dict(TO.bpe_vocab(docs, merges))
-    chain = {
-        r.doc_id: tuple(r)
-        for r in TO.bpe_encode_ids(docs, merges, strategy="chain").collect()
-    }
-    ranked = {
-        r.doc_id: tuple(r)
-        for r in TO.bpe_encode_ids(docs, merges, strategy="ranked").collect()
-    }
+    chain, ranked = _bpe_chain_and_ranked(lambda: TO.bpe_encode_ids(docs, merges))
     assert chain == ranked
 
     def seq_encode(word: str) -> list[str]:
@@ -570,10 +564,12 @@ def test_bpe_train_arms_agree(spark, texts, n_merges):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    drv = [tuple(r) for r in
-           TO.bpe_train(docs, n_merges=n_merges, strategy="driver").collect()]
-    dist = [tuple(r) for r in
-            TO.bpe_train(docs, n_merges=n_merges, strategy="distributed").collect()]
+    # the default bound keeps these vocabularies on the driver; a
+    # negative one routes every vocabulary to the distributed schedule
+    drv, dist = under_thresholds(
+        TO, "MAX_DRIVER_WORDS", (TO.MAX_DRIVER_WORDS, -1),
+        lambda: [tuple(r) for r in TO.bpe_train(docs, n_merges=n_merges).collect()],
+    )
     assert drv == dist
 
 
@@ -883,23 +879,20 @@ def test_keep_best_matches_reference(spark, rows, edges):
         min_size=0, max_size=25, unique_by=lambda t: t[0],
     ),
     budget=st.sampled_from([0, 10, 60, 100_000]),
-    straddle=st.booleans(),
 )
 @settings(**_SETTINGS)
-def test_budget_select_matches_reference(spark, rows, budget, straddle):
+def test_budget_select_matches_reference(spark, rows, budget):
     """budget_select == a sequential reference: quantize, walk score
     values descending accumulating token sums, keep values whose
-    bucket starts (straddle) / ends (no straddle) inside the budget —
-    all-or-nothing per value, zero-token docs ride their value."""
+    bucket starts inside the budget (the straddling value stays whole)
+    — all-or-nothing per value, zero-token docs ride their value."""
     docs = spark.createDataFrame(
         [(i, s / 10.0, t) for i, s, t in rows],
         "doc_id long, score double, n_tokens long",
     )
     got = sorted(
         tuple(r)
-        for r in TO.budget_select(
-            docs, budget, include_straddle=straddle
-        ).collect()
+        for r in TO.budget_select(docs, budget).collect()
     )
 
     qrows = [(i, t, _r6(s / 10.0, 3)) for i, s, t in rows]
@@ -910,7 +903,7 @@ def test_budget_select_matches_reference(spark, rows, budget, straddle):
     for q in sorted(hist, reverse=True):
         start = cum
         cum += hist[q]
-        if (start < budget) if straddle else (cum <= budget):
+        if start < budget:
             keep.add(q)
     want = sorted((i, t, q) for i, t, q in qrows if q in keep)
     assert got == want
@@ -1144,14 +1137,16 @@ def test_bloom_dedup_matches_reference(spark, texts, split, m_bits, k):
         want[doc_id] = (n_hit, maybe, exact, maybe * (1 - exact))
         assert not (exact and not maybe)  # reference sanity: Bloom law
 
-    for strategy in ("literal", "join"):
-        got = {
+    # the literal arm below BLOOM_LITERAL_MAX_BITS, the join arm at 0
+    arms = under_thresholds(
+        DD, "BLOOM_LITERAL_MAX_BITS", (DD.BLOOM_LITERAL_MAX_BITS, 0),
+        lambda: {
             r.doc_id: (r.n_hit, r.maybe_dup, r.exact_dup, r.false_positive)
-            for r in DD.bloom_dedup(
-                new, existing, m_bits=m_bits, k=k, strategy=strategy
-            ).collect()
-        }
-        assert got == want, strategy
+            for r in DD.bloom_dedup(new, existing, m_bits=m_bits, k=k).collect()
+        },
+    )
+    for arm, got in zip(("literal", "join"), arms):
+        assert got == want, arm
 
 
 @given(
@@ -1408,7 +1403,7 @@ def test_funnel_retention_hot_user_skew(spark):
     )
     got = {
         (r.step, r.n_users)
-        for r in FUN.funnel_steps(ev, steps, persist_filtered=False).collect()
+        for r in FUN.funnel_steps(ev, steps).collect()
     }
     # rank-window spelling of the same funnel
     w = Window.partitionBy("user_id").orderBy("ts")

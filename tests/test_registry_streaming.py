@@ -119,30 +119,6 @@ def test_incremental_filter(spark, raw):
     assert INC.incremental_filter(sub, "filed", None).count() == sub.count()
 
 
-def test_incremental_append(spark, raw, tmp_path_factory):
-    target = str(tmp_path_factory.mktemp("inc")) + "/sub"
-    sub = raw["sub"]
-    first = INC.incremental_append(
-        spark, sub.filter(F.col("filed") < "2024-01-20"), target, "filed"
-    )
-    n1 = first.count()
-    assert n1 > 0
-    total = INC.incremental_append(spark, sub, target, "filed")
-    # watermark row(s) double-append (>= semantics, exactly the
-    # reference macro's behavior); everything strictly older is skipped
-    assert total.count() >= sub.count()
-
-
-def test_stream_sec_quarter_matches_batch(spark, fixture_dir, raw, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("stream"))
-    INC.stream_sec_quarter(
-        spark, fixture_dir, "num", f"{base}/ckpt", f"{base}/out"
-    )
-    streamed = spark.read.parquet(f"{base}/out")
-    assert streamed.count() == raw["num"].count()
-    assert dict(streamed.dtypes)["value"] == "decimal(28,4)"
-
-
 def test_events_ts_normalized_to_timestamp(spark):
     """read_events and events_stream must surface ts as TimestampType on
     EVERY runtime: pre-4.1 readers hand normalize_event_ts a bigint,
@@ -170,24 +146,6 @@ def test_events_ts_normalized_to_timestamp(spark):
             .count()
         )
         assert mism == 0
-
-
-def test_sessionized_stream(spark):
-    from tests.conftest import SF_SMOKE
-
-    stream = COMMON.events_stream(spark, SF_SMOKE)
-    q = (
-        INC.sessionized_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("sessions_test")
-    assert out.count() > 0
-    assert out.filter(F.col("n_events") <= 0).count() == 0
 
 
 def test_narrow_corpus_ops_run_on_streams(spark):
@@ -269,8 +227,7 @@ def test_classifier_and_bloom_probe_run_on_streams(spark):
         (
             "stream_bloom_probe",
             lambda d: DD.bloom_dedup(
-                d.filter("doc_id >= 400"), existing, m_bits=2048, k=3,
-                strategy="literal",
+                d.filter("doc_id >= 400"), existing, m_bits=2048, k=3
             ),
         ),
     ]

@@ -117,41 +117,6 @@ def test_corpus_stats_lang_col_param(spark):
     assert out["book"].n_langs == 1
 
 
-def test_corpus_stats_approx_distinct_arm(spark):
-    """The HLL arm: same schema, distinct-free plan (no EXPAND node in
-    the aggregate — the exact arm's COUNT(DISTINCT x2) triples the
-    shuffled rows via grouping-set expansion), and estimates within
-    HLL++'s default 5% rsd of the exact counts on the synthetic
-    corpus (whose per-stratum cardinalities are far below sketch
-    saturation, so in practice they land exact or near-exact)."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
-        textops as TO,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    exact = {r.source: r for r in TO.corpus_stats(docs).collect()}
-    approx = {r.source: r for r in TO.corpus_stats(docs, approx_distinct=True).collect()}
-    assert set(exact) == set(approx)
-    for src, e in exact.items():
-        a = approx[src]
-        assert (e.n_docs, e.total_tokens, e.mean_tokens, e.pass_rate) == (
-            a.n_docs, a.total_tokens, a.mean_tokens, a.pass_rate
-        )
-        assert abs(a.n_langs - e.n_langs) <= max(1, round(0.05 * e.n_langs))
-        exact_dup_docs = (1 - e.dup_rate) * e.n_docs
-        approx_dup_docs = (1 - a.dup_rate) * a.n_docs
-        assert abs(approx_dup_docs - exact_dup_docs) <= max(
-            2, 0.05 * exact_dup_docs
-        )
-    plan_exact = TO.corpus_stats(docs)._jdf.queryExecution().executedPlan().toString()
-    plan_approx = (
-        TO.corpus_stats(docs, approx_distinct=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Expand" in plan_exact
-    assert "Expand" not in plan_approx
-
-
 # ---------------------------------------------------------------------------
 # compare_agg: the engine-side aggregate compare for whale outputs
 # (oracle_harness.compare_agg; r11 — the q_dedup_embedding sf10 arm's
