@@ -24,13 +24,13 @@ from .session import get_spark, jvm_cost
 from .sources.tsv import read_sec_quarter
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     ap = argparse.ArgumentParser(prog="secspark")
     ap.add_argument("landing_dir", help="directory with {sub,tag,num,pre}.txt")
     ap.add_argument("warehouse_dir", help="output directory for fact tables")
     ap.add_argument("--quarter", default=None, help="label for logs only")
     ap.add_argument("--skip-checks", action="store_true")
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     spark = get_spark("secspark-pipeline")
     raw = read_sec_quarter(spark, args.landing_dir)

@@ -208,11 +208,7 @@ _PROFILE_RENDER = {
 PROFILE_AUTO_EXACT_MAX_BYTES = 2 * 1024 * 1024 * 1024
 
 
-def profile_table(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    approx_distinct: bool | None = None,
-) -> DataFrame:
+def profile_table(df: DataFrame, approx_distinct: bool | None = None) -> DataFrame:
     """Column profile — the engine-side ``dbt docs`` / catalog statistics
     page: one output row per column with ``(column, n_rows, n_nulls,
     n_distinct, min_value, max_value)``, min/max rendered as
@@ -235,7 +231,7 @@ def profile_table(
     size is unknown. Callers needing cross-engine-exact counts (the
     oracle surface) pin ``approx_distinct=False``.
     """
-    cols = cols or df.columns
+    cols = df.columns
     if approx_distinct is None:
         from .operators.asof import _plan_size_bytes
 
@@ -244,14 +240,14 @@ def profile_table(
             size is None or size * len(cols) > PROFILE_AUTO_EXACT_MAX_BYTES
         )
         if size is None:
-            # ADVICE r9 (low): under Spark Connect plan introspection is
-            # unavailable, so the default silently lands on HLL for
-            # every input regardless of size — a behavior change a
-            # caller relying on exact counts must get to DISCOVER.
+            # ADVICE r9 (low): with no plan size estimate the default
+            # silently lands on HLL regardless of size — a behavior
+            # change a caller relying on exact counts must get to
+            # DISCOVER.
             import warnings
 
             warnings.warn(
-                "profile_table: plan size unknown (Spark Connect?) - "
+                "profile_table: plan size unknown - "
                 "auto-dispatch chose APPROXIMATE distinct counts; pin "
                 "approx_distinct=False if you need exact ones",
                 RuntimeWarning,

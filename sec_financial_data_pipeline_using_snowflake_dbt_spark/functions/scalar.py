@@ -33,11 +33,11 @@ def surrogate_key(*cols: str | Column) -> Column:
     return F.md5(F.concat_ws("-", *parts))
 
 
-def handle_null_date(col: str | Column, default: str = "9999-12-31") -> Column:
+def handle_null_date(col: str | Column) -> Column:
     """NULL date -> far-future sentinel
     (reference: Airflow/json_transform/macros/handle_null_dates.sql:1-3)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(default).cast(T.DateType()))
+    return F.coalesce(c, F.lit("9999-12-31").cast(T.DateType()))
 
 
 def ticker_from_instance(col: str | Column = "instance") -> Column:
@@ -47,22 +47,18 @@ def ticker_from_instance(col: str | Column = "instance") -> Column:
     return F.upper(F.split_part(c, F.lit("-"), F.lit(1)))
 
 
-def version_tag(version: str | Column = "version", tag: str | Column = "tag") -> Column:
+def version_tag() -> Column:
     """Derived join key ``CONCAT(version, '-', tag)``
     (reference: Airflow/masterfindata/models/Staging/stg_num.sql:17)."""
-    v = F.col(version) if isinstance(version, str) else version
-    t = F.col(tag) if isinstance(tag, str) else tag
-    return F.concat_ws("-", v, t)
+    return F.concat_ws("-", F.col("version"), F.col("tag"))
 
 
-def discounted_amount(
-    price: str | Column, discount: str | Column, scale: int = 2
-) -> Column:
-    """``(-1 * price * discount)::decimal(16, scale)``
+def discounted_amount(price: str | Column, discount: str | Column) -> Column:
+    """``(-1 * price * discount)::decimal(16, 2)``
     (reference: Notes.md:276-279)."""
     p = F.col(price) if isinstance(price, str) else price
     d = F.col(discount) if isinstance(discount, str) else discount
-    return (F.lit(-1) * p * d).cast(T.DecimalType(16, scale))
+    return (F.lit(-1) * p * d).cast(T.DecimalType(16, 2))
 
 
 def quarter_string(date_col: str | Column) -> Column:

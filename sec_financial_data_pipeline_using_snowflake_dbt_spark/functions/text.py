@@ -12,6 +12,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: The id and text columns of the document corpus every text operator reads.
+DOC_ID = "doc_id"
+TEXT = "text"
+
 # Tiny per-language marker-word lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small + deterministic (scoring, not linguistics).
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -36,11 +40,9 @@ def tokens(text: str | Column) -> Column:
     return F.filter(F.split(c, _WS), lambda t: t != "")
 
 
-def distinct_tokens(text: str | Column, lowercase: bool = True) -> Column:
+def distinct_tokens(text: str | Column) -> Column:
     c = F.col(text) if isinstance(text, str) else text
-    if lowercase:
-        c = F.lower(c)
-    return F.array_distinct(tokens(c))
+    return F.array_distinct(tokens(F.lower(c)))
 
 
 def token_count(text: str | Column) -> Column:

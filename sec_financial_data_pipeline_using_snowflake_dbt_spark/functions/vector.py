@@ -11,6 +11,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: The id and vector columns of the embedding table every vector operator reads.
+VEC_ID = "vec_id"
+EMBEDDING = "embedding"
+
 
 def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col

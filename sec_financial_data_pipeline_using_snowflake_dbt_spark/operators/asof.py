@@ -38,12 +38,12 @@ def _right_struct(on: str, value_cols: list[str], prefix: str = "") -> Column:
 
 
 def _expand_best(
-    df: DataFrame, left_cols: list[str], on: str, value_cols: list[str], suffix: str
+    df: DataFrame, left_cols: list[str], on: str, value_cols: list[str]
 ) -> DataFrame:
     return df.select(
         *left_cols,
-        F.col("__best.__on").alias(f"{on}{suffix}"),
-        *[F.col(f"__best.__v_{c}").alias(f"{c}{suffix}") for c in value_cols],
+        F.col("__best.__on").alias(f"{on}_asof"),
+        *[F.col(f"__best.__v_{c}").alias(f"{c}_asof") for c in value_cols],
     )
 
 
@@ -53,7 +53,6 @@ def asof_join(
     on: str,
     by: str,
     value_cols: list[str],
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Range-join formulation: one left join + one max-of-struct agg.
 
@@ -73,7 +72,7 @@ def asof_join(
         .groupBy(F.col("l.__rid"), *[F.col(f"l.{c}") for c in lc])
         .agg(F.max(cand).alias("__best"))
     )
-    return _expand_best(best, lc, on, value_cols, suffix)
+    return _expand_best(best, lc, on, value_cols)
 
 
 def asof_join_bucketed(
@@ -82,7 +81,6 @@ def asof_join_bucketed(
     on: str,
     by: str,
     value_cols: list[str],
-    suffix: str = "_asof",
     bucket_seconds: int = 86400,
 ) -> DataFrame:
     """Time-bucketized as-of join — the scale path.
@@ -189,20 +187,17 @@ def asof_join_bucketed(
             F.greatest(same_best, F.col("m.__pc")).alias("__best"),
         )
     )
-    return _expand_best(best, lc, on, value_cols, suffix)
+    return _expand_best(best, lc, on, value_cols)
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate for a DataFrame (file sizes for scans,
     propagated through the plan). No job is run.
 
-    Returns None when plan introspection is unavailable (``_jdf`` is a
-    private classic-mode handle that does not exist under Spark Connect);
-    callers must treat None as "unknown, assume large" and take their
-    conservative arm (ADVICE r3).
+    Returns None when the plan yields no estimate (an unstarted
+    streaming frame cannot be optimized); callers must treat None as
+    "unknown, assume large" and take their conservative arm (ADVICE r3).
     """
-    if not hasattr(df, "_jdf"):
-        return None
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
@@ -221,8 +216,6 @@ def asof_join_auto(
     on: str,
     by: str,
     value_cols: list[str],
-    suffix: str = "_asof",
-    bucket_seconds: int = 86400,
 ) -> DataFrame:
     """Size-dispatched as-of join (VERDICT r2): the range-join
     formulation wins while the right side is small (fewer stages; its
@@ -232,12 +225,10 @@ def asof_join_auto(
     invisible to results — only the plan changes."""
     size = _plan_size_bytes(right)
     if size is not None and size <= AUTO_RANGE_JOIN_MAX_BYTES:
-        return asof_join(left, right, on, by, value_cols, suffix)
-    # unknown size (Spark Connect — no plan introspection) → the
+        return asof_join(left, right, on, by, value_cols)
+    # unknown size (no plan estimate) → the
     # bucketized arm, which is safe at any right-side size
-    return asof_join_bucketed(
-        left, right, on, by, value_cols, suffix, bucket_seconds
-    )
+    return asof_join_bucketed(left, right, on, by, value_cols)
 
 
 def asof_join_pandas(
@@ -246,7 +237,6 @@ def asof_join_pandas(
     on: str,
     by: str,
     value_cols: list[str],
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Same semantics via per-key ``pd.merge_asof`` (applyInPandas).
     The right side is sorted by (on, *value_cols), so backward-merge
@@ -255,14 +245,14 @@ def asof_join_pandas(
     lc = list(left.columns)
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields]
-        + [f"`{on}{suffix}` {dict(right.dtypes)[on]}"]
-        + [f"`{c}{suffix}` {dict(right.dtypes)[c]}" for c in value_cols]
+        + [f"`{on}_asof` {dict(right.dtypes)[on]}"]
+        + [f"`{c}_asof` {dict(right.dtypes)[c]}" for c in value_cols]
     )
     l_tagged = left.withColumn("__side", F.lit("L"))
     r_tagged = right.select(by, on, *value_cols).withColumn("__side", F.lit("R"))
     unioned = l_tagged.unionByName(r_tagged, allowMissingColumns=True)
 
-    match_cols = [f"{on}{suffix}"] + [f"{c}{suffix}" for c in value_cols]
+    match_cols = [f"{on}_asof"] + [f"{c}_asof" for c in value_cols]
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
         lall = pdf[pdf["__side"] == "L"][lc]
@@ -288,10 +278,10 @@ def asof_join_pandas(
         merged = pd.merge_asof(
             lpdf,
             rpdf.drop(columns=[by]).rename(
-                columns={on: f"{on}{suffix}", **{c: f"{c}{suffix}" for c in value_cols}}
+                columns={on: f"{on}_asof", **{c: f"{c}_asof" for c in value_cols}}
             ),
             left_on=on,
-            right_on=f"{on}{suffix}",
+            right_on=f"{on}_asof",
             direction="backward",
         )
         return merged if lnull.empty else pd.concat([merged, lnull])

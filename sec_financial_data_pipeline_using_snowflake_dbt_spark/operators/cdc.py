@@ -33,7 +33,7 @@ Entry points:
   or below a feed-guaranteed sequence horizon, bounding state growth for
   delete-heavy feeds.
 
-Determinism contract: ``seq_cols`` (in order, with ``op_col`` and the
+Determinism contract: ``seq_cols`` (in order, with the ``op`` column and the
 payload as final tie-breaks) must totally order each key's changes — the
 caller passes e.g. ``(commit_ts, lsn)``.  Sequence columns must be
 non-null; null sequences would sort below every real change on both
@@ -61,14 +61,12 @@ def cdc_apply(
     changes: DataFrame,
     key_cols: Sequence[str],
     seq_cols: Sequence[str],
-    op_col: str = "op",
-    delete_op: str = "D",
     keep_op: bool = False,
     validate_seq: bool = False,
 ) -> DataFrame:
     """Compact a changelog to the current snapshot.
 
-    Output: one row per key whose last operation is not ``delete_op``,
+    Output: one row per key whose last operation is not the delete ``D``,
     carrying the key columns, the payload columns (everything that is not
     key/seq/op), and the winning sequence columns. ``keep_op=True`` also
     keeps the winning operation code (useful for audit views that want
@@ -77,7 +75,7 @@ def cdc_apply(
     key_cols = list(key_cols)
     seq_cols = list(seq_cols)
     payload_cols = [
-        c for c in changes.columns if c not in set(key_cols) | set(seq_cols) | {op_col}
+        c for c in changes.columns if c not in set(key_cols) | set(seq_cols) | {"op"}
     ]
     if validate_seq:
         null_seq = changes.where(
@@ -90,7 +88,7 @@ def cdc_apply(
     winner = F.max(
         F.struct(
             *[F.col(c) for c in seq_cols],
-            F.col(op_col).alias(_OP),
+            F.col("op").alias(_OP),
             F.struct(*[F.col(c) for c in payload_cols]).alias(_PAYLOAD),
         )
     ).alias("__w")
@@ -101,8 +99,8 @@ def cdc_apply(
         + [F.col(f"__w.{_PAYLOAD}.{c}").alias(c) for c in payload_cols]
     )
     if keep_op:
-        return snap.select(*out_cols, F.col(f"__w.{_OP}").alias(op_col))
-    return snap.where(F.col(f"__w.{_OP}") != F.lit(delete_op)).select(*out_cols)
+        return snap.select(*out_cols, F.col(f"__w.{_OP}").alias("op"))
+    return snap.where(F.col(f"__w.{_OP}") != F.lit("D")).select(*out_cols)
 
 
 def cdc_state_merge(
@@ -110,8 +108,6 @@ def cdc_state_merge(
     changes: DataFrame,
     key_cols: Sequence[str],
     seq_cols: Sequence[str],
-    op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Sequence-AWARE merge over TOMBSTONE-BEARING state: winners are
     chosen by comparing sequences, so an out-of-order or replayed batch
@@ -123,7 +119,7 @@ def cdc_state_merge(
     The tombstones are load-bearing — without them, a delete at sequence
     100 followed (in a later batch) by a stale upsert at sequence 90
     would resurrect the key, because nothing remembers the delete
-    happened.  Filter ``op_col != delete_op`` for the live snapshot
+    happened.  Filter ``op != 'D'`` for the live snapshot
     (:func:`cdc_snapshot`).  Tombstones accumulate per deleted key; real
     feeds expire them once the source can no longer emit sequences below
     a horizon (retention policy, out of scope here).
@@ -131,9 +127,7 @@ def cdc_state_merge(
     Work is batch-sized: untouched state keys pass through via one
     broadcast LEFT ANTI; only touched keys re-compact.
     """
-    compacted = cdc_apply(
-        changes, key_cols, seq_cols, op_col=op_col, delete_op=delete_op, keep_op=True
-    )
+    compacted = cdc_apply(changes, key_cols, seq_cols, keep_op=True)
     touched = F.broadcast(compacted.select(*key_cols).distinct())
     untouched = state.join(touched, on=list(key_cols), how="left_anti")
     touched_state = state.join(touched, on=list(key_cols), how="left_semi")
@@ -141,27 +135,21 @@ def cdc_state_merge(
         touched_state.unionByName(compacted),
         key_cols,
         seq_cols,
-        op_col=op_col,
-        delete_op=delete_op,
         keep_op=True,
     ).select(*state.columns)
     return untouched.unionByName(rematch)
 
 
-def cdc_snapshot(
-    state: DataFrame, op_col: str = "op", delete_op: str = "D"
-) -> DataFrame:
+def cdc_snapshot(state: DataFrame) -> DataFrame:
     """The live view of tombstone-bearing CDC state: deleted keys
     filtered out, the operation column dropped."""
-    return state.where(F.col(op_col) != F.lit(delete_op)).drop(op_col)
+    return state.where(F.col("op") != F.lit("D")).drop("op")
 
 
 def cdc_expire_tombstones(
     state: DataFrame,
     seq_col: str,
     horizon,
-    op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Drop tombstones whose winning sequence is at or below ``horizon``
     — the retention pass that bounds state growth once the FEED
@@ -174,6 +162,6 @@ def cdc_expire_tombstones(
     correct for everything above the horizon). Live rows are never
     touched; one partition-local filter, no shuffle."""
     return state.where(
-        (F.col(op_col) != F.lit(delete_op)) | (F.col(seq_col) > F.lit(horizon))
+        (F.col("op") != F.lit("D")) | (F.col(seq_col) > F.lit(horizon))
     )
 

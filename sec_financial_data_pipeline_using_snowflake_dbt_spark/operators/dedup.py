@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions import vector as V
+from ..functions.text import DOC_ID, TEXT
+from ..functions.vector import EMBEDDING, VEC_ID
 
 
 #: Signature tables persisted by the operators below (documented
@@ -111,12 +113,10 @@ def _needs_spread(df: DataFrame) -> bool:
     arms share trips an AQE attribute-binding bug on Spark 4.1,
     INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND — reproduced r12 on the
     two-arm q_kmeans_quality union)."""
-    # _jdf/rdd are classic-mode private surfaces; under Spark Connect (or
-    # any runtime without them) skip the probe and leave df untouched —
-    # a rebalance is an optimization, never a correctness requirement.
-    # Only the Connect-shaped failures are swallowed (missing attribute,
-    # py4j bridge errors); a genuine analysis error in the plan should
-    # surface here, where the stack still points at the caller.
+    # a rebalance is an optimization, never a correctness requirement:
+    # a py4j bridge error in the probe leaves df untouched, while a
+    # genuine analysis error in the plan surfaces here, where the stack
+    # still points at the caller.
     try:
         from py4j.protocol import Py4JError
     except ImportError:  # pragma: no cover — py4j ships with pyspark
@@ -128,20 +128,16 @@ def _needs_spread(df: DataFrame) -> bool:
         # operators keep running unchanged on readStream inputs
         if df.isStreaming:
             return False
-        if not hasattr(df, "_jdf"):
-            return False
         parallelism = df.sparkSession.sparkContext.defaultParallelism
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         if _SHUFFLY_PLAN.search(plan):
             return False
         return df.rdd.getNumPartitions() < parallelism
-    except (AttributeError, Py4JError):
+    except Py4JError:
         return False
 
 
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Group by content fingerprint; keep the lowest id as canonical.
 
     Returns (content_hash, keep_id, n_dupes). One shuffle, map-side
@@ -149,10 +145,10 @@ def exact_dedup(
     computed scan-side, and only (hash, id) pairs shuffle.
     """
     return (
-        docs.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
+        docs.select(F.md5(F.col(TEXT)).alias("content_hash"), F.col(DOC_ID))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min(DOC_ID).alias("keep_id"),
             (F.count(F.lit(1)) - F.lit(1)).cast("long").alias("n_dupes"),
         )
     )
@@ -316,11 +312,8 @@ DEFAULT_MAX_POSTINGS = 5000
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     block_col: str | None = None,
     threshold: float = 0.5,
-    round_to: int = 6,
     max_postings: int | None = DEFAULT_MAX_POSTINGS,
     exact: bool = False,
 ) -> DataFrame:
@@ -345,9 +338,9 @@ def ngram_jaccard_pairs(
     if exact:
         max_postings = None
     post = _spread(docs).select(
-        F.col(id_col).alias("id"),
+        F.col(DOC_ID).alias("id"),
         *( [F.col(block_col).alias("blk")] if block_col else [] ),
-        F.explode(TX.distinct_tokens(text_col)).alias("token"),
+        F.explode(TX.distinct_tokens(TEXT)).alias("token"),
     )
     # sizes use the FULL token sets (denominator stays exact even when
     # the intersection is capped)
@@ -380,7 +373,7 @@ def ngram_jaccard_pairs(
             F.round(
                 F.col("inter").cast("double")
                 / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter")).cast("double"),
-                round_to,
+                6,
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -388,13 +381,7 @@ def ngram_jaccard_pairs(
     return out
 
 
-def _minhash_sig(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    shingle_n: int,
-) -> DataFrame:
+def _minhash_sig(docs: DataFrame, num_hashes: int, shingle_n: int) -> DataFrame:
     """Per-doc minhash signature: column ``h{i}`` = min over shingles of
     md5(i || ':' || shingle).
 
@@ -405,8 +392,8 @@ def _minhash_sig(
     row-count blowup), full map-side combine.
     """
     shingled = _spread(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(TX.word_shingles(text_col, shingle_n)).alias("shingle"),
+        F.col(DOC_ID).alias("id"),
+        F.explode(TX.word_shingles(TEXT, shingle_n)).alias("shingle"),
     )
     return shingled.groupBy("id").agg(
         *[
@@ -420,8 +407,6 @@ def _minhash_sig(
 
 def minhash_band_table(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
@@ -434,14 +419,12 @@ def minhash_band_table(
     §2.6) before handing it to ``minhash_lsh_pairs(band_sig=...)``. It
     is persisted (released by ``release_dedup_caches``)."""
     return _persist(
-        _band_table(docs, id_col, text_col, num_hashes, bands, shingle_n)
+        _band_table(docs, num_hashes, bands, shingle_n)
     )
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
@@ -473,9 +456,7 @@ def minhash_lsh_pairs(
     output itself.
     """
     if band_sig is None:
-        band_sig = minhash_band_table(
-            docs, id_col, text_col, num_hashes, bands, shingle_n
-        )
+        band_sig = minhash_band_table(docs, num_hashes, bands, shingle_n)
     a = band_sig.alias("a")
     b = band_sig.alias("b")
     return (
@@ -487,12 +468,7 @@ def minhash_lsh_pairs(
 
 
 def _band_table(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
+    docs: DataFrame, num_hashes: int, bands: int, shingle_n: int
 ) -> DataFrame:
     """(id, band, sig) banded-signature table — one spelling shared by
     the whole-corpus and delta candidate joins."""
@@ -506,7 +482,7 @@ def _band_table(
             f"got num_hashes={num_hashes}, bands={bands}"
         )
     rows_per_band = num_hashes // bands
-    sig = _minhash_sig(docs, id_col, text_col, num_hashes, shingle_n)
+    sig = _minhash_sig(docs, num_hashes, shingle_n)
     # band signature: md5 of the sorted 'seed=minhash' strings — kept
     # byte-identical to the seed-exploded formulation (sorted order =
     # seed order while num_hashes ≤ 10)
@@ -537,8 +513,6 @@ def _band_table(
 def minhash_lsh_pairs_delta(
     new_docs: DataFrame,
     existing: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
@@ -562,7 +536,7 @@ def minhash_lsh_pairs_delta(
     across deltas (it is append-only: new batches' bands union on).
     """
     nb, eb = (
-        _persist(_band_table(d, id_col, text_col, num_hashes, bands, shingle_n))
+        _persist(_band_table(d, num_hashes, bands, shingle_n))
         for d in (new_docs, existing)
     )
     allb = nb.unionByName(eb)
@@ -597,8 +571,8 @@ def _auto_simhash_bits(docs: DataFrame) -> int:
     once the corpus crosses the knee, so any workflow that PERSISTS or
     DIFFS signatures across runs (delta dedup, incremental indexes)
     must pin ``n_bits`` explicitly. The silent flip is loudest when
-    plan introspection is unavailable (Spark Connect): every call lands
-    on 64 regardless of input, so that case warns."""
+    the plan yields no size estimate: such a call lands on 64 regardless
+    of input, so that case warns."""
     from .asof import _plan_size_bytes
 
     size = _plan_size_bytes(docs)
@@ -606,7 +580,7 @@ def _auto_simhash_bits(docs: DataFrame) -> int:
         import warnings
 
         warnings.warn(
-            "simhash: plan size unknown (Spark Connect?) - auto-dispatch "
+            "simhash: plan size unknown - auto-dispatch "
             "chose the 64-bit width regardless of corpus size; pin n_bits "
             "explicitly, especially for persisted/diffed signatures",
             RuntimeWarning,
@@ -618,12 +592,7 @@ def _auto_simhash_bits(docs: DataFrame) -> int:
     return 64
 
 
-def simhash(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bits: int | None = None,
-) -> DataFrame:
+def simhash(docs: DataFrame, n_bits: int | None = None) -> DataFrame:
     """``n_bits``-bit SimHash per document.
 
     ``n_bits=None`` (default) size-dispatches: 16 bits — the
@@ -653,7 +622,7 @@ def simhash(
     if not 1 <= n_bits <= 64:
         raise ValueError(f"n_bits must be in [1, 64], got {n_bits}")
     toks = _spread(docs).select(
-        F.col(id_col).alias("id"), F.explode(TX.distinct_tokens(text_col)).alias("token")
+        F.col(DOC_ID).alias("id"), F.explode(TX.distinct_tokens(TEXT)).alias("token")
     )
     for salt in range((n_bits + 31) // 32):
         toks = toks.withColumn(
@@ -711,8 +680,6 @@ def _simhash_chunks(max_hamming: int, bits: int = 16) -> list[tuple[int, int]]:
 
 def simhash_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     block_col: str | None = None,
     max_hamming: int = 3,
     n_bits: int | None = None,
@@ -756,12 +723,10 @@ def simhash_pairs(
     """
     if n_bits is None:
         n_bits = _auto_simhash_bits(docs)
-    sh = simhash(
-        docs.select(F.col(id_col), F.col(text_col)), id_col, text_col, n_bits=n_bits
-    )
+    sh = simhash(docs.select(DOC_ID, TEXT), n_bits=n_bits)
     if block_col:
         sh = sh.join(
-            docs.select(F.col(id_col).alias("id"), F.col(block_col).alias("blk")), "id"
+            docs.select(F.col(DOC_ID).alias("id"), F.col(block_col).alias("blk")), "id"
         )
     sh = _persist(sh)
     keys = ["blk"] if block_col else []
@@ -857,11 +822,8 @@ def simhash_pairs(
 
 def embedding_neardup_pairs(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = None,
     threshold: float = 0.9,
-    round_to: int = 3,
 ) -> DataFrame:
     """Pairs of embeddings with cosine ≥ threshold, blocked by
     ``block_col`` (a label / cluster / LSH-bucket column) to avoid n².
@@ -877,7 +839,7 @@ def embedding_neardup_pairs(
     computed once per ROW, not per pair; the cosine formula dot/(na·nb)
     is unchanged so values are bit-identical to the naive form.
     """
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
+    cols = [F.col(VEC_ID).alias("id"), F.col(EMBEDDING).alias("v")]
     if block_col:
         cols.append(F.col(block_col).alias("blk"))
     e = emb.select(*cols).withColumn("nrm", V.norm(F.col("v")))
@@ -901,7 +863,7 @@ def embedding_neardup_pairs(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.round(cos, round_to).alias("cos"),
+            F.round(cos, 3).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -1020,13 +982,7 @@ def _star_contract(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    nodes: DataFrame | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
     """Resolve near-dup PAIRS into CLUSTERS: connected components by
     iterative min-label propagation, the step after pair generation in a
     real training-data dedup (keep one canonical doc per component).
@@ -1034,7 +990,7 @@ def dedup_clusters(
     Each round every node adopts the minimum cluster label among itself
     and its neighbors; convergence takes O(component diameter) rounds —
     near-dup components are star/clique-shaped, so 2-4 rounds in
-    practice. If a pathological chain exceeds ``max_iters``, the
+    practice. If a pathological chain exceeds 25 rounds, the
     operator falls back to ``_star_contract`` (Kiveris et al.
     large-star/small-star), which converges in O(log n) rounds
     regardless of diameter. Returns (id, cluster_id) with cluster_id =
@@ -1056,7 +1012,7 @@ def dedup_clusters(
     in no pair as singleton clusters; defaults to the ids present in
     ``pairs``.
     """
-    sym = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    sym = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # repartition BEFORE dropDuplicates: HashPartitioning(src) satisfies
     # the dedup aggregate's ClusteredDistribution(src, dst) (subset key),
     # so the dedup runs in the repartition's stage and the old
@@ -1099,7 +1055,7 @@ def dedup_clusters(
                 "id", F.col("id").alias("cluster_id")
             ).localCheckpoint(eager=True)
             _edges_fut.result()
-    for _ in range(max_iters):
+    for _ in range(25):
         nbr_min = (
             edges.alias("e")
             .join(labels.alias("l"), F.col("e.src") == F.col("l.id"))
@@ -1143,7 +1099,7 @@ def dedup_clusters(
         if changed == 0:
             break
     else:
-        # diameter > max_iters: an unconverged propagation would report
+        # diameter > 25: an unconverged propagation would report
         # ONE true component as several "canonical" clusters, so switch
         # to the large-star/small-star contraction, whose round count is
         # O(log n) regardless of diameter (VERDICT r3/r4 — the upgrade
@@ -1169,7 +1125,6 @@ def dedup_clusters(
 def keep_canonical(
     docs: DataFrame,
     clusters: DataFrame,
-    id_col: str = "doc_id",
     clusters_cover_docs: bool = False,
 ) -> DataFrame:
     """Filter a corpus to one canonical document per near-dup cluster —
@@ -1190,13 +1145,13 @@ def keep_canonical(
     """
     keep = clusters.filter(F.col("cluster_id") == F.col("id")).select("id")
     if not clusters_cover_docs:
-        missing = docs.select(F.col(id_col).alias("id")).join(
+        missing = docs.select(F.col(DOC_ID).alias("id")).join(
             clusters.select("id"), "id", "left_anti"
         )
         keep = keep.unionByName(missing)
     return docs.join(
-        keep.withColumnRenamed("id", id_col),
-        id_col,
+        keep.withColumnRenamed("id", DOC_ID),
+        DOC_ID,
         "left_semi",
     )
 
@@ -1205,7 +1160,6 @@ def keep_best(
     docs: DataFrame,
     clusters: DataFrame,
     score_col: str,
-    id_col: str = "doc_id",
     clusters_cover_docs: bool = False,
 ) -> DataFrame:
     """Quality-aware sibling of ``keep_canonical``: per near-dup
@@ -1232,7 +1186,7 @@ def keep_best(
     still keeps its min-id member rather than dropping whole.
     """
     scored = docs.select(
-        F.col(id_col).alias("id"), F.col(score_col).alias("__score")
+        F.col(DOC_ID).alias("id"), F.col(score_col).alias("__score")
     ).join(clusters.select("id", "cluster_id"), "id")
     winners = (
         scored.groupBy("cluster_id")
@@ -1254,13 +1208,13 @@ def keep_best(
     # clustering's ``nodes`` (every id covered, the anti-join provably
     # empty); identical output under that assertion.
     if not clusters_cover_docs:
-        missing = docs.select(F.col(id_col).alias("id")).join(
+        missing = docs.select(F.col(DOC_ID).alias("id")).join(
             clusters.select("id"), "id", "left_anti"
         )
         winners = winners.unionByName(missing)
     return docs.join(
-        winners.withColumnRenamed("id", id_col),
-        id_col,
+        winners.withColumnRenamed("id", DOC_ID),
+        DOC_ID,
         "left_semi",
     )
 
@@ -1328,11 +1282,6 @@ def semantic_dedup(
     dim: int,
     n_cells: int = 8,
     threshold: float = 0.4,
-    n_iters: int = 2,
-    round_means: int | None = 6,
-    round_to: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by k-means
     clustering + within-cluster cosine pruning. Embeddings are assigned
@@ -1359,7 +1308,7 @@ def semantic_dedup(
     cells); norms are computed once per row, not per pair. The verdict
     join back onto the assignment is one AQE-decided equi-join on id.
 
-    Cross-engine determinism: the cosine is rounded to ``round_to``
+    Cross-engine determinism: the cosine is rounded to 6 dp
     BEFORE the threshold compare (q_dedup_embedding precedent) and the
     raw cosine is deliberately NOT emitted — the output depends on
     floats only through the compare, so a last-ulp divergence flips a
@@ -1381,10 +1330,7 @@ def semantic_dedup(
         emb,
         dim,
         n_centroids=n_cells,
-        n_iters=n_iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        round_means=round_means,
+        round_means=6,
     )
     # nrm is only read by the fold arm's cosine — the GEMM kernel
     # normalizes internally from v, so on the large-corpus path the
@@ -1400,7 +1346,7 @@ def semantic_dedup(
         # the sf10 fixture output-bound at ~10^8 rows for a 2*10^5-row
         # answer (measured 80 s of pure pair traffic, NOTES_r6).
         near = _semantic_near_gemm(
-            e.select("id", "v", "cell"), threshold=threshold, round_to=round_to
+            e.select("id", "v", "cell"), threshold=threshold, round_to=6
         )
     else:
         a = _spread(e).alias("a")
@@ -1411,7 +1357,7 @@ def semantic_dedup(
         near = (
             a.join(b, F.col("a.cell") == F.col("b.cell"))
             .filter(F.col("a.id") < F.col("b.id"))
-            .filter(F.round(cos, round_to) >= threshold)
+            .filter(F.round(cos, 6) >= threshold)
             .groupBy(F.col("b.id").alias("id"))
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_near"),
@@ -1421,7 +1367,7 @@ def semantic_dedup(
     return (
         e.join(near, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias(VEC_ID),
             F.col("cell").cast("long").alias("cell"),
             F.coalesce(F.col("n_near"), F.lit(0).cast("long")).alias("n_near"),
             F.col("witness_id"),
@@ -1430,9 +1376,7 @@ def semantic_dedup(
     )
 
 
-def _dup_shingle_table(
-    docs: DataFrame, k: int, id_col: str, text_col: str
-) -> tuple[DataFrame, DataFrame]:
+def _dup_shingle_table(docs: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
     """Shared shingle construction for the ExactSubstr pair
     (``duplicated_ngram_spans`` scores, ``remove_duplicated_spans``
     cuts): returns (base, sh) where base = persisted (id, toks,
@@ -1441,9 +1385,9 @@ def _dup_shingle_table(
     tokenize / >= k guard / sliced-md5 shingle — the two operators must
     agree about which spans are duplicated, so the construction lives
     here exactly once (the minhash-CTE lesson of r5)."""
-    toks = TX.tokens(F.lower(F.col(text_col)))
+    toks = TX.tokens(F.lower(F.col(TEXT)))
     base = _persist(
-        docs.select(F.col(id_col).alias("id"), toks.alias("toks")).withColumn(
+        docs.select(F.col(DOC_ID).alias("id"), toks.alias("toks")).withColumn(
             "n_tokens", F.size(F.col("toks")).cast("long")
         )
     )
@@ -1463,16 +1407,10 @@ def _dup_shingle_table(
     return base, sh
 
 
-def duplicated_ngram_spans(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def duplicated_ngram_spans(docs: DataFrame) -> DataFrame:
     """Repeated-substring detection (Lee et al. 2022, "Deduplicating
-    Training Data Makes Language Models Better"): find every length-
-    ``k`` token shingle that occurs MORE THAN ONCE corpus-wide, and
+    Training Data Makes Language Models Better"): find every k-token
+    shingle (k = 8) that occurs MORE THAN ONCE corpus-wide, and
     report, per document, how much of it is covered by duplicated
     spans — the signal the substring-dedup pass cuts on (the paper
     removes the spans; this operator scores them, and the span starts
@@ -1492,7 +1430,7 @@ def duplicated_ngram_spans(
     boilerplate — is exactly what AQE skew split handles); the span
     union is a per-doc LEAD window + one groupBy, no driver state.
     """
-    base, sh = _dup_shingle_table(docs, k, id_col, text_col)
+    base, sh = _dup_shingle_table(docs, 8)
     dup = sh.groupBy("g").agg(F.count(F.lit(1)).alias("cnt")).filter(
         F.col("cnt") > 1
     )
@@ -1501,9 +1439,9 @@ def duplicated_ngram_spans(
     spans = dstarts.withColumn("nxt", F.lead("start").over(w)).select(
         "id",
         F.when(
-            F.col("nxt").isNotNull(), F.least(F.lit(k), F.col("nxt") - F.col("start"))
+            F.col("nxt").isNotNull(), F.least(F.lit(8), F.col("nxt") - F.col("start"))
         )
-        .otherwise(F.lit(k))
+        .otherwise(F.lit(8))
         .alias("cov"),
     )
     agg = spans.groupBy("id").agg(
@@ -1513,7 +1451,7 @@ def duplicated_ngram_spans(
     return (
         base.join(agg, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias(DOC_ID),
             "n_tokens",
             F.coalesce("n_dup_starts", F.lit(0).cast("long")).alias("n_dup_starts"),
             F.coalesce("covered_tokens", F.lit(0).cast("long")).alias(
@@ -1529,7 +1467,7 @@ def duplicated_ngram_spans(
                         "double"
                     )
                     / F.col("n_tokens").cast("double"),
-                    round_to,
+                    6,
                 )
             )
             .alias("covered_frac"),
@@ -1537,13 +1475,7 @@ def duplicated_ngram_spans(
     )
 
 
-def remove_duplicated_spans(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def remove_duplicated_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     """The removal pass ``duplicated_ngram_spans`` scores for (Lee et
     al. 2022 ExactSubstr dedup): every length-``k`` token shingle that
     occurs more than once corpus-wide keeps its FIRST occurrence (min
@@ -1565,7 +1497,7 @@ def remove_duplicated_spans(
     merged-interval list) — O(n_tokens × n_islands) per doc with no
     shuffle; merged islands are disjoint so n_islands ≤ n_tokens/k.
     """
-    base, sh = _dup_shingle_table(docs, k, id_col, text_col)
+    base, sh = _dup_shingle_table(docs, k)
     firsts = sh.groupBy("g").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.min(F.struct("id", "start")).alias("first"),
@@ -1605,7 +1537,7 @@ def remove_duplicated_spans(
         ),
     )
     out = joined.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias(DOC_ID),
         "n_tokens",
         F.size(kept).cast("long").alias("kept_tokens"),
         (F.col("n_tokens") - F.size(kept)).cast("long").alias("removed_tokens"),
@@ -1617,7 +1549,7 @@ def remove_duplicated_spans(
             F.round(
                 (F.col("n_tokens") - F.size(kept)).cast("double")
                 / F.col("n_tokens").cast("double"),
-                round_to,
+                6,
             )
         )
         .alias("removed_frac"),
@@ -1626,20 +1558,11 @@ def remove_duplicated_spans(
     return out
 
 
-def minhash_pair_recall(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def minhash_pair_recall(docs: DataFrame) -> DataFrame:
     """Candidate-recall evaluation of the banded MinHash-LSH index —
     the dedup twin of the ANN recall harness: ground truth = EXACT
-    shingle-set Jaccard pairs at ``threshold`` (the same ␟-joined
-    ``shingle_n``-word shingle space the MinHash signatures hash, so
+    shingle-set Jaccard pairs at 0.8 (the same ␟-joined
+    3-word shingle space the MinHash signatures hash, so
     both arms measure the same similarity), candidates = the
     production ``minhash_lsh_pairs`` banding. Returns ONE row:
     (n_truth, n_candidates, n_hits, recall, precision) — recall is the
@@ -1656,8 +1579,8 @@ def minhash_pair_recall(
     pairs → nothing to miss; no candidates → nothing spurious).
     """
     sh = _spread(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(TX.word_shingles(text_col, shingle_n)).alias("g"),
+        F.col(DOC_ID).alias("id"),
+        F.explode(TX.word_shingles(TEXT, 3)).alias("g"),
     )
     sh = _persist(sh)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
@@ -1670,22 +1593,15 @@ def minhash_pair_recall(
     jac = F.round(
         F.col("ovl").cast("double")
         / (F.col("sa.sz") + F.col("sb.sz") - F.col("ovl")).cast("double"),
-        round_to,
+        6,
     )
     truth = (
         inter.join(sizes.alias("sa"), F.col("id_a") == F.col("sa.id"))
         .join(sizes.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .filter(jac >= threshold)
+        .filter(jac >= 0.8)
         .select("id_a", "id_b")
     )
-    cand = minhash_lsh_pairs(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-    ).select(F.col("id_a"), F.col("id_b"))
+    cand = minhash_lsh_pairs(docs).select(F.col("id_a"), F.col("id_b"))
     truth = _persist(truth)
     cand = _persist(cand)
     hits = truth.join(cand, ["id_a", "id_b"])
@@ -1702,13 +1618,13 @@ def minhash_pair_recall(
             F.when(F.col("n_truth") == 0, F.lit(1.0)).otherwise(
                 F.col("n_hits").cast("double") / F.col("n_truth")
             ),
-            round_to,
+            6,
         ).alias("recall"),
         F.round(
             F.when(F.col("n_candidates") == 0, F.lit(1.0)).otherwise(
                 F.col("n_hits").cast("double") / F.col("n_candidates")
             ),
-            round_to,
+            6,
         ).alias("precision"),
     )
 
@@ -1718,9 +1634,6 @@ def verify_pairs(
     pairs: DataFrame,
     threshold: float = 0.8,
     shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
 ) -> DataFrame:
     """Candidate-pair VERIFICATION — the stage after LSH that fixes its
     precision: compute the exact shingle-set Jaccard for each candidate
@@ -1744,13 +1657,13 @@ def verify_pairs(
     only. No shingle self-join anywhere.
     """
     ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
+        pairs.select(F.col("id_a").alias(DOC_ID))
+        .unionByName(pairs.select(F.col("id_b").alias(DOC_ID)))
         .distinct()
     )
-    sh = _spread(docs.join(ids, id_col, "left_semi")).select(
-        F.col(id_col).alias("id"),
-        F.explode(TX.word_shingles(text_col, shingle_n)).alias("g"),
+    sh = _spread(docs.join(ids, DOC_ID, "left_semi")).select(
+        F.col(DOC_ID).alias("id"),
+        F.explode(TX.word_shingles(TEXT, shingle_n)).alias("g"),
     )
     sh = _persist(sh)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("sz"))
@@ -1769,7 +1682,7 @@ def verify_pairs(
         - ovl
     )
     jac = F.when(
-        denom > 0, F.round(ovl.cast("double") / denom.cast("double"), round_to)
+        denom > 0, F.round(ovl.cast("double") / denom.cast("double"), 6)
     ).otherwise(F.lit(0.0))
     return (
         pairs.join(inter, ["id_a", "id_b"], "left")

@@ -1,7 +1,9 @@
 """Fact builders (reference:
 Airflow/masterfindata/models/Facts/fct_balanceSheet.sql — the
-IncomeStatement and Cashflows files differ by ONE literal, so this is a
-single parameterized builder, ``build_fact(stmt)``).
+IncomeStatement and Cashflows files differ by ONE literal, the statement
+code, so this is a single builder, ``build_fact``, over all three
+statements at once: ``statement_type`` is already a group key, and each
+reference fact table is that output filtered to its code).
 
 Fidelity notes:
 - The reference's first CTE references stg_sub columns without joining
@@ -20,9 +22,10 @@ DIM sides carry NO explicit hint — dim_filings is a 4-way distinct over
 (tag, version, stmt, uom, filed) whose cardinality grows with history,
 so the broadcast decision is left to AQE's measured sizes (same contract
 as the dedup operators; see test_no_unbounded_broadcast). The three
-facts share one spine (``fact_spine``, the registry's ``fact_spine`` cache
-model) instead of re-reading NUM three times (improves the reference's
-thread-level parallelism, X11).
+facts come from one spine (``fact_spine``, the registry's ``fact_spine``
+cache model) and one plan, instead of re-reading NUM and re-joining the
+dims three times (improves the reference's thread-level parallelism,
+X11).
 """
 
 from __future__ import annotations
@@ -30,11 +33,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: The statement codes the reference builds a fact table for.
+FACT_STATEMENTS = ("BS", "IS", "CF")
+
 
 def fact_spine(
     stg_num: DataFrame, stg_pre: DataFrame, stg_sub: DataFrame
 ) -> DataFrame:
-    """The stmt-unfiltered upstream of all three facts: NUM ⋈ PRE on
+    """The stmt-unfiltered upstream of the facts: NUM ⋈ PRE on
     (ADSH, TAG) (fct_balanceSheet.sql:16-21), then broadcast-join SUB on
     ADSH (fct_balanceSheet.sql:25-37, X1 hint)."""
     return (
@@ -49,15 +55,15 @@ def build_fact(
     dim_company: DataFrame,
     dim_filings: DataFrame,
     dim_date: DataFrame,
-    stmt: str,
 ) -> DataFrame:
-    """One fact table (BS / IS / CF / ...) from the shared spine and dims.
+    """The BS, IS and CF facts from the spine and dims, one row set
+    keyed by ``statement_type`` among its group keys.
 
-    Plan shape: σ(stmt) → ⟕ dims (company by CIK, filings by (stmt,
-    filed), date by to_date expr key: J3/J4/J5) → null-reject → ⋈ dims
-    by SK (J6) → Γ 6 keys → ROUND(SUM(value), 2).
+    Plan shape: σ(stmt ∈ FACT_STATEMENTS) → ⟕ dims (company by CIK,
+    filings by (stmt, filed), date by to_date expr key: J3/J4/J5) →
+    null-reject → ⋈ dims by SK (J6) → Γ 6 keys → ROUND(SUM(value), 2).
     """
-    src = spine.filter(F.col("stmt") == stmt)
+    src = spine.filter(F.col("stmt").isin(*FACT_STATEMENTS))
 
     dc = dim_company.alias("dc")
     df_ = dim_filings.alias("df")

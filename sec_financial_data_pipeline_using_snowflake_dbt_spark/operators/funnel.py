@@ -40,10 +40,6 @@ def funnel_steps(
     events: DataFrame,
     steps: list[str],
     horizon: str = "7 days",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    round_to: int = 6,
 ) -> DataFrame:
     """Ordered conversion funnel: how many users perform ``steps`` in
     order, each step at-or-after the previous step's completion and the
@@ -58,7 +54,7 @@ def funnel_steps(
       (step BIGINT 1-based, step_name, n_users,
        conv_overall = n_users/n_step1, conv_prev = n_users/n_prev)
 
-    with the ratios rounded to ``round_to`` and NULL when the
+    with the ratios rounded to 6 dp and NULL when the
     denominator is 0 (an empty funnel has no defined conversion).
 
     Scale: the event table is scanned ONCE — projected to 3 columns and
@@ -75,9 +71,9 @@ def funnel_steps(
             f"got {horizon!r}"
         )
     ev = events.select(
-        F.col(user_col).alias("u"),
-        F.col(ts_col).alias("t"),
-        F.col(type_col).alias("et"),
+        F.col("user_id").alias("u"),
+        F.col("ts").alias("t"),
+        F.col("event_type").alias("et"),
     ).filter(F.col("t").isNotNull() & F.col("et").isin(list(steps)))
     # repeated same-plan calls hit Spark's CacheManager (logical-plan
     # keyed), so this does not accumulate duplicate cache entries
@@ -119,7 +115,7 @@ def funnel_steps(
 
     def ratio(num, den):
         return F.when(
-            den > 0, F.round(num.cast("double") / den.cast("double"), round_to)
+            den > 0, F.round(num.cast("double") / den.cast("double"), 6)
         )
 
     staged = counts.select(
@@ -142,12 +138,7 @@ def funnel_steps(
     )
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    round_to: int = 6,
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Weekly cohort retention: users cohorted by the Monday-start week
     of their FIRST event; one row per (cohort_week, week_offset) with
     how many cohort members were active that week —
@@ -161,7 +152,7 @@ def retention_cohorts(
     Cross-engine determinism: ``date_trunc('week', ts)`` is
     Monday-start in both Spark and DuckDB; the offset is an exact
     integer (day difference of two week-truncated dates / 7); counts
-    are exact; the single ratio rounds to ``round_to``.
+    are exact; the single ratio rounds to 6 dp.
 
     Scale: first-seen is a map-side-combined min-groupBy per user;
     activity is one distinct over (user, week) — corpus-sized but
@@ -170,8 +161,8 @@ def retention_cohorts(
     calendar-sized output.
     """
     ev = events.select(
-        F.col(user_col).alias("u"),
-        F.to_date(F.date_trunc("week", F.col(ts_col))).alias("wk"),
+        F.col("user_id").alias("u"),
+        F.to_date(F.date_trunc("week", F.col("ts"))).alias("wk"),
     ).filter(F.col("wk").isNotNull())
     first = ev.groupBy("u").agg(F.min("wk").alias("cohort_week"))
     sizes = first.groupBy("cohort_week").agg(
@@ -191,6 +182,6 @@ def retention_cohorts(
         "n_active",
         F.round(
             F.col("n_active").cast("double") / F.col("cohort_size").cast("double"),
-            round_to,
+            6,
         ).alias("retention"),
     )

@@ -121,17 +121,12 @@ def fuzzy_pairs(
     )
 
 
-def fuzzy_neighbor_counts(
-    df: DataFrame,
-    id_col: str,
-    str_col: str,
-    max_dist: int = 1,
-) -> DataFrame:
-    """Per string: how many other strings sit within ``max_dist`` edits,
+def fuzzy_neighbor_counts(df: DataFrame, id_col: str, str_col: str) -> DataFrame:
+    """Per string: how many other strings sit within one edit,
     and the lexicographically smallest such neighbor — the audit view an
     entity-resolution pass reviews before merging.  Strings with no
     neighbors are omitted."""
-    pairs = fuzzy_pairs(df, id_col, str_col, max_dist)
+    pairs = fuzzy_pairs(df, id_col, str_col, 1)
     both = pairs.select(
         F.col("s_a").alias("name"), F.col("s_b").alias("other")
     ).unionAll(pairs.select(F.col("s_b").alias("name"), F.col("s_a").alias("other")))

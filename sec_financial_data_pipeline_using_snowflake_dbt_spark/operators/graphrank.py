@@ -51,13 +51,7 @@ from pyspark.sql import functions as F
 UNIT = 10**12
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 5,
-    damping_pct: int = 85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 5, damping_pct: int = 85) -> DataFrame:
     """Integer fixed-point PageRank over a (src, dst) edge table.
 
     ``edges`` is a DIRECTED edge list; parallel duplicates should be
@@ -73,9 +67,7 @@ def pagerank(
     if not (1 <= damping_pct <= 99):
         raise ValueError(f"damping_pct must be in [1, 99], got {damping_pct}")
 
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint()
+    e = edges.select("src", "dst").localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))

@@ -72,14 +72,7 @@ def stg_financial_data(
     # explicit — AQE coalesces a keys-only repartition of a tiny table
     # back to ONE partition, which is precisely the serialization this
     # exists to prevent.
-    # sparkContext is a classic-mode surface; under Spark Connect fall
-    # back to the session's shuffle-partition setting (same order of
-    # magnitude, and the exact count only tunes parallelism here)
-    try:
-        width = sub.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        width = int(sub.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    s = s.repartition(width, "adsh")
+    s = s.repartition(sub.sparkSession.sparkContext.defaultParallelism, "adsh")
     return (
         s.join(n, "adsh", "left")
         # no explicit broadcast on the tag taxonomy: it grows with

@@ -118,11 +118,10 @@ def with_zorder_key(
     cols: Sequence[str],
     bits: int = 16,
     bounds: dict[str, tuple[int, int]] | None = None,
-    out_col: str = Z_COL,
 ) -> DataFrame:
     """``df`` + the z-value column (bounds computed from the data unless
     supplied — supply table-level bounds when keying an incremental batch
     so every batch shares one curve)."""
     bounds = bounds or column_bounds(df, cols)
-    return df.withColumn(out_col, zorder_key(cols, bounds, bits))
+    return df.withColumn(Z_COL, zorder_key(cols, bounds, bits))
 

@@ -23,25 +23,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..functions.vector import EMBEDDING, VEC_ID
 from .asof import _plan_size_bytes
 
 #: Query sides estimated at or below this carry an explicit broadcast
 #: hint in brute_force_topk (the != join needs a BroadcastNestedLoopJoin
 #: to avoid a cartesian shuffle, and a few-queries batch is the operator's
-#: design point). Above it — or when the size is unknowable (Spark
-#: Connect) — no hint is baked: a corpus-vs-itself batch must never carry
+#: design point). Above it — or when the plan yields no size
+#: estimate — no hint is baked: a corpus-vs-itself batch must never carry
 #: an unbounded broadcast (house rule, VERDICT r3).
 BROADCAST_QUERY_MAX_BYTES = 64 * 1024 * 1024
 
 
-def brute_force_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 3,
-) -> DataFrame:
+def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k by cosine. Returns (query_id, neighbor_id, rank, cos).
 
     Size-gated broadcast of the query side (``BROADCAST_QUERY_MAX_BYTES``):
@@ -52,10 +46,10 @@ def brute_force_topk(
     Self-matches (same id) are excluded; ties broken by neighbor id.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        F.col(VEC_ID).alias("query_id"), F.col(EMBEDDING).alias("qv")
     ).withColumn("qn", V.norm(F.col("qv")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+        F.col(VEC_ID).alias("neighbor_id"), F.col(EMBEDDING).alias("cv")
     ).withColumn("cn", V.norm(F.col("cv")))
     # gate on the projected side (id + vec only) — that is what would
     # actually broadcast; the raw input may carry wide extra columns
@@ -64,7 +58,7 @@ def brute_force_topk(
     cos = V.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
     scored = (
         c.join(qside, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cos, round_to).alias("cos"))
+        .select("query_id", "neighbor_id", F.round(cos, 3).alias("cos"))
         # a zero-norm vector makes the cosine NULL (non-ANSI x/0.0);
         # such rows are unrankable and must not pad the top-k
         .filter(F.col("cos").isNotNull())
@@ -114,23 +108,19 @@ def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
     dim: int,
-    k: int = 5,
     n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 3,
 ) -> DataFrame:
     """Approximate top-k: only candidates in the query's LSH bucket are
     scored. Recall < 1.0 by design; raise recall with fewer planes or
     multiple hash tables."""
     qb = lsh_bucket(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
+        queries.select(F.col(VEC_ID).alias("query_id"), F.col(EMBEDDING).alias("qv")),
         "qv",
         dim,
         n_planes,
     ).withColumn("qn", V.norm(F.col("qv")))
     cb = lsh_bucket(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+        corpus.select(F.col(VEC_ID).alias("neighbor_id"), F.col(EMBEDDING).alias("cv")),
         "cv",
         dim,
         n_planes,
@@ -142,14 +132,14 @@ def lsh_topk(
     scored = (
         cb.join(qb, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cos, round_to).alias("cos"))
+        .select("query_id", "neighbor_id", F.round(cos, 3).alias("cos"))
         .filter(F.col("cos").isNotNull())  # zero-norm guard (see brute force)
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
+        F.col("rank") <= 5
     )
 
 
@@ -385,8 +375,6 @@ def ivf_assign(
     dim: int,
     n_centroids: int = 8,
     n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_means: int | None = None,
     early_stop_eps: float | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -438,8 +426,8 @@ def ivf_assign(
     the same oracle still matches when enabled.
     """
     assignments, cents, _ = _ivf_fit(
-        corpus, dim, n_centroids, n_iters, id_col, vec_col, round_means,
-        early_stop_eps,
+        corpus, dim, n_centroids, n_iters,
+        round_means=round_means, early_stop_eps=early_stop_eps,
     )
     centroids = corpus.sparkSession.createDataFrame(
         [(cell, cvec) for cell, cvec in cents], "cell INT, cvec ARRAY<DOUBLE>"
@@ -452,8 +440,8 @@ def _ivf_fit(
     dim: int,
     n_centroids: int = 8,
     n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = VEC_ID,
+    vec_col: str = EMBEDDING,
     round_means: int | None = None,
     early_stop_eps: float | None = None,
     n_first: int = 0,
@@ -692,11 +680,6 @@ def cluster_sample(
     n_cells: int = 8,
     per_cell: int = 5,
     mode: str = "prototypes",
-    n_iters: int = 2,
-    round_means: int | None = 6,
-    round_to: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Cluster-balanced corpus selection: k-means the embeddings, then
     keep ``per_cell`` members per cluster — ``mode='prototypes'`` keeps
@@ -705,7 +688,7 @@ def cluster_sample(
     DataComp pipelines), ``mode='spread'`` keeps the FARTHEST (maximum
     within-cluster diversity / hard-example mining). Returns one row
     per kept vector: (vec_id, cell BIGINT, dist, rank) with ``dist``
-    the L2 distance to the centroid rounded to ``round_to`` and
+    the L2 distance to the centroid rounded to 6 dp and
     ``rank`` 1-based within the cell.
 
     Scale shape: the quantizer is the deterministic ``ivf_assign``
@@ -726,15 +709,14 @@ def cluster_sample(
     (bit-identical evaluation order both engines — ``_sqdist``
     docstring); the oracle ranks on DuckDB's ``list_distance`` (the
     sqrt), argmin/order-equivalent since sqrt is monotone. The emitted
-    ``dist`` is ROUND(sqrt, round_to) in both.
+    ``dist`` is ROUND(sqrt, 6) in both.
     """
     if mode not in ("prototypes", "spread"):
         raise ValueError(f"mode must be 'prototypes' or 'spread', got {mode!r}")
     if per_cell < 1:
         raise ValueError("per_cell must be >= 1")
     assignments, cents, _ = _ivf_fit(
-        corpus, dim, n_centroids=n_cells, n_iters=n_iters, id_col=id_col,
-        vec_col=vec_col, round_means=round_means,
+        corpus, dim, n_centroids=n_cells, round_means=6
     )
     # each row's centroid comes from the literal cell→cvec map instead
     # of a broadcast join against the (driver-side anyway) centroid
@@ -769,22 +751,13 @@ def cluster_sample(
         .select(
             F.col("s.id").alias("vec_id"),
             F.col("cell").cast("long").alias("cell"),
-            F.round(F.sqrt(F.abs(F.col("s.key"))), round_to).alias("dist"),
+            F.round(F.sqrt(F.abs(F.col("s.key"))), 6).alias("dist"),
             (F.col("pos") + 1).cast("long").alias("rank"),
         )
     )
 
 
-def kmeans_quality(
-    corpus: DataFrame,
-    dim: int,
-    n_centroids: int = 8,
-    n_iters: int = 2,
-    round_means: int | None = 6,
-    round_to: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_quality(corpus: DataFrame, dim: int, n_centroids: int = 8) -> DataFrame:
     """Clustering-quality report for one k: per-cell size and inertia —
     the measurements behind the elbow/balance decision every IVF/k-means
     deployment makes before committing to an index width (``q_ann_recall``
@@ -798,10 +771,10 @@ def kmeans_quality(
     spread (the balance check) reads off ``n_vectors``.
 
     Cross-engine determinism: the quantizer is the deterministic
-    ``ivf_assign`` (lowest-id init, fixed rounds, ``round_means``-rounded
+    ``ivf_assign`` (lowest-id init, fixed rounds, 6-dp-rounded
     means — the q_ann_ivf reproducibility contract); each member's
     squared distance is the shared ``_sqdist`` fold, ROUNDed to
-    ``round_to``, and the per-cell sum runs in DECIMAL over the rounded
+    6 dp, and the per-cell sum runs in DECIMAL over the rounded
     values — exact at any accumulation order, so a distributed partial
     sum and the oracle's sequential one land on the identical double
     (the money-sum convention applied to distances).
@@ -811,21 +784,20 @@ def kmeans_quality(
     the exact shape of a Lloyd mean step; output is n_centroids rows.
     """
     assignments, cents, _ = _ivf_fit(
-        corpus, dim, n_centroids=n_centroids, n_iters=n_iters, id_col=id_col,
-        vec_col=vec_col, round_means=round_means,
+        corpus, dim, n_centroids=n_centroids, round_means=6
     )
     # literal cell→cvec map lookup instead of the broadcast join — same
     # fold over the same literal doubles, one BroadcastHashJoin fewer,
     # and no pushed-fold binding bug (_centroid_lookup_expr docstring)
     cvec = F.element_at(_centroid_lookup_expr(cents), F.col("cell").cast("int"))
-    d2 = F.round(_sqdist(F.col("v"), cvec), round_to)
+    d2 = F.round(_sqdist(F.col("v"), cvec), 6)
     return (
         assignments
         # DECIMAL(38,s): with ANSI off a per-value overflow at (18,s)
         # would silently NULL the distance out of the sum while the
         # DuckDB oracle raises — 38 digits hold any float64 square
         # a 64-dim corpus can produce (ADVICE r7 §1)
-        .select(F.col("cell"), d2.cast(f"decimal(38,{round_to})").alias("d"))
+        .select(F.col("cell"), d2.cast("decimal(38,6)").alias("d"))
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
@@ -844,8 +816,6 @@ def pq_train(
     dim: int,
     m: int = 4,
     k_sub: int = 4,
-    n_iters: int = 2,
-    round_means: int = 6,
 ) -> list[list[list[float]]]:
     """Per-subspace PQ codebooks from a DRIVER-SIDE sample — plain
     deterministic Lloyd, no RNG (init = the first ``k_sub`` sample
@@ -860,7 +830,7 @@ def pq_train(
     the vectors themselves never would (m bytes vs 4·dim).
 
     Reproducibility mirrors ``ivf_assign``: every centroid coordinate is
-    rounded to ``round_means`` dp after each mean step (absorbs
+    rounded to 6 dp after each mean step (absorbs
     summation-order ulp drift), assignment tie-breaks on the lower
     centroid index, and a cluster that loses all members keeps its
     previous centroid — the SQL oracle replays the identical schedule.
@@ -879,7 +849,7 @@ def pq_train(
     for j in range(m):
         vecs = [row[j * sub : (j + 1) * sub] for row in sample]
         cents = [list(vecs[c]) for c in range(k_sub)]
-        for _ in range(n_iters):
+        for _ in range(2):
             sums = [[0.0] * sub for _ in range(k_sub)]
             counts = [0] * k_sub
             for v in vecs:
@@ -894,7 +864,7 @@ def pq_train(
                 for i, x in enumerate(v):
                     sums[best][i] += x
             cents = [
-                [_round_half_up(s / counts[ci], round_means) for s in sums[ci]]
+                [_round_half_up(s / counts[ci], 6) for s in sums[ci]]
                 if counts[ci]
                 else cents[ci]  # empty cluster keeps its centroid
                 for ci in range(k_sub)
@@ -954,36 +924,18 @@ def _pq_code_col(
     return F.array(*codes)
 
 
-def pq_encode(
-    corpus: DataFrame,
-    books: list[list[list[float]]],
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, books: list[list[list[float]]], dim: int) -> DataFrame:
     """(id, codes array<int>) — the PQ compression of the corpus: a
     single narrow scan, no shuffle, no join; at scale this is the
     materialized index (m small ints per vector)."""
     sub = dim // len(books)
-    v = V.as_double(F.col(vec_col))
+    v = V.as_double(F.col(EMBEDDING))
     return corpus.select(
-        F.col(id_col).alias("id"), _pq_code_col(v, books, sub).alias("codes")
+        F.col(VEC_ID).alias("id"), _pq_code_col(v, books, sub).alias("codes")
     )
 
 
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    m: int = 4,
-    k_sub: int = 4,
-    n_train: int = 64,
-    n_iters: int = 2,
-    round_means: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5) -> DataFrame:
     """Asymmetric-distance PQ search: top-``k`` neighbors per query by
     ADC (sum over subspaces of the exact distance from the query
     subvector to the neighbor's CODE centroid).
@@ -998,7 +950,7 @@ def pq_topk(
     equi-join on the IVF cell so per-query work is proportional to the
     probed cells' population.
 
-    Scale shape (of the parts ivfpq reuses): train on the ``n_train``
+    Scale shape (of the parts ivfpq reuses): train on the 64
     lowest-id vectors (driver sample, O(1) in the corpus), encode in
     one narrow scan, then score with per-query lookup tables baked in
     as literals — the scan reads only (id, codes), never the vectors;
@@ -1014,13 +966,12 @@ def pq_topk(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    sub = dim // m
     # the training-sample and query-batch collects are independent scan
     # jobs — overlap them (guide §2.6) instead of paying them serially
     with ThreadPoolExecutor(max_workers=1) as _pool:
         _qfut = _pool.submit(
             lambda: queries.select(
-                F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
+                F.col(VEC_ID).alias("id"), V.as_double(F.col(EMBEDDING)).alias("v")
             )
             .orderBy("id")
             .collect()
@@ -1028,15 +979,16 @@ def pq_topk(
         sample = [
             list(r.v)
             for r in corpus.select(
-                F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
+                F.col(VEC_ID).alias("id"), V.as_double(F.col(EMBEDDING)).alias("v")
             )
             .orderBy("id")
-            .limit(n_train)
+            .limit(64)
             .collect()
         ]
         _q_collected = _qfut.result()
-    books = pq_train(sample, dim, m, k_sub, n_iters, round_means)
-    codes = pq_encode(corpus, books, dim, id_col, vec_col)
+    books = pq_train(sample, dim)
+    codes = pq_encode(corpus, books, dim)
+    sub = dim // len(books)
 
     q_rows = [(int(r.id), list(r.v)) for r in _q_collected]
     spark = corpus.sparkSession
@@ -1061,7 +1013,7 @@ def pq_topk(
         )
     )
     adc = None
-    for j in range(m):
+    for j in range(len(books)):
         term = F.element_at(
             F.element_at(F.col("lut"), j + 1), F.col("codes")[j] + 1
         )
@@ -1102,10 +1054,6 @@ def ivfpq_topk(
     m: int = 4,
     k_sub: int = 4,
     n_train: int = 64,
-    pq_iters: int = 2,
-    round_means: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     residual: bool = False,
 ) -> DataFrame:
     """IVF + PQ composed — the standard billion-scale ANN architecture
@@ -1145,7 +1093,7 @@ def ivfpq_topk(
     with ThreadPoolExecutor(max_workers=1) as _pool:
         _qfut = _pool.submit(
             lambda: queries.select(
-                F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
+                F.col(VEC_ID).alias("id"), V.as_double(F.col(EMBEDDING)).alias("v")
             )
             .orderBy("id")
             .collect()
@@ -1155,8 +1103,7 @@ def ivfpq_topk(
         # the PQ on cells that disagree with the engine's)
         use_gemm = _use_gemm(n_centroids * dim)
         assignments, cents, first_rows = _ivf_fit(
-            corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col,
-            round_means=round_means,
+            corpus, dim, n_centroids, round_means=6,
             # fused init (VERDICT r11 #3): the PQ training sample is the
             # same lowest-id projection the init collect already takes —
             # widen that collect instead of running a second job (the
@@ -1217,7 +1164,7 @@ def ivfpq_topk(
         ]
     else:
         sample = [v for v, _ in sample_rows]
-    books = pq_train(sample, dim, m, k_sub, pq_iters, round_means)
+    books = pq_train(sample, dim, m, k_sub)
     codes = assignments.select(
         "id", "cell", _pq_code_col(enc_vec, books, sub).alias("codes")
     )

@@ -50,7 +50,7 @@ def stg_num(num: DataFrame) -> DataFrame:
         "uom",
         "value",
         "footnote",
-        version_tag("version", "tag").alias("version_tag"),
+        version_tag().alias("version_tag"),
     )
 
 
@@ -61,7 +61,7 @@ def stg_tag(tag: DataFrame) -> DataFrame:
         "version",
         F.coalesce("tlabel", F.lit("not known")).alias("tlabel"),
         "doc",
-        version_tag("version", "tag").alias("version_tag"),
+        version_tag().alias("version_tag"),
     )
 
 
@@ -73,5 +73,5 @@ def stg_pre(pre: DataFrame) -> DataFrame:
         "tag",
         "version",
         F.coalesce("plabel", F.lit("not known")).alias("plabel"),
-        version_tag("version", "tag").alias("version_tag"),
+        version_tag().alias("version_tag"),
     )

@@ -10,21 +10,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import text as TX
+from ..functions.text import DOC_ID, TEXT
+from ..functions.vector import EMBEDDING, VEC_ID
 
 
-def text_quality(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def text_quality(docs: DataFrame) -> DataFrame:
     """Per-doc quality features: char/token counts, avg token length,
     punctuation ratio, and a composite keep/drop signal ("gopher-lite")."""
-    n_chars = F.length(F.col(text_col)).cast("long")
-    n_tokens = TX.token_count(text_col)
+    n_chars = F.length(F.col(TEXT)).cast("long")
+    n_tokens = TX.token_count(TEXT)
     avg_tok = F.round(n_chars.cast("double") / n_tokens.cast("double"), 4)
     punct_ratio = F.round(
-        TX.punct_count(text_col).cast("double") / n_chars.cast("double"), 6
+        TX.punct_count(TEXT).cast("double") / n_chars.cast("double"), 6
     )
     return docs.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
         avg_tok.alias("avg_token_len"),
@@ -40,20 +40,18 @@ def text_quality(
     )
 
 
-def language_id(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Marker-word language scores + argmax prediction.
 
     Emits one score column per language in ``TX.LANG_MARKERS`` and
     ``pred_lang`` = language with the highest hit count (alphabetical
     tie-break). Deterministic; heuristic by design.
     """
-    out = docs.select(F.col(id_col), F.col(text_col))
+    out = docs.select(F.col(DOC_ID), F.col(TEXT))
     langs = sorted(TX.LANG_MARKERS)
     for lang in langs:
         out = out.withColumn(
-            f"score_{lang}", TX.marker_hits(text_col, TX.LANG_MARKERS[lang])
+            f"score_{lang}", TX.marker_hits(TEXT, TX.LANG_MARKERS[lang])
         )
     # argmax with alphabetical tie-break: greatest(structs) trick avoided —
     # fold with explicit comparisons for portability
@@ -64,17 +62,15 @@ def language_id(
         pred = F.when(s > best, F.lit(lang)).otherwise(pred)
         best = F.when(s > best, s).otherwise(best)
     return out.select(
-        id_col, *[f"score_{lang}" for lang in langs], pred.alias("pred_lang")
+        DOC_ID, *[f"score_{lang}" for lang in langs], pred.alias("pred_lang")
     )
 
 
-def fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Normalized-text md5 fingerprint per document."""
     return docs.select(
-        F.col(id_col),
-        TX.fingerprint(text_col).alias("fingerprint"),
+        F.col(DOC_ID),
+        TX.fingerprint(TEXT).alias("fingerprint"),
     )
 
 
@@ -86,7 +82,7 @@ TRAIN_BUCKETS = 90
 VAL_BUCKETS = 5
 
 
-def split_bucket(id_col: str = "doc_id") -> F.Column:
+def split_bucket() -> F.Column:
     """The deterministic split bucket of an id — first 4 hex digits of
     md5(id) mod ``SPLIT_BUCKETS``, an INT column. THE single spelling of
     the bucket arithmetic: ``assign_split`` builds its bucket/split
@@ -95,11 +91,11 @@ def split_bucket(id_col: str = "doc_id") -> F.Column:
     can filter on it directly instead of joining ``assign_split``'s
     projected output back onto the corpus — row-identical, minus a
     join."""
-    h = F.md5(F.col(id_col).cast("string"))
+    h = F.md5(F.col(DOC_ID).cast("string"))
     return F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % SPLIT_BUCKETS
 
 
-def assign_split(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def assign_split(docs: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment for corpus building.
 
     Bucket = ``split_bucket(id)`` — a pure function of the row id:
@@ -107,14 +103,14 @@ def assign_split(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (unlike ``rand()`` or Spark's ``hash()``), so a document never
     migrates between splits as the corpus grows.
     """
-    bucket = split_bucket(id_col).alias("bucket")
+    bucket = split_bucket().alias("bucket")
     split = (
         F.when(F.col("bucket") < TRAIN_BUCKETS, "train")
         .when(F.col("bucket") < TRAIN_BUCKETS + VAL_BUCKETS, "val")
         .otherwise("test")
     )
-    return docs.select(F.col(id_col), bucket).select(
-        id_col, F.col("bucket").cast("int").alias("bucket"), split.alias("split")
+    return docs.select(F.col(DOC_ID), bucket).select(
+        DOC_ID, F.col("bucket").cast("int").alias("bucket"), split.alias("split")
     )
 
 
@@ -122,30 +118,27 @@ def stratified_sample_hash(
     docs: DataFrame,
     strata_col: str,
     fractions: dict[str, float],
-    id_col: str = "doc_id",
-    salt: str = "sample",
-    resolution: int = 1_000_000,
 ) -> DataFrame:
     """Deterministic per-stratum sampling by hash threshold.
 
     Keep a row iff ``uniform(id) < fraction(stratum)`` where
-    ``uniform(id)`` = first 8 hex digits of md5(id ‖ ':' ‖ salt) taken
-    mod ``resolution`` — a pure function of the row id, like
+    ``uniform(id)`` = first 8 hex digits of md5(id ‖ ':sample') taken
+    mod 10^6 — a pure function of the row id, like
     ``assign_split``: stable across runs, engines, partitionings, and
     cluster sizes, so the sample never churns as the corpus grows. The
-    ``salt`` decorrelates independent sampling passes (and decorrelates
-    sampling from split assignment, which hashes the bare id).
+    ``sample`` salt decorrelates sampling from split assignment, which
+    hashes the bare id.
 
     Strata missing from ``fractions`` are dropped (sampleBy parity).
-    Fraction granularity is 1/resolution (md5's 32-bit prefix is
+    Fraction granularity is 10^-6 (md5's 32-bit prefix is
     uniform, so the realized rate concentrates at the requested one).
     """
-    h = F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(salt)))
-    u = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % resolution
+    h = F.md5(F.concat_ws(":", F.col(DOC_ID).cast("string"), F.lit("sample")))
+    u = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % 1_000_000
     thr = F.lit(-1)  # unknown stratum ⇒ threshold -1 ⇒ never kept
     for stratum, frac in sorted(fractions.items()):
         thr = F.when(
-            F.col(strata_col) == stratum, F.lit(int(round(frac * resolution)))
+            F.col(strata_col) == stratum, F.lit(int(round(frac * 1_000_000)))
         ).otherwise(thr)
     return docs.filter(u < thr)
 
@@ -206,12 +199,7 @@ def _run_stats(arr):
     return F.aggregate(F.array_sort(arr), init, step, finish)
 
 
-def repetition_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 20,
-) -> DataFrame:
+def repetition_stats(docs: DataFrame, min_tokens: int = 20) -> DataFrame:
     """Gopher-style repetition signals per document: the fraction of
     tokens taken by the most frequent unigram/bigram, and the fraction
     of bigram occurrences that are duplicated (value seen ≥ 2×) —
@@ -227,8 +215,8 @@ def repetition_stats(
     # ran 4x per row; measured 4.6x slower at sf1, 24.4 s vs 5.4 s).
     barrier = _barrier
 
-    toks = TX.tokens(F.lower(F.col(text_col)))
-    s0 = barrier(docs, F.col(id_col), toks.alias("__toks"))
+    toks = TX.tokens(F.lower(F.col(TEXT)))
+    s0 = barrier(docs, F.col(DOC_ID), toks.alias("__toks"))
     n0 = F.size(F.col("__toks")).cast("long")
     bgs = F.zip_with(
         F.slice(F.col("__toks"), 1, F.greatest(n0 - 1, F.lit(0)).cast("int")),
@@ -237,14 +225,14 @@ def repetition_stats(
     )
     s1 = barrier(
         s0,
-        F.col(id_col),
+        F.col(DOC_ID),
         n0.alias("__n"),
         bgs.alias("__bgs"),
         _run_stats(F.col("__toks")).alias("__u"),
     )
     s2 = barrier(
         s1,
-        F.col(id_col),
+        F.col(DOC_ID),
         F.col("__n"),
         F.size("__bgs").cast("long").alias("__nb"),
         F.col("__u"),
@@ -259,7 +247,7 @@ def repetition_stats(
     )
     s3 = barrier(
         s2,
-        F.col(id_col),
+        F.col(DOC_ID),
         n.alias("n_tokens"),
         nb.alias("n_bigrams"),
         top_uni.alias("top_unigram_frac"),
@@ -267,7 +255,7 @@ def repetition_stats(
         dup_bi.alias("dup_bigram_frac"),
     )
     return s3.select(
-        id_col,
+        DOC_ID,
         "n_tokens",
         "n_bigrams",
         "top_unigram_frac",
@@ -284,22 +272,12 @@ def repetition_stats(
     )
 
 
-def c4_line_clean(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words_per_line: int = 4,
-    min_lines: int = 3,
-    line_drop_tokens: tuple[str, ...] = ("javascript",),
-    banned_doc_phrases: tuple[str, ...] = ("lorem ipsum",),
-    drop_brace_docs: bool = True,
-) -> DataFrame:
+def c4_line_clean(docs: DataFrame) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020, §2.2 — the
     public C4 heuristics): keep only lines that end in terminal
-    punctuation (. ! ? ") and carry at least ``min_words_per_line``
-    words and do not mention a ``line_drop_tokens`` word; then drop
-    whole documents with fewer than ``min_lines`` surviving lines, any
-    ``banned_doc_phrases`` occurrence, or (policy/code fragments) a
+    punctuation (. ! ? ") and carry at least 4 words and do not mention
+    "javascript"; then drop whole documents with fewer than 3 surviving
+    lines, any "lorem ipsum" occurrence, or (policy/code fragments) a
     curly brace. Returns every input row annotated — ``c4_keep`` is the
     drop verdict and ``clean_text`` the line-filtered text — so the
     caller chooses between auditing and ``.filter("c4_keep = 1")``.
@@ -315,26 +293,27 @@ def c4_line_clean(
     from .dedup import _spread
 
     docs = _spread(docs)
-    lines = F.transform(F.split(F.col(text_col), "\n"), lambda l: F.trim(l))
+    lines = F.transform(F.split(F.col(TEXT), "\n"), lambda l: F.trim(l))
 
     def word_count(l):
         return F.size(F.filter(F.split(l, r"\s+"), lambda w: w != ""))
 
     def line_ok(l):
-        ok = l.rlike('[.!?"]$') & (word_count(l) >= min_words_per_line)
-        for t in line_drop_tokens:
-            ok = ok & ~F.lower(l).contains(F.lit(t))
-        return ok
+        return (
+            l.rlike('[.!?"]$')
+            & (word_count(l) >= 4)
+            & ~F.lower(l).contains(F.lit("javascript"))
+        )
 
     kept = F.filter(lines, line_ok)
-    low = F.lower(F.col(text_col))
-    doc_ok = F.size(kept) >= min_lines
-    for p in banned_doc_phrases:
-        doc_ok = doc_ok & ~low.contains(F.lit(p))
-    if drop_brace_docs:
-        doc_ok = doc_ok & ~low.contains(F.lit("{"))
+    low = F.lower(F.col(TEXT))
+    doc_ok = (
+        (F.size(kept) >= 3)
+        & ~low.contains(F.lit("lorem ipsum"))
+        & ~low.contains(F.lit("{"))
+    )
     return docs.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         F.size(lines).cast("long").alias("n_lines"),
         F.size(kept).cast("long").alias("n_kept_lines"),
         F.array_join(kept, "\n").alias("clean_text"),
@@ -344,8 +323,6 @@ def c4_line_clean(
 
 def chunk_documents(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 128,
     stride: int = 96,
 ) -> DataFrame:
@@ -365,21 +342,21 @@ def chunk_documents(
     """
     if stride <= 0 or chunk_tokens <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
-    toks = TX.tokens(text_col)
+    toks = TX.tokens(TEXT)
     # sequence(1, 0) THROWS in Spark (boundaries must move toward stop),
     # so the empty-document case needs an explicit empty array
     starts = F.when(
         F.size(toks) > 0, F.sequence(F.lit(1), F.size(toks), F.lit(stride))
     ).otherwise(F.array().cast("array<int>"))
     return (
-        docs.select(F.col(id_col), toks.alias("__toks"), starts.alias("__starts"))
+        docs.select(F.col(DOC_ID), toks.alias("__toks"), starts.alias("__starts"))
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             F.col("__toks"),
             F.posexplode("__starts").alias("chunk_id", "__s"),
         )
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             F.col("chunk_id").cast("long").alias("chunk_id"),
             F.array_join(
                 F.slice(F.col("__toks"), F.col("__s"), F.lit(chunk_tokens)), " "
@@ -407,9 +384,7 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def scrub_pii(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """PII scrubbing — the redaction stage every shareable training
     corpus needs: emails, SSN-shaped ids, separator-delimited card and
     phone numbers, IPv4 literals, each replaced by a typed placeholder
@@ -430,11 +405,11 @@ def scrub_pii(
     from .dedup import _spread
 
     docs = _spread(docs)
-    clean = F.col(text_col)
+    clean = F.col(TEXT)
     for _, pat, repl in PII_PATTERNS:
         clean = F.regexp_replace(clean, pat, repl)
     counts = [
-        F.regexp_count(F.col(text_col), F.lit(pat)).cast("long").alias(f"n_{name}")
+        F.regexp_count(F.col(TEXT), F.lit(pat)).cast("long").alias(f"n_{name}")
         for name, pat, _ in PII_PATTERNS
     ]
     total = None
@@ -442,17 +417,11 @@ def scrub_pii(
         c = F.col(f"n_{name}")
         total = c if total is None else total + c
     return docs.select(
-        F.col(id_col), clean.alias("clean_text"), *counts
+        F.col(DOC_ID), clean.alias("clean_text"), *counts
     ).withColumn("pii_total", total.cast("long"))
 
 
-def decontaminate(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, eval_docs: DataFrame, n: int = 5) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any
     n-gram with an evaluation set (the n-gram-overlap rule the public
     GPT-3 / PaLM / Llama data notes describe). Returns every corpus row
@@ -469,8 +438,8 @@ def decontaminate(
 
     def shingled(df: DataFrame) -> DataFrame:
         return df.select(
-            F.col(id_col),
-            F.explode(TX.word_shingles(F.col(text_col), n)).alias("ngram"),
+            F.col(DOC_ID),
+            F.explode(TX.word_shingles(F.col(TEXT), n)).alias("ngram"),
         )
 
     ev = shingled(eval_docs).select("ngram").distinct()
@@ -484,14 +453,14 @@ def decontaminate(
     hits = (
         shingled(_spread(corpus))
         .join(ev, "ngram")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
-        corpus.select(id_col)
-        .join(hits, id_col, "left")
+        corpus.select(DOC_ID)
+        .join(hits, DOC_ID, "left")
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
             (F.coalesce("n_hits", F.lit(0)) > 0).cast("int").alias("contaminated"),
         )
@@ -499,13 +468,7 @@ def decontaminate(
 
 
 def contamination_report(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_id_col: str | None = None,
-    round_to: int = 6,
+    corpus: DataFrame, eval_docs: DataFrame, n: int = 5
 ) -> DataFrame:
     """Auditing sibling of ``decontaminate``: instead of a 0/1 flag,
     report HOW contaminated each corpus document is and BY WHICH
@@ -528,18 +491,16 @@ def contamination_report(
     aggregates. Attribution is a map-side-combined min-of-struct
     groupBy (the keep_best discipline), never a per-doc rank window.
     """
-    eid = eval_id_col or id_col
-
-    def shingled(df: DataFrame, idc: str, out: str) -> DataFrame:
+    def shingled(df: DataFrame, out: str) -> DataFrame:
         return df.select(
-            F.col(idc).alias(out),
-            F.explode(TX.word_shingles(F.col(text_col), n)).alias("ngram"),
+            F.col(DOC_ID).alias(out),
+            F.explode(TX.word_shingles(F.col(TEXT), n)).alias("ngram"),
         )
 
     from .dedup import _spread
 
-    ev = shingled(eval_docs, eid, "eval_id").distinct()
-    joined = shingled(_spread(corpus), id_col, "cid").join(ev, "ngram")
+    ev = shingled(eval_docs, "eval_id").distinct()
+    joined = shingled(_spread(corpus), "cid").join(ev, "ngram")
     tot = joined.groupBy("cid").agg(
         F.count_distinct(F.col("ngram")).cast("long").alias("n_hits")
     )
@@ -566,23 +527,20 @@ def contamination_report(
     # in as few tasks — measured 3.0 s of the operator's 4.1 s at sf0.1
     # serialized on 3 of 32 cores (r11; the ngram_diversity lesson).
     base = _spread(corpus).select(
-        F.col(id_col).alias("cid"),
-        F.size(TX.word_shingles(F.col(text_col), n)).cast("long").alias("n_shingles"),
+        F.col(DOC_ID).alias("cid"),
+        F.size(TX.word_shingles(F.col(TEXT), n)).cast("long").alias("n_shingles"),
     )
     nh = F.coalesce("n_hits", F.lit(0)).cast("long")
     return (
         base.join(tot, "cid", "left")
         .join(top, "cid", "left")
         .select(
-            F.col("cid").alias(id_col),
+            F.col("cid").alias(DOC_ID),
             "n_shingles",
             nh.alias("n_hits"),
             F.when(
                 F.col("n_shingles") > 0,
-                F.round(
-                    nh.cast("double") / F.col("n_shingles").cast("double"),
-                    round_to,
-                ),
+                F.round(nh.cast("double") / F.col("n_shingles").cast("double"), 6),
             )
             .otherwise(F.lit(0.0))
             .alias("overlap_frac"),
@@ -597,8 +555,6 @@ def pack_sequences(
     budget: int = 2048,
     n_shards: int = 8,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "pack",
 ) -> DataFrame:
     """GPT-style sequence packing: concatenate documents in a
     deterministic pseudo-random order and chunk the token stream at
@@ -617,15 +573,15 @@ def pack_sequences(
     exactly how multi-shard training data is laid out anyway).
     """
     sid = F.col(id_col).cast("string")
-    h_sh = F.md5(F.concat_ws(":", sid, F.lit(f"{salt}:shard")))
-    h_ord = F.md5(F.concat_ws(":", sid, F.lit(f"{salt}:ord")))
+    h_sh = F.md5(F.concat_ws(":", sid, F.lit("pack:shard")))
+    h_ord = F.md5(F.concat_ws(":", sid, F.lit("pack:ord")))
     base = docs.select(
         F.col(id_col),
         (F.conv(F.substring(h_sh, 1, 4), 16, 10).cast("int") % n_shards).alias(
             "shard"
         ),
         h_ord.alias("ord"),
-        TX.token_count(text_col).alias("n_tokens"),
+        TX.token_count(TEXT).alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
     w = Window.partitionBy("shard").orderBy("ord", id_col)
     base = base.withColumn("tok_end", F.sum("n_tokens").over(w)).withColumn(
@@ -645,12 +601,7 @@ def pack_sequences(
     )
 
 
-def vocab_top_terms(
-    docs: DataFrame,
-    top_n: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_top_terms(docs: DataFrame, top_n: int = 50) -> DataFrame:
     """Tokenizer-vocabulary building: the ``top_n`` most frequent
     lowercase tokens with corpus frequency, document frequency, and
     cumulative corpus coverage — the seed statistics a BPE/unigram
@@ -665,11 +616,11 @@ def vocab_top_terms(
     vocabulary, never over the corpus.
     """
     tok = docs.select(
-        F.col(id_col), F.explode(TX.tokens(F.lower(F.col(text_col)))).alias("token")
+        F.col(DOC_ID), F.explode(TX.tokens(F.lower(F.col(TEXT)))).alias("token")
     )
     freq = tok.groupBy("token").agg(
         F.count(F.lit(1)).alias("freq"),
-        F.countDistinct(id_col).alias("doc_freq"),
+        F.countDistinct(DOC_ID).alias("doc_freq"),
     )
     total = freq.agg(F.sum("freq").alias("total"))
     top = (
@@ -695,7 +646,6 @@ def frequent_items(
     item_col: str,
     share_den: int = 30,
     total: int | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact heavy hitters via a Misra-Gries candidate pass: every item
     whose frequency exceeds ``n / share_den`` (share > 1/share_den), with
@@ -722,7 +672,7 @@ def frequent_items(
     runs (parquet metadata-cheap on raw scans; a re-explode on derived
     inputs — pass ``total`` if that matters).
 
-    Returns (item, freq, share), share rounded to ``round_to``.
+    Returns (item, freq, share), share rounded to 6 dp.
     """
     if share_den < 2:
         raise ValueError(f"share_den must be >= 2, got {share_den}")
@@ -758,7 +708,7 @@ def frequent_items(
     return exact.select(
         F.col("item"),
         "freq",
-        F.round(F.col("freq").cast("double") / F.lit(float(n)), round_to).alias(
+        F.round(F.col("freq").cast("double") / F.lit(float(n)), 6).alias(
             "share"
         ),
     )
@@ -784,9 +734,6 @@ def hashed_linear_score(
     dim: int = 4096,
     weights: DataFrame | None = None,
     bias: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
 ) -> DataFrame:
     """fastText-style linear classifier INFERENCE over hashed
     bag-of-words features — the quality/domain classifier stage of the
@@ -796,7 +743,7 @@ def hashed_linear_score(
     operator distributes.
 
     Returns (id, n_tokens, logit, label) for every doc; ``logit`` is
-    ROUND((bias_int + Σ w_int) / WEIGHT_SCALE, round_to) and ``label``
+    ROUND((bias_int + Σ w_int) / WEIGHT_SCALE, 6) and ``label``
     a BIGINT 0/1 on the INTEGER sum's sign — weights are quantized to
     integer multiples of 2^-16 (the fixed-point posture real serving
     systems use), so the per-doc sum is exact BIGINT arithmetic and no
@@ -842,7 +789,7 @@ def hashed_linear_score(
     # F.size on a NULL array is -1 under legacy sizeOfNull, so the
     # coalesce must happen on the ARRAY, not the size
     toks = F.coalesce(
-        TX.tokens(F.lower(F.col(text_col))), F.array().cast("array<string>")
+        TX.tokens(F.lower(F.col(TEXT))), F.array().cast("array<string>")
     )
 
     def w_int(tok: F.Column) -> F.Column:
@@ -857,7 +804,7 @@ def hashed_linear_score(
     n_tokens = F.size(toks).cast("long").alias("n_tokens")
     if weights is None:
         scaled = docs.select(
-            F.col(id_col),
+            F.col(DOC_ID),
             n_tokens,
             # NULL text folds to a NULL sum — coalesce to 0 so the doc
             # scores exactly bias, like the oracle's COALESCE(ls, 0)
@@ -876,23 +823,23 @@ def hashed_linear_score(
         )
     else:
         tok = docs.select(
-            F.col(id_col), F.explode(toks).alias("token")
-        ).select(F.col(id_col), _hash_bucket(F.col("token"), dim).alias("bucket"))
+            F.col(DOC_ID), F.explode(toks).alias("token")
+        ).select(F.col(DOC_ID), _hash_bucket(F.col("token"), dim).alias("bucket"))
         wt = weights.select(
             F.col("bucket"), F.col("w_int").cast("long").alias("_w")
         )
         sums = (
             tok.join(F.broadcast(wt), "bucket", "left")
-            .groupBy(id_col)
+            .groupBy(DOC_ID)
             .agg(F.sum(F.coalesce(F.col("_w"), F.lit(0))).alias("_s"))
         )
         scaled = (
             docs.select(
-                F.col(id_col), n_tokens
+                F.col(DOC_ID), n_tokens
             )
-            .join(sums, id_col, "left")
+            .join(sums, DOC_ID, "left")
             .select(
-                F.col(id_col),
+                F.col(DOC_ID),
                 "n_tokens",
                 (
                     F.lit(int(bias)).cast("long")
@@ -901,20 +848,14 @@ def hashed_linear_score(
             )
         )
     return scaled.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         "n_tokens",
-        F.round(F.col("ls") / F.lit(float(WEIGHT_SCALE)), round_to).alias("logit"),
+        F.round(F.col("ls") / F.lit(float(WEIGHT_SCALE)), 6).alias("logit"),
         (F.col("ls") > 0).cast("long").alias("label"),
     )
 
 
-def oov_rate(
-    docs: DataFrame,
-    vocab_size: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def oov_rate(docs: DataFrame, vocab_size: int) -> DataFrame:
     """Out-of-vocabulary rate per document for a frequency-cut
     vocabulary — the tokenizer/vocab-design metric: fix the vocabulary
     to the ``vocab_size`` most frequent corpus tokens (ties → token
@@ -937,7 +878,7 @@ def oov_rate(
     if vocab_size < 1:
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
     tok = docs.select(
-        F.col(id_col), F.explode(TX.tokens(F.lower(F.col(text_col)))).alias("token")
+        F.col(DOC_ID), F.explode(TX.tokens(F.lower(F.col(TEXT)))).alias("token")
     )
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     vocab = (
@@ -945,33 +886,28 @@ def oov_rate(
     )
     oov = (
         tok.join(F.broadcast(vocab), "token", "left_anti")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(F.count(F.lit(1)).cast("long").alias("n_oov"))
     )
     base = docs.select(
-        F.col(id_col),
-        F.size(TX.tokens(F.lower(F.col(text_col)))).cast("long").alias("n_tokens"),
+        F.col(DOC_ID),
+        F.size(TX.tokens(F.lower(F.col(TEXT)))).cast("long").alias("n_tokens"),
     )
     nv = F.coalesce("n_oov", F.lit(0)).cast("long")
-    return base.join(oov, id_col, "left").select(
-        F.col(id_col),
+    return base.join(oov, DOC_ID, "left").select(
+        F.col(DOC_ID),
         "n_tokens",
         nv.alias("n_oov"),
         F.when(
             F.col("n_tokens") > 0,
-            F.round(nv.cast("double") / F.col("n_tokens").cast("double"), round_to),
+            F.round(nv.cast("double") / F.col("n_tokens").cast("double"), 6),
         )
         .otherwise(F.lit(0.0))
         .alias("oov_frac"),
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-``k`` terms by smoothed TF-IDF
     (``tf * (ln((N+1)/(df+1)) + 1)`` — the scikit-learn smoothing), the
     keyword-extraction / quality-signal stage of a corpus pipeline.
@@ -990,13 +926,13 @@ def tfidf_top_terms(
     """
     tf = (
         docs.select(
-            F.col(id_col), F.explode(TX.tokens(F.lower(F.col(text_col)))).alias("term")
+            F.col(DOC_ID), F.explode(TX.tokens(F.lower(F.col(TEXT)))).alias("term")
         )
-        .groupBy(id_col, "term")
+        .groupBy(DOC_ID, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
-    n_docs = docs.agg(F.countDistinct(id_col).alias("n_docs"))
+    n_docs = docs.agg(F.countDistinct(DOC_ID).alias("n_docs"))
     score = F.round(
         F.col("tf").cast("double")
         * (
@@ -1012,14 +948,14 @@ def tfidf_top_terms(
         tf.join(df, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            F.col(id_col),
+            F.col(DOC_ID),
             "term",
             F.col("tf").cast("long").alias("tf"),
             F.col("doc_freq").cast("long").alias("doc_freq"),
             score.alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), "term")
+    w = Window.partitionBy(DOC_ID).orderBy(F.col("score").desc(), "term")
     return scored.withColumn(
         "rank", F.row_number().over(w).cast("long")
     ).filter(F.col("rank") <= k)
@@ -1029,9 +965,6 @@ def mixture_resample(
     docs: DataFrame,
     strata_col: str,
     weights: dict[str, float],
-    id_col: str = "doc_id",
-    salt: str = "mix",
-    resolution: int = 1_000_000,
 ) -> DataFrame:
     """Data-mixture resampling with REPETITION: realize per-stratum
     target weights (e.g. "2.5× wiki, 0.3× crawl" domain mixing for a
@@ -1053,21 +986,21 @@ def mixture_resample(
     bad = {s: w for s, w in weights.items() if w < 0}
     if bad:
         raise ValueError(f"mixture weights must be >= 0, got {bad}")
-    h = F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(salt)))
-    u = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % resolution
+    h = F.md5(F.concat_ws(":", F.col(DOC_ID).cast("string"), F.lit("mix")))
+    u = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % 1_000_000
     base = F.lit(0)
     thr = F.lit(-1)
     for stratum, w in sorted(weights.items()):
         whole = int(w)
-        frac = int(round((w - whole) * resolution))
+        frac = int(round((w - whole) * 1_000_000))
         base = F.when(F.col(strata_col) == stratum, F.lit(whole)).otherwise(base)
         thr = F.when(F.col(strata_col) == stratum, F.lit(frac)).otherwise(thr)
     n = (base + (u < thr).cast("int")).alias("n")
     return (
-        docs.select(F.col(id_col), F.col(strata_col), n)
+        docs.select(F.col(DOC_ID), F.col(strata_col), n)
         .filter(F.col("n") >= 1)
         .select(
-            id_col,
+            DOC_ID,
             strata_col,
             F.explode(F.sequence(F.lit(1), F.col("n"))).alias("copy"),
         )
@@ -1079,9 +1012,6 @@ def temperature_mixture(
     docs: DataFrame,
     strata_col: str,
     alpha: float = 0.5,
-    id_col: str = "doc_id",
-    salt: str = "mix",
-    resolution: int = 1_000_000,
 ) -> DataFrame:
     """Temperature-scaled mixture resampling toward balance — the
     multilingual-sampling family (mT5/XLM-R style p^alpha damping):
@@ -1129,8 +1059,8 @@ def temperature_mixture(
     }
     if not counts:
         return mixture_resample(
-            docs, strata_col, {}, id_col=id_col, salt=salt, resolution=resolution
-        ).withColumn("w", F.lit(0.0)).select(id_col, strata_col, "w", "copy")
+            docs, strata_col, {}
+        ).withColumn("w", F.lit(0.0)).select(DOC_ID, strata_col, "w", "copy")
     n_max = max(counts.values())
     weights = {
         s: _round_half_up(
@@ -1139,20 +1069,15 @@ def temperature_mixture(
         for s, n in counts.items()
     }
     mixed = mixture_resample(
-        docs, strata_col, weights, id_col=id_col, salt=salt, resolution=resolution
+        docs, strata_col, weights
     )
     wlit = F.lit(0.0)
     for s, w in sorted(weights.items()):
         wlit = F.when(F.col(strata_col) == s, F.lit(w)).otherwise(wlit)
-    return mixed.select(id_col, strata_col, wlit.alias("w"), "copy")
+    return mixed.select(DOC_ID, strata_col, wlit.alias("w"), "copy")
 
 
-def unigram_logprob(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     unigram distribution — the language-model quality-filter stage
     (CCNet scores docs with a KenLM n-gram model; the unigram model is
@@ -1168,14 +1093,14 @@ def unigram_logprob(
     doc — no window, no driver collect.
     """
     tok = docs.select(
-        F.col(id_col), F.explode(TX.tokens(F.lower(F.col(text_col)))).alias("token")
+        F.col(DOC_ID), F.explode(TX.tokens(F.lower(F.col(TEXT)))).alias("token")
     )
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
     return (
         tok.join(counts, "token")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             F.round(
@@ -1185,26 +1110,13 @@ def unigram_logprob(
                         / F.col("total").cast("double")
                     )
                 ),
-                round_to,
+                6,
             ).alias("avg_logprob"),
         )
     )
 
 
-def quality_filter(
-    docs: DataFrame,
-    min_tokens: int = 40,
-    max_tokens: int = 70,
-    min_mean_len: float = 4.3,
-    max_mean_len: float = 4.7,
-    min_alpha_ratio: float = 0.8,
-    min_stopwords: int = 2,
-    min_distinct_ratio: float = 0.35,
-    stopwords: tuple[str, ...] = ("a", "the"),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def quality_filter(docs: DataFrame) -> DataFrame:
     """Gopher-style composite document quality filter (Rae et al. 2021
     §A1.1): per-document signals plus one 0/1 flag per rule and an
     overall ``passes`` — the actual keep/drop decision stage a training
@@ -1222,28 +1134,28 @@ def quality_filter(
 
     Cross-engine determinism: char counts and token counts are exact
     integers, so every ratio is the same double on both engines;
-    ratios are rounded to ``round_to`` before the threshold compare so
+    ratios are rounded to 6 dp before the threshold compare so
     the emitted value and the flag derive from the same number.
     """
-    toks = TX.tokens(F.lower(F.col(text_col)))
-    staged = _barrier(docs, F.col(id_col), toks.alias("toks"))
+    toks = TX.tokens(F.lower(F.col(TEXT)))
+    staged = _barrier(docs, F.col(DOC_ID), toks.alias("toks"))
     n = F.size(F.col("toks")).cast("long")
     sum_chars = F.aggregate(
         F.col("toks"), F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
     )
-    mean_len = F.round(sum_chars.cast("double") / n.cast("double"), round_to)
+    mean_len = F.round(sum_chars.cast("double") / n.cast("double"), 6)
     n_alpha = F.size(F.filter(F.col("toks"), lambda t: t.rlike("[a-z]")))
-    alpha_ratio = F.round(n_alpha.cast("double") / n.cast("double"), round_to)
+    alpha_ratio = F.round(n_alpha.cast("double") / n.cast("double"), 6)
     n_stop = F.size(
-        F.filter(F.col("toks"), lambda t: t.isin(*stopwords))
+        F.filter(F.col("toks"), lambda t: t.isin("a", "the"))
     ).cast("long")
     distinct_ratio = F.round(
         F.size(F.array_distinct(F.col("toks"))).cast("double") / n.cast("double"),
-        round_to,
+        6,
     )
     sig = _barrier(
         staged,
-        F.col(id_col),
+        F.col(DOC_ID),
         n.alias("n_tokens"),
         mean_len.alias("mean_token_len"),
         alpha_ratio.alias("alpha_ratio"),
@@ -1255,21 +1167,21 @@ def quality_filter(
     # NULL, while the DuckDB oracle's CASE WHEN yields 0 (ADVICE r6).
     # Define it explicitly: an UNDEFINED signal does not fail its own
     # rule — the empty doc is still dropped because fail_length fires
-    # (0 < min_tokens), so `passes` is unaffected; only the per-rule
+    # (0 < 40 tokens), so `passes` is unaffected; only the per-rule
     # flags needed pinning.
     flag = lambda c: F.coalesce(c.cast("int"), F.lit(0)).cast("long")  # noqa: E731
     fail_length = flag(
-        (F.col("n_tokens") < min_tokens) | (F.col("n_tokens") > max_tokens)
+        (F.col("n_tokens") < 40) | (F.col("n_tokens") > 70)
     )
     fail_mean_len = flag(
-        (F.col("mean_token_len") < min_mean_len)
-        | (F.col("mean_token_len") > max_mean_len)
+        (F.col("mean_token_len") < 4.3)
+        | (F.col("mean_token_len") > 4.7)
     )
-    fail_alpha = flag(F.col("alpha_ratio") < min_alpha_ratio)
-    fail_stop = flag(F.col("n_stopwords") < min_stopwords)
-    fail_diversity = flag(F.col("distinct_ratio") < min_distinct_ratio)
+    fail_alpha = flag(F.col("alpha_ratio") < 0.8)
+    fail_stop = flag(F.col("n_stopwords") < 2)
+    fail_diversity = flag(F.col("distinct_ratio") < 0.35)
     out = sig.select(
-        id_col,
+        DOC_ID,
         "n_tokens",
         "mean_token_len",
         "alpha_ratio",
@@ -1295,11 +1207,6 @@ def bm25_topk(
     docs: DataFrame,
     queries: list[tuple[int, str]],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
 ) -> DataFrame:
     """BM25 top-``k`` document retrieval for a batch of text queries —
     the classic sparse-retrieval scorer (Robertson-Sparck Jones; the
@@ -1308,6 +1215,8 @@ def bm25_topk(
         score(q, d) = sum over distinct query terms t of
             idf(t) * tf(t,d)*(k1+1) / (tf(t,d) + k1*(1 - b + b*|d|/avgdl))
         idf(t) = ln(1 + (N - df(t) + 0.5) / (df(t) + 0.5))   (Lucene form)
+
+    with the Lucene defaults k1 = 1.2 and b = 0.75.
 
     Query term frequency is ignored (distinct terms), matching Lucene.
     Returns (query_id, doc_id, n_terms, score, rank), rank per query by
@@ -1326,7 +1235,7 @@ def bm25_topk(
     Cross-engine determinism: tf/df/dl/N are exact integers; every
     per-term float op is written in the same left-associated order the
     DuckDB oracle uses, and the per-(query, doc) SUM is rounded to
-    ``round_to`` before ranking (the q_tfidf/q_unigram_logprob LN- and
+    6 dp before ranking (the q_tfidf/q_unigram_logprob LN- and
     sum-parity precedent).
     """
     spark = docs.sparkSession
@@ -1346,18 +1255,18 @@ def bm25_topk(
     # (spread+persist: 2.62 s). Same loser shape as the other
     # explode->aggregate text queries.
     dl = docs.select(
-        F.col(id_col), F.size(TX.tokens(F.lower(F.col(text_col)))).cast("long").alias("dl")
+        F.col(DOC_ID), F.size(TX.tokens(F.lower(F.col(TEXT)))).cast("long").alias("dl")
     )
     stats = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     tok = docs.select(
-        F.col(id_col), F.explode(TX.tokens(F.lower(F.col(text_col)))).alias("term")
+        F.col(DOC_ID), F.explode(TX.tokens(F.lower(F.col(TEXT)))).alias("term")
     )
     tf = (
         tok.join(F.broadcast(term_set), "term")
-        .groupBy(id_col, "term")
+        .groupBy(DOC_ID, "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
@@ -1366,22 +1275,22 @@ def bm25_topk(
         F.lit(1.0)
         + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
-    denom = tfd + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / F.col("avgdl")
+    denom = tfd + F.lit(1.2) * (
+        F.lit(1.0 - 0.75) + F.lit(0.75) * F.col("dl").cast("double") / F.col("avgdl")
     )
-    term_score = idf * (tfd * F.lit(k1 + 1.0)) / denom
+    term_score = idf * (tfd * F.lit(1.2 + 1.0)) / denom
     scored = (
         tf.join(F.broadcast(qterms), "term")
         .join(F.broadcast(dft), "term")
-        .join(dl, id_col)
+        .join(dl, DOC_ID)
         .crossJoin(F.broadcast(stats))
-        .select("query_id", id_col, term_score.alias("ts"))
+        .select("query_id", DOC_ID, term_score.alias("ts"))
     )
-    agg = scored.groupBy("query_id", id_col).agg(
+    agg = scored.groupBy("query_id", DOC_ID).agg(
         F.count(F.lit(1)).cast("long").alias("n_terms"),
-        F.round(F.sum("ts"), round_to).alias("score"),
+        F.round(F.sum("ts"), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(DOC_ID))
     return agg.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= k
     )
@@ -1393,11 +1302,6 @@ def hybrid_rrf_topk(
     queries: list[tuple[int, str]],
     k: int = 10,
     arm_k: int = 20,
-    k_rrf: int = 60,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Hybrid retrieval by reciprocal-rank fusion (Cormack et al.,
     SIGIR 2009 — the Elasticsearch/OpenSearch/Vespa hybrid default):
@@ -1405,7 +1309,7 @@ def hybrid_rrf_topk(
     ``emb`` (the embedding row whose ``vec_id`` equals the query id is
     that query's vector), scoring each candidate
 
-        rrf(q, d) = 1/(k_rrf + lex_rank) + 1/(k_rrf + dense_rank)
+        rrf(q, d) = 1/(60 + lex_rank) + 1/(60 + dense_rank)
 
     with a term contributed only by arms that retrieved d in their
     top-``arm_k``. RRF needs only RANKS, never score calibration, which
@@ -1425,81 +1329,73 @@ def hybrid_rrf_topk(
     equi-join plus one per-query rank window over <= 2*arm_k rows.
 
     Cross-engine determinism: both arms already rank on rounded scores
-    with id tie-breaks; 1.0/(k_rrf + rank) is exact-integer division
+    with id tie-breaks; 1.0/(60 + rank) is exact-integer division
     into double, the two terms add in the written (lex + dense) order,
     and the fused score rounds to 6 before the final rank.
     """
     from .similarity import brute_force_topk
 
     lex = bm25_topk(
-        docs, queries, k=arm_k, id_col=id_col, text_col=text_col
-    ).select("query_id", id_col, F.col("rank").alias("lex_rank"))
-    qvecs = emb.filter(F.col(vec_id_col).isin([qid for qid, _ in queries]))
+        docs, queries, k=arm_k
+    ).select("query_id", DOC_ID, F.col("rank").alias("lex_rank"))
+    qvecs = emb.filter(F.col(VEC_ID).isin([qid for qid, _ in queries]))
     dense = brute_force_topk(
-        qvecs, emb, k=arm_k, id_col=vec_id_col, vec_col=vec_col
+        qvecs, emb, k=arm_k
     ).select(
-        "query_id", F.col("neighbor_id").alias(id_col), F.col("rank").alias("dense_rank")
+        "query_id", F.col("neighbor_id").alias(DOC_ID), F.col("rank").alias("dense_rank")
     )
-    fused = lex.join(dense, ["query_id", id_col], "full_outer")
+    fused = lex.join(dense, ["query_id", DOC_ID], "full_outer")
     rrf = F.round(
-        F.coalesce(F.lit(1.0) / (F.lit(k_rrf) + F.col("lex_rank")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(k_rrf) + F.col("dense_rank")), F.lit(0.0)),
+        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("lex_rank")), F.lit(0.0))
+        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("dense_rank")), F.lit(0.0)),
         6,
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("rrf").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("rrf").desc(), F.col(DOC_ID))
     return (
         fused.withColumn("rrf", rrf)
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "lex_rank", "dense_rank", "rrf", "rank")
+        .select("query_id", DOC_ID, "lex_rank", "dense_rank", "rrf", "rank")
     )
 
 
-def dsir_importance(
-    docs: DataFrame,
-    target: DataFrame,
-    n_buckets: int = 256,
-    k: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def dsir_importance(docs: DataFrame, target: DataFrame) -> DataFrame:
     """DSIR-style data selection by importance resampling (Xie et al.
     2023): score every raw document by how much more likely its hashed
     token features are under a TARGET distribution (a small trusted
     subset — wiki-quality pages, a curated domain) than under the raw
-    corpus distribution, then keep the top-``k``:
+    corpus distribution, then keep the top 100:
 
         log w(d) = sum over tokens of
             ln p_target(bucket(tok)) - ln p_raw(bucket(tok))
 
-    with md5-hashed token buckets (``n_buckets``) and Laplace
+    with md5-hashed token buckets (256 of them) and Laplace
     smoothing ((c+1)/(total+B)) on both distributions. The bucket hash
     is the same engine-portable md5-prefix integer the split/sampler
     operators use, so runs, engines, and layouts agree.
 
-    Returns the top-``k`` raw docs as (id, n_tokens, logratio, rank),
+    Returns the top 100 raw docs as (id, n_tokens, logratio, rank),
     rank by (rounded logratio DESC, id ASC).
 
     Scale: two token explodes (raw + target) each feeding ONE
     map-side-combined groupBy(bucket); the log-ratio table is at most
-    ``n_buckets`` rows and BROADCASTS to the token-level scoring join;
+    256 rows and BROADCASTS to the token-level scoring join;
     the per-doc reduce is one groupBy(doc). The top-k cut is
     orderBy+limit — a TakeOrdered tree reduction, no global sort — and
-    the rank window runs over k rows only (vocab_top_terms precedent).
+    the rank window runs over 100 rows only (vocab_top_terms precedent).
 
     Cross-engine determinism: bucket counts and totals are exact
     integers so each bucket's log-ratio is the same double on both
-    engines; the per-doc SUM rounds to ``round_to`` before ranking
+    engines; the per-doc SUM rounds to 6 dp before ranking
     (q_unigram_logprob sum-parity precedent).
     """
 
     def bucketed(d: DataFrame) -> DataFrame:
         tok = d.select(
-            F.col(id_col), F.explode(TX.tokens(F.lower(F.col(text_col)))).alias("token")
+            F.col(DOC_ID), F.explode(TX.tokens(F.lower(F.col(TEXT)))).alias("token")
         )
         b = F.conv(F.substring(F.md5(F.col("token")), 1, 8), 16, 10).cast("long")
-        return tok.select(F.col(id_col), (b % n_buckets).alias("bucket"))
+        return tok.select(F.col(DOC_ID), (b % 256).alias("bucket"))
 
     raw = bucketed(docs)
     tgt = bucketed(target)
@@ -1509,10 +1405,10 @@ def dsir_importance(
     tgt_total = tgt.agg(F.count(F.lit(1)).alias("tn"))
     lr = F.log(
         (F.coalesce(F.col("tc"), F.lit(0)).cast("double") + F.lit(1.0))
-        / (F.col("tn").cast("double") + F.lit(float(n_buckets)))
+        / (F.col("tn").cast("double") + F.lit(256.0))
     ) - F.log(
         (F.col("rc").cast("double") + F.lit(1.0))
-        / (F.col("rn").cast("double") + F.lit(float(n_buckets)))
+        / (F.col("rn").cast("double") + F.lit(256.0))
     )
     ratio = (
         raw_counts.join(tgt_counts, "bucket", "left")
@@ -1522,32 +1418,26 @@ def dsir_importance(
     )
     scored = (
         raw.join(F.broadcast(ratio), "bucket")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.round(F.sum("lr"), round_to).alias("logratio"),
+            F.round(F.sum("lr"), 6).alias("logratio"),
         )
     )
-    top = scored.orderBy(F.col("logratio").desc(), id_col).limit(k)
-    w = Window.orderBy(F.col("logratio").desc(), id_col)
+    top = scored.orderBy(F.col("logratio").desc(), DOC_ID).limit(100)
+    w = Window.orderBy(F.col("logratio").desc(), DOC_ID)
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def global_shuffle(
-    docs: DataFrame,
-    n_shards: int = 32,
-    salt: str = "shuffle",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def global_shuffle(docs: DataFrame, n_shards: int = 32) -> DataFrame:
     """Deterministic global training-order shuffle: the examples-
     randomization step before packing/writing a training corpus.
-    Each row gets a pseudo-random md5 sort key (id ‖ ':' ‖ salt — a
+    Each row gets a pseudo-random md5 sort key (id ‖ ':shuffle' — a
     pure function of the row id like assign_split, so the order is
     reproducible across runs, engines, partitionings, and corpus
     growth); rows land in ``shard`` = first hash byte-pair mod
     ``n_shards`` and are ordered WITHIN their shard. Reading shards
-    round-robin (or concatenated) yields the shuffled order; a new
-    ``salt`` is a fresh epoch permutation.
+    round-robin (or concatenated) yields the shuffled order.
 
     Returns (id, shard, pos) with pos 0-based within shard.
 
@@ -1558,27 +1448,20 @@ def global_shuffle(
     at full parallelism). Ties on the (astronomically unlikely) equal
     hash break by id.
     """
-    h = F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(salt)))
+    h = F.md5(F.concat_ws(":", F.col(DOC_ID).cast("string"), F.lit("shuffle")))
     shard = (F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % n_shards).alias(
         "shard"
     )
-    base = docs.select(F.col(id_col), h.alias("h"), shard)
-    w = Window.partitionBy("shard").orderBy("h", id_col)
+    base = docs.select(F.col(DOC_ID), h.alias("h"), shard)
+    w = Window.partitionBy("shard").orderBy("h", DOC_ID)
     return base.select(
-        id_col,
+        DOC_ID,
         F.col("shard").cast("long").alias("shard"),
         (F.row_number().over(w) - 1).cast("long").alias("pos"),
     )
 
 
-def corpus_stats(
-    docs: DataFrame,
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    round_to: int = 6,
-) -> DataFrame:
+def corpus_stats(docs: DataFrame, lang_col: str = "lang") -> DataFrame:
     """Per-stratum corpus report card — the summary table a dataset
     release ships (per source: volume, token budget, language spread,
     quality pass rate, exact-duplicate rate). Composes
@@ -1592,39 +1475,35 @@ def corpus_stats(
     expand-based distinct aggregation with map-side partials. The
     counts are exact: a hash-gated report must be.
     """
-    qf = quality_filter(docs, id_col=id_col, text_col=text_col).select(
-        F.col(id_col), F.col("passes")
+    qf = quality_filter(docs).select(
+        F.col(DOC_ID), F.col("passes")
     )
     base = docs.select(
-        F.col(id_col),
-        F.col(strata_col),
+        F.col(DOC_ID),
+        F.col("source"),
         F.col(lang_col).alias("lang"),
-        F.md5(F.col(text_col)).alias("h"),
-        F.size(TX.tokens(F.lower(F.col(text_col)))).cast("long").alias("n_toks"),
+        F.md5(F.col(TEXT)).alias("h"),
+        F.size(TX.tokens(F.lower(F.col(TEXT)))).cast("long").alias("n_toks"),
     )
     return (
-        base.join(qf, id_col)
-        .groupBy(strata_col)
+        base.join(qf, DOC_ID)
+        .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_toks").cast("long").alias("total_tokens"),
-            F.round(F.avg("n_toks"), round_to).alias("mean_tokens"),
+            F.round(F.avg("n_toks"), 6).alias("mean_tokens"),
             F.countDistinct("lang").cast("long").alias("n_langs"),
-            F.round(F.avg("passes"), round_to).alias("pass_rate"),
+            F.round(F.avg("passes"), 6).alias("pass_rate"),
             F.round(
                 F.lit(1.0)
                 - F.countDistinct("h").cast("double") / F.count(F.lit(1)),
-                round_to,
+                6,
             ).alias("dup_rate"),
         )
     )
 
 
-def line_dedup(
-    pages: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def line_dedup(pages: DataFrame) -> DataFrame:
     """C4-style corpus-wide line deduplication (Raffel et al. 2020 §2.2
     discard-all-but-one): every distinct line survives only at its
     FIRST occurrence — lowest (doc, line index) — and each page is
@@ -1640,17 +1519,17 @@ def line_dedup(
     collect_list sorted per row. No driver state, no global sort.
     """
     lines = pages.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "line"),
+        F.col(DOC_ID),
+        F.posexplode(F.split(F.col(TEXT), "\n")).alias("idx", "line"),
     )
-    w = Window.partitionBy("line").orderBy(id_col, "idx")
+    w = Window.partitionBy("line").orderBy(DOC_ID, "idx")
     kept = (
         lines.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    totals = lines.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("n_lines"))
-    rebuilt = kept.groupBy(id_col).agg(
+    totals = lines.groupBy(DOC_ID).agg(F.count(F.lit(1)).cast("long").alias("n_lines"))
+    rebuilt = kept.groupBy(DOC_ID).agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),
         F.array_join(
             F.transform(
@@ -1660,26 +1539,20 @@ def line_dedup(
             "\n",
         ).alias("text"),
     )
-    return totals.join(rebuilt, id_col, "left").select(
-        id_col,
+    return totals.join(rebuilt, DOC_ID, "left").select(
+        DOC_ID,
         "n_lines",
         F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
         F.coalesce("text", F.lit("")).alias("text"),
     )
 
 
-def bigram_logprob(
-    docs: DataFrame,
-    lam: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean interpolated bigram log-probability under the
     corpus's own bigram/unigram statistics — the n-gram upgrade of
     ``unigram_logprob`` (one step closer to CCNet's KenLM scorer):
 
-        p(w2 | w1) = lam * c(w1 w2)/c(w1 ·) + (1-lam) * c(w2)/total
+        p(w2 | w1) = 0.7 * c(w1 w2)/c(w1 ·) + 0.3 * c(w2)/total
 
     scored over positions 2..n and averaged. Documents of corpus-
     typical word SEQUENCES (not just typical words) score high.
@@ -1694,29 +1567,29 @@ def bigram_logprob(
     the three count tables BY KEY (AQE broadcasts the vocabulary-sized
     sides when they fit) and reduces per doc. Counts are exact
     integers, the interpolation is written in the same left-associated
-    order as the oracle, and the per-doc AVG rounds to ``round_to``
+    order as the oracle, and the per-doc AVG rounds to 6 dp
     (q_unigram_logprob precedent).
     """
-    toks = TX.tokens(F.lower(F.col(text_col)))
+    toks = TX.tokens(F.lower(F.col(TEXT)))
     n0 = F.size(F.col("__toks")).cast("long")
-    staged = _barrier(docs, F.col(id_col), toks.alias("__toks"))
+    staged = _barrier(docs, F.col(DOC_ID), toks.alias("__toks"))
     bg = F.zip_with(
         F.slice(F.col("__toks"), 1, F.greatest(n0 - 1, F.lit(0)).cast("int")),
         F.slice(F.col("__toks"), 2, F.greatest(n0 - 1, F.lit(0)).cast("int")),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    pos = staged.select(F.col(id_col), F.explode(bg).alias("b")).select(
-        F.col(id_col), F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
+    pos = staged.select(F.col(DOC_ID), F.explode(bg).alias("b")).select(
+        F.col(DOC_ID), F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
     bc = pos.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
     ctx = bc.groupBy("w1").agg(F.sum("cb").alias("cc"))
     uni = docs.select(
-        F.explode(TX.tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(TX.tokens(F.lower(F.col(TEXT)))).alias("tok")
     ).groupBy("tok").agg(F.count(F.lit(1)).alias("cu"))
     total = uni.agg(F.sum("cu").alias("total"))
-    p = F.lit(lam) * (
+    p = F.lit(0.7) * (
         F.col("cb").cast("double") / F.col("cc").cast("double")
-    ) + F.lit(1.0 - lam) * (
+    ) + F.lit(1.0 - 0.7) * (
         F.col("cu").cast("double") / F.col("total").cast("double")
     )
     return (
@@ -1724,21 +1597,15 @@ def bigram_logprob(
         .join(ctx, "w1")
         .join(uni, pos.w2 == F.col("tok"))
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.round(F.avg(F.log(p)), round_to).alias("avg_logprob"),
+            F.round(F.avg(F.log(p)), 6).alias("avg_logprob"),
         )
     )
 
 
-def kneser_ney_logprob(
-    docs: DataFrame,
-    discount: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def kneser_ney_logprob(docs: DataFrame, discount: float = 0.75) -> DataFrame:
     """Per-document mean INTERPOLATED KNESER-NEY bigram log-probability
     under the corpus's own statistics — the actual smoothing family
     CCNet's KenLM scorer uses (Wenzek et al. 2020), one rung above
@@ -1769,16 +1636,16 @@ def kneser_ney_logprob(
     """
     if not (0.0 < discount < 1.0):
         raise ValueError(f"discount must be in (0, 1), got {discount}")
-    toks = TX.tokens(F.lower(F.col(text_col)))
+    toks = TX.tokens(F.lower(F.col(TEXT)))
     n0 = F.size(F.col("__toks")).cast("long")
-    staged = _barrier(docs, F.col(id_col), toks.alias("__toks"))
+    staged = _barrier(docs, F.col(DOC_ID), toks.alias("__toks"))
     bg = F.zip_with(
         F.slice(F.col("__toks"), 1, F.greatest(n0 - 1, F.lit(0)).cast("int")),
         F.slice(F.col("__toks"), 2, F.greatest(n0 - 1, F.lit(0)).cast("int")),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    pos = staged.select(F.col(id_col), F.explode(bg).alias("b")).select(
-        F.col(id_col), F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
+    pos = staged.select(F.col(DOC_ID), F.explode(bg).alias("b")).select(
+        F.col(DOC_ID), F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
     bc = pos.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
     ctx = bc.groupBy("w1").agg(
@@ -1799,23 +1666,15 @@ def kneser_ney_logprob(
         .join(ctx, "w1")
         .join(cont, "w2")
         .crossJoin(F.broadcast(types))
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.round(F.avg(F.log(p)), round_to).alias("avg_logprob"),
+            F.round(F.avg(F.log(p)), 6).alias("avg_logprob"),
         )
     )
 
 
-def perplexity_buckets(
-    docs: DataFrame,
-    n_buckets: int = 3,
-    lam: float = 0.7,
-    hist_round: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def perplexity_buckets(docs: DataFrame, n_buckets: int = 3) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al., LREC 2020):
     score every document with the corpus bigram LM
     (``bigram_logprob``), then split the corpus into ``n_buckets``
@@ -1828,7 +1687,7 @@ def perplexity_buckets(
     in the hash-compared output.
 
     Returns per doc (id, n_bigrams, avg_nll, q_nll, bucket, label)
-    where q_nll is avg_nll quantized to ``hist_round`` decimals (the
+    where q_nll is avg_nll quantized to 3 decimals (the
     histogram key the tiers are computed on), bucket is 1..n_buckets,
     and label is head/middle/tail. Single-token and empty docs drop
     (no bigram positions — inherited from the scorer).
@@ -1836,7 +1695,7 @@ def perplexity_buckets(
     Scale — how equal-population tiers avoid a global sort: an NTILE
     over the corpus would global-sort into one partition. Instead the
     quantized scores groupBy into a HISTOGRAM whose cardinality is
-    bounded by the score range times 10^hist_round (thousands of rows
+    bounded by the score range times 10^3 (thousands of rows
     at any corpus size), the cumulative count runs as a window over
     that bounded histogram, each value's bucket is the pure-integer
     ceil-division (cum*n_buckets + N - 1) div N, and the value->bucket
@@ -1850,12 +1709,12 @@ def perplexity_buckets(
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    lp = bigram_logprob(docs, lam=lam, id_col=id_col, text_col=text_col, round_to=round_to)
+    lp = bigram_logprob(docs)
     scored = lp.select(
-        id_col,
+        DOC_ID,
         "n_bigrams",
-        F.round(F.lit(0.0) - F.col("avg_logprob"), round_to).alias("avg_nll"),
-        F.round(F.lit(0.0) - F.col("avg_logprob"), hist_round).alias("q_nll"),
+        F.round(F.lit(0.0) - F.col("avg_logprob"), 6).alias("avg_nll"),
+        F.round(F.lit(0.0) - F.col("avg_logprob"), 3).alias("q_nll"),
     )
     hist = scored.groupBy("q_nll").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     # single-partition window, but over the bounded histogram — the
@@ -1890,7 +1749,7 @@ def perplexity_buckets(
     )
     return (
         scored.join(F.broadcast(buckets), "q_nll")
-        .select(id_col, "n_bigrams", "avg_nll", "q_nll", "bucket", label.alias("label"))
+        .select(DOC_ID, "n_bigrams", "avg_nll", "q_nll", "bucket", label.alias("label"))
     )
 
 
@@ -1898,9 +1757,6 @@ def budget_select(
     scored: DataFrame,
     token_budget: int,
     score_col: str = "score",
-    tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    hist_round: int = 3,
 ) -> DataFrame:
     """Token-budget corpus selection — "take the best N tokens": keep
     the highest-``score_col`` documents until their token counts fill
@@ -1910,7 +1766,7 @@ def budget_select(
     Scale — the same bounded-histogram trick as ``perplexity_buckets``:
     ranking the corpus and cutting at a running token sum would be a
     global sort + unpartitioned window; instead scores quantize to
-    ``hist_round`` decimals, per-value token sums groupBy into a
+    3 decimals, per-value token sums groupBy into a
     BOUNDED histogram, the cumulative sum runs score-DESCENDING over
     that histogram, and the selected score values broadcast-join back.
     Selection is all-or-nothing per quantized score value: the
@@ -1925,12 +1781,12 @@ def budget_select(
     if token_budget < 0:
         raise ValueError(f"token_budget must be >= 0, got {token_budget}")
     base = scored.select(
-        F.col(id_col),
-        F.col(tokens_col).cast("long").alias(tokens_col),
-        F.round(F.col(score_col), hist_round).alias("q_score"),
+        F.col(DOC_ID),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.round(F.col(score_col), 3).alias("q_score"),
     ).filter(F.col("q_score").isNotNull())
     hist = base.groupBy("q_score").agg(
-        F.sum(tokens_col).cast("long").alias("bt")
+        F.sum("n_tokens").cast("long").alias("bt")
     )
     # score-descending window over the bounded histogram — the
     # vocabulary-sized-table posture, not a corpus sort
@@ -1944,7 +1800,7 @@ def budget_select(
         .select("q_score")
     )
     return base.join(F.broadcast(sel), "q_score").select(
-        id_col, tokens_col, "q_score"
+        DOC_ID, "n_tokens", "q_score"
     )
 
 
@@ -2046,11 +1902,7 @@ def _bpe_train_incremental(
     return merges
 
 
-def bpe_train(
-    docs: DataFrame,
-    n_merges: int = 10,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_train(docs: DataFrame, n_merges: int = 10) -> DataFrame:
     """Distributed BPE tokenizer training (Sennrich et al. 2016): learn
     ``n_merges`` merge rules over the corpus's word-frequency table.
     Each round finds the most frequent adjacent symbol pair (ties:
@@ -2085,7 +1937,7 @@ def bpe_train(
     spark = docs.sparkSession
     sep = _BPE_SEP
     words = (
-        docs.select(F.explode(TX.tokens(F.lower(F.col(text_col)))).alias("w"))
+        docs.select(F.explode(TX.tokens(F.lower(F.col(TEXT)))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -2155,13 +2007,7 @@ def bpe_train(
 MAX_CHAIN_MERGES = 64
 
 
-def bpe_encode_counts(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def bpe_encode_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned BPE merge table (``bpe_train`` output order
     matters — merges apply sequentially) and report per-document BPE
     token counts — the REAL token budget a trained tokenizer would
@@ -2203,7 +2049,7 @@ def bpe_encode_counts(
     docs = _spread(docs)
     if len(merges) > MAX_CHAIN_MERGES:
         return _bpe_encode_counts_ranked(
-            docs, merges, id_col, text_col, round_to
+            docs, merges, DOC_ID, TEXT, 6
         )
 
     def encode(word):
@@ -2222,10 +2068,10 @@ def bpe_encode_counts(
             )
         return s
 
-    toks = TX.tokens(F.lower(F.col(text_col)))
+    toks = TX.tokens(F.lower(F.col(TEXT)))
     staged = _barrier(
         docs,
-        F.col(id_col),
+        F.col(DOC_ID),
         F.transform(toks, encode).alias("ws"),
     )
     n_syms = F.aggregate(
@@ -2245,7 +2091,7 @@ def bpe_encode_counts(
     )
     out = _barrier(
         staged,
-        F.col(id_col),
+        F.col(DOC_ID),
         F.size(F.col("ws")).cast("long").alias("n_words"),
         n_chars.cast("long").alias("n_chars"),
         n_syms.cast("long").alias("n_bpe_tokens"),
@@ -2254,7 +2100,7 @@ def bpe_encode_counts(
         "chars_per_token",
         F.round(
             F.col("n_chars").cast("double") / F.col("n_bpe_tokens").cast("double"),
-            round_to,
+            6,
         ),
     )
 
@@ -2376,13 +2222,7 @@ def _bpe_encode_counts_ranked(
     )
 
 
-def ngram_diversity(
-    docs: DataFrame,
-    n_values: tuple[int, ...] = (1, 2, 3),
-    strata_col: str | None = None,
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def ngram_diversity(docs: DataFrame, strata_col: str | None = None) -> DataFrame:
     """Corpus distinct-n diversity (the distinct-1/distinct-2 metric of
     Li et al. 2016, standard in generation-quality and corpus-variety
     reports): for each n (and optional stratum), the fraction of n-gram
@@ -2395,7 +2235,7 @@ def ngram_diversity(
     this is the CORPUS-level diversity table a dataset card publishes.
 
     Scale: ONE corpus scan for every n (VERDICT r7 #3 — the per-n loop
-    used to rescan the corpus len(n_values) times): each doc builds all
+    used to rescan the corpus once per n): each doc builds all
     gram lengths as (n, ngram) structs in one narrow ``transform`` +
     ``concat``, a single explode feeds one map-side-combined
     groupBy(stratum?, n). Occurrences keep their multiplicity (the
@@ -2413,20 +2253,15 @@ def ngram_diversity(
     left-join — the old per-n ``groupBy()`` emitted exactly one row
     per n regardless).
     """
-    if not n_values:
-        raise ValueError("n_values must be non-empty")
-    for n in n_values:
-        if n < 1:
-            raise ValueError(f"n must be >= 1, got {n}")
     strata_proj = [F.col(strata_col).alias("stratum")] if strata_col else []
-    base = docs.select(*strata_proj, F.col(text_col).alias(text_col))
+    base = docs.select(*strata_proj, F.col(TEXT).alias(TEXT))
     n_splits = base.rdd.getNumPartitions()
     par = docs.sparkSession.sparkContext.defaultParallelism
     if n_splits < par:
         base = base.repartition(par)
-    toks = TX.tokens(F.lower(F.col(text_col)))
+    toks = TX.tokens(F.lower(F.col(TEXT)))
     arrs = []
-    for n in n_values:
+    for n in (1, 2, 3):
         if n == 1:
             grams = toks
         else:
@@ -2462,7 +2297,7 @@ def ngram_diversity(
         # the single-scan groupBy("n") would drop them where the old
         # per-n global aggregate could not
         scaffold = docs.sparkSession.createDataFrame(
-            [(int(n),) for n in n_values], "n long"
+            [(n,) for n in (1, 2, 3)], "n long"
         )
         agg = scaffold.join(agg, "n", "left").select(
             "n",
@@ -2479,31 +2314,24 @@ def ngram_diversity(
             F.round(
                 F.col("n_distinct").cast("double")
                 / F.col("n_total").cast("double"),
-                round_to,
+                6,
             ),
         ).alias("distinct_ratio"),
     )
 
 
-def tokenizer_fertility(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int = 6,
-) -> DataFrame:
+def tokenizer_fertility(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Per-stratum tokenizer fertility report — the standard
     multilingual-tokenizer health metric (tokens-per-word by language):
     a vocabulary trained on one distribution shreds under-represented
     strata into many more pieces, and this table is how that decision
-    gets reviewed. Per ``strata_col`` value:
+    gets reviewed. Per ``lang`` value:
 
       (stratum, n_docs, n_words, n_tokens, n_chars,
        fertility = n_tokens/n_words, chars_per_token = n_chars/n_tokens)
 
     under the learned ``merges`` (``bpe_train`` output), with the two
-    ratios rounded to ``round_to`` and NULL when their denominator is 0.
+    ratios rounded to 6 dp and NULL when their denominator is 0.
 
     Scale: the encode is ``bpe_encode_counts``' narrow per-doc map
     (chain or ranked arm by table size — unchanged dispatch); the
@@ -2512,10 +2340,10 @@ def tokenizer_fertility(
     exact BIGINTs, so the two divisions are single rounded IEEE ops —
     no float-accumulation parity question (the corpus_stats posture).
     """
-    enc = bpe_encode_counts(docs, merges, id_col=id_col, text_col=text_col)
-    base = docs.select(F.col(id_col), F.col(strata_col).alias("stratum"))
+    enc = bpe_encode_counts(docs, merges)
+    base = docs.select(F.col(DOC_ID), F.col("lang").alias("stratum"))
     g = (
-        enc.join(base, id_col)
+        enc.join(base, DOC_ID)
         .groupBy("stratum")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -2534,24 +2362,20 @@ def tokenizer_fertility(
             F.col("n_words") > 0,
             F.round(
                 F.col("n_tokens").cast("double") / F.col("n_words").cast("double"),
-                round_to,
+                6,
             ),
         ).alias("fertility"),
         F.when(
             F.col("n_tokens") > 0,
             F.round(
                 F.col("n_chars").cast("double") / F.col("n_tokens").cast("double"),
-                round_to,
+                6,
             ),
         ).alias("chars_per_token"),
     )
 
 
-def bpe_vocab(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> list[tuple[str, int]]:
+def bpe_vocab(docs: DataFrame, merges: list[tuple[str, str]]) -> list[tuple[str, int]]:
     """Deterministic tokenizer vocabulary for ``bpe_encode_ids``: the
     corpus alphabet (distinct characters of the lowercased whitespace
     tokens, sorted — UTF-8 byte order == code-point order, so Python
@@ -2568,7 +2392,7 @@ def bpe_vocab(
             F.explode(
                 F.flatten(
                     F.transform(
-                        TX.tokens(F.lower(F.col(text_col))),
+                        TX.tokens(F.lower(F.col(TEXT))),
                         lambda w: F.split(w, ""),
                     )
                 )
@@ -2588,8 +2412,6 @@ def bpe_encode_ids(
     docs: DataFrame,
     merges: list[tuple[str, str]],
     vocab: list[tuple[str, int]] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """The id-emitting encoder — what a training-data writer actually
     ships: per document the full BPE token-ID SEQUENCE (order
@@ -2612,9 +2434,9 @@ def bpe_encode_ids(
 
     docs = _spread(docs)
     if vocab is None:
-        vocab = bpe_vocab(docs, merges, text_col)
+        vocab = bpe_vocab(docs, merges)
     if len(merges) > MAX_CHAIN_MERGES:
-        return _bpe_encode_ids_ranked(docs, merges, dict(vocab), id_col, text_col)
+        return _bpe_encode_ids_ranked(docs, merges, dict(vocab), DOC_ID, TEXT)
 
     def encode(word):
         s = F.concat_ws(
@@ -2635,10 +2457,10 @@ def bpe_encode_ids(
     vmap = F.create_map(
         *[lit for sym, vid in vocab for lit in (F.lit(sym), F.lit(vid))]
     )
-    toks = TX.tokens(F.lower(F.col(text_col)))
+    toks = TX.tokens(F.lower(F.col(TEXT)))
     staged = _barrier(
         docs,
-        F.col(id_col),
+        F.col(DOC_ID),
         F.transform(toks, encode).alias("ws"),
     )
     ids = F.flatten(
@@ -2652,9 +2474,9 @@ def bpe_encode_ids(
             ),
         )
     )
-    out = _barrier(staged, F.col(id_col), ids.alias("ids"))
+    out = _barrier(staged, F.col(DOC_ID), ids.alias("ids"))
     return out.select(
-        id_col,
+        DOC_ID,
         F.size("ids").cast("long").alias("n_tokens"),
         F.concat_ws(",", F.transform(F.col("ids"), lambda i: i.cast("string"))).alias(
             "ids_csv"
@@ -2722,20 +2544,13 @@ def _bpe_encode_ids_ranked(
     return words.mapInPandas(encode_partition, schema)
 
 
-def pack_token_ids(
-    docs: DataFrame,
-    budget: int = 2048,
-    n_shards: int = 8,
-    id_col: str = "doc_id",
-    ids_col: str = "ids",
-    salt: str = "pack",
-) -> DataFrame:
+def pack_token_ids(docs: DataFrame, budget: int = 2048, n_shards: int = 8) -> DataFrame:
     """The writer-side twin of ``pack_sequences``: where that operator
     emits the pack MANIFEST (doc × sequence token counts), this one
     emits the actual fixed-length training blocks — per (shard,
     seq_id) the concatenated token-ID sequence itself, chunked at
     ``budget`` boundaries in the same deterministic md5 shard/order.
-    ``ids_col`` is any ``array<int>`` column (e.g. ``bpe_encode_ids``
+    ``ids`` is any ``array<int>`` column (e.g. ``bpe_encode_ids``
     output via ``split(ids_csv, ',')``); the id stream is identical to
     concatenating every document's ids in pack order and slicing every
     ``budget`` tokens, so a doc straddling a boundary contributes its
@@ -2753,18 +2568,18 @@ def pack_token_ids(
     segments by ``sort_array`` over (tok_start, segment) structs —
     tok_start is unique within a block, so the order is total.
     """
-    sid = F.col(id_col).cast("string")
-    h_sh = F.md5(F.concat_ws(":", sid, F.lit(f"{salt}:shard")))
-    h_ord = F.md5(F.concat_ws(":", sid, F.lit(f"{salt}:ord")))
+    sid = F.col(DOC_ID).cast("string")
+    h_sh = F.md5(F.concat_ws(":", sid, F.lit("pack:shard")))
+    h_ord = F.md5(F.concat_ws(":", sid, F.lit("pack:ord")))
     # NULL elements are dropped up front so offsets/counts always match
     # the ids actually emitted (concat_ws silently skips NULLs): the
     # docstring's split(ids_csv, ',') composition turns an EMPTY doc's
     # '' into [''] whose int cast is [NULL] — without this filter that
     # phantom 1-token doc would shift every later block boundary in its
     # shard while contributing nothing to the stream.
-    clean = F.filter(F.col(ids_col), lambda x: x.isNotNull())
+    clean = F.filter(F.col("ids"), lambda x: x.isNotNull())
     base = docs.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         (F.conv(F.substring(h_sh, 1, 4), 16, 10).cast("int") % n_shards).alias(
             "shard"
         ),
@@ -2772,7 +2587,7 @@ def pack_token_ids(
         clean.alias("_ids"),
         F.size(clean).cast("long").alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
-    w = Window.partitionBy("shard").orderBy("ord", id_col)
+    w = Window.partitionBy("shard").orderBy("ord", DOC_ID)
     base = base.withColumn("tok_end", F.sum("n_tokens").over(w)).withColumn(
         "tok_start", F.col("tok_end") - F.col("n_tokens")
     )

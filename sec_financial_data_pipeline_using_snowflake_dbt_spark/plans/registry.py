@@ -31,6 +31,7 @@ from graphlib import TopologicalSorter
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.catalog import materialize
 
@@ -192,16 +193,20 @@ def sec_registry() -> Registry:
     r.model("fact_spine", ["stg_num", "stg_pre", "stg_sub"], "cache")(
         lambda t: FCT.fact_spine(t["stg_num"], t["stg_pre"], t["stg_sub"])
     )
+    # one plan builds all three statements; each reference fact table is
+    # its statement's slice, written with the reference's cluster_by
+    r.model(
+        "fct_statements",
+        ["fact_spine", "dim_company", "dim_filings", "dim_date"],
+        "cache",
+    )(
+        lambda t: FCT.build_fact(
+            t["fact_spine"], t["dim_company"], t["dim_filings"], t["dim_date"]
+        )
+    )
     for stmt, name in (("BS", "fct_balance_sheet"), ("IS", "fct_income_statement"), ("CF", "fct_cashflows")):
-        r.model(
-            name,
-            ["fact_spine", "dim_company", "dim_filings", "dim_date"],
-            "table",
-            cluster_by=["company_name"],
-        )(
-            lambda t, s=stmt: FCT.build_fact(
-                t["fact_spine"], t["dim_company"], t["dim_filings"], t["dim_date"], s
-            )
+        r.model(name, ["fct_statements"], "table", cluster_by=["company_name"])(
+            lambda t, s=stmt: t["fct_statements"].filter(F.col("statement_type") == s)
         )
 
     r.model("stg_financial_data", ["sub", "num", "tag", "pre"])(

@@ -285,15 +285,9 @@ class ResultCache:
         # normalizes expr ids, so equivalent spellings still collapse).
         # The file set comes back as one string from one JVM call, in
         # listing order: a reordered listing can only cost a miss.
-        # Spark Connect DataFrames carry no _jdf — fall back to the
-        # analyzed-plan hash there (weaker dedup of equivalent plans,
-        # still a correct cache key).
         import hashlib
 
-        try:
-            plan = df._jdf.queryExecution().optimizedPlan()
-        except AttributeError:
-            return ("connect", df.semanticHash(), tuple(sorted(df.inputFiles())))
+        plan = df._jdf.queryExecution().optimizedPlan()
         files = _string_of(df.sparkSession._jvm)(df._jdf.inputFiles())
         return (
             plan.semanticHash(),

@@ -12,6 +12,9 @@ One place to encode the engine-wide execution posture:
   correctness oracle.
 - shuffle partitions sized to cores locally; on a real cluster AQE
   coalescing makes the initial number mostly irrelevant.
+- a driver heap of a quarter of physical memory (at least 1 GB), the
+  JVM's own ``MaxRAMPercentage`` default; ``SPARK_GRAFT_DRIVER_MEM``
+  overrides it.
 - a class-data archive for the driver JVM (dynamic CDS, JEP 350) when
   ``get_spark`` launches that JVM itself: the first start records the
   classes it loads into ``${XDG_CACHE_HOME:-~/.cache}/secspark/`` at
@@ -42,6 +45,12 @@ from pyspark.sql import DataFrame, SparkSession
 # spark.sql.shuffle.partitions ~ 2-3x total cores (or rely on AQE
 # auto-coalesce from a high initial value); locally, ~cores.
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+# A quarter of physical memory, at least 1 GB: a fixed size either
+# starves a big machine or lets the driver JVM crowd a small one.
+_DEFAULT_DRIVER_MEM = "%dm" % max(
+    1024, (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4) >> 20
+)
 
 
 def _spark_defaults_has_master() -> bool:
@@ -319,7 +328,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- local-mode ergonomics ---
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _DEFAULT_DRIVER_MEM))
         # parquet scans: split files so local cores all engage even on
         # one file; at 100 TB the same knob bounds per-task input size.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

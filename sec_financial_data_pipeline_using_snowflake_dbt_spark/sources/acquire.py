@@ -56,11 +56,12 @@ def find_zip_links(
     return links
 
 
-def fetch_to_landing(url: str, landing_dir: str, filename: str | None = None) -> str:
-    """Download ``url`` into ``landing_dir``; returns the local path.
-    Idempotent per filename (re-fetch overwrites)."""
+def fetch_to_landing(url: str, landing_dir: str) -> str:
+    """Download ``url`` into ``landing_dir`` under the URL's file name;
+    returns the local path. Idempotent per file name (re-fetch
+    overwrites)."""
     os.makedirs(landing_dir, exist_ok=True)
-    name = filename or os.path.basename(urllib.parse.urlparse(url).path)
+    name = os.path.basename(urllib.parse.urlparse(url).path)
     if not name:
         raise ValueError(f"cannot derive a filename from {url!r}")
     dest = os.path.join(landing_dir, name)

@@ -154,18 +154,13 @@ def read_sec_quarter(spark: SparkSession, landing_dir: str) -> dict[str, DataFra
     }
 
 
-def read_csv_dated(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    date_format: str = "yyyy-MM-dd",
-) -> DataFrame:
+def read_csv_dated(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Comma-CSV load (≙ the weather demo COPY:
     reference web_to_snowflake.py:137-163)."""
     return (
         spark.read.schema(schema)
         .option("header", True)
-        .option("dateFormat", date_format)
+        .option("dateFormat", "yyyy-MM-dd")
         .csv(path)
     )
 

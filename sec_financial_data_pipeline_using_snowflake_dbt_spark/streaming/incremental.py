@@ -41,36 +41,29 @@ def incremental_filter(
 # --- Structured Streaming ---------------------------------------------------
 
 
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    lookback: str = "2 hours",
-    watermark: str = "3 hours",
-) -> DataFrame:
+def stream_interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Stream-stream interval join: for each ``left`` event, every
-    ``right`` event from the same user within ``lookback`` before it
+    ``right`` event from the same user within 2 hours before it
     (click-to-purchase attribution). Both sides carry a watermark and
     the join condition bounds event time on both sides, so Spark can
     age out buffered state — without the time bound a stream-stream
     join's state grows forever (the canonical pitfall).
 
-    Scale: state per key is bounded by ``watermark`` + ``lookback``;
-    the join shuffles both streams by ``user_col`` once. Works
+    Scale: state per key is bounded by the 3-hour watermark + the
+    2-hour lookback; the join shuffles both streams by ``user_id`` once. Works
     identically on batch DataFrames (the oracle path) because the
     interval condition is ordinary Column algebra.
     """
-    lhs = left.withWatermark(ts_col, watermark).alias("l")
-    rhs = right.withWatermark(ts_col, watermark).alias("r")
-    lts, rts = F.col(f"l.{ts_col}"), F.col(f"r.{ts_col}")
+    lhs = left.withWatermark("ts", "3 hours").alias("l")
+    rhs = right.withWatermark("ts", "3 hours").alias("r")
+    lts, rts = F.col("l.ts"), F.col("r.ts")
     cond = (
-        (F.col(f"l.{user_col}") == F.col(f"r.{user_col}"))
-        & (rts >= lts - F.expr(f"INTERVAL {lookback}"))
+        (F.col("l.user_id") == F.col("r.user_id"))
+        & (rts >= lts - F.expr("INTERVAL 2 hours"))
         & (rts <= lts)
     )
     return lhs.join(rhs, cond, "inner").select(
-        F.col(f"l.{user_col}").alias(user_col),
+        F.col("l.user_id").alias("user_id"),
         F.col("l.event_id").alias("left_id"),
         F.col("r.event_id").alias("right_id"),
         (F.unix_micros(lts) - F.unix_micros(rts)).cast("long").alias("lag_us"),
@@ -83,8 +76,6 @@ def stream_cdc_sink(
     checkpoint_dir: str,
     key_cols: list[str],
     seq_cols: list[str],
-    op_col: str = "op",
-    delete_op: str = "D",
     expire_horizon=None,
 ) -> None:
     """Streaming CDC apply: maintain a last-writer-wins snapshot of a
@@ -163,15 +154,9 @@ def stream_cdc_sink(
                 f"forward if it should seed the new run)."
             )
         if state is None:
-            merged = cdc_apply(
-                batch_df, key_cols, seq_cols,
-                op_col=op_col, delete_op=delete_op, keep_op=True,
-            )
+            merged = cdc_apply(batch_df, key_cols, seq_cols, keep_op=True)
         else:
-            merged = cdc_state_merge(
-                state, batch_df, key_cols, seq_cols,
-                op_col=op_col, delete_op=delete_op,
-            )
+            merged = cdc_state_merge(state, batch_df, key_cols, seq_cols)
         if expire_horizon is not None:
             horizon = (
                 expire_horizon(batch_df, batch_id)
@@ -179,10 +164,7 @@ def stream_cdc_sink(
                 else expire_horizon
             )
             if horizon is not None:
-                merged = cdc_expire_tombstones(
-                    merged, seq_cols[0], horizon,
-                    op_col=op_col, delete_op=delete_op,
-                )
+                merged = cdc_expire_tombstones(merged, seq_cols[0], horizon)
         vdir = f"{target_path}/v={batch_id}"
         merged.write.mode("overwrite").parquet(vdir)
         _commit_cdc_marker(spark, target_path, batch_id)
@@ -303,12 +285,7 @@ def _read_cdc_state_versioned(
     return spark.read.parquet(f"{target_path}/v={newest}"), newest
 
 
-def read_cdc_snapshot(
-    spark: SparkSession,
-    target_path: str,
-    op_col: str = "op",
-    delete_op: str = "D",
-) -> DataFrame | None:
+def read_cdc_snapshot(spark: SparkSession, target_path: str) -> DataFrame | None:
     """The live snapshot (tombstones filtered) under ``stream_cdc_sink``'s
     layout, or None before the first commit."""
     from ..operators.cdc import cdc_snapshot
@@ -316,4 +293,4 @@ def read_cdc_snapshot(
     state = _read_cdc_state(spark, target_path)
     if state is None:
         return None
-    return cdc_snapshot(state, op_col=op_col, delete_op=delete_op)
+    return cdc_snapshot(state)

@@ -113,9 +113,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def dec(col: str | Column, precision: int = 18, scale: int = 2) -> Column:
+def dec(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    return c.cast(T.DecimalType(precision, scale))
+    return c.cast(T.DecimalType(18, 2))
 
 
 def as_dbl(c: Column) -> Column:
@@ -139,9 +139,7 @@ SQL_CHARGE = (
 )
 
 
-def require_sql_surgery(
-    sampled: str, full: str, name: str, needle: str, n: int = 1
-) -> str:
+def require_sql_surgery(sampled: str, full: str, name: str, needle: str) -> str:
     """Fail-loud guard for ``.replace``-derived sampled-arm oracles.
 
     The sampled arms are built by string surgery on the full oracle; a
@@ -149,7 +147,7 @@ def require_sql_surgery(
     longer matches the stratified Spark arm. These guards were bare
     module-level ``assert`` statements, which ``python -O`` strips
     (ADVICE r10) — raise instead, and additionally pin that ``needle``
-    (the surgery site's anchor) occurs exactly ``n`` times in the result
+    (the surgery site's anchor) occurs exactly once in the result
     so a drifted full oracle that matches the pattern twice (or zero
     times after an edit) is caught at import."""
     if sampled == full:
@@ -157,9 +155,9 @@ def require_sql_surgery(
             f"{name}: sampled-arm SQL surgery did not land (.replace was a no-op)"
         )
     found = sampled.count(needle)
-    if found != n:
+    if found != 1:
         raise RuntimeError(
-            f"{name}: expected {n} occurrence(s) of {needle!r} in the sampled "
+            f"{name}: expected 1 occurrence of {needle!r} in the sampled "
             f"oracle, found {found} — the full oracle drifted under the surgery"
         )
     return sampled

@@ -856,7 +856,7 @@ def _ngram_diversity_sql(n_values: tuple[int, ...] = (1, 2, 3)) -> str:
 @q("q_ngram_diversity", _ngram_diversity_sql())
 def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TO.ngram_diversity(
-        table(spark, sf_dir, "documents"), n_values=(1, 2, 3), strata_col="source"
+        table(spark, sf_dir, "documents"), strata_col="source"
     )
 
 
@@ -1372,7 +1372,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clusters was built with nodes=surv ids, so it covers every surv
     # doc — the singleton anti-join is provably empty; skip it
     canon = DD.keep_canonical(
-        surv, clusters, id_col="doc_id", clusters_cover_docs=True
+        surv, clusters, clusters_cover_docs=True
     )
     # train selection is a pure bucket predicate on doc_id (the same
     # expression assign_split derives its split column from) — filter
@@ -1380,7 +1380,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on: row-identical (canon ids are unique; the join neither added
     # nor removed rows), and the join + its duplicate canon subtree
     # disappear from the plan (guide §2.4).
-    final = canon.filter(TO.split_bucket("doc_id") < TO.TRAIN_BUCKETS)
+    final = canon.filter(TO.split_bucket() < TO.TRAIN_BUCKETS)
     return TO.pack_sequences(
         final, budget=_PACK_BUDGET, n_shards=_PACK_SHARDS
     )
@@ -1751,7 +1751,7 @@ _BUDGET_TOKENS = 12_000
 def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp = TO.unigram_logprob(table(spark, sf_dir, "documents"))
     return TO.budget_select(
-        ulp, _BUDGET_TOKENS, score_col="avg_logprob", tokens_col="n_tokens"
+        ulp, _BUDGET_TOKENS, score_col="avg_logprob"
     )
 
 
@@ -1981,7 +1981,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     target = docs.filter((F.col("lang") == "en") & (F.col("source") == "src0"))
-    return TO.dsir_importance(docs, target, n_buckets=256, k=100)
+    return TO.dsir_importance(docs, target)
 
 
 # ---------------------------------------------------------------------------
@@ -2088,7 +2088,7 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.duplicated_ngram_spans(table(spark, sf_dir, "documents"), k=8)
+    return DD.duplicated_ngram_spans(table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -2218,7 +2218,7 @@ def _bigram_lp_ctes() -> str:
     """,
 )
 def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TO.bigram_logprob(table(spark, sf_dir, "documents"), lam=0.7)
+    return TO.bigram_logprob(table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -2298,7 +2298,7 @@ def q_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TO.perplexity_buckets(table(spark, sf_dir, "documents"), n_buckets=3, lam=0.7)
+    return TO.perplexity_buckets(table(spark, sf_dir, "documents"), n_buckets=3)
 
 
 # ---------------------------------------------------------------------------
@@ -2506,7 +2506,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = [
         (r.lhs, r.rhs) for r in TO.bpe_train(docs, n_merges=10).collect()
     ]
-    return TO.tokenizer_fertility(docs, merges, strata_col="lang")
+    return TO.tokenizer_fertility(docs, merges)
 
 
 def _bpe_encode_ids_sql(n_merges: int = 10, doc_filter: str | None = None) -> str:
@@ -2865,7 +2865,7 @@ def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the largest test scale — an oracle-harness limit, not an engine
     one); q_dedup_recall_sampled below carries the sf10 cross-engine
     signal."""
-    return DD.minhash_pair_recall(table(spark, sf_dir, "documents"), threshold=0.8)
+    return DD.minhash_pair_recall(table(spark, sf_dir, "documents"))
 
 
 _RECALL_SAMPLED_SQL = _dedup_recall_sql(0.8).replace(
@@ -2897,4 +2897,4 @@ def q_dedup_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").where(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) == "0"
     )
-    return DD.minhash_pair_recall(docs, threshold=0.8)
+    return DD.minhash_pair_recall(docs)

@@ -97,7 +97,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = e.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
     joined = ASOF.asof_join_auto(
         purchases, clicks, on="ts", by="user_id", value_cols=["value"],
-        bucket_seconds=86400,
     )
     return joined.select(
         "event_id",
@@ -143,7 +142,7 @@ def _ann_lsh_sql(dim: int = 64, n_planes: int = 4, k: int = 5) -> str:
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return SIM.lsh_topk(
-        emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5, n_planes=4
+        emb.filter(F.col("vec_id") < 8), emb, dim=64, n_planes=4
     )
 
 
@@ -550,8 +549,7 @@ def _ann_pq_sql(
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return SIM.pq_topk(
-        emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5, m=4, k_sub=4,
-        n_train=64, n_iters=2, round_means=6,
+        emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5,
     )
 
 
@@ -738,7 +736,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return SIM.ivfpq_topk(
         emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5, n_centroids=8,
-        n_probe=3, m=4, k_sub=4, n_train=64, pq_iters=2, round_means=6,
+        n_probe=3, m=4, k_sub=4, n_train=64,
     )
 
 
@@ -750,8 +748,7 @@ def q_ann_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return SIM.ivfpq_topk(
         emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5, n_centroids=8,
-        n_probe=3, m=4, k_sub=4, n_train=64, pq_iters=2, round_means=6,
-        residual=True,
+        n_probe=3, m=4, k_sub=4, n_train=64, residual=True,
     )
 
 
@@ -805,7 +802,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return DD.semantic_dedup(
         table(spark, sf_dir, "embeddings"), dim=64, n_cells=8, threshold=0.4,
-        n_iters=2, round_means=6,
     )
 
 
@@ -842,7 +838,7 @@ def q_dedup_semantic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) == "0"
     )
     return DD.semantic_dedup(
-        emb, dim=64, n_cells=8, threshold=0.4, n_iters=2, round_means=6
+        emb, dim=64, n_cells=8, threshold=0.4
     )
 
 
@@ -889,7 +885,7 @@ def _cluster_sample_sql(
 def q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.cluster_sample(
         table(spark, sf_dir, "embeddings"), dim=64, n_cells=8, per_cell=5,
-        mode="prototypes", n_iters=2, round_means=6,
+        mode="prototypes",
     )
 
 
@@ -1005,7 +1001,7 @@ def q_kmeans_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for k in (4, 8):
         part = SIM.kmeans_quality(
-            emb, dim=64, n_centroids=k, n_iters=2, round_means=6
+            emb, dim=64, n_centroids=k
         ).select(F.lit(k).cast("long").alias("k"), "cell", "n_vectors", "inertia")
         out = part if out is None else out.unionByName(part)
     return out
@@ -1475,7 +1471,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import fuzzy as FZ
 
     cust = table(spark, sf_dir, "customer")
-    return FZ.fuzzy_neighbor_counts(cust, "c_custkey", "c_name", max_dist=1)
+    return FZ.fuzzy_neighbor_counts(cust, "c_custkey", "c_name")
 
 
 @q(
@@ -1523,7 +1519,7 @@ def q_fuzzy_match_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             "0", "1", "2", "3"
         )
     )
-    return FZ.fuzzy_neighbor_counts(cust, "c_custkey", "c_name", max_dist=1)
+    return FZ.fuzzy_neighbor_counts(cust, "c_custkey", "c_name")
 
 
 # ---------------------------------------------------------------------------

@@ -236,7 +236,8 @@ def q_sec_fact_bs(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = FCT.fact_spine(snum, spre, ssub).persist()
     dim_company = D.dim_company(D.dim_address(ssub), ssub).persist()
     dim_filings = D.dim_filings(spre, S.stg_tag(tag), snum, ssub).persist()
-    fact = FCT.build_fact(spine, dim_company, dim_filings, D.dim_date(spark), "BS")
+    bs = spine.filter(F.col("stmt") == "BS")
+    fact = FCT.build_fact(bs, dim_company, dim_filings, D.dim_date(spark))
     return fact.select(
         F.col("fct_value").cast("double").alias("fct_value"),
         "company_name",

@@ -139,7 +139,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     )
     clicks = events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
-    joined = stream_interval_join(purchases, clicks, lookback="2 hours")
+    joined = stream_interval_join(purchases, clicks)
     with _state_partitions(spark):
         query = (
             joined.writeStream.outputMode("append")

@@ -45,7 +45,7 @@ def test_ticker_and_version_tag(spark):
     )
     r = df.select(
         SC.ticker_from_instance("instance").alias("t"),
-        SC.version_tag("version", "tag").alias("vt"),
+        SC.version_tag().alias("vt"),
     ).first()
     assert r.t == "AAPL"
     assert r.vt == "us-gaap/2024-Assets"

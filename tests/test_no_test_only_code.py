@@ -16,6 +16,11 @@ Three checks share it:
 
 Anything else is test-only code and should be deleted with its tests,
 unless an allowlist names it with the reason it stays.
+
+A fourth check runs over the program *and* the tests: a defaulted
+parameter of a public package function or method that no call at all
+sets to another value is a constant spelled as a parameter, and should
+be one in the body.
 """
 
 from __future__ import annotations
@@ -78,6 +83,11 @@ ALLOWED_OPTIONS: dict[str, str] = {
     "operators/textops.py:frequent_items(total)": "caller-supplied row count instead of a count job",
     "operators/textops.py:hashed_linear_score(weights)": "trained-weights table arm of the classifier",
 }
+
+
+#: Defaulted parameters no call sets that stay, keyed
+#: "<module>:<function or Class.method>(<param>)".
+ALLOWED_DEFAULTS: dict[str, str] = {}
 
 
 def _program_files() -> list[pathlib.Path]:
@@ -256,10 +266,10 @@ def _selectors(fns: list[ast.FunctionDef]) -> set[tuple[str, str]]:
         sel = grown
 
 
-def _options() -> dict[str, tuple[str, str, int | None, object, int]]:
+def _options() -> dict[str, tuple[str, str, int | None, ast.expr, int]]:
     """Every option of a public top-level package function, keyed
     "<module>:<function>(<param>)" → (function, param, positional index,
-    default value, line)."""
+    default, line)."""
     trees = _trees(sorted(PKG.rglob("*.py")))
     fns = {
         fn: path
@@ -278,44 +288,53 @@ def _options() -> dict[str, tuple[str, str, int | None, object, int]]:
             )
             if literal and (fn.name, param) in selectors:
                 key = f"{path.relative_to(PKG).as_posix()}:{fn.name}({param})"
-                out[key] = (fn.name, param, idx, default.value, fn.lineno)
+                out[key] = (fn.name, param, idx, default, fn.lineno)
     return out
 
 
-def _calls(trees) -> dict[str, list[tuple[ast.Call, str | None, set[str]]]]:
-    """Every call, by called name: (call, name of the enclosing
-    function, that function's defaulted parameters)."""
+def _calls(trees) -> dict[str, list[tuple[ast.Call, dict[str, str]]]]:
+    """Every call, by called name: (call, scope), where the scope maps
+    each defaulted parameter the call can see to the function that binds
+    it (nested functions see their parents' unless they rebind the name)."""
     out: dict[str, list] = {}
 
-    def visit(node, encl, params):
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            encl, params = node.name, set(_defaulted(node))
+    def visit(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            name = getattr(node, "name", "<lambda>")
+            scope = {p: f for p, f in scope.items() if p not in _params(node)}
+            scope.update((p, name) for p in _defaulted(node))
         if isinstance(node, ast.Call) and _callee(node):
-            out.setdefault(_callee(node), []).append((node, encl, params))
+            out.setdefault(_callee(node), []).append((node, scope))
         for child in ast.iter_child_nodes(node):
-            visit(child, encl, params)
+            visit(child, scope)
 
     for tree in trees.values():
-        visit(tree, None, set())
+        visit(tree, {})
     return out
+
+
+def _is_default(value: ast.expr, default: ast.expr) -> bool:
+    if isinstance(value, ast.Constant) and isinstance(default, ast.Constant):
+        return type(value.value) is type(default.value) and value.value == default.value
+    return ast.dump(value) == ast.dump(default)
 
 
 def _setters(options, calls, forwarded) -> set[str]:
     """Options some call in ``calls`` sets to a non-default value. A
-    call that passes on the enclosing function's own defaulted
-    parameter sets the option only when ``forwarded(function, param)``."""
+    call that passes on a parameter of an enclosing function sets the
+    option only when ``forwarded(function, param)``."""
     out = set()
     for key, (fn, param, idx, default, _) in options.items():
-        for call, encl, encl_params in calls.get(fn, []):
+        for call, scope in calls.get(fn, []):
             value = _passed(call, param, idx)
             if value is None:
                 continue
             if value is ...:
                 out.add(key)
-            elif isinstance(value, ast.Name) and value.id in encl_params:
-                if forwarded(encl, value.id):
+            elif isinstance(value, ast.Name) and value.id in scope:
+                if forwarded(scope[value.id], value.id):
                     out.add(key)
-            elif not (isinstance(value, ast.Constant) and value.value == default):
+            elif not _is_default(value, default):
                 out.add(key)
     return out
 
@@ -340,6 +359,53 @@ def _test_only_options() -> dict[str, int]:
         by_program |= grown
     by_tests = _setters(options, tests, lambda fn, p: False)
     return {k: options[k][4] for k in sorted(by_tests - by_program)}
+
+
+def _public_defaults() -> dict[str, tuple[str, str, int | None, ast.expr, int]]:
+    """Every defaulted parameter of a public package function or of a
+    public method of a public class, keyed "<module>:<qualname>(<param>)"
+    → (name, param, positional index at the call site, default, line)."""
+    out = {}
+    for path in sorted(PKG.rglob("*.py")):
+        fns = []
+        for node in _parse(path).body:
+            if isinstance(node, ast.FunctionDef):
+                fns.append((node.name, node, 0))
+            elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+                for m in node.body:
+                    if isinstance(m, ast.FunctionDef):
+                        static = any(
+                            getattr(d, "id", None) == "staticmethod"
+                            for d in m.decorator_list
+                        )
+                        fns.append((f"{node.name}.{m.name}", m, 0 if static else 1))
+        for qualname, fn, shift in fns:
+            if fn.name.startswith("_"):
+                continue
+            for param, (idx, default) in _defaulted(fn).items():
+                key = f"{path.relative_to(PKG).as_posix()}:{qualname}({param})"
+                pos = None if idx is None else idx - shift
+                out[key] = (fn.name, param, pos, default, fn.lineno)
+    return out
+
+
+def _unset_defaults() -> dict[str, int]:
+    """Line of every public default that no program or test call sets to
+    another value. Passing on a parameter of an enclosing function counts
+    once that parameter is itself set (to a fixed point), or when it is
+    not one of these defaults (a required or a private parameter)."""
+    params = _public_defaults()
+    owner = {(p[0], p[1]) for p in params.values()}
+    calls = _calls(_trees(_program_files() + sorted((ROOT / "tests").rglob("*.py"))))
+    done: set[str] = set()
+    while True:
+        live = {(params[k][0], params[k][1]) for k in done}
+        grown = _setters(
+            params, calls, lambda fn, p: (fn, p) in live or (fn, p) not in owner
+        )
+        if grown <= done:
+            return {k: params[k][4] for k in sorted(set(params) - done)}
+        done |= grown
 
 
 def test_no_package_def_is_reached_from_tests_alone():
@@ -374,10 +440,22 @@ def test_no_option_is_set_from_tests_alone():
     )
 
 
+def test_no_default_is_left_at_its_default():
+    """A default no call changes is not an option: write the value into
+    the body (a shared column name as a module constant)."""
+    unset = _unset_defaults()
+    extra = sorted(k for k in unset if k not in ALLOWED_DEFAULTS)
+    assert not extra, (
+        "defaulted parameters no program or test call sets to another "
+        "value: " + ", ".join(f"{k} (line {unset[k]})" for k in extra)
+    )
+
+
 def test_allowlist_is_current():
-    """An allowlisted def, method or option that is gone, or that
-    program code now reaches, leaves its list."""
+    """An allowlisted def, method, option or default that is gone, or
+    that code now reaches or sets, leaves its list."""
     stale = sorted(set(ALLOWED) - set(_unreached(_top_level_defs)))
     stale += sorted(set(ALLOWED_METHODS) - set(_unreached(_public_methods)))
     stale += sorted(set(ALLOWED_OPTIONS) - set(_test_only_options()))
+    stale += sorted(set(ALLOWED_DEFAULTS) - set(_unset_defaults()))
     assert not stale, f"remove from the allowlist: {stale}"

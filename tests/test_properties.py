@@ -1229,7 +1229,6 @@ def test_cluster_sample_selection_matches_reference(
         (r.vec_id, r.cell, r.dist, r.rank)
         for r in SIM.cluster_sample(
             emb, dim=dim, n_cells=n_cells, per_cell=per_cell, mode=mode,
-            n_iters=2, round_means=6,
         ).collect()
     )
 
@@ -1489,7 +1488,7 @@ def test_kmeans_quality_matches_reference(spark, n_vecs, n_cells, seed):
     got = sorted(
         (r.cell, r.n_vectors, r.inertia)
         for r in SIM.kmeans_quality(
-            emb, dim=dim, n_centroids=n_cells, n_iters=2, round_means=6
+            emb, dim=dim, n_centroids=n_cells
         ).collect()
     )
 
@@ -1535,7 +1534,7 @@ def test_tokenizer_fertility_matches_reference(spark, texts):
     got = sorted(
         (r.stratum, r.n_docs, r.n_words, r.n_tokens, r.n_chars,
          r.fertility, r.chars_per_token)
-        for r in TOX.tokenizer_fertility(docs, merges, strata_col="lang").collect()
+        for r in TOX.tokenizer_fertility(docs, merges).collect()
     )
 
     enc = {
@@ -1576,8 +1575,7 @@ def test_ngram_diversity_matches_reference(spark, texts, strata):
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
     got = sorted(
         tuple(r) for r in TOX.ngram_diversity(
-            docs, n_values=(1, 2, 3),
-            strata_col="source" if strata else None,
+            docs, strata_col="source" if strata else None,
         ).collect()
     )
 

@@ -167,30 +167,6 @@ def test_result_cache_misses_after_overwrite(spark, tmp_path):
     assert cache.misses == 2
 
 
-def test_result_cache_degrades_without_private_api(orders):
-    """Under Spark Connect there is no _jdf; ResultCache.key_for must
-    fall back to the analyzed-plan semanticHash instead of raising
-    (VERDICT r5 #2), and fetch() must still cache (hit on 2nd call)."""
-
-    class NoJdfFrame:
-        """Duck-typed stand-in for a Connect DataFrame: no _jdf attr."""
-
-        def __init__(self, df):
-            self.__dict__["_df"] = df
-
-        def __getattr__(self, name):
-            if name == "_jdf":
-                raise AttributeError(name)
-            return getattr(self.__dict__["_df"], name)
-
-    q = orders.filter(F.col("o_orderstatus") == "F").select("o_orderkey")
-    cache = serve.ResultCache(ttl_seconds=60)
-    r1 = cache.fetch(NoJdfFrame(q), limit=20)
-    r2 = cache.fetch(NoJdfFrame(q), limit=20)
-    assert cache.hits == 1 and cache.misses == 1
-    assert [r.o_orderkey for r in r1] == [r.o_orderkey for r in r2]
-
-
 def test_list_catalog(spark):
     cat = serve.list_catalog(spark)
     assert "default" in cat
