@@ -27,6 +27,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import spread
+
 
 # --- generic checks (dbt-core) ---------------------------------------------
 
@@ -201,69 +203,22 @@ _PROFILE_RENDER = {
 }
 
 
-#: Auto-dispatch knee for profile_table: the exact multi-distinct plan
-#: Expands the input once per profiled column, so its real working set
-#: is (plan bytes x n_cols); past this product the HLL arm wins by an
-#: order of magnitude (measured at sf10: >590 s exact vs 102 s HLL).
-PROFILE_AUTO_EXACT_MAX_BYTES = 2 * 1024 * 1024 * 1024
-
-
-def profile_table(df: DataFrame, approx_distinct: bool | None = None) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """Column profile — the engine-side ``dbt docs`` / catalog statistics
     page: one output row per column with ``(column, n_rows, n_nulls,
     n_distinct, min_value, max_value)``, min/max rendered as
-    dtype-stable strings.
+    dtype-stable strings, distinct counts exact (cross-engine-exact for
+    the oracle surface).
 
-    ONE scan: every per-column aggregate lives in a single ``agg`` (one
-    map-side-combined pass), and the wide 1-row result pivots to long
-    form through a ``stack`` projection — no per-column scans, no
-    driver-side collect.  Caveat at scale: multiple EXACT
-    ``count_distinct`` aggregates expand the input once per column
-    (Spark's Expand for multi-distinct); ``approx_distinct=True`` swaps
-    in HLL sketches (``approx_count_distinct``), which profile 100 TB in
-    one expansion-free pass — the same exact/HLL dual as
-    ``textops.corpus_stats``.
-
-    ``approx_distinct=None`` (default) size-dispatches
-    (``asof_join_auto`` discipline): exact while the Expand's working
-    set (plan bytes x n_cols) stays under
-    ``PROFILE_AUTO_EXACT_MAX_BYTES``, HLL above it or when the plan
-    size is unknown. Callers needing cross-engine-exact counts (the
-    oracle surface) pin ``approx_distinct=False``.
+    Two aggregates crossJoined: the count/null/min/max pass (one
+    map-side-combined ``agg``) and the multi-distinct pass, and the
+    wide 1-row result pivots to long form through a ``stack``
+    projection — no per-column scans, no driver-side collect. Caveat at
+    scale: multiple EXACT ``count_distinct`` aggregates expand the input
+    once per column (Spark's Expand for multi-distinct).
     """
     cols = df.columns
-    if approx_distinct is None:
-        from .operators.asof import _plan_size_bytes
-
-        size = _plan_size_bytes(df)
-        approx_distinct = (
-            size is None or size * len(cols) > PROFILE_AUTO_EXACT_MAX_BYTES
-        )
-        if size is None:
-            # ADVICE r9 (low): with no plan size estimate the default
-            # silently lands on HLL regardless of size — a behavior
-            # change a caller relying on exact counts must get to
-            # DISCOVER.
-            import warnings
-
-            warnings.warn(
-                "profile_table: plan size unknown - "
-                "auto-dispatch chose APPROXIMATE distinct counts; pin "
-                "approx_distinct=False if you need exact ones",
-                RuntimeWarning,
-                stacklevel=2,
-            )
     dtypes = dict(df.dtypes)
-    # Expand multiplies input by n_cols BEFORE the partial aggregate;
-    # when the scan yields fewer splits than cores (small files on a
-    # big box) that serializes n_cols x the work onto one task — fan
-    # out first (the ngram_diversity lesson, NOTES_r8 §3). At 100 TB
-    # splits >> cores and this branch is a no-op.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    dist_src = df
-    if not approx_distinct and df.rdd.getNumPartitions() < par:
-        dist_src = df.repartition(par)
-    n_distinct = F.approx_count_distinct if approx_distinct else F.count_distinct
     aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         render = _PROFILE_RENDER.get(dtypes[c], lambda x: x.cast("string"))
@@ -272,28 +227,21 @@ def profile_table(df: DataFrame, approx_distinct: bool | None = None) -> DataFra
             render(F.min(F.col(c))).alias(f"__min_{c}"),
             render(F.max(F.col(c))).alias(f"__max_{c}"),
         ]
-        if approx_distinct:
-            # HLL sketches don't Expand — keep the single-pass plan
-            aggs.append(n_distinct(F.col(c)).cast("long").alias(f"__nd_{c}"))
-    if approx_distinct:
-        wide = df.agg(*aggs)
-    else:
-        # EXACT arm: split the multi-distinct aggregate (whose Expand
-        # multiplies the input n_cols×) from the count/null/min/max
-        # pass, then crossJoin the two 1-row results. The min/max pass
-        # no longer rides the Expand (n_cols+1 copies → n_cols for the
-        # distinct subtree, 1 for the rest), so total rows through the
-        # partial aggregates DROP even though the source is scanned
-        # twice — measured 2.7 s → 1.7 s on an 11-column 600k-row
-        # profile at sf0.1 (r11; guide §2.3 "shuffle/process fewer
-        # bytes"), results bit-identical.
-        dist = dist_src.agg(
-            *[
-                n_distinct(F.col(c)).cast("long").alias(f"__nd_{c}")
-                for c in cols
-            ]
-        )
-        wide = df.agg(*aggs).crossJoin(dist)
+    # The multi-distinct aggregate (whose Expand multiplies the input
+    # n_cols×) is split from the count/null/min/max pass, and the two
+    # 1-row results crossJoin. The min/max pass does not ride the
+    # Expand (n_cols+1 copies → n_cols for the distinct subtree, 1 for
+    # the rest), so total rows through the partial aggregates DROP even
+    # though the source is scanned twice — measured 2.7 s → 1.7 s on an
+    # 11-column 600k-row profile at sf0.1 (r11; guide §2.3
+    # "shuffle/process fewer bytes"), results bit-identical. The Expand
+    # runs n_cols× the work BEFORE the partial aggregate, so a few-split
+    # scan is ``spread`` over every core first (the ngram_diversity
+    # lesson, NOTES_r8 §3).
+    dist = spread(df).agg(
+        *[F.count_distinct(F.col(c)).cast("long").alias(f"__nd_{c}") for c in cols]
+    )
+    wide = df.agg(*aggs).crossJoin(dist)
     stack_args = ", ".join(
         f"'{c}', `__nulls_{c}`, `__nd_{c}`, `__min_{c}`, `__max_{c}`" for c in cols
     )

@@ -6,25 +6,29 @@ Spark's shuffle model:
 - ``exact_dedup``         — hash-groupBy on a content fingerprint. One
                             shuffle on the hash; partial aggregation
                             (map-side combine) keeps it cheap at 100 TB.
-- ``ngram_jaccard_pairs`` — token-postings self-join. The inverted-index
-                            join keys on the *token*, so common tokens fan
-                            out; posting-list length is capped by default
-                            (``max_postings``) — standard practice, drops
-                            only stop-token-only matches; ``exact=True``
-                            opts into the uncapped quadratic mode.
+- ``ngram_jaccard_pairs`` — token-postings self-join within ``lang``
+                            blocks. The inverted-index join keys on the
+                            *token*, so common tokens fan out: exact and
+                            quadratic per block (the oracle surface).
 - ``minhash_lsh_pairs``   — MinHash signatures + banded LSH. The only
                             shuffle that matters is the band-bucket
                             self-join; candidate pairs ≪ n². Hashes are
                             md5-based so results are portable/deterministic
                             (no engine-specific murmur seeds).
-- ``simhash_pairs``       — 16-bit SimHash from per-hex-digit majority
-                            vote; near-dup = Hamming distance ≤ k, found
-                            via the exact pigeonhole band join (k+1
+- ``simhash_pairs``       — ``n_bits``-wide SimHash (16, 32 or 64) from
+                            per-hex-digit majority vote; near-dup =
+                            Hamming distance ≤ k within ``lang`` blocks,
+                            found via the exact pigeonhole band join (k+1
                             chunks; one must match) — no quadratic stage.
 - ``embedding_neardup_pairs`` — cosine threshold over embedding pairs;
-                            blocked by a coarse key to avoid n² (here:
-                            label; in production: an IVF/LSH bucket —
-                            see operators/similarity.py).
+                            blocked by ``label`` to avoid n² (in
+                            production: an IVF/LSH bucket — see
+                            operators/similarity.py).
+
+``dedup_clusters`` resolves pairs into connected components over a
+corpus's ids, and ``keep_canonical`` / ``keep_best`` build those
+components themselves from the corpus they filter, so a doc with no
+near-duplicate is always its own cluster and always kept.
 
 All of it is pure DataFrame composition — no UDFs — so Catalyst sees
 through every stage (predicate pushdown into the parquet scan, AQE
@@ -33,8 +37,6 @@ choosing broadcast vs shuffle joins at runtime).
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -42,6 +44,7 @@ from ..functions import text as TX
 from ..functions import vector as V
 from ..functions.text import DOC_ID, TEXT
 from ..functions.vector import EMBEDDING, VEC_ID
+from ..session import spread
 
 
 #: Signature tables persisted by the operators below (documented
@@ -66,75 +69,6 @@ def release_dedup_caches() -> int:
         _PERSISTED.pop().unpersist()
         n += 1
     return n
-
-
-import re as _re
-
-#: Logical-plan shapes whose presence means the input contains a shuffle
-#: — its partitioning is spark.sql.shuffle.partitions-wide (already
-#: parallel), and probing it would execute the upstream stages.
-#: ``Repartition n, true`` is a shuffle repartition; ``…, false`` is a
-#: narrow coalesce (probe-safe, may still be under-partitioned).
-_SHUFFLY_PLAN = _re.compile(
-    r"\b(Join|Aggregate|Window|Sort|Deduplicate)\b|Repartition \d+, true"
-)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition to the session's default parallelism — but ONLY when
-    the input is under-partitioned.
-
-    Small inputs (one parquet file → one split) would otherwise run the
-    whole expensive downstream (shingling, hashing, pairwise math) in a
-    SINGLE task; there the shuffle moves a tiny input and the win is
-    every core engaging on the expansion. Inputs that already have ≥
-    parallelism partitions are returned untouched: repartitioning them
-    would be a full shuffle of the corpus purely to rebalance
-    (VERDICT r2).
-
-    Probing discipline: for a plan that already contains a shuffle
-    (join/aggregate/window/…), ``df.rdd`` would EXECUTE the upstream
-    stages under AQE just to read a partition count — the probe would
-    cost more than the rebalance it avoids — so such inputs are
-    returned as-is (their partitioning is shuffle.partitions-wide
-    anyway). Only shuffle-free plans (file scans + narrow ops, where
-    ``df.rdd`` is a metadata-only question) are probed.
-    """
-    if _needs_spread(df):
-        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return df
-
-
-def _needs_spread(df: DataFrame) -> bool:
-    """The ``_spread`` decision alone — exported for callers that must
-    probe one frame and repartition ANOTHER (ivf_assign probes the raw
-    projection but rebalances above its persisted copy: running the
-    ``df.rdd`` probe on a cached-but-unmaterialized frame that two plan
-    arms share trips an AQE attribute-binding bug on Spark 4.1,
-    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND — reproduced r12 on the
-    two-arm q_kmeans_quality union)."""
-    # a rebalance is an optimization, never a correctness requirement:
-    # a py4j bridge error in the probe leaves df untouched, while a
-    # genuine analysis error in the plan surfaces here, where the stack
-    # still points at the caller.
-    try:
-        from py4j.protocol import Py4JError
-    except ImportError:  # pragma: no cover — py4j ships with pyspark
-        Py4JError = ()
-    try:
-        # streaming frames: optimizedPlan() raises AnalysisException on
-        # an unstarted streaming query, and micro-batch partitioning is
-        # the source's concern — leave the frame untouched so the narrow
-        # operators keep running unchanged on readStream inputs
-        if df.isStreaming:
-            return False
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if _SHUFFLY_PLAN.search(plan):
-            return False
-        return df.rdd.getNumPartitions() < parallelism
-    except Py4JError:
-        return False
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -307,55 +241,29 @@ def bloom_dedup(
     )
 
 
-DEFAULT_MAX_POSTINGS = 5000
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    block_col: str | None = None,
-    threshold: float = 0.5,
-    max_postings: int | None = DEFAULT_MAX_POSTINGS,
-    exact: bool = False,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Jaccard similarity over distinct-token sets, via postings self-join.
 
-    ``block_col`` restricts candidate pairs to equal blocks (e.g. language)
-    — the standard blocking trick that turns O(n²) into O(Σ block²).
-    ``max_postings`` drops tokens whose posting list exceeds the cap
-    (stop-token suppression): the fan-out of the self-join is bounded by
-    cap² per token, at the cost of *underestimating* similarity for pairs
-    that only share ultra-common tokens — the standard trade at scale,
-    and ON BY DEFAULT (a single stop-token shared by 1M docs would
-    otherwise fan out 10¹² join rows). Pass ``exact=True`` for the
-    uncapped, exactly-quadratic mode (the oracle-checked one — at corpus
-    scale prefer ``minhash_lsh_pairs``).
+    Candidate pairs are restricted to equal ``lang`` blocks — the
+    standard blocking trick that turns O(n²) into O(Σ block²). Exact and
+    uncapped: a token shared by every doc of a block fans out block²
+    join rows (the oracle-checked mode — at corpus scale prefer
+    ``minhash_lsh_pairs``).
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
 
     No explicit broadcasts: the per-doc ``sizes`` table is corpus-sized
     (one row per document), so it shuffle-joins on the id; AQE turns
     that into a broadcast join at runtime when it actually fits.
     """
-    if exact:
-        max_postings = None
-    post = _spread(docs).select(
+    post = spread(docs).select(
         F.col(DOC_ID).alias("id"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
+        F.col("lang").alias("blk"),
         F.explode(TX.distinct_tokens(TEXT)).alias("token"),
     )
-    # sizes use the FULL token sets (denominator stays exact even when
-    # the intersection is capped)
     sizes = post.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    if max_postings is not None:
-        freq = post.groupBy("token").agg(F.count(F.lit(1)).alias("df_"))
-        post = post.join(
-            freq.filter(F.col("df_") <= max_postings).select("token"), "token"
-        )
-
     a = post.alias("a")
     b = post.alias("b")
-    join_keys = [F.col("a.token") == F.col("b.token")]
-    if block_col:
-        join_keys.append(F.col("a.blk") == F.col("b.blk"))
+    join_keys = [F.col("a.token") == F.col("b.token"), F.col("a.blk") == F.col("b.blk")]
     inter = (
         a.join(b, join_keys)
         .filter(F.col("a.id") < F.col("b.id"))
@@ -391,7 +299,7 @@ def _minhash_sig(docs: DataFrame, num_hashes: int, shingle_n: int) -> DataFrame:
     one groupBy — one shuffle of (id, k hashes), no seed explode (a ×k
     row-count blowup), full map-side combine.
     """
-    shingled = _spread(docs).select(
+    shingled = spread(docs).select(
         F.col(DOC_ID).alias("id"),
         F.explode(TX.word_shingles(TEXT, shingle_n)).alias("shingle"),
     )
@@ -552,56 +460,10 @@ def minhash_lsh_pairs_delta(
     )
 
 
-#: Corpora whose Catalyst size estimate exceeds this use 64-bit SimHash
-#: when the caller leaves ``n_bits`` unset. ~64 MiB of documents is
-#: roughly the NOTES_r6 ~50k-doc saturation knee for 16-bit signatures
-#: (two unrelated docs collide within hamming<=3 at ~1.06%, so past
-#: n >> 2^16 chance pairs — the OUTPUT — grow quadratically).
-SIMHASH_AUTO_16BIT_MAX_BYTES = 64 * 1024 * 1024
-
-
-def _auto_simhash_bits(docs: DataFrame) -> int:
-    """Size-dispatch for the default SimHash width (``asof_join_auto``
-    discipline): 16 bits while the corpus is comfortably inside the
-    16-bit domain, 64 above it or when plan introspection is
-    unavailable (unknown = assume large, take the scale-safe arm).
-
-    ADVICE r9 (low): auto-width makes signatures a function of CORPUS
-    SIZE — the same document hashes to 16 bits in a small batch and 64
-    once the corpus crosses the knee, so any workflow that PERSISTS or
-    DIFFS signatures across runs (delta dedup, incremental indexes)
-    must pin ``n_bits`` explicitly. The silent flip is loudest when
-    the plan yields no size estimate: such a call lands on 64 regardless
-    of input, so that case warns."""
-    from .asof import _plan_size_bytes
-
-    size = _plan_size_bytes(docs)
-    if size is None:
-        import warnings
-
-        warnings.warn(
-            "simhash: plan size unknown - auto-dispatch "
-            "chose the 64-bit width regardless of corpus size; pin n_bits "
-            "explicitly, especially for persisted/diffed signatures",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-        return 64
-    if size <= SIMHASH_AUTO_16BIT_MAX_BYTES:
-        return 16
-    return 64
-
-
-def simhash(docs: DataFrame, n_bits: int | None = None) -> DataFrame:
-    """``n_bits``-bit SimHash per document.
-
-    ``n_bits=None`` (default) size-dispatches: 16 bits — the
-    oracle-parity width — for small corpora, 64 once the corpus leaves
-    the 16-bit saturation domain (see ``SIMHASH_AUTO_16BIT_MAX_BYTES``).
-    PIN a width explicitly whenever signatures are persisted or diffed
-    across runs (delta dedup, incremental indexes): auto-width is a
-    function of corpus size, so the same document silently changes
-    signature once the corpus crosses the knee (ADVICE r9).
+def simhash(docs: DataFrame, n_bits: int) -> DataFrame:
+    """``n_bits``-bit SimHash per document. 16 is the oracle-parity
+    width; wider signatures keep chance collisions rare on large
+    corpora (``simhash_pairs``).
 
     Bit *i* is the majority vote, over the doc's distinct tokens, of
     the high bit of hex digit ``(i-1) % 32 + 1`` of md5 of the token —
@@ -617,11 +479,9 @@ def simhash(docs: DataFrame, n_bits: int | None = None) -> DataFrame:
     explodes n_bits rows per token and shuffles n_bits× the data for
     the same answer.)
     """
-    if n_bits is None:
-        n_bits = _auto_simhash_bits(docs)
     if not 1 <= n_bits <= 64:
         raise ValueError(f"n_bits must be in [1, 64], got {n_bits}")
-    toks = _spread(docs).select(
+    toks = spread(docs).select(
         F.col(DOC_ID).alias("id"), F.explode(TX.distinct_tokens(TEXT)).alias("token")
     )
     for salt in range((n_bits + 31) // 32):
@@ -678,13 +538,9 @@ def _simhash_chunks(max_hamming: int, bits: int = 16) -> list[tuple[int, int]]:
     return out
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    block_col: str | None = None,
-    max_hamming: int = 3,
-    n_bits: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
+def simhash_pairs(docs: DataFrame, n_bits: int, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``,
+    within equal ``lang`` blocks.
 
     While ``max_hamming < n_bits``: the VALUE-level pigeonhole join.
     The signature space caps the distinct values at 2^n_bits, so
@@ -698,10 +554,7 @@ def simhash_pairs(
     row). EXACT, not approximate: the chunk join over-generates value
     candidates and the Hamming filter prunes them.
 
-    ``n_bits`` sizes the fingerprint; unset it size-dispatches (16 for
-    small corpora, 64 past ``SIMHASH_AUTO_16BIT_MAX_BYTES`` or when the
-    plan size is unknown — pin a width for cross-run stability). 16 is
-    the oracle-parity width, but it SATURATES on large corpora: two unrelated docs
+    ``n_bits`` sizes the fingerprint. 16 is the oracle-parity width, but it SATURATES on large corpora: two unrelated docs
     collide within hamming ≤ 3 with probability ~1.06% (sum of
     C(16,0..3) / 2^16), so once n ≫ 2^16 the OUTPUT itself — chance
     pairs, not plan cost — grows quadratically (measured in NOTES_r6:
@@ -711,8 +564,7 @@ def simhash_pairs(
     GENUINE near-dups.
 
     With ``max_hamming >= n_bits`` every pair qualifies, and the
-    doc-level all-pairs comparison (within ``block_col`` blocks if
-    given) runs instead.
+    doc-level all-pairs comparison within each block runs instead.
 
     The (id, simhash) table — one slim row per doc — is persisted
     because the banded plan reads it from five subtrees (value
@@ -721,21 +573,15 @@ def simhash_pairs(
     Same contract as ``minhash_lsh_pairs``: not auto-released
     mid-plan; ``release_dedup_caches()`` frees it between batches.
     """
-    if n_bits is None:
-        n_bits = _auto_simhash_bits(docs)
     sh = simhash(docs.select(DOC_ID, TEXT), n_bits=n_bits)
-    if block_col:
-        sh = sh.join(
-            docs.select(F.col(DOC_ID).alias("id"), F.col(block_col).alias("blk")), "id"
-        )
-    sh = _persist(sh)
-    keys = ["blk"] if block_col else []
+    sh = _persist(
+        sh.join(docs.select(F.col(DOC_ID).alias("id"), F.col("lang").alias("blk")), "id")
+    )
     if max_hamming >= n_bits:
         a = sh.alias("a")
         b = sh.alias("b")
-        cond = F.col("a.blk") == F.col("b.blk") if block_col else F.lit(True)
         return (
-            a.join(b, cond)
+            a.join(b, F.col("a.blk") == F.col("b.blk"))
             .filter(F.col("a.id") < F.col("b.id"))
             .select(
                 F.col("a.id").alias("id_a"),
@@ -748,10 +594,10 @@ def simhash_pairs(
         )
 
     # 1. distinct signature values per block — ≤ 2^16 rows per block
-    vals = sh.select(*keys, "simhash").distinct()
+    vals = sh.select("blk", "simhash").distinct()
     chunks = _simhash_chunks(max_hamming, bits=n_bits)
     chunked = vals.select(
-        *keys,
+        "blk",
         "simhash",
         F.explode(
             F.array(
@@ -770,13 +616,13 @@ def simhash_pairs(
                 ]
             )
         ).alias("c"),
-    ).select(*keys, "simhash", F.col("c.c_idx").alias("c_idx"), F.col("c.c_val").alias("c_val"))
+    ).select("blk", "simhash", F.col("c.c_idx").alias("c_idx"), F.col("c.c_val").alias("c_val"))
     va, vb = chunked.alias("va"), chunked.alias("vb")
     vpairs = (
-        va.join(vb, ["c_idx", "c_val", *keys])
+        va.join(vb, ["c_idx", "c_val", "blk"])
         .filter(F.col("va.simhash") < F.col("vb.simhash"))
         .select(
-            *[F.col(f"va.{k}") for k in keys],
+            F.col("va.blk"),
             F.col("va.simhash").alias("v_a"),
             F.col("vb.simhash").alias("v_b"),
             F.bit_count(F.col("va.simhash").bitwiseXOR(F.col("vb.simhash")))
@@ -790,7 +636,7 @@ def simhash_pairs(
     # 2a. same-value doc pairs (hamming 0)
     sa, sb = sh.alias("sa"), sh.alias("sb")
     same = (
-        sa.join(sb, ["simhash", *keys])
+        sa.join(sb, ["simhash", "blk"])
         .filter(F.col("sa.id") < F.col("sb.id"))
         .select(
             F.col("sa.id").alias("id_a"),
@@ -801,16 +647,12 @@ def simhash_pairs(
     # 2b. cross-value doc pairs: expand each qualifying value pair —
     # every produced row IS a result row (output-bound, no pruning)
     da, db = sh.alias("da"), sh.alias("db")
-    join_a = [F.col("da.simhash") == F.col("v_a")] + [
-        F.col(f"da.{k}") == F.col(f"vp.{k}") for k in keys
-    ]
-    join_b = [F.col("db.simhash") == F.col("v_b")] + [
-        F.col(f"db.{k}") == F.col(f"vp.{k}") for k in keys
-    ]
+    join_a = (F.col("da.simhash") == F.col("v_a")) & (F.col("da.blk") == F.col("vp.blk"))
+    join_b = (F.col("db.simhash") == F.col("v_b")) & (F.col("db.blk") == F.col("vp.blk"))
     cross = (
         vpairs.alias("vp")
-        .join(da, reduce(lambda x, y: x & y, join_a))
-        .join(db, reduce(lambda x, y: x & y, join_b))
+        .join(da, join_a)
+        .join(db, join_b)
         .select(
             F.least(F.col("da.id"), F.col("db.id")).alias("id_a"),
             F.greatest(F.col("da.id"), F.col("db.id")).alias("id_b"),
@@ -820,13 +662,9 @@ def simhash_pairs(
     return same.unionByName(cross)
 
 
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    block_col: str | None = None,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Pairs of embeddings with cosine ≥ threshold, blocked by
-    ``block_col`` (a label / cluster / LSH-bucket column) to avoid n².
+def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """Pairs of embeddings with cosine ≥ threshold, blocked by the
+    ``label`` column to avoid n².
 
     Plan shape: equi-join on the block key with the probe side spread
     across all cores and the build side UN-hinted — AQE picks broadcast
@@ -839,25 +677,17 @@ def embedding_neardup_pairs(
     computed once per ROW, not per pair; the cosine formula dot/(na·nb)
     is unchanged so values are bit-identical to the naive form.
     """
-    cols = [F.col(VEC_ID).alias("id"), F.col(EMBEDDING).alias("v")]
-    if block_col:
-        cols.append(F.col(block_col).alias("blk"))
-    e = emb.select(*cols).withColumn("nrm", V.norm(F.col("v")))
-    a = _spread(e).alias("a")
+    e = emb.select(
+        F.col(VEC_ID).alias("id"), F.col(EMBEDDING).alias("v"), F.col("label").alias("blk")
+    ).withColumn("nrm", V.norm(F.col("v")))
+    a = spread(e).alias("a")
     b = e.alias("b")
     cos = V.dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
-    if block_col:
-        # equi-join on the block key, NO explicit broadcast: the build
-        # side is the whole corpus, so a broadcast hint is a hard OOM
-        # ceiling at scale. AQE broadcasts at runtime when it actually
-        # fits (small corpora keep the fast plan), and splits skewed
-        # blocks otherwise.
-        joined = a.join(b, F.col("a.blk") == F.col("b.blk"))
-    else:
-        # no block key ⇒ genuine all-pairs: only valid when one side is
-        # broadcast-small by construction. Callers at scale must pass a
-        # block_col (label / cluster / similarity.lsh_bucket).
-        joined = a.join(F.broadcast(b), F.lit(True))
+    # equi-join on the block key, NO explicit broadcast: the build side
+    # is the whole corpus, so a broadcast hint is a hard OOM ceiling at
+    # scale. AQE broadcasts at runtime when it actually fits (small
+    # corpora keep the fast plan), and splits skewed blocks otherwise.
+    joined = a.join(b, F.col("a.blk") == F.col("b.blk"))
     return (
         joined.filter(F.col("a.id") < F.col("b.id"))
         .select(
@@ -982,7 +812,7 @@ def _star_contract(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
     )
 
 
-def dedup_clusters(pairs: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     """Resolve near-dup PAIRS into CLUSTERS: connected components by
     iterative min-label propagation, the step after pair generation in a
     real training-data dedup (keep one canonical doc per component).
@@ -1008,9 +838,9 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame | None = None) -> DataFram
     execution). Swap in reliable ``checkpoint`` on a cluster where
     executor loss must be replayable.
 
-    ``nodes`` (any single-column DataFrame of ids) adds docs that appear
-    in no pair as singleton clusters; defaults to the ids present in
-    ``pairs``.
+    ``nodes`` (any single-column DataFrame of ids — the corpus the pairs
+    came from) names every doc; the docs that appear in no pair come back
+    as singleton clusters. Pair ids outside ``nodes`` get no label.
     """
     sym = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # repartition BEFORE dropDuplicates: HashPartitioning(src) satisfies
@@ -1030,31 +860,20 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame | None = None) -> DataFram
         .dropDuplicates(["src", "dst"])
         .persist()
     )
-    if nodes is None:
-        # nodes derive FROM edges here — the init checkpoint and the
-        # edge materialization share the unmaterialized persist, so
-        # they must stay one sequential job (running them concurrently
-        # would compute the edge subtree twice)
-        nodes = edges.select(F.col("src").alias("id")).distinct()
+    # the nodes are independent of the edge list, and round 1 needs BOTH
+    # materialized — overlap the two jobs from a second driver thread
+    # (guide §2.6) instead of paying them back-to-back; the count is
+    # materialization-only, its value is discarded. Scheduling is FIFO,
+    # so the checkpoint's tail back-fills with edge tasks.
+    from concurrent.futures import ThreadPoolExecutor
+
+    nodes = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
+    with ThreadPoolExecutor(max_workers=1) as _pool:
+        _edges_fut = _pool.submit(edges.count)
         labels = nodes.select(
             "id", F.col("id").alias("cluster_id")
         ).localCheckpoint(eager=True)
-    else:
-        # caller-provided nodes are independent of the edge list, and
-        # round 1 needs BOTH materialized — overlap the two jobs from a
-        # second driver thread (guide §2.6) instead of paying them
-        # back-to-back; the count is materialization-only, its value is
-        # discarded. Scheduling is FIFO, so the checkpoint's tail
-        # back-fills with edge tasks.
-        from concurrent.futures import ThreadPoolExecutor
-
-        nodes = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _edges_fut = _pool.submit(edges.count)
-            labels = nodes.select(
-                "id", F.col("id").alias("cluster_id")
-            ).localCheckpoint(eager=True)
-            _edges_fut.result()
+        _edges_fut.result()
     for _ in range(25):
         nbr_min = (
             edges.alias("e")
@@ -1122,46 +941,24 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame | None = None) -> DataFram
     return labels
 
 
-def keep_canonical(
-    docs: DataFrame,
-    clusters: DataFrame,
-    clusters_cover_docs: bool = False,
-) -> DataFrame:
+def keep_canonical(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Filter a corpus to one canonical document per near-dup cluster —
     the terminal step of the dedup pipeline (pairs → clusters → keep).
 
-    ``clusters`` is ``dedup_clusters`` output (id, cluster_id);
-    canonical = the row whose id IS its component's minimum. Documents
-    absent from ``clusters`` are kept (singleton semantics match
-    dedup_clusters' nodes-default). One semi-join, AQE-planned.
-
-    ``clusters_cover_docs=True`` asserts every ``docs`` id appears in
-    ``clusters`` — true whenever the caller passed the same corpus as
-    ``dedup_clusters``' ``nodes`` — and skips the singleton anti-join
-    (a whole extra pass over ``docs`` plus a union, spent proving an
-    empty set). Output is identical when the assertion holds; when it
-    does not, uncovered docs are silently DROPPED, so only set it on
-    the nodes-covered composition.
+    Clusters are ``dedup_clusters(pairs, nodes=<the docs' ids>)``, so
+    every doc has a cluster and a doc with no near-duplicate is its own
+    singleton, kept. Canonical = the doc whose id IS its component's
+    minimum. Returns the kept ``docs`` rows plus ``cluster_id``. One
+    join, AQE-planned.
     """
-    keep = clusters.filter(F.col("cluster_id") == F.col("id")).select("id")
-    if not clusters_cover_docs:
-        missing = docs.select(F.col(DOC_ID).alias("id")).join(
-            clusters.select("id"), "id", "left_anti"
-        )
-        keep = keep.unionByName(missing)
-    return docs.join(
-        keep.withColumnRenamed("id", DOC_ID),
-        DOC_ID,
-        "left_semi",
+    clusters = dedup_clusters(pairs, nodes=docs.select(DOC_ID))
+    keep = clusters.filter(F.col("cluster_id") == F.col("id")).select(
+        F.col("id").alias(DOC_ID), "cluster_id"
     )
+    return docs.join(keep, DOC_ID)
 
 
-def keep_best(
-    docs: DataFrame,
-    clusters: DataFrame,
-    score_col: str,
-    clusters_cover_docs: bool = False,
-) -> DataFrame:
+def keep_best(docs: DataFrame, pairs: DataFrame, score_col: str) -> DataFrame:
     """Quality-aware sibling of ``keep_canonical``: per near-dup
     cluster keep the member with the HIGHEST ``score_col`` (ties →
     lowest id) instead of the arbitrary min-id member — the standard
@@ -1169,9 +966,9 @@ def keep_best(
     when near-dup members genuinely differ, e.g. a page and its
     truncated syndication copy.
 
-    ``clusters`` is ``dedup_clusters`` output (id, cluster_id);
-    documents absent from ``clusters`` are kept (singleton semantics
-    match keep_canonical). Returns the kept ``docs`` rows unchanged.
+    Clusters are built over the docs' own ids, as in ``keep_canonical``,
+    so a doc with no near-duplicate is a singleton cluster and kept.
+    Returns the kept ``docs`` rows plus ``cluster_id``.
 
     Scale: winner selection is a map-side-combined min-of-struct
     groupBy on cluster_id — NOT a per-cluster rank window, for the
@@ -1185,9 +982,10 @@ def keep_best(
     coalesces to +Infinity after negation, so an all-NULL cluster
     still keeps its min-id member rather than dropping whole.
     """
+    clusters = dedup_clusters(pairs, nodes=docs.select(DOC_ID))
     scored = docs.select(
         F.col(DOC_ID).alias("id"), F.col(score_col).alias("__score")
-    ).join(clusters.select("id", "cluster_id"), "id")
+    ).join(clusters, "id")
     winners = (
         scored.groupBy("cluster_id")
         .agg(
@@ -1201,22 +999,9 @@ def keep_best(
                 )
             ).alias("w")
         )
-        .select(F.col("w.kid").alias("id"))
+        .select(F.col("w.kid").alias(DOC_ID), "cluster_id")
     )
-    # clusters_cover_docs: same contract as keep_canonical — skips the
-    # singleton anti-join when the caller passed this corpus as the
-    # clustering's ``nodes`` (every id covered, the anti-join provably
-    # empty); identical output under that assertion.
-    if not clusters_cover_docs:
-        missing = docs.select(F.col(DOC_ID).alias("id")).join(
-            clusters.select("id"), "id", "left_anti"
-        )
-        winners = winners.unionByName(missing)
-    return docs.join(
-        winners.withColumnRenamed("id", DOC_ID),
-        DOC_ID,
-        "left_semi",
-    )
+    return docs.join(winners, DOC_ID)
 
 
 def _semantic_near_gemm(
@@ -1326,12 +1111,7 @@ def semantic_dedup(
     # mirrors similarity's own deferred import of dedup._persist
 
     use_gemm = _use_gemm(n_cells * dim)
-    assigned, _ = ivf_assign(
-        emb,
-        dim,
-        n_centroids=n_cells,
-        round_means=6,
-    )
+    assigned, _ = ivf_assign(emb, dim, n_centroids=n_cells)
     # nrm is only read by the fold arm's cosine — the GEMM kernel
     # normalizes internally from v, so on the large-corpus path the
     # persisted cache carries (and the persist computes) no norm fold
@@ -1349,7 +1129,7 @@ def semantic_dedup(
             e.select("id", "v", "cell"), threshold=threshold, round_to=6
         )
     else:
-        a = _spread(e).alias("a")
+        a = spread(e).alias("a")
         b = e.alias("b")
         cos = V.dot(F.col("a.v"), F.col("b.v")) / (
             F.col("a.nrm") * F.col("b.nrm")
@@ -1578,7 +1358,7 @@ def minhash_pair_recall(docs: DataFrame) -> DataFrame:
     path. Both metrics coalesce to 1.0 on empty denominators (no truth
     pairs → nothing to miss; no candidates → nothing spurious).
     """
-    sh = _spread(docs).select(
+    sh = spread(docs).select(
         F.col(DOC_ID).alias("id"),
         F.explode(TX.word_shingles(TEXT, 3)).alias("g"),
     )
@@ -1661,7 +1441,7 @@ def verify_pairs(
         .unionByName(pairs.select(F.col("id_b").alias(DOC_ID)))
         .distinct()
     )
-    sh = _spread(docs.join(ids, DOC_ID, "left_semi")).select(
+    sh = spread(docs.join(ids, DOC_ID, "left_semi")).select(
         F.col(DOC_ID).alias("id"),
         F.explode(TX.word_shingles(TEXT, shingle_n)).alias("g"),
     )

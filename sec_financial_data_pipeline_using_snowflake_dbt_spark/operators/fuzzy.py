@@ -24,16 +24,17 @@ Scale: variants grow the input ``(len+1)``-fold for k=1 (quadratic in
 ``len`` for k=2 — use k=2 only on short keys).  The join shuffles on the
 variant string; a pathological bucket (e.g. millions of rows sharing one
 short variant) is candidate-pair quadratic *within the bucket* — the same
-failure mode as an LSH band — so ``max_bucket`` optionally drops buckets
-above a size cap (a loud recall tradeoff, default off = exact).  Output
-pair count is bounded by true-match volume times the verification factor,
-never by n².
+failure mode as an LSH band; there is no bucket cap, so the output is
+exact.  Output pair count is bounded by true-match volume times the
+verification factor, never by n².
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import spread
 
 
 def _delete_one(s: Column, p: Column) -> Column:
@@ -74,7 +75,6 @@ def fuzzy_pairs(
     id_col: str,
     str_col: str,
     max_dist: int = 1,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """All pairs (id_a < id_b) whose strings are within levenshtein
     distance ``max_dist``; columns ``id_a, id_b, s_a, s_b, dist``.
@@ -82,28 +82,15 @@ def fuzzy_pairs(
     One shuffle to block on deletion variants, one to dedup candidate
     pairs; verification is the built-in ``levenshtein`` (codegen).
     """
-    ids = df.select(F.col(id_col).alias("__id"), F.col(str_col).alias("__s"))
     # the variant explode multiplies work (len+1)-fold BEFORE any
-    # shuffle; when the scan yields fewer splits than cores (small files
-    # on a big box) that serializes onto a handful of tasks — fan out
-    # first (the ngram_diversity lesson, NOTES_r8 §3). At 100 TB
-    # splits >> cores and this branch is a no-op.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() < par:
-        ids = ids.repartition(par)
+    # shuffle; a few-split scan would serialize it onto a handful of
+    # tasks, so fan out first (the ngram_diversity lesson, NOTES_r8 §3)
+    ids = spread(
+        df.select(F.col(id_col).alias("__id"), F.col(str_col).alias("__s"))
+    )
     vars_ = ids.select(
         "__id", "__s", F.explode(deletion_variants(F.col("__s"), max_dist)).alias("__v")
     )
-    if max_bucket is not None:
-        # oversized variant buckets (the within-bucket-quadratic hazard)
-        # are a short list by construction — aggregate, broadcast, anti-join
-        big = (
-            vars_.groupBy("__v")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .where(F.col("__bn") > max_bucket)
-            .select("__v")
-        )
-        vars_ = vars_.join(F.broadcast(big), on="__v", how="left_anti")
     a = vars_.alias("a")
     b = vars_.alias("b")
     cand = (

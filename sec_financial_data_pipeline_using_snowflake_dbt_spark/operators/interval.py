@@ -11,7 +11,7 @@ while one side broadcasts.  The scale path is the classic bucketized band
 join (same discipline as ``asof.py``'s bucketized arm):
 
 1. explode every interval onto the fixed-width buckets it covers;
-2. shuffle equi-join on (by?, bucket) — only co-bucketed intervals meet;
+2. shuffle equi-join on the bucket — only co-bucketed intervals meet;
 3. keep true overlaps, emitting each pair EXACTLY ONCE without a distinct:
    the pair is kept only in the bucket containing ``max(l.start, r.start)``
    — a point that, for an overlapping pair, lies in both intervals, so
@@ -32,7 +32,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def _bucket(col: Column, width: int) -> Column:
@@ -54,33 +53,15 @@ def interval_join(
     lend: str,
     rstart: str,
     rend: str,
-    by: list[str] | None = None,
     bucket_width: int = 3_600_000_000,
     max_buckets_per_interval: int = 65536,
-    how: str = "inner",
-    left_id: str | None = None,
 ) -> DataFrame:
     """All (left, right) pairs whose closed numeric intervals
-    ``[lstart, lend]`` × ``[rstart, rend]`` intersect (optionally also
-    matching on ``by`` keys).  Output: left columns then right columns —
-    names must be disjoint.  One shuffle on (by?, bucket); no nested
-    loop; no distinct.
-
-    ``how='left'`` keeps unmatched left rows with NULL right columns.
-    A banded join can't express left-outer directly (each left row
-    explodes into several buckets, and "unmatched" is a property of the
-    WHOLE row, not one bucket), so the caller must name a unique
-    ``left_id`` column: unmatched rows come back via one LEFT ANTI join
-    of ``left`` against the matched ids.  The matched subtree is
-    referenced twice in the left-outer plan (rows + ids), so it is
-    persisted internally (MEMORY_AND_DISK, same discipline as
-    ``funnel_steps``) — the band join executes once, not twice."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    if how == "left" and not left_id:
-        raise ValueError("how='left' requires left_id (a unique left key)")
+    ``[lstart, lend]`` × ``[rstart, rend]`` intersect (an inner join).
+    Output: left columns then right columns — names must be disjoint.
+    One shuffle on the bucket; no nested loop; no distinct."""
     overlap_cols = set(left.columns) & set(right.columns)
-    if overlap_cols - set(by or []):
+    if overlap_cols:
         raise ValueError(f"column names must be disjoint: {sorted(overlap_cols)}")
 
     def explode_buckets(df: DataFrame, s: str, e: str) -> DataFrame:
@@ -102,7 +83,6 @@ def interval_join(
 
     lexp = explode_buckets(left, lstart, lend).alias("l")
     rexp = explode_buckets(right, rstart, rend).alias("r")
-    keys = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in (by or [])]
     ls, le = F.col(f"l.{lstart}"), F.col(f"l.{lend}")
     rs, re_ = F.col(f"r.{rstart}"), F.col(f"r.{rend}")
     cond = (
@@ -114,20 +94,7 @@ def interval_join(
         # exploded its bucket)
         & (F.col("l.__b") == _bucket(F.greatest(ls, rs), bucket_width))
     )
-    for k in keys:
-        cond = cond & k
     out_cols = [F.col(f"l.{c}") for c in left.columns] + [
-        F.col(f"r.{c}") for c in right.columns if c not in (by or [])
+        F.col(f"r.{c}") for c in right.columns
     ]
-    matched = lexp.join(rexp, cond, "inner").select(*out_cols)
-    if how == "inner":
-        return matched
-    matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
-    right_out = [c for c in right.columns if c not in (by or [])]
-    unmatched = left.join(
-        matched.select(left_id).distinct(), on=left_id, how="left_anti"
-    ).select(
-        *[F.col(c) for c in left.columns],
-        *[F.lit(None).cast(dict(right.dtypes)[c]).alias(c) for c in right_out],
-    )
-    return matched.unionByName(unmatched)
+    return lexp.join(rexp, cond, "inner").select(*out_cols)

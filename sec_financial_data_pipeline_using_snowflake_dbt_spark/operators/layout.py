@@ -113,15 +113,7 @@ def zorder_key(
     return F.expr(zorder_sql_expr(scaled, bits, div="DIV"))
 
 
-def with_zorder_key(
-    df: DataFrame,
-    cols: Sequence[str],
-    bits: int = 16,
-    bounds: dict[str, tuple[int, int]] | None = None,
-) -> DataFrame:
-    """``df`` + the z-value column (bounds computed from the data unless
-    supplied — supply table-level bounds when keying an incremental batch
-    so every batch shares one curve)."""
-    bounds = bounds or column_bounds(df, cols)
-    return df.withColumn(Z_COL, zorder_key(cols, bounds, bits))
+def with_zorder_key(df: DataFrame, cols: Sequence[str], bits: int = 16) -> DataFrame:
+    """``df`` + the z-value column over the data's own bounds."""
+    return df.withColumn(Z_COL, zorder_key(cols, column_bounds(df, cols), bits))
 

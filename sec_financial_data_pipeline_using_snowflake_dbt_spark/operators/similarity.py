@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..functions.vector import EMBEDDING, VEC_ID
+from ..session import needs_spread
 from .asof import _plan_size_bytes
 
 #: Query sides estimated at or below this carry an explicit broadcast
@@ -157,6 +158,11 @@ MAX_CENTROID_LITERAL_TERMS = 32768
 #: posexplode formulation to keep the aggregate column count bounded.
 MAX_MEAN_COLUMNS = 256
 
+#: Decimal places every Lloyd centroid coordinate is rounded to after
+#: the mean step (the ``ivf_assign`` docstring: what makes the quantizer
+#: reproducible across engines, so its SQL oracles replay it exactly).
+ROUND_MEANS = 6
+
 #: (r6 had a MIN_ROWS_FOR_COLUMN_MEAN row-count dispatch here: the
 #: per-column mean built via dim separate agg Columns cost ~1.2 s of
 #: py4j/plan time per iteration, so small corpora used posexplode.
@@ -164,7 +170,7 @@ MAX_MEAN_COLUMNS = 256
 #: removed that fixed cost — the column arm is now a wash at 2k rows
 #: and ~26% faster at 500k, so the dispatch and its dedicated count()
 #: job are gone; both formulations are bit-identical under
-#: ``round_means``, pytest-enforced.)
+#: ``ROUND_MEANS``, pytest-enforced.)
 
 #: Above this many n_centroids x dim terms, the IVF operators route the
 #: Lloyd assign through the Arrow/numpy GEMM arm instead of
@@ -374,14 +380,11 @@ def ivf_assign(
     corpus: DataFrame,
     dim: int,
     n_centroids: int = 8,
-    n_iters: int = 2,
-    round_means: int | None = None,
-    early_stop_eps: float | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic Lloyd iterations.
 
     Initial centroids = the ``n_centroids`` lowest-id vectors (no RNG, so
-    runs are reproducible); ``n_iters`` rounds of assign + mean. Returns
+    runs are reproducible); two rounds of assign + mean. Returns
     (assignments(id, cell), centroids(cell, cvec)).
 
     Scale shape per iteration: the centroid table is ALWAYS driver-side
@@ -400,13 +403,13 @@ def ivf_assign(
     identical (dist asc, cell asc) tie-break; bit-equivalence of the two
     arms is pytest-enforced.
 
-    ``round_means`` rounds each centroid coordinate to that many decimal
-    places after the mean step. The mean over a distributed partition sum
-    is order-nondeterministic in the last ulp; rounding makes the
-    quantizer REPRODUCIBLE across engines (and across Spark runs), which
-    is what lets q_ann_ivf carry a full DuckDB oracle — the oracle
-    unrolls the same Lloyd iterations in SQL and must land on
-    bit-identical centroids.
+    Each centroid coordinate is rounded to ``ROUND_MEANS`` decimal places
+    after the mean step. The mean over a distributed partition sum is
+    order-nondeterministic in the last ulp; rounding makes the quantizer
+    REPRODUCIBLE across engines (and across Spark runs), which is what
+    lets q_ann_ivf carry a full DuckDB oracle — the oracle unrolls the
+    same Lloyd iterations in SQL and must land on bit-identical
+    centroids.
 
     Assign arms: at or below ``GEMM_ASSIGN_MIN_TERMS`` centroid terms
     the Column formulations above run (bit-exact vs the unrolled SQL
@@ -414,21 +417,10 @@ def ivf_assign(
     argmin arm (``_gemm_assign``: same assignments in practice,
     distances not bit-identical) — at large n_centroids the fold's
     per-element lambda cost dominates the whole operator (measured
-    23 s/pass at 20k x 80 x 64 vs ~1 s for gemm).
-
-    ``early_stop_eps`` (opt-in, VERDICT r5 #7): stop the Lloyd loop when
-    the max absolute coordinate movement across centroids falls at or
-    below eps — one driver-side comparison per round over the already-
-    collected centroid list, zero extra jobs. Off by default so the
-    default path runs exactly ``n_iters`` rounds, matching the oracle's
-    unrolled CTE chain; on a converged corpus the early-stopped result
-    is identical to the full run anyway (a fixed point stays fixed), so
-    the same oracle still matches when enabled.
+    23 s/pass at 20k x 80 x 64 vs ~1 s for gemm). The loop always runs
+    both rounds, matching the oracle's unrolled CTE chain.
     """
-    assignments, cents, _ = _ivf_fit(
-        corpus, dim, n_centroids, n_iters,
-        round_means=round_means, early_stop_eps=early_stop_eps,
-    )
+    assignments, cents, _ = _ivf_fit(corpus, dim, n_centroids)
     centroids = corpus.sparkSession.createDataFrame(
         [(cell, cvec) for cell, cvec in cents], "cell INT, cvec ARRAY<DOUBLE>"
     )
@@ -442,8 +434,6 @@ def _ivf_fit(
     n_iters: int = 2,
     id_col: str = VEC_ID,
     vec_col: str = EMBEDDING,
-    round_means: int | None = None,
-    early_stop_eps: float | None = None,
     n_first: int = 0,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]], list]:
     """The Lloyd fit behind ``ivf_assign``: returns (assignments, the
@@ -454,7 +444,7 @@ def _ivf_fit(
     the SAME job as the centroid init (r12 "fused init": the init
     collect just widens its limit), so ivfpq's lowest-id PQ training
     sample costs no extra job."""
-    from .dedup import _needs_spread, _persist
+    from .dedup import _persist
 
     # the projected corpus is scanned once per Lloyd iteration plus the
     # init collect and the final assign — persist it (registered with
@@ -465,18 +455,17 @@ def _ivf_fit(
     # single core (measured r12: 0.5-0.9 s per Lloyd collect at sf0.1
     # on local[32]); at 100 TB splits ≫ cores and this is a no-op by
     # construction. Partition-layout independence of the results is the
-    # operator's documented contract (round_means absorbs partial-sum
-    # ulp order; unrounded means are documented last-ulp
-    # non-deterministic). NOTE the split: the probe runs on the RAW
+    # operator's documented contract (ROUND_MEANS absorbs partial-sum
+    # ulp order). NOTE the split: the probe runs on the RAW
     # projection and the repartition goes ABOVE the cache — probing the
     # cached frame (df.rdd) or caching the repartition both trip an AQE
     # attribute-binding bug when two plan arms share the cache entry
     # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND, reproduced r12 on the
-    # two-arm q_kmeans_quality union; _needs_spread docstring).
+    # two-arm q_kmeans_quality union; needs_spread docstring).
     proj = corpus.select(
         F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
     )
-    rebalance = _needs_spread(proj)
+    rebalance = needs_spread(proj)
     c = _persist(proj)
     if rebalance:
         c = c.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
@@ -540,12 +529,9 @@ def _ivf_fit(
             # wash at 2k rows (r11 interleaved A/B, bit-identical
             # output) and still ~26% faster at 500k, so the dispatch
             # (and its dedicated cached count() job per query) is gone.
-            t = (
-                (lambda i: f"round(avg(v[{i}]), {int(round_means)})")
-                if round_means is not None
-                else (lambda i: f"avg(v[{i}])")
+            terms = ", ".join(
+                f"round(avg(v[{i}]), {ROUND_MEANS})" for i in range(dim)
             )
-            terms = ", ".join(t(i) for i in range(dim))
             return assigned.groupBy("cell").agg(
                 F.expr(f"array({terms})").alias("cvec")
             )
@@ -553,12 +539,9 @@ def _ivf_fit(
         # plan/codegen — fall back to the posexplode formulation
         # (2 shuffles, rows scale with dim)
         exploded = assigned.select("cell", F.posexplode("v").alias("pos", "x"))
-        mean_expr = F.avg("x")
-        if round_means is not None:
-            mean_expr = F.round(mean_expr, round_means)
         return (
             exploded.groupBy("cell", "pos")
-            .agg(mean_expr.alias("m"))
+            .agg(F.round(F.avg("x"), ROUND_MEANS).alias("m"))
             .groupBy("cell")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
             .select("cell", F.transform(F.col("pm"), lambda s: s.m).alias("cvec"))
@@ -568,19 +551,7 @@ def _ivf_fit(
         means = _mean_step(assign(c))
         # one job per Lloyd iteration; the next assign starts from
         # literals again (constant lineage depth)
-        prev = dict(cents)
         cents = [(r.cell, list(r.cvec)) for r in means.collect()]
-        if early_stop_eps is not None and {c for c, _ in cents} == set(prev):
-            moved = max(
-                (
-                    abs(x - y)
-                    for cell, cvec in cents
-                    for x, y in zip(cvec, prev[cell])
-                ),
-                default=0.0,
-            )
-            if moved <= early_stop_eps:
-                break
     return assign(c), cents, first_rows[:n_first]
 
 
@@ -594,7 +565,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 3,
-    round_means: int | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their nearest
     centroid's cell; each query probes its ``n_probe`` nearest cells and
@@ -614,8 +584,7 @@ def ivf_topk(
     # LocalTableScan collect cost ~0.5 s of query execution per call —
     # measured r12)
     assignments, cents, _ = _ivf_fit(
-        corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col,
-        round_means=round_means,
+        corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col
     )
     use_gemm = _use_gemm(n_centroids * dim)
     members = assignments.select(
@@ -679,14 +648,11 @@ def cluster_sample(
     dim: int,
     n_cells: int = 8,
     per_cell: int = 5,
-    mode: str = "prototypes",
 ) -> DataFrame:
     """Cluster-balanced corpus selection: k-means the embeddings, then
-    keep ``per_cell`` members per cluster — ``mode='prototypes'`` keeps
-    the members NEAREST their centroid (the most representative
-    examples, the prototypicality curation step of the SemDeDup /
-    DataComp pipelines), ``mode='spread'`` keeps the FARTHEST (maximum
-    within-cluster diversity / hard-example mining). Returns one row
+    keep the ``per_cell`` members NEAREST their centroid per cluster
+    (the most representative examples, the prototypicality curation
+    step of the SemDeDup / DataComp pipelines). Returns one row
     per kept vector: (vec_id, cell BIGINT, dist, rank) with ``dist``
     the L2 distance to the centroid rounded to 6 dp and
     ``rank`` 1-based within the cell.
@@ -711,13 +677,9 @@ def cluster_sample(
     sqrt), argmin/order-equivalent since sqrt is monotone. The emitted
     ``dist`` is ROUND(sqrt, 6) in both.
     """
-    if mode not in ("prototypes", "spread"):
-        raise ValueError(f"mode must be 'prototypes' or 'spread', got {mode!r}")
     if per_cell < 1:
         raise ValueError("per_cell must be >= 1")
-    assignments, cents, _ = _ivf_fit(
-        corpus, dim, n_centroids=n_cells, round_means=6
-    )
+    assignments, cents, _ = _ivf_fit(corpus, dim, n_centroids=n_cells)
     # each row's centroid comes from the literal cell→cvec map instead
     # of a broadcast join against the (driver-side anyway) centroid
     # table: same _sqdist fold over the same literal doubles, one
@@ -725,16 +687,8 @@ def cluster_sample(
     # pushed-fold binding bug (_centroid_lookup_expr docstring)
     cvec = F.element_at(_centroid_lookup_expr(cents), F.col("cell").cast("int"))
     d2 = _sqdist(F.col("v"), cvec)
-    # 'spread' negates the sort key instead of reversing the sort, so
-    # one struct ordering serves both modes with the id asc tie-break
-    keyed = (
-        assignments.select(
-            "cell",
-            F.struct(
-                (d2 if mode == "prototypes" else -d2).alias("key"),
-                F.col("id").alias("id"),
-            ).alias("s"),
-        )
+    keyed = assignments.select(
+        "cell", F.struct(d2.alias("key"), F.col("id").alias("id")).alias("s")
     )
     local = (
         keyed.withColumn("_pid", F.spark_partition_id())
@@ -751,7 +705,7 @@ def cluster_sample(
         .select(
             F.col("s.id").alias("vec_id"),
             F.col("cell").cast("long").alias("cell"),
-            F.round(F.sqrt(F.abs(F.col("s.key"))), 6).alias("dist"),
+            F.round(F.sqrt(F.col("s.key")), 6).alias("dist"),
             (F.col("pos") + 1).cast("long").alias("rank"),
         )
     )
@@ -783,9 +737,7 @@ def kmeans_quality(corpus: DataFrame, dim: int, n_centroids: int = 8) -> DataFra
     resident by construction) + one map-side-combined groupBy(cell) —
     the exact shape of a Lloyd mean step; output is n_centroids rows.
     """
-    assignments, cents, _ = _ivf_fit(
-        corpus, dim, n_centroids=n_centroids, round_means=6
-    )
+    assignments, cents, _ = _ivf_fit(corpus, dim, n_centroids=n_centroids)
     # literal cell→cvec map lookup instead of the broadcast join — same
     # fold over the same literal doubles, one BroadcastHashJoin fewer,
     # and no pushed-fold binding bug (_centroid_lookup_expr docstring)
@@ -1103,7 +1055,7 @@ def ivfpq_topk(
         # the PQ on cells that disagree with the engine's)
         use_gemm = _use_gemm(n_centroids * dim)
         assignments, cents, first_rows = _ivf_fit(
-            corpus, dim, n_centroids, round_means=6,
+            corpus, dim, n_centroids,
             # fused init (VERDICT r11 #3): the PQ training sample is the
             # same lowest-id projection the init collect already takes —
             # widen that collect instead of running a second job (the

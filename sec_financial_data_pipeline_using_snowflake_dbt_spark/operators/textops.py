@@ -11,7 +11,8 @@ from pyspark.sql import types as T
 
 from ..functions import text as TX
 from ..functions.text import DOC_ID, TEXT
-from ..functions.vector import EMBEDDING, VEC_ID
+from ..functions.vector import VEC_ID
+from ..session import spread
 
 
 def text_quality(docs: DataFrame) -> DataFrame:
@@ -285,14 +286,13 @@ def c4_line_clean(docs: DataFrame) -> DataFrame:
     Everything is array HOFs over one ``split`` — whole-stage codegen,
     no shuffle, no UDF: the operator is a pure map at any corpus size.
     """
-    # _spread: a few-file corpus scans as few tasks, serializing this
+    # spread: a few-file corpus scans as few tasks, serializing this
     # per-doc line/regex fold on a handful of cores (interleaved A/B at
     # sf0.1, r11: the single-row-group documents scan ran the whole map
     # in 1 task). No-op at scale (splits >= cores) and on shuffle-
-    # bearing inputs — see _spread's probing discipline.
-    from .dedup import _spread
+    # bearing inputs — see spread's probing discipline.
 
-    docs = _spread(docs)
+    docs = spread(docs)
     lines = F.transform(F.split(F.col(TEXT), "\n"), lambda l: F.trim(l))
 
     def word_count(l):
@@ -400,11 +400,10 @@ def scrub_pii(docs: DataFrame) -> DataFrame:
     whole-stage codegen, no shuffle, no UDF: a flat map at any corpus
     size, exactly like c4_line_clean.
     """
-    # _spread: same rationale as c4_line_clean — the regex chain is the
+    # spread: same rationale as c4_line_clean — the regex chain is the
     # cost and a few-file input would run it in as few tasks.
-    from .dedup import _spread
 
-    docs = _spread(docs)
+    docs = spread(docs)
     clean = F.col(TEXT)
     for _, pat, repl in PII_PATTERNS:
         clean = F.regexp_replace(clean, pat, repl)
@@ -445,13 +444,12 @@ def decontaminate(corpus: DataFrame, eval_docs: DataFrame, n: int = 5) -> DataFr
     ev = shingled(eval_docs).select("ngram").distinct()
     # word_shingles is per-doc distinct, so count(*) after the inner
     # join counts DISTINCT overlapping n-grams per document.
-    # _spread: a small-file corpus arrives in few partitions and the
+    # spread: a small-file corpus arrives in few partitions and the
     # shingle explosion is the expensive step — same discipline as the
     # dedup operators (conditional: no-op for already-parallel inputs).
-    from .dedup import _spread
 
     hits = (
-        shingled(_spread(corpus))
+        shingled(spread(corpus))
         .join(ev, "ngram")
         .groupBy(DOC_ID)
         .agg(F.count(F.lit(1)).alias("n_hits"))
@@ -497,10 +495,9 @@ def contamination_report(
             F.explode(TX.word_shingles(F.col(TEXT), n)).alias("ngram"),
         )
 
-    from .dedup import _spread
 
     ev = shingled(eval_docs, "eval_id").distinct()
-    joined = shingled(_spread(corpus), "cid").join(ev, "ngram")
+    joined = shingled(spread(corpus), "cid").join(ev, "ngram")
     tot = joined.groupBy("cid").agg(
         F.count_distinct(F.col("ngram")).cast("long").alias("n_hits")
     )
@@ -522,11 +519,11 @@ def contamination_report(
             (F.lit(0) - F.col("w.nh")).cast("long").alias("top_eval_hits"),
         )
     )
-    # _spread here too: this pass evaluates word_shingles over the FULL
+    # spread here too: this pass evaluates word_shingles over the FULL
     # corpus (size(), not explode), and a few-file input would run it
     # in as few tasks — measured 3.0 s of the operator's 4.1 s at sf0.1
     # serialized on 3 of 32 cores (r11; the ngram_diversity lesson).
-    base = _spread(corpus).select(
+    base = spread(corpus).select(
         F.col(DOC_ID).alias("cid"),
         F.size(TX.word_shingles(F.col(TEXT), n)).cast("long").alias("n_shingles"),
     )
@@ -645,7 +642,6 @@ def frequent_items(
     items: DataFrame,
     item_col: str,
     share_den: int = 30,
-    total: int | None = None,
 ) -> DataFrame:
     """Exact heavy hitters via a Misra-Gries candidate pass: every item
     whose frequency exceeds ``n / share_den`` (share > 1/share_den), with
@@ -667,10 +663,8 @@ def frequent_items(
     ``freq * share_den > n`` is exact integer math, so the result equals
     the oracle's HAVING clause no matter how MG was partitioned.
 
-    ``total`` skips the n-counting pass when the caller already knows the
-    item count (e.g. a maintained corpus stat); otherwise one count(*)
-    runs (parquet metadata-cheap on raw scans; a re-explode on derived
-    inputs — pass ``total`` if that matters).
+    The item count n is one count(*) job (parquet metadata-cheap on raw
+    scans; a re-explode on derived inputs).
 
     Returns (item, freq, share), share rounded to 6 dp.
     """
@@ -680,7 +674,7 @@ def frequent_items(
     src = items.select(F.col(item_col).cast("string").alias("item")).filter(
         F.col("item").isNotNull()
     )
-    n = total if total is not None else src.count()
+    n = src.count()
 
     def mg(batches):
         import pandas as pd
@@ -732,7 +726,6 @@ def _hash_bucket(col: F.Column, dim: int) -> F.Column:
 def hashed_linear_score(
     docs: DataFrame,
     dim: int = 4096,
-    weights: DataFrame | None = None,
     bias: int = 0,
 ) -> DataFrame:
     """fastText-style linear classifier INFERENCE over hashed
@@ -752,39 +745,29 @@ def hashed_linear_score(
     monotone in the logit, so thresholding the logit IS thresholding
     the probability).
 
-    ``weights=None`` derives a deterministic pseudo-model — w_int(b) =
+    The weights are a deterministic pseudo-model — w_int(b) =
     md5-uniform over [-WEIGHT_SCALE, WEIGHT_SCALE] — which keeps the
     operator self-contained for the oracle; scale shape: the whole
     scoring pass is ONE narrow Column fold per doc (tokenize → bucket →
-    weight → integer sum), zero shuffles, zero joins. With a trained
-    ``weights`` DataFrame ((bucket BIGINT, w_int BIGINT), one row per
-    non-zero bucket) the pass becomes explode → broadcast-join the
-    dim-bounded weight table → per-doc sum: one map-side-combinable
-    shuffle; missing buckets weigh 0. Both arms agree exactly when the
-    table holds the derived weights (pytest-pinned).
+    weight → integer sum), zero shuffles, zero joins.
 
     Measured alternative, rejected (sf10 = 500k docs, best-of-3): the
-    derived fold pays TWO md5s per token (bucket + weight); baking the
+    fold pays TWO md5s per token (bucket + weight); baking the
     dim-bounded weight table as one array Literal and indexing it cuts
     that to one md5 + element_at — 37.5 s vs 46.7 s at sf10 — but adds
     ~2.5 s of per-run plan fixed cost that makes it a net LOSS at
-    bench scale, and the production posture (a trained ``weights``
-    table, 26.7 s at sf10 via the codegen'd explode arm) doesn't pay
-    the second md5 at all. The self-contained fold keeps the simple
-    spelling; pass the derived table through ``weights`` to trade a
-    token-grained shuffle for per-row CPU when that wins.
+    bench scale.
 
-    The derived arm is a stateless narrow fold and runs unchanged on a
+    The fold is stateless and narrow, so it runs unchanged on a
     readStream source (test-pinned, like the other cleaning stages).
     """
     if dim < 1:
         raise ValueError(f"dim must be >= 1, got {dim}")
-    # _spread: the derived arm's tokenize→md5→sum fold is pure per-doc
+    # spread: the tokenize→md5→sum fold is pure per-doc
     # CPU — a few-file corpus would run it on as few cores (r11
     # interleaved A/B; same rationale as c4_line_clean).
-    from .dedup import _spread
 
-    docs = _spread(docs)
+    docs = spread(docs)
     # NULL text reads as an empty doc (0 tokens, logit = bias) — and
     # F.size on a NULL array is -1 under legacy sizeOfNull, so the
     # coalesce must happen on the ARRAY, not the size
@@ -801,52 +784,23 @@ def hashed_linear_score(
         ).cast("long")
         return u % (2 * WEIGHT_SCALE + 1) - WEIGHT_SCALE
 
-    n_tokens = F.size(toks).cast("long").alias("n_tokens")
-    if weights is None:
-        scaled = docs.select(
-            F.col(DOC_ID),
-            n_tokens,
-            # NULL text folds to a NULL sum — coalesce to 0 so the doc
-            # scores exactly bias, like the oracle's COALESCE(ls, 0)
-            # and the weights-table arm's missing-group coalesce
-            (
-                F.lit(int(bias)).cast("long")
-                + F.coalesce(
-                    F.aggregate(
-                        toks,
-                        F.lit(0).cast("long"),
-                        lambda acc, t: acc + w_int(t),
-                    ),
+    scaled = docs.select(
+        F.col(DOC_ID),
+        F.size(toks).cast("long").alias("n_tokens"),
+        # NULL text folds to a NULL sum — coalesce to 0 so the doc
+        # scores exactly bias, like the oracle's COALESCE(ls, 0)
+        (
+            F.lit(int(bias)).cast("long")
+            + F.coalesce(
+                F.aggregate(
+                    toks,
                     F.lit(0).cast("long"),
-                )
-            ).alias("ls"),
-        )
-    else:
-        tok = docs.select(
-            F.col(DOC_ID), F.explode(toks).alias("token")
-        ).select(F.col(DOC_ID), _hash_bucket(F.col("token"), dim).alias("bucket"))
-        wt = weights.select(
-            F.col("bucket"), F.col("w_int").cast("long").alias("_w")
-        )
-        sums = (
-            tok.join(F.broadcast(wt), "bucket", "left")
-            .groupBy(DOC_ID)
-            .agg(F.sum(F.coalesce(F.col("_w"), F.lit(0))).alias("_s"))
-        )
-        scaled = (
-            docs.select(
-                F.col(DOC_ID), n_tokens
+                    lambda acc, t: acc + w_int(t),
+                ),
+                F.lit(0).cast("long"),
             )
-            .join(sums, DOC_ID, "left")
-            .select(
-                F.col(DOC_ID),
-                "n_tokens",
-                (
-                    F.lit(int(bias)).cast("long")
-                    + F.coalesce(F.col("_s"), F.lit(0))
-                ).cast("long").alias("ls"),
-            )
-        )
+        ).alias("ls"),
+    )
     return scaled.select(
         F.col(DOC_ID),
         "n_tokens",
@@ -1245,7 +1199,7 @@ def bm25_topk(
         F.explode(F.array_distinct(TX.tokens(F.lower(F.col("qtext"))))).alias("term"),
     )
     term_set = qterms.select("term").distinct()
-    # Deliberately NOT _spread and NOT dl-persisted (r11 interleaved
+    # Deliberately NOT spread and NOT dl-persisted (r11 interleaved
     # A/B, min-of-4): the corpus tokenize is evaluated three times
     # (stats aggregate, doc-length join, candidate explode), but all
     # three subtrees run CONCURRENTLY inside one job, so on an
@@ -2039,14 +1993,13 @@ def bpe_encode_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFra
     to ``MAX_CHAIN_MERGES`` merges, ranked above.
     """
     sep = _BPE_SEP
-    # _spread: both arms are per-doc encode maps (codegen'd replace
+    # spread: both arms are per-doc encode maps (codegen'd replace
     # chain / Arrow mapInPandas) whose cost is CPU, not I/O — a
     # few-file corpus would serialize them on as few cores (r11
     # interleaved A/B: bpe_encode/encode_ids/tokenizer_fertility all
     # win; no-op at scale or on shuffle-bearing inputs).
-    from .dedup import _spread
 
-    docs = _spread(docs)
+    docs = spread(docs)
     if len(merges) > MAX_CHAIN_MERGES:
         return _bpe_encode_counts_ranked(
             docs, merges, DOC_ID, TEXT, 6
@@ -2222,13 +2175,13 @@ def _bpe_encode_counts_ranked(
     )
 
 
-def ngram_diversity(docs: DataFrame, strata_col: str | None = None) -> DataFrame:
+def ngram_diversity(docs: DataFrame) -> DataFrame:
     """Corpus distinct-n diversity (the distinct-1/distinct-2 metric of
     Li et al. 2016, standard in generation-quality and corpus-variety
-    reports): for each n (and optional stratum), the fraction of n-gram
+    reports): for each ``source`` stratum and n, the fraction of n-gram
     OCCURRENCES that are distinct —
 
-      (stratum?, n, n_total, n_distinct, distinct_ratio)
+      (stratum, n, n_total, n_distinct, distinct_ratio)
 
     A boilerplate-heavy corpus scores low; templated synthetic text
     scores very low. Unlike ``repetition_stats`` (per-document folds)
@@ -2238,27 +2191,21 @@ def ngram_diversity(docs: DataFrame, strata_col: str | None = None) -> DataFrame
     used to rescan the corpus once per n): each doc builds all
     gram lengths as (n, ngram) structs in one narrow ``transform`` +
     ``concat``, a single explode feeds one map-side-combined
-    groupBy(stratum?, n). Occurrences keep their multiplicity (the
+    groupBy(stratum, n). Occurrences keep their multiplicity (the
     dedup shingles' per-doc distinct would undercount). When the scan
     yields fewer splits than cores (small files on a big box — the
     sf0.1 bench layout is ONE split), the projected (stratum, text)
-    pair is round-robin repartitioned to ``defaultParallelism`` first,
-    so fusing the per-n work into one subtree doesn't serialize 3x the
-    CPU onto one task; at 100 TB splits >> cores and the branch is a
-    no-op (no added shuffle).
+    pair is ``spread`` to ``defaultParallelism`` first, so fusing the
+    per-n work into one subtree doesn't serialize 3x the CPU onto one
+    task; at 100 TB splits >> cores and that is a no-op (no added
+    shuffle).
     COUNT(DISTINCT ngram) is corpus-sized state, kept exact so the
-    table matches its oracle. Counts are exact integers; the one ratio is a single rounded IEEE
-    division. Strata-less mode keeps the per-n global-aggregate
-    contract: every n gets a row even at zero occurrences (scaffold
-    left-join — the old per-n ``groupBy()`` emitted exactly one row
-    per n regardless).
+    table matches its oracle. Counts are exact integers; the one ratio
+    is a single rounded IEEE division.
     """
-    strata_proj = [F.col(strata_col).alias("stratum")] if strata_col else []
-    base = docs.select(*strata_proj, F.col(TEXT).alias(TEXT))
-    n_splits = base.rdd.getNumPartitions()
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if n_splits < par:
-        base = base.repartition(par)
+    base = spread(
+        docs.select(F.col("source").alias("stratum"), F.col(TEXT).alias(TEXT))
+    )
     toks = TX.tokens(F.lower(F.col(TEXT)))
     arrs = []
     for n in (1, 2, 3):
@@ -2284,28 +2231,15 @@ def ngram_diversity(docs: DataFrame, strata_col: str | None = None) -> DataFrame
             )
         )
     combined = arrs[0] if len(arrs) == 1 else F.concat(*arrs)
-    skeys = ["stratum"] if strata_col else []
-    g = base.select(*skeys, F.explode(combined).alias("p")).select(
-        *skeys, F.col("p.n").alias("n"), F.col("p.ngram").alias("ngram")
+    g = base.select("stratum", F.explode(combined).alias("p")).select(
+        "stratum", F.col("p.n").alias("n"), F.col("p.ngram").alias("ngram")
     )
-    agg = g.groupBy(*skeys, "n").agg(
+    agg = g.groupBy("stratum", "n").agg(
         F.count(F.lit(1)).cast("long").alias("n_total"),
         F.countDistinct("ngram").cast("long").alias("n_distinct"),
     )
-    if not strata_col:
-        # zero-occurrence n values still report a (n, 0, 0, NULL) row —
-        # the single-scan groupBy("n") would drop them where the old
-        # per-n global aggregate could not
-        scaffold = docs.sparkSession.createDataFrame(
-            [(n,) for n in (1, 2, 3)], "n long"
-        )
-        agg = scaffold.join(agg, "n", "left").select(
-            "n",
-            F.coalesce("n_total", F.lit(0).cast("long")).alias("n_total"),
-            F.coalesce("n_distinct", F.lit(0).cast("long")).alias("n_distinct"),
-        )
     return agg.select(
-        *skeys,
+        "stratum",
         "n",
         "n_total",
         "n_distinct",
@@ -2427,12 +2361,11 @@ def bpe_encode_ids(
     derived from the same corpus).
     """
     sep = _BPE_SEP
-    # _spread: same rationale as bpe_encode_counts (the vocab
+    # spread: same rationale as bpe_encode_counts (the vocab
     # derivation aggregates and is unaffected; the per-doc encode map
     # is what needs the cores).
-    from .dedup import _spread
 
-    docs = _spread(docs)
+    docs = spread(docs)
     if vocab is None:
         vocab = bpe_vocab(docs, merges)
     if len(merges) > MAX_CHAIN_MERGES:

@@ -36,24 +36,18 @@ def _url_basename(url: str) -> str:
     return os.path.basename(urllib.parse.urlparse(url).path)
 
 
-def find_zip_links(
-    index_url: str, pattern: str | None = None, basename: str | None = None
-) -> list[str]:
-    """All ``.zip`` hrefs in the document at ``index_url``, resolved to
-    absolute URLs. ``pattern`` filters by substring (≙ the reference's
-    ``required_zip`` quarter filter); ``basename`` filters by EXACT URL
-    basename — the anchored form callers should prefer, since a
-    substring like ``2024q1.zip`` also matches ``pre2024q1.zip``."""
+def find_zip_links(index_url: str, basename: str) -> list[str]:
+    """The ``.zip`` hrefs in the document at ``index_url`` whose URL
+    basename is EXACTLY ``basename`` (≙ the reference's ``required_zip``
+    quarter filter), resolved to absolute URLs. The match is anchored:
+    a substring test for ``2024q1.zip`` would also match
+    ``pre2024q1.zip``."""
     with urllib.request.urlopen(  # noqa: S310 — caller-supplied source
         index_url, timeout=FETCH_TIMEOUT_SECONDS
     ) as resp:
         html = resp.read().decode("utf-8", errors="replace")
     links = [urllib.parse.urljoin(index_url, m) for m in _HREF_ZIP.findall(html)]
-    if pattern:
-        links = [u for u in links if pattern in u]
-    if basename:
-        links = [u for u in links if _url_basename(u) == basename]
-    return links
+    return [u for u in links if _url_basename(u) == basename]
 
 
 def fetch_to_landing(url: str, landing_dir: str) -> str:
@@ -73,11 +67,11 @@ def fetch_to_landing(url: str, landing_dir: str) -> str:
     return dest
 
 
-def extract_zip(zip_path: str, extract_dir: str, remove_zip: bool = False) -> list[str]:
-    """Extract ``zip_path`` into ``extract_dir`` (created if needed);
-    returns extracted file paths. ``remove_zip`` mirrors the reference's
-    post-extract cleanup. Rejects entries that would escape the target
-    directory (zip-slip)."""
+def extract_zip(zip_path: str, extract_dir: str) -> list[str]:
+    """Extract ``zip_path`` into ``extract_dir`` (created if needed) and
+    delete the archive, the reference's post-extract cleanup; returns
+    extracted file paths. Rejects entries that would escape the target
+    directory (zip-slip), leaving the archive in place."""
     os.makedirs(extract_dir, exist_ok=True)
     out: list[str] = []
     with zipfile.ZipFile(zip_path) as zf:
@@ -92,8 +86,7 @@ def extract_zip(zip_path: str, extract_dir: str, remove_zip: bool = False) -> li
             for i in zf.infolist()
             if not i.is_dir()
         ]
-    if remove_zip:
-        os.remove(zip_path)
+    os.remove(zip_path)
     return out
 
 
@@ -113,5 +106,5 @@ def acquire_quarter(
     extracted: list[str] = []
     for url in links:
         zip_path = fetch_to_landing(url, landing_dir)
-        extracted.extend(extract_zip(zip_path, landing_dir, remove_zip=True))
+        extracted.extend(extract_zip(zip_path, landing_dir))
     return extracted

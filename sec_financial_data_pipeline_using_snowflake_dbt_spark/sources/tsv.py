@@ -55,21 +55,19 @@ def read_tsv(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
+    path_glob: str,
     on_error_continue: bool = True,
-    path_glob: str | None = None,
     corrupt_record_col: str | None = None,
 ) -> DataFrame:
-    """Load a tab-separated SEC file with COPY INTO semantics.
+    """Load the tab-separated SEC files under ``path`` whose names match
+    ``path_glob`` with COPY INTO semantics.
 
     ``on_error_continue=True`` ≙ ON_ERROR='CONTINUE': rows with
     structural errors (wrong token count) or type-conversion failures
     are skipped. With ``on_error_continue=False`` and a
     ``corrupt_record_col``, bad rows are kept and flagged for audit.
     """
-    reader = spark.read
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    lines = reader.text(path)
+    lines = spark.read.option("pathGlobFilter", path_glob).text(path)
     # strip trailing CR (CRLF files)
     line = F.regexp_replace(F.col("value"), "\r$", "")
     # NULL_IF=('NULL','null'): Snowflake applies it per FIELD after quote

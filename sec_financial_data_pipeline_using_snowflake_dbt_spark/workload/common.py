@@ -20,6 +20,25 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+#: Every declared query — name -> callable(spark, sf_dir) -> DataFrame —
+#: and its DuckDB oracle SQL (absent ⇒ rows-only check), filled by ``q``
+#: in import order; ``registry`` parks the tail of the order.
+QUERIES: dict[str, object] = {}
+ORACLES: dict[str, str] = {}
+
+
+def q(name: str, sql: str | None):
+    """Register the decorated function as query ``name`` with oracle ``sql``."""
+
+    def deco(fn):
+        QUERIES[name] = fn
+        if sql is not None:
+            ORACLES[name] = sql
+        return fn
+
+    return deco
+
+
 TABLES = (
     "region",
     "nation",

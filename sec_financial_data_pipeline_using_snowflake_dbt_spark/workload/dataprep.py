@@ -17,20 +17,7 @@ from ..functions import text as TX
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
 from ..operators import textops as TO
-from .common import require_sql_surgery, table
-
-PREP_QUERIES: dict[str, object] = {}
-PREP_ORACLES: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None):
-    def deco(fn):
-        PREP_QUERIES[name] = fn
-        if sql is not None:
-            PREP_ORACLES[name] = sql
-        return fn
-
-    return deco
+from .common import ORACLES, q, require_sql_surgery, table
 
 
 # Shared SQL fragments (DuckDB): tokenization identical to functions/text.py
@@ -80,29 +67,24 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # exact=True: the uncapped mode the SQL oracle replicates (the
-    # capped default is the at-scale posture; its subset property is
-    # covered by test_jaccard_max_postings_bounds_fanout).
-    # Largest-scale harness bound: exact=True is the quadratic
+    # Largest-scale harness bound: the exact Jaccard is the quadratic
     # postings self-join BY DESIGN (the oracle surface); the sampled
-    # arm below carries the sf10 cross-engine signal, and the capped
-    # default / minhash_lsh_pairs are the at-scale production paths.
-    return DD.ngram_jaccard_pairs(
-        table(spark, sf_dir, "documents"), block_col="lang", threshold=0.8, exact=True
-    )
+    # arm below carries the sf10 cross-engine signal, and
+    # minhash_lsh_pairs is the at-scale production path.
+    return DD.ngram_jaccard_pairs(table(spark, sf_dir, "documents"), threshold=0.8)
 
 
-_JACCARD_SAMPLED_SQL = PREP_ORACLES["q_dedup_jaccard"].replace(
+_JACCARD_SAMPLED_SQL = ORACLES["q_dedup_jaccard"].replace(
     f"SELECT doc_id, lang, UNNEST({SQL_DTOKENS}) AS token FROM documents",
     f"SELECT doc_id, lang, UNNEST({SQL_DTOKENS}) AS token FROM documents\n"
     "      WHERE SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'",
 )
 _JACCARD_SAMPLED_SQL = require_sql_surgery(
-    _JACCARD_SAMPLED_SQL, PREP_ORACLES["q_dedup_jaccard"],
+    _JACCARD_SAMPLED_SQL, ORACLES["q_dedup_jaccard"],
     "q_dedup_jaccard_sampled", "SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'",
 )
 require_sql_surgery(
-    _JACCARD_SAMPLED_SQL, PREP_ORACLES["q_dedup_jaccard"],
+    _JACCARD_SAMPLED_SQL, ORACLES["q_dedup_jaccard"],
     "q_dedup_jaccard_sampled", "FROM documents",
 )
 
@@ -116,12 +98,12 @@ def q_dedup_jaccard_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     intentionally-quadratic join (~1/256 of the pair work) inside a
     sweep chunk at the largest scale. Within-stratum pairs on both
     engines; the full exact arm stays the contract at the scales both
-    engines can replay, and the capped/minhash arms stay the
-    production posture."""
+    engines can replay, and the minhash arm stays the production
+    posture."""
     docs = table(spark, sf_dir, "documents").where(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) == "0"
     )
-    return DD.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.8, exact=True)
+    return DD.ngram_jaccard_pairs(docs, threshold=0.8)
 
 
 # ---------------------------------------------------------------------------
@@ -230,11 +212,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # n_bits pinned: the oracle encodes the 16-bit salted-digest layout;
-    # unset, simhash_pairs size-dispatches to 64 bits on large corpora
-    return DD.simhash_pairs(
-        table(spark, sf_dir, "documents"), block_col="lang", max_hamming=3, n_bits=16
-    )
+    # the oracle encodes the 16-bit salted-digest layout
+    return DD.simhash_pairs(table(spark, sf_dir, "documents"), n_bits=16)
 
 
 # ---------------------------------------------------------------------------
@@ -294,18 +273,16 @@ def q_dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     test scale, beyond any DuckDB spill budget this box has (ENOSPC at
     40+ GB of spill). Green through sf1; the sampled arm below carries
     the larger-scale cross-engine signal."""
-    return DD.simhash_pairs(
-        table(spark, sf_dir, "documents"), block_col="lang", max_hamming=3, n_bits=64
-    )
+    return DD.simhash_pairs(table(spark, sf_dir, "documents"), n_bits=64)
 
 
-_SIMHASH64_SAMPLED_SQL = PREP_ORACLES["q_dedup_simhash64"].replace(
+_SIMHASH64_SAMPLED_SQL = ORACLES["q_dedup_simhash64"].replace(
     f"SELECT DISTINCT doc_id, lang, UNNEST({SQL_DTOKENS}) AS token FROM documents",
     f"SELECT DISTINCT doc_id, lang, UNNEST({SQL_DTOKENS}) AS token FROM documents\n"
     "      WHERE SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'",
 )
 _SIMHASH64_SAMPLED_SQL = require_sql_surgery(
-    _SIMHASH64_SAMPLED_SQL, PREP_ORACLES["q_dedup_simhash64"],
+    _SIMHASH64_SAMPLED_SQL, ORACLES["q_dedup_simhash64"],
     "q_dedup_simhash64_sampled", "SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'",
 )
 
@@ -322,7 +299,7 @@ def q_dedup_simhash64_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").where(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) == "0"
     )
-    return DD.simhash_pairs(docs, block_col="lang", max_hamming=3, n_bits=64)
+    return DD.simhash_pairs(docs, n_bits=64)
 
 
 # ---------------------------------------------------------------------------
@@ -350,22 +327,20 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (oracle_harness.compare_agg) and only two scalars cross the
     gateway. The sampled arm below remains the cheap per-sweep
     signal."""
-    return DD.embedding_neardup_pairs(
-        table(spark, sf_dir, "embeddings"), block_col="label", threshold=0.35
-    )
+    return DD.embedding_neardup_pairs(table(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
-_EMBEDDING_SAMPLED_SQL = PREP_ORACLES["q_dedup_embedding"].replace(
+_EMBEDDING_SAMPLED_SQL = ORACLES["q_dedup_embedding"].replace(
     "FROM embeddings",
     "FROM embeddings\n"
     "               WHERE SUBSTR(MD5(CAST(vec_id AS VARCHAR)), 1, 1) = '0'",
 )
 _EMBEDDING_SAMPLED_SQL = require_sql_surgery(
-    _EMBEDDING_SAMPLED_SQL, PREP_ORACLES["q_dedup_embedding"],
+    _EMBEDDING_SAMPLED_SQL, ORACLES["q_dedup_embedding"],
     "q_dedup_embedding_sampled", "SUBSTR(MD5(CAST(vec_id AS VARCHAR)), 1, 1) = '0'",
 )
 require_sql_surgery(
-    _EMBEDDING_SAMPLED_SQL, PREP_ORACLES["q_dedup_embedding"],
+    _EMBEDDING_SAMPLED_SQL, ORACLES["q_dedup_embedding"],
     "q_dedup_embedding_sampled", "FROM embeddings",
 )
 
@@ -382,7 +357,7 @@ def q_dedup_embedding_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").where(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1) == "0"
     )
-    return DD.embedding_neardup_pairs(emb, block_col="label", threshold=0.35)
+    return DD.embedding_neardup_pairs(emb, threshold=0.35)
 
 
 # ---------------------------------------------------------------------------
@@ -754,13 +729,9 @@ def q_dedup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     pairs = DD.minhash_lsh_pairs(docs, num_hashes=8, bands=4, shingle_n=3)
-    clusters = DD.dedup_clusters(pairs, nodes=docs.select("doc_id"))
-    # clusters was built with nodes=docs ids — full coverage, so the
-    # singleton anti-join inside keep_best is provably empty; skip it
-    kept = DD.keep_best(docs, clusters, "n_chars", clusters_cover_docs=True)
-    return kept.join(
-        clusters.select(F.col("id").alias("doc_id"), "cluster_id"), "doc_id"
-    ).select("doc_id", "cluster_id", F.col("n_chars").alias("score"))
+    return DD.keep_best(docs, pairs, "n_chars").select(
+        "doc_id", "cluster_id", F.col("n_chars").alias("score")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -855,9 +826,7 @@ def _ngram_diversity_sql(n_values: tuple[int, ...] = (1, 2, 3)) -> str:
 
 @q("q_ngram_diversity", _ngram_diversity_sql())
 def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TO.ngram_diversity(
-        table(spark, sf_dir, "documents"), strata_col="source"
-    )
+    return TO.ngram_diversity(table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1317,11 +1286,12 @@ _PIPE_SQL = f"""
 
 @q("q_corpus_pipeline", _PIPE_SQL)
 def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # _spread: the synthesis + line-cleaning chain is the expensive
+    # spread: the synthesis + line-cleaning chain is the expensive
     # narrow stage; a few-file corpus would run it in as few tasks
-    from ..operators.dedup import _persist, _spread
+    from ..operators.dedup import _persist
+    from ..session import spread
 
-    pages = _c4_pages(_spread(table(spark, sf_dir, "documents")))
+    pages = _c4_pages(spread(table(spark, sf_dir, "documents")))
     cleaned = TO.c4_line_clean(pages).filter(F.col("c4_keep") == 1)
     # persist the cleaned corpus: three consumers (dedup hash, the
     # survivor join, the pack manifest) would otherwise each recompute
@@ -1368,12 +1338,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         surv.select(F.col("doc_id").alias("id")), "id", "left_semi"
     )
     pairs = DD.minhash_lsh_pairs(surv, band_sig=band_surv)
-    clusters = DD.dedup_clusters(pairs, nodes=surv.select("doc_id"))
-    # clusters was built with nodes=surv ids, so it covers every surv
-    # doc — the singleton anti-join is provably empty; skip it
-    canon = DD.keep_canonical(
-        surv, clusters, clusters_cover_docs=True
-    )
+    canon = DD.keep_canonical(surv, pairs)
     # train selection is a pure bucket predicate on doc_id (the same
     # expression assign_split derives its split column from) — filter
     # canon in place instead of joining assign_split's projection back
@@ -2016,7 +1981,7 @@ def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle nests the q_quality_filter oracle for the pass decision.
 # ---------------------------------------------------------------------------
 def _corpus_stats_sql() -> str:
-    qf = PREP_ORACLES["q_quality_filter"]
+    qf = ORACLES["q_quality_filter"]
     return f"""
     WITH qf AS (SELECT doc_id, passes FROM ({qf})),
     base AS (
@@ -2101,7 +2066,7 @@ def q_dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mixture_resample emits a copy index.
 # ---------------------------------------------------------------------------
 def _training_mix_sql() -> str:
-    mixture = PREP_ORACLES["q_data_mixture"]
+    mixture = ORACLES["q_data_mixture"]
     pack = _pack_sql_from("ex", "ex_id")
     return f"""
     WITH mixed AS (SELECT * FROM ({mixture})),

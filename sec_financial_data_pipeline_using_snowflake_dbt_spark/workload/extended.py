@@ -12,20 +12,7 @@ from ..operators import asof as ASOF
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..plans.serve import guarded_sql
-from .common import register_views, require_sql_surgery, table
-
-EXT_QUERIES: dict[str, object] = {}
-EXT_ORACLES: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None):
-    def deco(fn):
-        EXT_QUERIES[name] = fn
-        if sql is not None:
-            EXT_ORACLES[name] = sql
-        return fn
-
-    return deco
+from .common import ORACLES, q, register_views, require_sql_surgery, table
 
 
 # ---------------------------------------------------------------------------
@@ -317,7 +304,7 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantizer is deterministic (lowest-id init, fixed Lloyd rounds), so the
 # oracle UNROLLS the same iterations as a CTE chain: assign → per-cell
 # elementwise mean → reassign → mean → final assign → probe → score.
-# Cross-engine reproducibility hinges on round_means: each centroid
+# Cross-engine reproducibility hinges on SIM.ROUND_MEANS: each centroid
 # coordinate is rounded to 6 dp after the mean step in BOTH engines,
 # which absorbs the order-nondeterministic last-ulp drift of a
 # distributed AVG (operators/similarity.py ivf_assign docstring).
@@ -337,14 +324,14 @@ def _lloyd_assign_cte(name: str, cents: str) -> str:
     )"""
 
 
-def _lloyd_means_cte(name: str, asgn: str, dim: int, round_means: int) -> str:
+def _lloyd_means_cte(name: str, asgn: str, dim: int) -> str:
     """One Lloyd mean step as a DuckDB CTE: per-cell elementwise mean,
-    each coordinate ROUND()ed like the Spark side (round_means) so the
+    each coordinate ROUND()ed like the Spark side (ROUND_MEANS) so the
     distributed-AVG last-ulp drift can't diverge the chain."""
     return f"""
     {name} AS (
       SELECT cell, list(m ORDER BY i) AS cvec FROM (
-        SELECT a.cell, i.i AS i, ROUND(AVG(a.v[i.i]), {round_means}) AS m
+        SELECT a.cell, i.i AS i, ROUND(AVG(a.v[i.i]), {SIM.ROUND_MEANS}) AS m
         FROM {asgn} a CROSS JOIN (SELECT UNNEST(generate_series(1, {dim})) AS i) i
         GROUP BY a.cell, i.i)
       GROUP BY cell
@@ -352,7 +339,7 @@ def _lloyd_means_cte(name: str, asgn: str, dim: int, round_means: int) -> str:
 
 
 def _lloyd_chain_ctes(
-    dim: int, n_centroids: int, n_iters: int, round_means: int
+    dim: int, n_centroids: int, n_iters: int
 ) -> tuple[list[str], str]:
     """The full deterministic Lloyd unroll over the ``embeddings`` table
     (lowest-id init, n_iters assign+mean rounds, one final assign) as a
@@ -369,7 +356,7 @@ def _lloyd_chain_ctes(
     cents = "c0"
     for it in range(1, n_iters + 1):
         ctes.append(_lloyd_assign_cte(f"a{it}", cents))
-        ctes.append(_lloyd_means_cte(f"c{it}", f"a{it}", dim, round_means))
+        ctes.append(_lloyd_means_cte(f"c{it}", f"a{it}", dim))
         cents = f"c{it}"
     final_assign = f"a{n_iters + 1}"
     ctes.append(_lloyd_assign_cte(final_assign, cents))
@@ -382,10 +369,9 @@ def _ann_ivf_sql(
     n_centroids: int = 8,
     n_probe: int = 3,
     n_iters: int = 2,
-    round_means: int = 6,
     n_queries: int = 8,
 ) -> str:
-    ctes, final_assign = _lloyd_chain_ctes(dim, n_centroids, n_iters, round_means)
+    ctes, final_assign = _lloyd_chain_ctes(dim, n_centroids, n_iters)
     cents = f"c{n_iters}"
     ctes.append(
         f"""probes AS (
@@ -422,7 +408,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return SIM.ivf_topk(
         emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5, n_centroids=8,
-        n_probe=3, round_means=6,
+        n_probe=3,
     )
 
 
@@ -602,7 +588,7 @@ def _ann_ivfpq_sql(
     # IVF coarse quantizer + final corpus assign: the shared Lloyd
     # unroll (identical CTEs to the q_ann_ivf oracle — same init, same
     # rounded means, same (dist, cell) tie-break).
-    ctes, final_assign = _lloyd_chain_ctes(dim, n_centroids, ivf_iters, round_to)
+    ctes, final_assign = _lloyd_chain_ctes(dim, n_centroids, ivf_iters)
     cents = f"c{ivf_iters}"
 
     # residual=True (faiss default): PQ trains on and encodes
@@ -764,10 +750,9 @@ def _dedup_semantic_sql(
     n_cells: int = 8,
     threshold: float = 0.4,
     n_iters: int = 2,
-    round_means: int = 6,
     round_to: int = 6,
 ) -> str:
-    ctes, final_assign = _lloyd_chain_ctes(dim, n_cells, n_iters, round_means)
+    ctes, final_assign = _lloyd_chain_ctes(dim, n_cells, n_iters)
     ctes.append(
         f"""near AS (
       SELECT b.vec_id AS vid, CAST(COUNT(*) AS BIGINT) AS n_near,
@@ -856,11 +841,9 @@ def _cluster_sample_sql(
     n_cells: int = 8,
     per_cell: int = 5,
     n_iters: int = 2,
-    round_means: int = 6,
     round_to: int = 6,
-    mode: str = "prototypes",
 ) -> str:
-    ctes, final_assign = _lloyd_chain_ctes(dim, n_cells, n_iters, round_means)
+    ctes, final_assign = _lloyd_chain_ctes(dim, n_cells, n_iters)
     cents = f"c{n_iters}"
     ctes.append(
         f"""dists AS (
@@ -868,14 +851,13 @@ def _cluster_sample_sql(
       FROM {final_assign} a JOIN {cents} c USING (cell)
     )"""
     )
-    order = "ASC" if mode == "prototypes" else "DESC"
     body = ",\n    ".join(c.strip() for c in ctes)
     return f"""
     WITH {body}
     SELECT vec_id, CAST(cell AS BIGINT) AS cell,
            ROUND(dist, {round_to}) AS dist, CAST(rk AS BIGINT) AS rank
     FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY cell
-                                       ORDER BY dist {order}, vec_id ASC) AS rk
+                                       ORDER BY dist ASC, vec_id ASC) AS rk
           FROM dists)
     WHERE rk <= {per_cell}
     """
@@ -884,8 +866,7 @@ def _cluster_sample_sql(
 @q("q_cluster_sample", _cluster_sample_sql())
 def q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.cluster_sample(
-        table(spark, sf_dir, "embeddings"), dim=64, n_cells=8, per_cell=5,
-        mode="prototypes",
+        table(spark, sf_dir, "embeddings"), dim=64, n_cells=8, per_cell=5
     )
 
 
@@ -897,9 +878,8 @@ def q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as nested-WITH subqueries and must agree exactly.
 # ---------------------------------------------------------------------------
 def _ann_recall_sql() -> str:
-    from .dataprep import PREP_ORACLES  # no cycle: dataprep never imports extended
-
-    exact = PREP_ORACLES["q_ann_topk"]
+    # q_ann_topk is dataprep's; registry imports dataprep before this module
+    exact = ORACLES["q_ann_topk"]
     approx = _ann_ivf_sql()
     return f"""
     WITH exact AS (SELECT * FROM ({exact})),
@@ -925,7 +905,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = SIM.brute_force_topk(qs, emb, k=5)
     approx = SIM.ivf_topk(
         emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5, n_centroids=8,
-        n_probe=3, round_means=6,
+        n_probe=3,
     )
     hits = (
         exact.join(
@@ -964,7 +944,6 @@ def _kmeans_quality_sql(
     dim: int = 64,
     k_values: tuple[int, ...] = (4, 8),
     n_iters: int = 2,
-    round_means: int = 6,
     round_to: int = 6,
 ) -> str:
     def sqd_chain(vec: str, cvec: str) -> str:
@@ -979,7 +958,7 @@ def _kmeans_quality_sql(
 
     arms = []
     for k in k_values:
-        ctes, final_assign = _lloyd_chain_ctes(dim, k, n_iters, round_means)
+        ctes, final_assign = _lloyd_chain_ctes(dim, k, n_iters)
         cents = f"c{n_iters}"
         body = ",\n    ".join(c.strip() for c in ctes)
         arms.append(
@@ -1561,9 +1540,7 @@ def _profile_sql() -> str:
 def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..checks import profile_table
 
-    # approx_distinct pinned: the oracle compares exact distinct counts;
-    # unset, profile_table size-dispatches to HLL on large inputs
-    return profile_table(table(spark, sf_dir, "lineitem"), approx_distinct=False)
+    return profile_table(table(spark, sf_dir, "lineitem"))
 
 
 # ---------------------------------------------------------------------------

@@ -12,11 +12,10 @@ inside the 50-entry window.
 
 from __future__ import annotations
 
-from .dataprep import PREP_ORACLES, PREP_QUERIES
-from .extended import EXT_ORACLES, EXT_QUERIES
-from .relational import REL_ORACLES, REL_QUERIES
-from .sec_star import SEC_ORACLES, SEC_QUERIES
-from .streaming_q import STREAM_ORACLES, STREAM_QUERIES
+# each module registers its queries on import, so this order is the
+# order of QUERIES (and ORACLES) before the tail is parked below
+from . import relational, dataprep, streaming_q, extended, sec_star  # noqa: F401, I001
+from .common import ORACLES, QUERIES
 
 #: Queries deliberately placed AFTER the driver's 50-entry correctness window.
 #:
@@ -194,26 +193,8 @@ TAIL_QUERIES: tuple[str, ...] = (
     "q_corpus_split",          # r5; hex-prefix bucketing via q_training_mix
 )
 
-_ALL_QUERIES: dict[str, object] = {
-    **REL_QUERIES,
-    **PREP_QUERIES,
-    **STREAM_QUERIES,
-    **EXT_QUERIES,
-    **SEC_QUERIES,
-}
-
-QUERIES: dict[str, object] = {
-    **{k: v for k, v in _ALL_QUERIES.items() if k not in TAIL_QUERIES},
-    **{k: _ALL_QUERIES[k] for k in TAIL_QUERIES if k in _ALL_QUERIES},
-}
-
-ORACLES: dict[str, str] = {
-    **REL_ORACLES,
-    **PREP_ORACLES,
-    **STREAM_ORACLES,
-    **EXT_ORACLES,
-    **SEC_ORACLES,
-}
+for _name in TAIL_QUERIES:
+    QUERIES[_name] = QUERIES.pop(_name)
 
 # The driver checks exactly the first 50 queries; everything with an oracle
 # that is not explicitly parked must fit inside that window.

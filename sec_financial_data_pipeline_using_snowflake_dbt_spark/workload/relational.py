@@ -19,22 +19,10 @@ from .common import (
     as_dbl,
     dec,
     money_sum,
+    q,
     revenue_expr,
     table,
 )
-
-REL_QUERIES: dict[str, object] = {}
-REL_ORACLES: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None):
-    def deco(fn):
-        REL_QUERIES[name] = fn
-        if sql is not None:
-            REL_ORACLES[name] = sql
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

@@ -24,10 +24,7 @@ from pyspark.sql import functions as F
 from ..operators import dimensions as D
 from ..operators import facts as FCT
 from ..operators import staging as S
-from .common import require_sql_surgery, table
-
-SEC_QUERIES: dict[str, object] = {}
-SEC_ORACLES: dict[str, str] = {}
+from .common import q, require_sql_surgery, table
 
 SENT = "_dbt_utils_surrogate_key_null_"
 
@@ -225,6 +222,7 @@ GROUP BY dc.company_name, df.filed_date, df.statement_type, df.tag,
 """
 
 
+@q("q_sec_fact_bs", _SEC_FACT_BS_SQL)
 def q_sec_fact_bs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub, tag, num, pre = synth_sec_raw(spark, sf_dir)
     ssub, snum, spre = S.stg_sub(sub), S.stg_num(num), S.stg_pre(pre)
@@ -247,10 +245,6 @@ def q_sec_fact_bs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "unit_of_measure",
         "version",
     )
-
-
-SEC_QUERIES["q_sec_fact_bs"] = q_sec_fact_bs
-SEC_ORACLES["q_sec_fact_bs"] = _SEC_FACT_BS_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -403,6 +397,7 @@ def _sec_json_doc_build(
     )
 
 
+@q("q_sec_json_doc", _SEC_JSON_DOC_SQL)
 def q_sec_json_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full per-filing JSON-document build (reference dbt project 2).
 
@@ -416,16 +411,6 @@ def q_sec_json_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sec_json_doc_build(spark, sf_dir)
 
 
-def q_sec_json_doc_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sf10-scale verification arm of q_sec_json_doc: restrict to a
-    deterministic md5 1/4 stratum of FILINGS (wide enough that even the 10-filing sf0.001 fixture keeps rows) (sub-side filter; the
-    left joins preserve per-filing content exactly), so the oracle's
-    window input is bounded while every stage — staging joins, null
-    handling, the per-filing cap, deterministic array order, posexplode
-    — is cross-engine hash-checked on the stratum."""
-    return _sec_json_doc_build(spark, sf_dir, filing_sample=True)
-
-
 _SEC_JSON_DOC_SAMPLED_SQL = _SEC_JSON_DOC_SQL.replace(
     "LEFT JOIN pre p ON n.adsh = p.adsh AND n.tag = p.tag\n)",
     "LEFT JOIN pre p ON n.adsh = p.adsh AND n.tag = p.tag\n"
@@ -436,7 +421,13 @@ _SEC_JSON_DOC_SAMPLED_SQL = require_sql_surgery(
     "SUBSTR(MD5(s.adsh), 1, 1) IN ('0', '1', '2', '3')",
 )
 
-SEC_QUERIES["q_sec_json_doc"] = q_sec_json_doc
-SEC_ORACLES["q_sec_json_doc"] = _SEC_JSON_DOC_SQL
-SEC_QUERIES["q_sec_json_doc_sampled"] = q_sec_json_doc_sampled
-SEC_ORACLES["q_sec_json_doc_sampled"] = _SEC_JSON_DOC_SAMPLED_SQL
+
+@q("q_sec_json_doc_sampled", _SEC_JSON_DOC_SAMPLED_SQL)
+def q_sec_json_doc_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sf10-scale verification arm of q_sec_json_doc: restrict to a
+    deterministic md5 1/4 stratum of FILINGS (wide enough that even the 10-filing sf0.001 fixture keeps rows) (sub-side filter; the
+    left joins preserve per-filing content exactly), so the oracle's
+    window input is bounded while every stage — staging joins, null
+    handling, the per-filing cap, deterministic array order, posexplode
+    — is cross-engine hash-checked on the stratum."""
+    return _sec_json_doc_build(spark, sf_dir, filing_sample=True)

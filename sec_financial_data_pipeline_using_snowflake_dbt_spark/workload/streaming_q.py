@@ -17,10 +17,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import events_stream, table
+from .common import events_stream, q, table
 
-STREAM_QUERIES: dict[str, object] = {}
-STREAM_ORACLES: dict[str, str] = {}
 
 #: State partitions for the stateful streaming queries. A stateful
 #: streaming query's per-microbatch floor is LINEAR in its shuffle
@@ -49,16 +47,6 @@ def _state_partitions(spark: SparkSession, n: int = STREAM_STATE_PARTITIONS):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def q(name: str, sql: str | None):
-    def deco(fn):
-        STREAM_QUERIES[name] = fn
-        if sql is not None:
-            STREAM_ORACLES[name] = sql
-        return fn
-
-    return deco
 
 
 @q(

@@ -50,21 +50,18 @@ def site(tmp_path_factory):
 
 def test_find_zip_links_resolves_and_filters(site):
     index = f"file://{site}/index.html"
-    all_links = find_zip_links(index)
-    assert len(all_links) == 4 and all(u.endswith(".zip") for u in all_links)
-    # substring filter still matches the decoys…
-    assert len(find_zip_links(index, pattern="2024q1")) == 3
-    # …the anchored basename filter does not (ADVICE r2)
-    assert find_zip_links(index, basename="2024q1.zip") == [
-        f"file://{site}/2024q1.zip"
-    ]
+    # the anchored basename match skips the decoys that merely contain
+    # the quarter (ADVICE r2) and resolves the href against the index
+    assert find_zip_links(index, "2024q1.zip") == [f"file://{site}/2024q1.zip"]
+    assert find_zip_links(index, "2023q4.zip") == [f"file://{site}/2023q4.zip"]
+    assert find_zip_links(index, "notes.txt") == []
 
 
 def test_fetch_and_extract(site, tmp_path_factory):
     landing = str(tmp_path_factory.mktemp("landing"))
     local = fetch_to_landing(f"file://{site}/2024q1.zip", landing)
     assert os.path.exists(local)
-    files = extract_zip(local, landing, remove_zip=True)
+    files = extract_zip(local, landing)
     assert sorted(os.path.basename(f) for f in files) == [
         "num.txt", "pre.txt", "sub.txt", "tag.txt",
     ]
@@ -78,6 +75,7 @@ def test_extract_zip_rejects_escape(tmp_path_factory):
         zf.writestr("../outside.txt", "x")
     with pytest.raises(ValueError, match="escapes"):
         extract_zip(str(zp), str(d / "out"))
+    assert zp.exists()  # a rejected archive is not deleted
 
 
 def test_acquire_quarter_feeds_the_loader(spark, site, tmp_path_factory):

@@ -131,77 +131,17 @@ def test_profile_table_values_and_rendering(spark):
     assert got["t"]["max_value"] == "2024-01-02 03:04:05"
 
 
-def test_profile_table_scan_split_and_approx_skips_expand(spark):
+def test_profile_table_scan_split(spark):
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.checks import (
         profile_table,
     )
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    exact = profile_table(li)
-    plan = exact._jdf.queryExecution().executedPlan().toString()
-    # r11: the exact arm deliberately scans TWICE — the count/null/
+    plan = profile_table(li)._jdf.queryExecution().executedPlan().toString()
+    # r11: the profile deliberately scans TWICE — the count/null/
     # min/max pass escapes the multi-distinct Expand (which multiplies
     # its subtree's input n_cols×), so total rows through the partial
     # aggregates drop even with the second scan. The Expand must stay
     # confined to the distinct subtree.
     assert plan.count("Scan parquet") == 2
     assert plan.count("Expand") == 1
-    approx = profile_table(li, approx_distinct=True)
-    aplan = approx._jdf.queryExecution().executedPlan().toString()
-    # the HLL arm stays ONE scan with no Expand - its 100 TB advantage
-    assert aplan.count("Scan parquet") == 1
-    assert "Expand" in plan and "Expand" not in aplan
-    # HLL estimates stay sane on this table (within 5% default rsd ~ wide margin)
-    ex = {r["column_name"]: r["n_distinct"] for r in exact.collect()}
-    ap = {r["column_name"]: r["n_distinct"] for r in approx.collect()}
-    for c in ex:
-        assert abs(ap[c] - ex[c]) <= max(3, 0.15 * ex[c]), (c, ex[c], ap[c])
-
-
-def test_profile_table_auto_dispatch(spark):
-    """VERDICT r8 #3: unset approx_distinct must size-dispatch — exact
-    (Expand) on small inputs, HLL (no Expand) once the Expand working
-    set (plan bytes x n_cols) passes the knee. Plan inspection only; no
-    job runs for the large side."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.checks import (
-        PROFILE_AUTO_EXACT_MAX_BYTES,
-        profile_table,
-    )
-
-    small = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    sp = profile_table(small)._jdf.queryExecution().optimizedPlan().toString()
-    assert "Expand" in sp  # small -> exact arm
-
-    # spark.range stats: 8 bytes/row -> comfortably past the knee x n_cols
-    n = PROFILE_AUTO_EXACT_MAX_BYTES // 8
-    big = spark.range(n).select(
-        F.col("id"), (F.col("id") % 7).alias("a"), (F.col("id") % 11).alias("b")
-    )
-    bp = profile_table(big)._jdf.queryExecution().optimizedPlan().toString()
-    assert "Expand" not in bp  # large -> HLL arm, Expand-free
-    # explicit pin overrides the dispatch (the oracle surface)
-    bpx = profile_table(big, approx_distinct=False)
-    assert "Expand" in bpx._jdf.queryExecution().optimizedPlan().toString()
-
-
-def test_profile_table_warns_when_plan_size_unknown(spark, monkeypatch):
-    """ADVICE r9 (low): under Spark Connect _plan_size_bytes is always
-    None, so the default silently flips every profile to HLL — the flip
-    must WARN so callers relying on exact counts discover it."""
-    import warnings
-
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark import checks
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import asof
-
-    df = spark.range(10).withColumnRenamed("id", "x")
-    monkeypatch.setattr(asof, "_plan_size_bytes", lambda _df: None)
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        out = checks.profile_table(df)
-        out.collect()
-    assert any("approx_distinct=False" in str(w.message) for w in rec)
-    # pinning either arm stays silent
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        checks.profile_table(df, approx_distinct=False).collect()
-    assert not [w for w in rec if "approx_distinct" in str(w.message)]

@@ -55,24 +55,13 @@ def test_dedup_plans_hint_no_unbounded_broadcast(spark, docs, emb):
     join at runtime from measured sizes — that's the point: the DECISION
     stays with the runtime, not the plan."""
     for df in (
-        DD.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.8, exact=True),
-        DD.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.8),
-        DD.embedding_neardup_pairs(emb, block_col="label", threshold=0.35),
+        DD.ngram_jaccard_pairs(docs, threshold=0.8),
+        DD.embedding_neardup_pairs(emb, threshold=0.35),
         DD.minhash_lsh_pairs(docs),
-        DD.simhash_pairs(docs, block_col="lang"),
+        DD.simhash_pairs(docs, n_bits=16),
     ):
         logical = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in logical and "UnresolvedHint" not in logical
-
-
-def test_jaccard_max_postings_bounds_fanout(spark, docs):
-    exact = DD.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.5)
-    capped = DD.ngram_jaccard_pairs(
-        docs, block_col="lang", threshold=0.5, max_postings=10
-    )
-    # capped intersections only shrink → capped pairs ⊆ exact pairs
-    extra = capped.select("id_a", "id_b").exceptAll(exact.select("id_a", "id_b"))
-    assert extra.count() == 0
 
 
 def test_lsh_topk_recall(spark, emb):
@@ -119,12 +108,12 @@ def test_ivf_assign_stage_shuffle_free(spark, emb):
     executed plan must contain no scoring shuffle (no hash/range
     exchange of scored rows) and no Window (VERDICT r3 — the old
     formulation shuffled n×k scored rows per iteration). The ONE
-    allowed exchange is _spread's round-robin rebalance of an
+    allowed exchange is spread's round-robin rebalance of an
     under-partitioned scan (r12: without it a one-file corpus runs
     every assign fold on a single core; a no-op at scale)."""
     import re
 
-    assigned, cents = SIM.ivf_assign(emb, dim=64, n_centroids=8, round_means=6)
+    assigned, cents = SIM.ivf_assign(emb, dim=64, n_centroids=8)
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     for ex in re.findall(r"Exchange \w+", plan):
         assert "RoundRobin" in ex, plan
@@ -141,12 +130,12 @@ def test_ivf_broadcast_fallback_matches_literal_path(spark, emb):
     import sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.similarity as S
 
     queries = emb.filter(F.col("vec_id") < 10)
-    lit_topk = SIM.ivf_topk(queries, emb, dim=64, k=5, n_probe=3, round_means=6)
+    lit_topk = SIM.ivf_topk(queries, emb, dim=64, k=5, n_probe=3)
     a_lit = {(r.query_id, r.neighbor_id, r.rank, r.cos) for r in lit_topk.collect()}
     old = S.MAX_CENTROID_LITERAL_TERMS
     S.MAX_CENTROID_LITERAL_TERMS = 0  # force the join arm
     try:
-        jn_topk = SIM.ivf_topk(queries, emb, dim=64, k=5, n_probe=3, round_means=6)
+        jn_topk = SIM.ivf_topk(queries, emb, dim=64, k=5, n_probe=3)
         # the join arm must carry exactly the intended broadcast hint
         logical = jn_topk._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" in logical or "UnresolvedHint" in logical
@@ -165,13 +154,13 @@ def test_ivf_join_arm_preserves_duplicate_rows(spark, emb):
 
     base = emb.filter(F.col("vec_id") < 20)
     dup = base.unionAll(emb.filter(F.col("vec_id") < 5))  # 5 exact repeats
-    a_lit, c_lit = SIM.ivf_assign(dup, dim=64, n_centroids=4, round_means=6)
+    a_lit, c_lit = SIM.ivf_assign(dup, dim=64, n_centroids=4)
     rows_lit = sorted((r.id, r.cell) for r in a_lit.collect())
     cents_lit = {(r.cell, tuple(r.cvec)) for r in c_lit.collect()}
     old = S.MAX_CENTROID_LITERAL_TERMS
     S.MAX_CENTROID_LITERAL_TERMS = 0  # force the join arm
     try:
-        a_jn, c_jn = SIM.ivf_assign(dup, dim=64, n_centroids=4, round_means=6)
+        a_jn, c_jn = SIM.ivf_assign(dup, dim=64, n_centroids=4)
         rows_jn = sorted((r.id, r.cell) for r in a_jn.collect())
         cents_jn = {(r.cell, tuple(r.cvec)) for r in c_jn.collect()}
     finally:
@@ -184,17 +173,17 @@ def test_ivf_join_arm_preserves_duplicate_rows(spark, emb):
 def test_ivf_mean_column_and_posexplode_paths_agree(spark, emb):
     """The r6 single-shuffle column-avg mean must produce the same
     rounded centroids and assignments as the posexplode fallback used
-    above MAX_MEAN_COLUMNS (round_means pins the last-ulp summation
+    above MAX_MEAN_COLUMNS (ROUND_MEANS pins the last-ulp summation
     nondeterminism both paths share)."""
     import sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.similarity as S
 
-    a_col, c_col = SIM.ivf_assign(emb, dim=64, n_centroids=4, round_means=6)
+    a_col, c_col = SIM.ivf_assign(emb, dim=64, n_centroids=4)
     cents_col = {(r.cell, tuple(r.cvec)) for r in c_col.collect()}
     rows_col = sorted((r.id, r.cell) for r in a_col.collect())
     old = S.MAX_MEAN_COLUMNS
     S.MAX_MEAN_COLUMNS = 0  # force the posexplode arm
     try:
-        a_pe, c_pe = SIM.ivf_assign(emb, dim=64, n_centroids=4, round_means=6)
+        a_pe, c_pe = SIM.ivf_assign(emb, dim=64, n_centroids=4)
         cents_pe = {(r.cell, tuple(r.cvec)) for r in c_pe.collect()}
         rows_pe = sorted((r.id, r.cell) for r in a_pe.collect())
     finally:
@@ -203,44 +192,8 @@ def test_ivf_mean_column_and_posexplode_paths_agree(spark, emb):
     assert rows_col == rows_pe
 
 
-def test_ivf_early_stop_converges_with_identical_centroids(spark):
-    """VERDICT r5 #7 (opt-in early stop): on a pre-clustered corpus the
-    Lloyd loop stops once centroids are a fixed point — fewer Spark jobs
-    than the fixed n_iters run — and, because a fixed point stays fixed,
-    the centroids are IDENTICAL to the full run's (so the unrolled
-    n_iters oracle still matches when early stop is enabled)."""
-    rows = [(i, [0.0 + i * 1e-9, 0.0] if i % 2 == 0 else [10.0, 10.0]) for i in range(10)]
-    emb2 = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-
-    def run(eps):
-        sc = spark.sparkContext
-        group = f"ivf_es_{eps}"
-        sc.setJobGroup(group, "ivf early stop probe")
-        try:
-            a, c = SIM.ivf_assign(
-                emb2, dim=2, n_centroids=2, n_iters=6,
-                round_means=6, early_stop_eps=eps,
-            )
-            cents = {(r.cell, tuple(r.cvec)) for r in c.collect()}
-            assigns = sorted((r.id, r.cell) for r in a.collect())
-        finally:
-            sc.setJobGroup(None, None)
-        from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
-            dedup as _dd,
-        )
-
-        _dd.release_dedup_caches()
-        return cents, assigns, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    cents_full, assigns_full, jobs_full = run(None)
-    cents_es, assigns_es, jobs_es = run(1e-9)
-    assert jobs_es < jobs_full
-    assert cents_es == cents_full
-    assert assigns_es == assigns_full
-
-
 def test_simhash_is_16_bit(spark, docs):
-    sh = DD.simhash(docs)
+    sh = DD.simhash(docs, n_bits=16)
     r = sh.agg(F.min("simhash"), F.max("simhash")).first()
     assert 0 <= r[0] and r[1] < 2**16
 
@@ -266,7 +219,7 @@ def _simhash_all_pairs(docs, max_hamming, n_bits=16):
 
 def test_simhash_band_join_matches_all_pairs(spark, docs):
     # pigeonhole banding is exact: same pairs as the quadratic scan
-    banded = DD.simhash_pairs(docs, block_col="lang", max_hamming=3)
+    banded = DD.simhash_pairs(docs, n_bits=16)
     a = {(r.id_a, r.id_b, r.hamming) for r in banded.collect()}
     assert a == _simhash_all_pairs(docs, 3) and len(a) > 0
 
@@ -275,7 +228,7 @@ def test_simhash_all_pairs_arm_when_every_pair_qualifies(spark, docs):
     """max_hamming >= n_bits admits every same-block pair: the
     dispatch skips the band join for the blocked all-pairs scan."""
     small = docs.filter(F.col("doc_id") < 40)
-    full = DD.simhash_pairs(small, block_col="lang", max_hamming=16, n_bits=16)
+    full = DD.simhash_pairs(small, n_bits=16, max_hamming=16)
     a = {(r.id_a, r.id_b, r.hamming) for r in full.collect()}
     assert a == _simhash_all_pairs(small, 16) and len(a) > 0
 
@@ -314,7 +267,7 @@ def test_simhash_wide_band_join_matches_all_pairs(spark, docs):
     pigeonhole band join must stay exact at the wide widths, including
     the 64-bit sign-bit-carrying top chunk."""
     for bits in (32, 64):
-        banded = DD.simhash_pairs(docs, block_col="lang", max_hamming=3, n_bits=bits)
+        banded = DD.simhash_pairs(docs, n_bits=bits)
         a = {(r.id_a, r.id_b, r.hamming) for r in banded.collect()}
         assert a == _simhash_all_pairs(docs, 3, bits), f"n_bits={bits}"
 
@@ -388,21 +341,19 @@ def test_stratified_sample_hash_rates_and_stability(spark, docs):
 
 
 def test_spread_skips_already_parallel_input(spark, docs):
-    """_spread must not re-shuffle an input that already has >= default
+    """spread must not re-shuffle an input that already has >= default
     parallelism partitions — at corpus scale that is a full shuffle whose
     only effect is rebalancing (VERDICT r2). Under-partitioned inputs
     still get spread across the cores."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.dedup import (
-        _spread,
-    )
+    from sec_financial_data_pipeline_using_snowflake_dbt_spark.session import spread
 
     par = spark.sparkContext.defaultParallelism
     wide = docs.repartition(par + 4)
-    assert _spread(wide) is wide  # untouched: no Exchange added
+    assert spread(wide) is wide  # untouched: no Exchange added
     narrow = docs.coalesce(1)
-    spread = _spread(narrow)
-    assert spread is not narrow
-    assert spread.rdd.getNumPartitions() == par
+    spread_out = spread(narrow)
+    assert spread_out is not narrow
+    assert spread_out.rdd.getNumPartitions() == par
 
 
 def test_release_dedup_caches(spark, docs):
@@ -410,7 +361,7 @@ def test_release_dedup_caches(spark, docs):
     (VERDICT r2 nit: persist() without unpersist in long-lived sessions)."""
     DD.release_dedup_caches()  # drain anything earlier tests persisted
     DD.minhash_lsh_pairs(docs).count()
-    DD.simhash_pairs(docs, block_col="lang").count()
+    DD.simhash_pairs(docs, n_bits=16).count()
     assert DD.release_dedup_caches() >= 2
     assert DD.release_dedup_caches() == 0
 
@@ -443,7 +394,8 @@ def test_dedup_clusters_long_chain_converges(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
     )
-    got = {r.id: r.cluster_id for r in dedup_clusters(pairs).collect()}
+    nodes = spark.createDataFrame([(i,) for i in range(n + 1)], "id long")
+    got = {r.id: r.cluster_id for r in dedup_clusters(pairs, nodes=nodes).collect()}
     assert got == {i: 0 for i in range(n + 1)}
 
 
@@ -521,7 +473,10 @@ def test_star_contract_matches_propagation(spark):
         + [(50, 60), (60, 55), (55, 70)]           # zigzag
     )
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    prop = {r.id: r.cluster_id for r in dedup_clusters(pairs).collect()}
+    nodes = spark.createDataFrame(
+        sorted({(x,) for e in edges for x in e}), "id long"
+    )
+    prop = {r.id: r.cluster_id for r in dedup_clusters(pairs, nodes=nodes).collect()}
     sym = pairs.select(
         FN.col("id_a").alias("src"), FN.col("id_b").alias("dst")
     ).unionByName(
@@ -922,7 +877,7 @@ def test_ivfpq_candidates_come_from_probed_cells(spark, emb):
         ivf_assign,
     )
 
-    assignments, centroids = ivf_assign(emb, dim=64, n_centroids=8, round_means=6)
+    assignments, centroids = ivf_assign(emb, dim=64, n_centroids=8)
     cell_of = {r.id: r.cell for r in assignments.select("id", "cell").collect()}
     cents = [(r.cell, list(r.cvec)) for r in centroids.collect()]
     qv = {
@@ -985,7 +940,7 @@ def test_ivf_assign_gemm_arm_matches_fold(spark, emb):
 
     for k in (8, 40):
         (fold, _), (gemm, _) = _fold_and_gemm(
-            lambda: ivf_assign(emb, 64, n_centroids=k, n_iters=2, round_means=6)
+            lambda: ivf_assign(emb, 64, n_centroids=k)
         )
         a = {r.id: r.cell for r in fold.collect()}
         b = {r.id: r.cell for r in gemm.collect()}
@@ -1016,7 +971,7 @@ def test_ivf_topk_gemm_arm_matches_fold(spark, emb):
     from pyspark.sql import functions as SF
 
     qs = emb.filter(SF.col("vec_id") < 8)
-    kw = dict(dim=64, k=5, n_centroids=8, n_probe=3, round_means=6)
+    kw = dict(dim=64, k=5, n_centroids=8, n_probe=3)
     fold, gemm = _fold_and_gemm(lambda: ivf_topk(qs, emb, **kw))
     key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.cos)  # noqa: E731
     assert sorted(map(key, fold.collect())) == sorted(map(key, gemm.collect()))
@@ -1070,7 +1025,7 @@ def test_ivfpq_residual_survives_gapped_cells(spark):
     corpus = spark.createDataFrame(
         [(i, v) for i, v in enumerate(base)], "vec_id long, embedding array<double>"
     )
-    _, cents = SIM.ivf_assign(corpus, dim=8, n_centroids=4, round_means=6)
+    _, cents = SIM.ivf_assign(corpus, dim=8, n_centroids=4)
     cells = sorted(r.cell for r in cents.collect())
     assert cells != list(range(1, len(cells) + 1)), (
         "fixture no longer produces a gapped cell set; adjust vectors"
@@ -1150,60 +1105,33 @@ def test_centroid_consumers_are_join_free(spark, emb):
 # ---------------------------------------------------------------------------
 def test_cluster_sample_matches_window_rank_formulation(spark, emb):
     """The skew-immune two-phase top-B must select exactly what a plain
-    per-cell rank window would — same rows, same ranks, both modes."""
+    per-cell rank window would — same rows, same ranks."""
     from pyspark.sql import Window
 
-    for mode in ("prototypes", "spread"):
-        got = SIM.cluster_sample(
-            emb, dim=64, n_cells=4, per_cell=7, mode=mode
-        )
-        assignments, centroids = SIM.ivf_assign(
-            emb, 64, n_centroids=4, round_means=6
-        )
-        d2 = SIM._sqdist(F.col("v"), F.col("cvec"))
-        scored = assignments.join(F.broadcast(centroids), "cell").select(
-            F.col("id").alias("vec_id"),
-            F.col("cell").cast("long").alias("cell"),
-            d2.alias("d2"),
-        )
-        order = (
-            [F.col("d2").asc(), F.col("vec_id").asc()]
-            if mode == "prototypes"
-            else [F.col("d2").desc(), F.col("vec_id").asc()]
-        )
-        w = Window.partitionBy("cell").orderBy(*order)
-        ref = (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= 7)
-            .select(
-                "vec_id",
-                "cell",
-                F.round(F.sqrt("d2"), 6).alias("dist"),
-                "rank",
-            )
-        )
-        assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+    got = SIM.cluster_sample(emb, dim=64, n_cells=4, per_cell=7)
+    assignments, centroids = SIM.ivf_assign(emb, 64, n_centroids=4)
+    d2 = SIM._sqdist(F.col("v"), F.col("cvec"))
+    scored = assignments.join(F.broadcast(centroids), "cell").select(
+        F.col("id").alias("vec_id"),
+        F.col("cell").cast("long").alias("cell"),
+        d2.alias("d2"),
+    )
+    w = Window.partitionBy("cell").orderBy(F.col("d2").asc(), F.col("vec_id").asc())
+    ref = (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= 7)
+        .select("vec_id", "cell", F.round(F.sqrt("d2"), 6).alias("dist"), "rank")
+    )
+    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
 
 
-def test_cluster_sample_bounds_and_modes(spark, emb):
-    proto = SIM.cluster_sample(emb, dim=64, n_cells=4, per_cell=3).collect()
-    spread = SIM.cluster_sample(
-        emb, dim=64, n_cells=4, per_cell=3, mode="spread"
-    ).collect()
-    for rows in (proto, spread):
-        per_cell: dict[int, int] = {}
-        for r in rows:
-            per_cell[r.cell] = per_cell.get(r.cell, 0) + 1
-            assert 1 <= r.rank <= 3 and r.dist >= 0.0
-        assert all(v <= 3 for v in per_cell.values())
-    # prototypes pick closer members than spread, cell by cell
-    pmax = {r.cell: max(x.dist for x in proto if x.cell == r.cell) for r in proto}
-    smin = {
-        r.cell: min(x.dist for x in spread if x.cell == r.cell) for r in spread
-    }
-    assert all(pmax[c] <= smin[c] for c in pmax if c in smin)
-    with pytest.raises(ValueError):
-        SIM.cluster_sample(emb, dim=64, mode="nope")
+def test_cluster_sample_bounds(spark, emb):
+    rows = SIM.cluster_sample(emb, dim=64, n_cells=4, per_cell=3).collect()
+    per_cell: dict[int, int] = {}
+    for r in rows:
+        per_cell[r.cell] = per_cell.get(r.cell, 0) + 1
+        assert 1 <= r.rank <= 3 and r.dist >= 0.0
+    assert all(v <= 3 for v in per_cell.values())
     with pytest.raises(ValueError):
         SIM.cluster_sample(emb, dim=64, per_cell=0)
 
@@ -1263,41 +1191,6 @@ def test_bloom_dedup_counts_hash_slots_not_positions(spark):
 # ---------------------------------------------------------------------------
 # hashed_linear_score (r7 late batch)
 # ---------------------------------------------------------------------------
-def test_hashed_linear_score_weights_table_arm_matches_derived(spark):
-    """Scoring with an explicit weights table holding the derived
-    weights must bit-match the self-contained fold arm; buckets absent
-    from the table weigh 0."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
-        textops as TO,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "the quick brown fox"), (1, "JUMPS Over the DOG"), (2, "")],
-        "doc_id long, text string",
-    )
-    dim = 128
-    b = spark.range(dim).select(F.col("id").alias("bucket"))
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("w:"), F.col("bucket").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-    wt = b.select(
-        "bucket",
-        (u % (2 * TO.WEIGHT_SCALE + 1) - TO.WEIGHT_SCALE).alias("w_int"),
-    )
-    derived = TO.hashed_linear_score(docs, dim=dim)
-    tabled = TO.hashed_linear_score(docs, dim=dim, weights=wt)
-    assert derived.exceptAll(tabled).count() == 0
-    assert tabled.exceptAll(derived).count() == 0
-    # dropping every weight row zeroes all logits (missing bucket -> 0)
-    empty_w = wt.filter(F.lit(False))
-    zeroed = TO.hashed_linear_score(docs, dim=dim, weights=empty_w).collect()
-    assert all(r.logit == 0.0 and r.label == 0 for r in zeroed)
-
-
 def test_hashed_linear_score_empty_doc_and_bias(spark):
     """Zero-token docs score exactly bias/SCALE (never NULL — the
     quality_filter empty-doc lesson); a bias shifts every logit by the
@@ -1336,8 +1229,8 @@ def test_bloom_and_classifier_null_text_match_oracle(spark):
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
         textops as TO,
     )
+    from sec_financial_data_pipeline_using_snowflake_dbt_spark.workload import ORACLES
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.workload.dataprep import (
-        PREP_ORACLES,
         _bloom_sql,
     )
     from .oracle_harness import compare
@@ -1363,61 +1256,9 @@ def test_bloom_and_classifier_null_text_match_oracle(spark):
 
     cls = TO.hashed_linear_score(docs, dim=64)
     exp = con.execute(
-        PREP_ORACLES["q_hashed_classifier"].replace("% 4096", "% 64")
+        ORACLES["q_hashed_classifier"].replace("% 4096", "% 64")
     ).df()
     assert not compare(cls, exp, "classifier-null")
     nulldoc = {r.doc_id: r for r in cls.collect()}[1]
     assert nulldoc.logit == 0.0 and nulldoc.label == 0 and nulldoc.n_tokens == 0
     con.close()
-
-
-def test_simhash_auto_width_dispatch(spark, docs):
-    """VERDICT r8 #3: unset n_bits size-dispatches — 16 bits inside the
-    small-corpus domain, 64 past the saturation knee (or when the plan
-    size is unknown). Explicit widths are untouched (the oracle pins
-    them)."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.dedup import (
-        SIMHASH_AUTO_16BIT_MAX_BYTES,
-        _auto_simhash_bits,
-    )
-
-    assert _auto_simhash_bits(docs) == 16  # tiny fixture -> parity width
-
-    # a corpus whose Catalyst estimate exceeds the knee -> 64-bit arm
-    n = SIMHASH_AUTO_16BIT_MAX_BYTES // 8
-    big = spark.range(n).select(
-        F.col("id").alias("doc_id"), F.col("id").cast("string").alias("text")
-    )
-    assert _auto_simhash_bits(big) == 64
-
-    # the dispatched default equals the explicit 16-bit run on the
-    # small fixture — the switch is invisible inside its domain
-    auto = {r["id"]: r["simhash"] for r in DD.simhash(docs).collect()}
-    pinned = {r["id"]: r["simhash"] for r in DD.simhash(docs, n_bits=16).collect()}
-    assert auto == pinned
-
-
-def test_simhash_auto_width_warns_when_plan_size_unknown(spark, monkeypatch):
-    """ADVICE r9 (low): when plan introspection is unavailable the
-    simhash auto-width always lands on 64 bits regardless of corpus
-    size — that silent flip must WARN and point at pinning n_bits."""
-    import warnings
-
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
-        asof,
-        dedup,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "alpha beta")], ["doc_id", "text"]
-    )
-    monkeypatch.setattr(asof, "_plan_size_bytes", lambda _df: None)
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        dedup.simhash(docs).collect()
-    assert any("pin n_bits" in str(w.message) for w in rec)
-    # an explicit width stays silent
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        dedup.simhash(docs, n_bits=16).collect()
-    assert not [w for w in rec if "n_bits" in str(w.message)]

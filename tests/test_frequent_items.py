@@ -91,13 +91,6 @@ def test_small_arrow_batches_exercise_decrement(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_caller_supplied_total_skips_count(spark):
-    values = ["a"] * 7 + ["b"] * 3
-    df = spark.createDataFrame([(v,) for v in values], "item string")
-    out = frequent_items(df, "item", share_den=2, total=10).collect()
-    assert sorted((r["item"], r["freq"]) for r in out) == [("a", 7)]
-
-
 def test_rejects_bad_share_den(spark):
     df = spark.createDataFrame([("a",)], "item string")
     with pytest.raises(ValueError):

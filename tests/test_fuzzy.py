@@ -90,18 +90,6 @@ def test_neighbor_counts_aggregate_both_directions(spark):
     }
 
 
-def test_max_bucket_drops_hot_variant_buckets(spark):
-    # 30 single-char strings all share the "" variant: one hot bucket.
-    rows = [(i, c) for i, c in enumerate("abcdefghijklmnopqrstuvwxyz1234"[:30])]
-    df = spark.createDataFrame(rows, "id BIGINT, s STRING")
-    exact = fuzzy_pairs(df, "id", "s", max_dist=1).count()
-    assert exact == 30 * 29 // 2  # all pairs are distance 1 via ""
-    capped = fuzzy_pairs(df, "id", "s", max_dist=1, max_bucket=5)
-    assert capped.count() == 0  # the hot bucket was dropped (documented recall cost)
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
 def test_verification_stays_jvm_side(spark):
     df = spark.createDataFrame([(1, "abc"), (2, "abd")], "id BIGINT, s STRING")
     plan = fuzzy_pairs(df, "id", "s")._jdf.queryExecution().executedPlan().toString()

@@ -5,9 +5,9 @@ from __future__ import annotations
 
 import pytest
 from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.layout import (
-    Z_COL,
     column_bounds,
     with_zorder_key,
+    zorder_key,
     zorder_sql_expr,
 )
 
@@ -33,8 +33,8 @@ def test_interleave_matches_python_reference(spark, bits, k):
     df = spark.createDataFrame(rows, ", ".join(f"{c} BIGINT" for c in cols))
     bounds = {c: (0, (1 << bits) - 1) for c in cols}
     got = {
-        tuple(r[c] for c in cols): r[Z_COL]
-        for r in with_zorder_key(df, cols, bits, bounds).collect()
+        tuple(r[c] for c in cols): r["z"]
+        for r in df.withColumn("z", zorder_key(cols, bounds, bits)).collect()
     }
     for vals in rows:
         assert got[vals] == _py_z(list(vals), bits)
@@ -43,7 +43,8 @@ def test_interleave_matches_python_reference(spark, bits, k):
 def test_scaling_clamps_out_of_bounds_values(spark):
     df = spark.createDataFrame([(-5, 0), (99, 3), (500, 7)], "x BIGINT, y BIGINT")
     bounds = {"x": (0, 7), "y": (0, 7)}
-    out = {r["x"]: r[Z_COL] for r in with_zorder_key(df, ["x", "y"], 3, bounds).collect()}
+    keyed = df.withColumn("z", zorder_key(["x", "y"], bounds, 3))
+    out = {r["x"]: r["z"] for r in keyed.collect()}
     assert out[-5] == _py_z([0, 0], 3)     # clamped to lo
     assert out[500] == _py_z([7, 7], 3)    # clamped to hi
     assert out[99] == _py_z([7, 3], 3)

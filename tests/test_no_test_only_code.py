@@ -11,8 +11,11 @@ Three checks share it:
 - an *option* — a defaulted parameter of a public package function with
   a literal default (a bool, a string or None) that picks a code path:
   the function branches on it, or passes it on to a parameter that does
-  — counts as reached when a program call passes it a value other than
-  that default.
+  — has arms: its default, each literal some call passes, and any other
+  value some call passes as an expression. Each arm counts as reached
+  when a program call selects it: by passing that literal (or leaving
+  the default), or by passing an expression, which may take any value
+  (a call or an f-string: any value but None).
 
 Anything else is test-only code and should be deleted with its tests,
 unless an allowlist names it with the reason it stays.
@@ -59,29 +62,22 @@ ALLOWED_METHODS: dict[str, str] = {
     ),
 }
 
-#: Options only tests set that stay, keyed "<module>:<function>(<param>)".
+#: Option arms no program call selects that stay, keyed
+#: "<module>:<function>(<param>=<value>)" (``<expr>``: a value a call
+#: passes as an expression rather than a literal).
 ALLOWED_OPTIONS: dict[str, str] = {
-    # kept on purpose
-    "sources/tsv.py:read_tsv(on_error_continue)": (
+    "sources/tsv.py:read_tsv(on_error_continue=False)": (
         "COPY audit mode: keeps rejected rows, which the load report's "
         "reject count needs (ROADMAP direction 3)"
     ),
-    "sources/tsv.py:read_tsv(corrupt_record_col)": "names the COPY audit mode's corrupt-record column",
-    "operators/cdc.py:cdc_apply(validate_seq)": "input validation: rejects a null sequence",
-    "streaming/incremental.py:stream_cdc_sink(expire_horizon)": "bounds tombstone state",
-    "sources/acquire.py:find_zip_links(pattern)": "reference stage: the quarter-zip link filter",
-    "plans/serve.py:filtered_read(sort)": "serve API: a caller-chosen page order",
-    # library arms no run selects; the next pass wires or deletes each
-    # with its tests (ROADMAP direction 4)
-    "operators/fuzzy.py:fuzzy_pairs(max_bucket)": "hot-bucket cap, trading recall for cost",
-    "operators/interval.py:interval_join(by)": "equi-key of a partitioned interval join",
-    "operators/interval.py:interval_join(how)": "LEFT interval join arm",
-    "operators/interval.py:interval_join(left_id)": "unique left key the LEFT arm needs",
-    "operators/layout.py:with_zorder_key(bounds)": "table-level bounds: one curve across batches",
-    "operators/similarity.py:cluster_sample(mode)": "'spread' selection: farthest members per cell",
-    "operators/similarity.py:ivf_assign(early_stop_eps)": "opt-in Lloyd early stop",
-    "operators/textops.py:frequent_items(total)": "caller-supplied row count instead of a count job",
-    "operators/textops.py:hashed_linear_score(weights)": "trained-weights table arm of the classifier",
+    "sources/tsv.py:read_tsv(on_error_continue=<expr>)": "the COPY audit mode, chosen per call",
+    "sources/tsv.py:read_tsv(corrupt_record_col='_corrupt')": (
+        "names the COPY audit mode's corrupt-record column"
+    ),
+    "operators/cdc.py:cdc_apply(validate_seq=True)": "input validation: rejects a null sequence",
+    "streaming/incremental.py:stream_cdc_sink(expire_horizon=10)": "bounds tombstone state",
+    "streaming/incremental.py:stream_cdc_sink(expire_horizon=<expr>)": "bounds tombstone state",
+    "plans/serve.py:filtered_read(sort=<expr>)": "serve API: a caller-chosen page order",
 }
 
 
@@ -313,52 +309,89 @@ def _calls(trees) -> dict[str, list[tuple[ast.Call, dict[str, str]]]]:
     return out
 
 
-def _is_default(value: ast.expr, default: ast.expr) -> bool:
-    if isinstance(value, ast.Constant) and isinstance(default, ast.Constant):
-        return type(value.value) is type(default.value) and value.value == default.value
-    return ast.dump(value) == ast.dump(default)
+#: Markers in a set of selected arms: the call passes an expression
+#: that may take any value, or any value but None.
+ANY, NOT_NONE = "<any>", "<not None>"
 
 
-def _setters(options, calls, forwarded) -> set[str]:
-    """Options some call in ``calls`` sets to a non-default value. A
-    call that passes on a parameter of an enclosing function sets the
-    option only when ``forwarded(function, param)``."""
-    out = set()
+def _arm(expr: ast.expr):
+    """The arm a literal selects: its type and value (``True`` is not
+    ``1``); any other expression is keyed by its source."""
+    if isinstance(expr, ast.Constant):
+        return (type(expr.value).__name__, expr.value)
+    return ("expr", ast.dump(expr))
+
+
+def _selected(options, calls, forwarded) -> dict[str, set]:
+    """The arms each option's calls in ``calls`` select: a literal (or
+    the default's own expression) its arm; an omitted parameter the
+    default; a parameter of an enclosing function passed on
+    ``forwarded(function, param)``; a call or an f-string every arm but
+    a None default; any other expression every arm."""
+    out = {}
     for key, (fn, param, idx, default, _) in options.items():
+        arms = out[key] = set()
         for call, scope in calls.get(fn, []):
             value = _passed(call, param, idx)
             if value is None:
-                continue
-            if value is ...:
-                out.add(key)
+                arms.add(_arm(default))
+            elif value is ...:
+                arms.add(ANY)
             elif isinstance(value, ast.Name) and value.id in scope:
-                if forwarded(scope[value.id], value.id):
-                    out.add(key)
-            elif not _is_default(value, default):
-                out.add(key)
+                arms |= forwarded(scope[value.id], value.id)
+            elif isinstance(value, ast.Constant) or _arm(value) == _arm(default):
+                arms.add(_arm(value))
+            elif isinstance(value, (ast.Call, ast.JoinedStr)) and _arm(default) == ("NoneType", None):
+                arms.add(NOT_NONE)
+            else:
+                arms.add(ANY)
     return out
 
 
-def _test_only_options() -> dict[str, int]:
-    """Line of every option whose non-default value only tests pass."""
-    options = _options()
+def _selected_closure(options, calls) -> dict[str, set]:
+    """``_selected`` to a fixed point: a call that passes on an option
+    of an enclosing function selects the arms the calls of that function
+    select; passing on any other parameter (a required one, a method's,
+    a private helper's) selects every arm."""
     owner = {(o[0], o[1]): k for k, o in options.items()}
+    done: dict[str, set] = {k: set() for k in options}
+    while True:
+        grown = _selected(
+            options, calls,
+            lambda fn, p: done[owner[(fn, p)]] if (fn, p) in owner else {ANY},
+        )
+        if grown == done:
+            return done
+        done = grown
+
+
+def _test_only_arms() -> dict[str, int]:
+    """Line of every option arm that no program call selects, keyed
+    "<module>:<function>(<param>=<value>)". The arms are the default,
+    each literal some call passes, and ``<expr>`` — a value some call
+    passes as another expression."""
+    options = _options()
     prog = _calls(_trees(_program_files()))
     tests = _calls(_trees(sorted((ROOT / "tests").rglob("*.py"))))
-    # passing on an option counts once that option is set by the
-    # program; passing on any other parameter (a method's, a private
-    # helper's) counts as setting
-    by_program: set[str] = set()
-    while True:
-        grown = _setters(
-            options, prog,
-            lambda fn, p: owner.get((fn, p), "") in by_program or (fn, p) not in owner,
-        )
-        if grown <= by_program:
-            break
-        by_program |= grown
-    by_tests = _setters(options, tests, lambda fn, p: False)
-    return {k: options[k][4] for k in sorted(by_tests - by_program)}
+    by_program = _selected_closure(options, prog)
+    out = {}
+    for key, (fn, param, idx, default, line) in options.items():
+        arms = {_arm(default)}
+        for call, _ in prog.get(fn, []) + tests.get(fn, []):
+            value = _passed(call, param, idx)
+            if isinstance(value, ast.Constant):
+                arms.add(_arm(value))
+            elif value not in (None, ...) and _arm(value) != _arm(default):
+                arms.add(("<expr>", None))
+        taken = by_program[key]
+        if ANY in taken:
+            continue
+        for kind, value in arms - taken:
+            if NOT_NONE in taken and kind != "NoneType":
+                continue
+            shown = kind if kind == "<expr>" else repr(value)
+            out[f"{key[:-1]}={shown})"] = line
+    return dict(sorted(out.items()))
 
 
 def _public_defaults() -> dict[str, tuple[str, str, int | None, ast.expr, int]]:
@@ -391,21 +424,17 @@ def _public_defaults() -> dict[str, tuple[str, str, int | None, ast.expr, int]]:
 
 def _unset_defaults() -> dict[str, int]:
     """Line of every public default that no program or test call sets to
-    another value. Passing on a parameter of an enclosing function counts
-    once that parameter is itself set (to a fixed point), or when it is
-    not one of these defaults (a required or a private parameter)."""
+    another value. Passing on a parameter of an enclosing function passes
+    on the values its own calls set (to a fixed point); passing on a
+    required or a private parameter sets any value."""
     params = _public_defaults()
-    owner = {(p[0], p[1]) for p in params.values()}
     calls = _calls(_trees(_program_files() + sorted((ROOT / "tests").rglob("*.py"))))
-    done: set[str] = set()
-    while True:
-        live = {(params[k][0], params[k][1]) for k in done}
-        grown = _setters(
-            params, calls, lambda fn, p: (fn, p) in live or (fn, p) not in owner
-        )
-        if grown <= done:
-            return {k: params[k][4] for k in sorted(set(params) - done)}
-        done |= grown
+    arms = _selected_closure(params, calls)
+    return {
+        k: params[k][4]
+        for k in sorted(params)
+        if not arms[k] - {_arm(params[k][3])}
+    }
 
 
 def test_no_package_def_is_reached_from_tests_alone():
@@ -429,13 +458,14 @@ def test_no_package_method_is_reached_from_tests_alone():
 
 
 def test_no_option_is_set_from_tests_alone():
-    """An option value that only tests pass selects a code path no run
-    takes: delete the parameter and the arm, and let tests reach a
-    dispatched arm through its input or its threshold constant."""
-    test_only = _test_only_options()
+    """An option arm no program call selects is a code path no run
+    takes: delete it (a parameter every call sets to one value becomes
+    that value in the body), and let tests reach a dispatched arm
+    through its input or its threshold constant."""
+    test_only = _test_only_arms()
     extra = sorted(k for k in test_only if k not in ALLOWED_OPTIONS)
     assert not extra, (
-        "options whose non-default value only tests pass: "
+        "option arms no program call selects: "
         + ", ".join(f"{k} (line {test_only[k]})" for k in extra)
     )
 
@@ -456,6 +486,6 @@ def test_allowlist_is_current():
     that code now reaches or sets, leaves its list."""
     stale = sorted(set(ALLOWED) - set(_unreached(_top_level_defs)))
     stale += sorted(set(ALLOWED_METHODS) - set(_unreached(_public_methods)))
-    stale += sorted(set(ALLOWED_OPTIONS) - set(_test_only_options()))
+    stale += sorted(set(ALLOWED_OPTIONS) - set(_test_only_arms()))
     stale += sorted(set(ALLOWED_DEFAULTS) - set(_unset_defaults()))
     assert not stale, f"remove from the allowlist: {stale}"

@@ -239,7 +239,7 @@ def test_ngram_diversity_single_scan(spark):
     narrow transform+concat, so the plan has exactly one FileScan —
     the old shape re-exploded the corpus once per n."""
     docs = _docs(spark)
-    df = TO.ngram_diversity(docs, strata_col="source")
+    df = TO.ngram_diversity(docs)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 1, plan
 

@@ -837,9 +837,11 @@ def test_temperature_mixture_matches_reference(spark, rows, alpha):
 )
 @settings(**_SETTINGS)
 def test_keep_best_matches_reference(spark, rows, edges):
-    """keep_best == per-component argmax(score, tie -> min id) computed
-    sequentially over dedup_clusters' own output — including docs
-    absent from the cluster map (kept) and whole-cluster ties."""
+    """keep_best == per-component argmax(score, tie -> min id) over a
+    sequential union-find of the pairs — including whole-cluster ties
+    and every doc with no near-duplicate, which must survive as its own
+    singleton — and each kept doc carries its component's minimum id as
+    cluster_id."""
     ids = {i for i, _ in rows}
     edges = [(a, b) for a, b in edges if a != b and a in ids and b in ids]
     docs = spark.createDataFrame(rows, "doc_id long, score long")
@@ -847,25 +849,19 @@ def test_keep_best_matches_reference(spark, rows, edges):
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     else:
         pairs = spark.createDataFrame([], "id_a long, id_b long")
-    # cluster only a subset of nodes so the absent-doc path is exercised
-    member_ids = sorted({x for e in edges for x in e})
-    nodes = (
-        spark.createDataFrame([(i,) for i in member_ids], "doc_id long")
-        if member_ids
-        else spark.createDataFrame([], "doc_id long")
+    got = sorted(
+        (r.doc_id, r.cluster_id) for r in DD.keep_best(docs, pairs, "score").collect()
     )
-    clusters = DD.dedup_clusters(pairs, nodes=nodes)
-    got = sorted(r.doc_id for r in DD.keep_best(docs, clusters, "score").collect())
 
-    comp = {r.id: r.cluster_id for r in clusters.collect()}
+    comp = _py_components(edges, sorted(ids))
     score = dict(rows)
     by_cluster = {}
     for i, c in comp.items():
         by_cluster.setdefault(c, []).append(i)
-    want = set(ids - set(comp))  # unclustered docs always keep
-    for members in by_cluster.values():
-        best = min(members, key=lambda i: (-score[i], i))
-        want.add(best)
+    want = {
+        (min(members, key=lambda i: (-score[i], i)), c)
+        for c, members in by_cluster.items()
+    }
     assert got == sorted(want)
 
 
@@ -964,9 +960,7 @@ def test_keep_best_null_scores_rank_worst(spark):
         "doc_id long, score int",
     )
     pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
-    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 4)], "doc_id long")
-    clusters = DD.dedup_clusters(pairs, nodes=nodes)
-    kept = sorted(r.doc_id for r in DD.keep_best(docs, clusters, "score").collect())
+    kept = sorted(r.doc_id for r in DD.keep_best(docs, pairs, "score").collect())
     # cluster {1,2}: scored doc 1 beats NULL doc 2; cluster {3,4}:
     # all-NULL -> min id 3
     assert kept == [1, 3]
@@ -1193,12 +1187,11 @@ def test_hashed_linear_score_matches_reference(spark, texts, dim, bias):
     n_vecs=st.integers(min_value=1, max_value=24),
     n_cells=st.integers(min_value=1, max_value=5),
     per_cell=st.integers(min_value=1, max_value=4),
-    mode=st.sampled_from(["prototypes", "spread"]),
     seed=st.integers(min_value=0, max_value=10**6),
 )
 @settings(**_SETTINGS)
 def test_cluster_sample_selection_matches_reference(
-    spark, n_vecs, n_cells, per_cell, mode, seed
+    spark, n_vecs, n_cells, per_cell, seed
 ):
     """Given the operator's OWN quantizer output (ivf_assign is
     oracle-pinned elsewhere), the two-phase per-cell top-B must equal a
@@ -1228,12 +1221,12 @@ def test_cluster_sample_selection_matches_reference(
     got = sorted(
         (r.vec_id, r.cell, r.dist, r.rank)
         for r in SIM.cluster_sample(
-            emb, dim=dim, n_cells=n_cells, per_cell=per_cell, mode=mode,
+            emb, dim=dim, n_cells=n_cells, per_cell=per_cell,
         ).collect()
     )
 
     assigned, cents = SIM.ivf_assign(
-        emb, dim, n_centroids=n_cells, n_iters=2, round_means=6
+        emb, dim, n_centroids=n_cells
     )
     cmap = {r.cell: list(r.cvec) for r in cents.collect()}
     members = [(r.id, list(r.v), r.cell) for r in assigned.collect()]
@@ -1248,7 +1241,7 @@ def test_cluster_sample_selection_matches_reference(
     want = []
     for cell in sorted({c for _, _, c in members}):
         ms = [(d2(v, cmap[cell]), i) for i, v, c in members if c == cell]
-        ms.sort(key=lambda t: (t[0] if mode == "prototypes" else -t[0], t[1]))
+        ms.sort()
         for rank, (dd, i) in enumerate(ms[:per_cell], start=1):
             import math
 
@@ -1493,7 +1486,7 @@ def test_kmeans_quality_matches_reference(spark, n_vecs, n_cells, seed):
     )
 
     assigned, cents = SIM.ivf_assign(
-        emb, dim, n_centroids=n_cells, n_iters=2, round_means=6
+        emb, dim, n_centroids=n_cells
     )
     cmap = {r.cell: list(r.cvec) for r in cents.collect()}
     members = [(r.id, list(r.v), r.cell) for r in assigned.collect()]
@@ -1558,15 +1551,13 @@ def test_tokenizer_fertility_matches_reference(spark, texts):
 
 
 @given(texts=st.lists(st.text(alphabet="ab c", min_size=0, max_size=14),
-                      min_size=1, max_size=8),
-       strata=st.booleans())
+                      min_size=1, max_size=8))
 @settings(**_SETTINGS)
-def test_ngram_diversity_matches_reference(spark, texts, strata):
+def test_ngram_diversity_matches_reference(spark, texts):
     """ngram_diversity against a plain-Python counter: occurrence-
     preserving n-grams (NOT the dedup shingles' per-doc distinct),
     exact totals/distincts per (stratum, n), sub-n docs contribute
-    nothing at that n, 0-total strata report a NULL ratio only in the
-    global (strata-less) empty case."""
+    nothing at that n, and a stratum with zero n-grams emits no row."""
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
         textops as TOX,
     )
@@ -1574,9 +1565,7 @@ def test_ngram_diversity_matches_reference(spark, texts, strata):
     rows = [(i, t, "s" + str(i % 2)) for i, t in enumerate(texts)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
     got = sorted(
-        tuple(r) for r in TOX.ngram_diversity(
-            docs, strata_col="source" if strata else None,
-        ).collect()
+        tuple(r) for r in TOX.ngram_diversity(docs).collect()
     )
 
     def grams(t: str, n: int) -> list[str]:
@@ -1584,21 +1573,13 @@ def test_ngram_diversity_matches_reference(spark, texts, strata):
         return ["␟".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
 
     want = []
-    keys = sorted({s for _, _, s in rows}) if strata else [None]
     for n in (1, 2, 3):
-        for s in keys:
-            all_g = [
-                g
-                for _, t, src in rows
-                if s is None or src == s
-                for g in grams(t, n)
-            ]
-            if strata and not all_g:
+        for s in sorted({s for _, _, s in rows}):
+            all_g = [g for _, t, src in rows if src == s for g in grams(t, n)]
+            if not all_g:
                 continue  # a stratum with zero n-grams emits no row
             tot, dist = len(all_g), len(set(all_g))
-            ratio = _r6(dist / tot) if tot > 0 else None
-            row = (n, tot, dist, ratio)
-            want.append(((s,) + row) if strata else row)
+            want.append((s, n, tot, dist, _r6(dist / tot)))
     assert got == sorted(want)
 
 

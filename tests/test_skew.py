@@ -49,7 +49,8 @@ def test_skew_split_with_forced_smj(spark, skewed):
 
 def test_keep_canonical_end_to_end(spark):
     """pairs → clusters → keep_canonical keeps exactly one doc per
-    component plus all singletons."""
+    component plus every doc with no near-duplicate (0, 4, 7 appear in
+    no pair); keep_best keeps those singletons too."""
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
         dedup as DD,
     )
@@ -60,31 +61,14 @@ def test_keep_canonical_end_to_end(spark):
     pairs = spark.createDataFrame(
         [(1, 3), (3, 5), (2, 6)], "id_a long, id_b long"
     )
-    clusters = DD.dedup_clusters(pairs, nodes=docs.select("doc_id"))
-    kept = sorted(r.doc_id for r in DD.keep_canonical(docs, clusters).collect())
-    assert kept == [0, 1, 2, 4, 7]  # 3,5 fold into 1; 6 into 2
-    # clusters came from nodes=docs — full coverage, so the
-    # clusters_cover_docs fast path (no singleton anti-join) must be
-    # row-identical (r12: the pipeline composition takes it)
-    fast = sorted(
-        r.doc_id
-        for r in DD.keep_canonical(
-            docs, clusters, clusters_cover_docs=True
-        ).collect()
+    kept = sorted(
+        (r.doc_id, r.cluster_id) for r in DD.keep_canonical(docs, pairs).collect()
     )
-    assert fast == kept
+    # 3,5 fold into 1; 6 into 2
+    assert kept == [(0, 0), (1, 1), (2, 2), (4, 4), (7, 7)]
+    scored = docs.withColumn("score", F.col("doc_id") % 3)
     best = sorted(
-        r.doc_id
-        for r in DD.keep_best(
-            docs.withColumn("score", F.col("doc_id") % 3),
-            clusters,
-            "score",
-            clusters_cover_docs=True,
-        ).collect()
+        (r.doc_id, r.cluster_id) for r in DD.keep_best(scored, pairs, "score").collect()
     )
-    assert best == sorted(
-        r.doc_id
-        for r in DD.keep_best(
-            docs.withColumn("score", F.col("doc_id") % 3), clusters, "score"
-        ).collect()
-    )
+    # {1,3,5} scores 1,0,2 -> 5; {2,6} scores 2,0 -> 2
+    assert best == [(0, 0), (2, 2), (4, 4), (5, 1), (7, 7)]

@@ -29,7 +29,7 @@ def dirty_dir(tmp_path_factory):
 
 
 def test_schema_and_dates(spark, dirty_dir):
-    sub = read_tsv(spark, f"{dirty_dir}/sub.txt", SUB_SCHEMA)
+    sub = read_tsv(spark, dirty_dir, SUB_SCHEMA, "sub.txt")
     assert dict(sub.dtypes)["filed"] == "date"
     assert dict(sub.dtypes)["accepted"] == "timestamp_ntz"
     assert dict(sub.dtypes)["wksi"] == "boolean"
@@ -38,7 +38,7 @@ def test_schema_and_dates(spark, dirty_dir):
 
 
 def test_null_semantics(spark, dirty_dir):
-    sub = read_tsv(spark, f"{dirty_dir}/sub.txt", SUB_SCHEMA)
+    sub = read_tsv(spark, dirty_dir, SUB_SCHEMA, "sub.txt")
     # empty fields → null (EMPTY_FIELD_AS_NULL)
     assert sub.filter(F.col("bas2").isNull()).count() > 0
     # some periods intentionally null
@@ -48,12 +48,13 @@ def test_null_semantics(spark, dirty_dir):
 def test_on_error_continue_drops_malformed(spark, dirty_dir):
     strict = read_tsv(
         spark,
-        f"{dirty_dir}/num.txt",
+        dirty_dir,
         NUM_SCHEMA,
+        "num.txt",
         on_error_continue=False,
         corrupt_record_col="_corrupt",
     )
-    dropped = read_tsv(spark, f"{dirty_dir}/num.txt", NUM_SCHEMA)
+    dropped = read_tsv(spark, dirty_dir, NUM_SCHEMA, "num.txt")
     n_bad = strict.filter(F.col("_corrupt").isNotNull()).count()
     assert n_bad == 2  # the short row + the type-malformed row
     assert dropped.count() == strict.count() - n_bad
@@ -68,7 +69,7 @@ def test_parse_runs_from_csv_once(spark, dirty_dir, on_error_continue):
     """Row selection must not make the optimizer evaluate the parse a
     second time in a pushed-down filter."""
     df = read_tsv(
-        spark, f"{dirty_dir}/num.txt", NUM_SCHEMA, on_error_continue=on_error_continue
+        spark, dirty_dir, NUM_SCHEMA, "num.txt", on_error_continue=on_error_continue
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("from_csv(") == 1, plan
@@ -150,7 +151,7 @@ def test_null_if_does_not_corrupt_quoted_embedded_tabs(spark, tmp_path_factory):
         "x\tNULL\ty\n"                      # quote-free line: pre-parse NULL_IF
         '"abc\tNULL\tdef"\tNULL\tz\n'       # quoted line: per-field NULL_IF
     )
-    df = read_tsv(spark, str(d / "q.txt"), schema)
+    df = read_tsv(spark, str(d), schema, "q.txt")
     rows = {r.c: r for r in df.collect()}
     assert rows["y"].b is None
     assert rows["z"].a == "abc\tNULL\tdef"  # embedded token NOT blanked

@@ -81,9 +81,7 @@ def test_quality_filter_empty_docs_match_oracle(spark):
     from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
         textops as TO,
     )
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.workload.dataprep import (
-        PREP_ORACLES,
-    )
+    from sec_financial_data_pipeline_using_snowflake_dbt_spark.workload import ORACLES
 
     rows = [(0, ""), (1, "   "), (2, "the a the quick brown fox"), (3, "a")]
     con = duckdb.connect()
@@ -93,7 +91,7 @@ def test_quality_filter_empty_docs_match_oracle(spark):
     )
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = TO.quality_filter(docs)
-    assert not compare(got, con.execute(PREP_ORACLES["q_quality_filter"]).df(),
+    assert not compare(got, con.execute(ORACLES["q_quality_filter"]).df(),
                        "quality_filter empty docs")
     by_id = {r.doc_id: r for r in got.collect()}
     assert by_id[0].fail_length == 1 and by_id[0].passes == 0
