@@ -310,6 +310,13 @@ class ResultCache:
             self.hits += 1
             return entry.value
         self.misses += 1
+        # a miss drops every expired entry, so an entry outlives its TTL
+        # only until the next miss
+        self._store = {
+            key: live
+            for key, by_limit in self._store.items()
+            if (live := {n: e for n, e in by_limit.items() if e.expires_at > now})
+        }
         value = filtered_read(df, limit=limit).collect()
         self._store.setdefault(plan_key, {})[limit] = _Entry(
             now + self.ttl_seconds, value

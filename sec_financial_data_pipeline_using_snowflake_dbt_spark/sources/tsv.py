@@ -4,36 +4,33 @@ Maps Snowflake ``COPY INTO`` + ``CREATE FILE FORMAT`` options
 (reference: Airflow/dags/Sec_data_pipeline.py:379-398,418-457) onto
 Spark's CSV reader:
 
-| COPY option                         | Implementation                   |
-|-------------------------------------|----------------------------------|
-| FIELD_DELIMITER='\\t'               | sep='\\t'                        |
-| SKIP_HEADER=1                       | header=True                      |
-| FIELD_OPTIONALLY_ENCLOSED_BY='"'    | quote='"'                        |
-| DATE_FORMAT='YYYYMMDD'              | to_date(col, 'yyyyMMdd')         |
-| EMPTY_FIELD_AS_NULL / NULL_IF       | null-literal rewrite, ALL columns|
-| ON_ERROR='CONTINUE'                 | validity predicate → filter      |
-| PATTERN='.*sub\\.txt'               | pathGlobFilter='*sub.txt'        |
+| COPY option                         | Implementation                      |
+|-------------------------------------|-------------------------------------|
+| FIELD_DELIMITER='\\t'               | sep='\\t'                           |
+| SKIP_HEADER=1                       | header=True (first line of a file)  |
+| FIELD_OPTIONALLY_ENCLOSED_BY='"'    | quote='"', escape='"'               |
+| DATE_FORMAT='YYYYMMDD'              | try_to_date(col, 'yyyyMMdd')        |
+| other typed columns (no format set) | Column.try_cast(type): 0/1 booleans,|
+|                                     | fractional-second timestamps        |
+| EMPTY_FIELD_AS_NULL / NULL_IF       | isin(NULL_LITERALS), every field    |
+| ON_ERROR='CONTINUE'                 | reject predicate → filter           |
+| PATTERN='.*sub\\.txt'               | pathGlobFilter='*sub.txt'           |
 
-Design: ONE text-source scan + a single ``from_csv`` expression per
-row. Spark's CSV *source* modes cannot express COPY error semantics:
-DROPMALFORMED drops neither token-count nor type-conversion failures,
-and the source-level PERMISSIVE corrupt-record column is populated
-*per pruned column set* — whether a row is flagged depends on which
-columns the downstream query touches. ``from_csv`` parses the full
-declared schema row-locally, so row validity is a pure function of
-the row: short/long rows and type-conversion failures all populate
-the in-struct corrupt-record field deterministically. NULL_IF
-literals are rewritten in quote-free raw lines *before* parsing
-(Snowflake applies NULL_IF pre-conversion), so 'NULL' in a numeric
-column loads as NULL rather than an error; quoted lines get NULL_IF per
-string field after the parse. One linear scan, and the parse runs once
-per row: rows are selected inside the generator that emits the parsed
-struct, where the optimizer cannot duplicate ``from_csv`` into a
-pushed-down filter. ``read_sec_quarter`` persists what it loads, so the
-counts, the checks and the model DAG all read one parse.
+Every column is read as a string, so the reader only splits and
+unquotes; NULL_IF and the typed conversions run per field after quote
+handling, as in COPY. A row is rejected when its token count is wrong
+(the reader's corrupt-record column) or when a token that is not a
+NULL_IF literal fails its conversion. ``columnPruning=False`` makes the
+reader tokenize the whole row whichever columns the query selects, so
+row validity is a pure function of the row. ``read_sec_quarter``
+persists what it loads, so the counts, the checks and the model DAG all
+read one parse.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +45,6 @@ _CORRUPT = "_corrupt_record"
 #: reference's COPY file format (Sec_data_pipeline.py:379-398).
 SEP = "\t"
 DATE_FORMAT = "yyyyMMdd"
-TIMESTAMP_FORMAT = "yyyy-MM-dd HH:mm:ss"
 
 
 def read_tsv(
@@ -65,75 +61,39 @@ def read_tsv(
     ``on_error_continue=True`` ≙ ON_ERROR='CONTINUE': rows with
     structural errors (wrong token count) or type-conversion failures
     are skipped. With ``on_error_continue=False`` and a
-    ``corrupt_record_col``, bad rows are kept and flagged for audit.
+    ``corrupt_record_col``, bad rows are kept and flagged for audit: the
+    column holds the raw line, or the tab-joined fields when a
+    conversion failed.
     """
-    lines = spark.read.option("pathGlobFilter", path_glob).text(path)
-    # strip trailing CR (CRLF files)
-    line = F.regexp_replace(F.col("value"), "\r$", "")
-    # NULL_IF=('NULL','null'): Snowflake applies it per FIELD after quote
-    # handling. The pre-parse whole-token rewrite below is exact only on
-    # lines with no quote character (a quoted field containing an
-    # embedded delimited NULL token would be corrupted), so it is gated
-    # to quote-free lines; quoted lines get per-field NULL_IF after
-    # from_csv instead (see below).
-    null_alt = "|".join(lit for lit in NULL_LITERALS if lit)
-    sep_q = "\\Q" + SEP + "\\E"
-    has_quote = line.contains('"')
-    line = F.when(has_quote, line).otherwise(
-        F.regexp_replace(line, f"(?<=^|{sep_q})(?:{null_alt})(?={sep_q}|$)", "")
+    raw = (
+        spark.read.schema(", ".join(f"`{n}` STRING" for n in schema.names + [_CORRUPT]))
+        .options(
+            sep=SEP, header=True, quote='"', escape='"', mode="PERMISSIVE",
+            columnNameOfCorruptRecord=_CORRUPT, pathGlobFilter=path_glob,
+            # tokenize every row in full whichever columns a query reads,
+            # so a short row is rejected under any select
+            columnPruning=False,
+        )
+        .csv(path)
     )
-    rows = lines.select(line.alias("_l"), has_quote.alias("_q"))
-
-    # SKIP_HEADER=1: the header line carries the schema's column names
-    header_line = SEP.join(f.name for f in schema.fields)
-    not_header = F.lower(F.col("_l")) != header_line.lower()
-
-    parse_schema = T.StructType(
-        list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())]
-    )
-    opts = {
-        "sep": SEP,
-        "quote": '"',
-        "escape": '"',
-        "dateFormat": DATE_FORMAT,
-        "timestampFormat": TIMESTAMP_FORMAT,
-        "timestampNTZFormat": TIMESTAMP_FORMAT,
-        "nullValue": "",
-        "mode": "PERMISSIVE",
-        "columnNameOfCorruptRecord": _CORRUPT,
-    }
-    parsed = F.from_csv(F.col("_l"), parse_schema.simpleString(), opts)
-
-    def keep(r: F.Column) -> F.Column:
-        if on_error_continue:
-            return not_header & r[_CORRUPT].isNull()
-        return not_header
-
-    # Row selection happens inside ONE generator over the parsed struct.
-    # A Filter on the struct (or on the prepared line) would be pushed
-    # below the projection that computes it, and the optimizer would
-    # then evaluate from_csv (and the regex chain) once in the filter
-    # and again in the projection.
-    rows = rows.select(
-        F.explode(F.filter(F.array(parsed), keep)).alias("_r"), "_q"
-    )
-
-    def _out(f: T.StructField) -> F.Column:
-        c = F.col(f"_r.{f.name}")
-        # per-field NULL_IF for quoted lines (string columns only: a
-        # NULL token in a typed column of a quoted line fails the cast
-        # and flags the row — conservative vs Snowflake, which would
-        # load NULL; quoted "NULL" can't be told apart from bare NULL
-        # post-parse — both accepted limitations, SEC files never quote)
-        if isinstance(f.dataType, T.StringType):
-            c = F.when(F.col("_q") & c.isin(*NULL_LITERALS), F.lit(None)).otherwise(c)
-        return c.alias(f.name)
-
-    out_cols = [_out(f) for f in schema.fields]
+    out, failed = [], [F.lit(False)]
+    for f in schema.fields:
+        # NULL_IF on every field, after quote handling
+        c = F.when(~F.col(f.name).isin(*NULL_LITERALS), F.col(f.name))
+        if not isinstance(f.dataType, T.StringType):
+            if isinstance(f.dataType, T.DateType):
+                typed = F.try_to_date(c, DATE_FORMAT)
+            else:
+                typed = c.try_cast(f.dataType)
+            failed.append(c.isNotNull() & typed.isNull())
+            c = typed
+        out.append(c.alias(f.name))
+    conversion_failed = reduce(operator.or_, failed)
     if on_error_continue:
-        return rows.select(*out_cols)
-    audit = corrupt_record_col or _CORRUPT
-    return rows.select(*out_cols, F.col(f"_r.{_CORRUPT}").alias(audit))
+        return raw.filter(F.col(_CORRUPT).isNull() & ~conversion_failed).select(*out)
+    fields = F.concat_ws(SEP, *[F.coalesce(F.col(n), F.lit("")) for n in schema.names])
+    audit = F.coalesce(F.col(_CORRUPT), F.when(conversion_failed, fields))
+    return raw.select(*out, audit.alias(corrupt_record_col or _CORRUPT))
 
 
 def read_sec_quarter(spark: SparkSession, landing_dir: str) -> dict[str, DataFrame]:

@@ -70,7 +70,6 @@ ALLOWED_OPTIONS: dict[str, str] = {
         "COPY audit mode: keeps rejected rows, which the load report's "
         "reject count needs (ROADMAP direction 3)"
     ),
-    "sources/tsv.py:read_tsv(on_error_continue=<expr>)": "the COPY audit mode, chosen per call",
     "sources/tsv.py:read_tsv(corrupt_record_col='_corrupt')": (
         "names the COPY audit mode's corrupt-record column"
     ),

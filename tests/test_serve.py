@@ -167,6 +167,27 @@ def test_result_cache_misses_after_overwrite(spark, tmp_path):
     assert cache.misses == 2
 
 
+def test_result_cache_drops_expired_entries_on_a_miss(spark, monkeypatch):
+    """Expired entries leave the cache on the next miss, so distinct
+    plans do not stay cached for the life of the process."""
+    from types import SimpleNamespace
+
+    now = [0.0]
+    monkeypatch.setattr(serve, "time", SimpleNamespace(monotonic=lambda: now[0]))
+    cache = serve.ResultCache(ttl_seconds=10)
+    old, live, new = spark.range(3), spark.range(4), spark.range(5)
+    cache.fetch(old)
+    now[0] = 5.0
+    cache.fetch(live)
+    assert len(cache._store) == 2
+    now[0] = 12.0  # old has expired, live has not
+    cache.fetch(live)
+    assert cache.hits == 1 and len(cache._store) == 2  # a hit drops nothing
+    cache.fetch(new)
+    key = serve.ResultCache.key_for
+    assert set(cache._store) == {key(live), key(new)}
+
+
 def test_list_catalog(spark):
     cat = serve.list_catalog(spark)
     assert "default" in cat

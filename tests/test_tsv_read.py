@@ -64,15 +64,81 @@ def test_on_error_continue_drops_malformed(spark, dirty_dir):
     assert row is not None and row.qtrs is None and float(row.value) == 7.5
 
 
-@pytest.mark.parametrize("on_error_continue", [True, False])
-def test_parse_runs_from_csv_once(spark, dirty_dir, on_error_continue):
-    """Row selection must not make the optimizer evaluate the parse a
-    second time in a pushed-down filter."""
-    df = read_tsv(
-        spark, dirty_dir, NUM_SCHEMA, "num.txt", on_error_continue=on_error_continue
+def test_row_validity_ignores_selected_columns(spark, dirty_dir):
+    """A row is rejected or flagged whichever columns the query reads: a
+    narrow select must not let the short row through."""
+    loaded = read_tsv(spark, dirty_dir, NUM_SCHEMA, "num.txt")
+    assert loaded.select("adsh").count() == len(loaded.collect())
+    audit = read_tsv(
+        spark,
+        dirty_dir,
+        NUM_SCHEMA,
+        "num.txt",
+        on_error_continue=False,
+        corrupt_record_col="_corrupt",
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("from_csv(") == 1, plan
+    flagged = audit.filter(F.col("_corrupt").isNotNull())
+    assert flagged.select("adsh").count() == 2
+    # the short row keeps its raw line; the type-malformed row its fields
+    assert {r._corrupt for r in flagged.select("_corrupt").collect()} == {
+        "only\tthree\tcolumns",
+        "0000001000-24-000000\tAssets\tus-gaap/2024\tnotadate\t0\tUSD\t\t\tnotanumber\t",
+    }
+
+
+def test_real_sec_value_formats(spark, tmp_path):
+    """The published SEC files write booleans as 0/1 and ``accepted``
+    with a fractional second; COPY loads such rows, and so must we."""
+    from sec_financial_data_pipeline_using_snowflake_dbt_spark.schemas import (
+        PRE_SCHEMA,
+        TAG_SCHEMA,
+    )
+
+    rows = {
+        "sub": (
+            SUB_SCHEMA,
+            [
+                dict(adsh="0000320193-24-000006", cik="320193", name="APPLE INC",
+                     form="10-Q", filed="20240202", wksi="1", prevrpt="0",
+                     detail="1", accepted="2024-02-01 18:03:00.0"),
+                dict(adsh="0000789019-24-000008", cik="789019", name="MICROSOFT CORP",
+                     form="10-Q", filed="20240130", wksi="0", prevrpt="1",
+                     detail="0", accepted="2024-01-30 16:06:12.0"),
+            ],
+        ),
+        "tag": (
+            TAG_SCHEMA,
+            [
+                dict(tag="Assets", version="us-gaap/2023", custom="0", abstract="1"),
+                dict(tag="Widgets", version="0000320193-24-000006", custom="1", abstract="0"),
+            ],
+        ),
+        "pre": (
+            PRE_SCHEMA,
+            [
+                dict(adsh="0000320193-24-000006", report="2", inpth="0", negating="1"),
+                dict(adsh="0000320193-24-000006", report="3", inpth="1", negating="0"),
+            ],
+        ),
+    }
+    for name, (schema, recs) in rows.items():
+        names = [f.name for f in schema.fields]
+        (tmp_path / f"{name}.txt").write_text(
+            "\n".join(["\t".join(names)] + ["\t".join(r.get(c, "") for c in names) for r in recs])
+            + "\n"
+        )
+    sub = {r.adsh: r for r in read_tsv(spark, str(tmp_path), SUB_SCHEMA, "sub.txt").collect()}
+    a, m = sub["0000320193-24-000006"], sub["0000789019-24-000008"]
+    assert (a.wksi, a.prevrpt, a.detail) == (True, False, True)
+    assert (m.wksi, m.prevrpt, m.detail) == (False, True, False)
+    assert a.accepted == datetime.datetime(2024, 2, 1, 18, 3)
+    assert m.accepted == datetime.datetime(2024, 1, 30, 16, 6, 12)
+    tag = {r.tag: r for r in read_tsv(spark, str(tmp_path), TAG_SCHEMA, "tag.txt").collect()}
+    assert (tag["Assets"].custom, tag["Assets"].abstract) == (False, True)
+    assert (tag["Widgets"].custom, tag["Widgets"].abstract) == (True, False)
+    pre = {r.report: r for r in read_tsv(spark, str(tmp_path), PRE_SCHEMA, "pre.txt").collect()}
+    assert (pre[2].inpth, pre[2].negating) == (False, True)
+    assert (pre[3].inpth, pre[3].negating) == (True, False)
 
 
 def test_reread_after_relanding_sees_new_files(spark, tmp_path):
