@@ -3,7 +3,7 @@
 reference: Airflow/dags/Sec_data_pipeline.py + rdbms_transformation.py):
 
     python -m sec_financial_data_pipeline_using_snowflake_dbt_spark \
-        <landing_dir> <warehouse_dir> [--quarter 2024q1] [--skip-checks]
+        <landing_dir> <warehouse_dir> [--skip-checks]
 
 Loads the quarter's TSVs (COPY semantics), runs the data-quality suite
 (dbt test parity), builds the star schema + JSON documents through the
@@ -28,14 +28,12 @@ def main() -> int:
     ap = argparse.ArgumentParser(prog="secspark")
     ap.add_argument("landing_dir", help="directory with {sub,tag,num,pre}.txt")
     ap.add_argument("warehouse_dir", help="output directory for fact tables")
-    ap.add_argument("--quarter", default=None, help="label for logs only")
     ap.add_argument("--skip-checks", action="store_true")
     args = ap.parse_args()
 
     spark = get_spark("secspark-pipeline")
     raw = read_sec_quarter(spark, args.landing_dir)
-    label = args.quarter or args.landing_dir
-    print(f"[secspark] loaded quarter {label}: " +
+    print(f"[secspark] loaded quarter {args.landing_dir}: " +
           ", ".join(f"{k}={v.count()}" for k, v in raw.items()))
 
     failed = []
@@ -48,10 +46,11 @@ def main() -> int:
         for r in failed:
             print(f"[secspark]   FAIL {r.name}: {r.violations} violations")
 
-    built = sec_registry().run(spark, dict(raw), warehouse_dir=args.warehouse_dir)
-    for name in ("fct_balance_sheet", "fct_income_statement", "fct_cashflows",
-                 "financial_statements_json"):
-        print(f"[secspark] {name}: {built[name].count()} rows")
+    registry = sec_registry()
+    built = registry.run(spark, dict(raw), warehouse_dir=args.warehouse_dir)
+    for name, m in registry.models.items():
+        if m.materialization == "table":
+            print(f"[secspark] {name}: {built[name].count()} rows")
     print(f"[secspark] jvm: {jvm_cost(spark)}")
     spark.stop()
     return 1 if failed else 0

@@ -60,8 +60,10 @@ def relationships(
         non_null = non_null.filter(F.col(ck).isNotNull())
     # no broadcast hint: the parent key set is usually small but a
     # dimension CAN be huge (the house rule — never bake a broadcast
-    # on a side that can grow; AQE broadcasts from measured sizes)
-    return non_null.join(parent.select(*keys.values()).distinct(), cond, "left_anti")
+    # on a side that can grow; AQE broadcasts from measured sizes). No
+    # distinct either: a left-anti join keeps or drops each child row
+    # once, however often its key repeats in the parent.
+    return non_null.join(parent.select(*keys.values()), cond, "left_anti")
 
 
 def accepted_values(df: DataFrame, col: str, values: list) -> DataFrame:

@@ -4,8 +4,9 @@ Airflow/dags/rdbms_transformation.py:202-211 `dbt_debug >> dbt_deps >>
 staging >> dimensions >> [3 facts] >> test >> docs`).
 
 A model is a named function ``dict[name, DataFrame] -> DataFrame`` with
-declared dependencies and a materialization, which
-``sources.catalog.materialize`` carries out:
+declared dependencies and a materialization (reference:
+Airflow/masterfindata/dbt_project.yml:28-45), which ``Registry.run``
+carries out, registering each model as a temp view of its name:
 
 - ``view``  — lazy lineage (≙ dbt view): downstream models compose the
               plan; Catalyst optimizes across model boundaries.
@@ -14,10 +15,13 @@ declared dependencies and a materialization, which
               shared by several downstreams. A re-run replaces the
               entry an earlier run cached, so re-landed sources never
               meet stale staging rows.
-- ``table`` — written to the warehouse as Parquet, with the
+- ``table`` — written to ``<warehouse_dir>/<name>`` as Parquet, with the
               ``cluster_by`` analogue ``repartition(keys)
               .sortWithinPartitions(keys)`` (X7: Snowflake cluster_by on
-              the facts) so later scans get co-located keys.
+              the facts) so later scans get co-located keys. The
+              read-back carries the schema just written, so it runs no
+              footer-inference job. ``cluster_by`` lays out written
+              files, so it needs ``table``.
 
 Model-level parallelism (dbt --threads 8 / parallel Airflow tasks, X11)
 is deliberately absent: models share one lineage graph, so Spark's own
@@ -33,7 +37,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import materialize
+from ..session import persist_fresh
 
 
 @dataclass
@@ -132,9 +136,11 @@ class Registry:
         warehouse_dir: str | None = None,
         select: list[str] | None = None,
     ) -> dict[str, DataFrame]:
-        """Execute the DAG (≙ `dbt run`). ``select`` limits to the named
-        models + their ancestors (≙ dbt --models selectors); a selected
-        name that is neither a model nor a source raises ``KeyError``."""
+        """Execute the DAG (≙ `dbt run`): build each model and view, cache
+        or write it as it declares, registered as a temp view of its name.
+        ``select`` limits to the named models + their ancestors (≙ dbt
+        --models selectors); a selected name that is neither a model nor a
+        source raises ``KeyError``."""
         wanted: set[str] | None = None
         if select:
             unknown = [n for n in select if n not in self.models and n not in sources]
@@ -157,9 +163,23 @@ class Registry:
             missing = [d for d in m.deps if d not in built]
             if missing:
                 raise KeyError(f"model {name}: missing inputs {missing}")
-            built[name] = materialize(
-                m.fn(built), name, m.materialization, warehouse_dir, m.cluster_by
-            )
+            mode = m.materialization
+            if mode not in ("view", "cache", "table"):
+                raise ValueError(f"{name}: unknown materialization {mode!r}")
+            if m.cluster_by and mode != "table":
+                raise ValueError(f"{name}: cluster_by needs table materialization, not {mode!r}")
+            if mode == "table" and not warehouse_dir:
+                raise ValueError(f"{name}: table materialization needs warehouse_dir")
+            df = m.fn(built)
+            if mode == "cache":
+                df = persist_fresh(df)
+            elif mode == "table":
+                if m.cluster_by:
+                    df = df.repartition(*m.cluster_by).sortWithinPartitions(*m.cluster_by)
+                df.write.mode("overwrite").parquet(f"{warehouse_dir}/{name}")
+                df = spark.read.schema(df.schema).parquet(f"{warehouse_dir}/{name}")
+            df.createOrReplaceTempView(name)
+            built[name] = df
         return built
 
 

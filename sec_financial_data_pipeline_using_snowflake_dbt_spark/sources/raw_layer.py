@@ -23,6 +23,7 @@ and `quarter` predicates skip irrelevant years entirely.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..schemas import SEC_SCHEMAS
 from .tsv import read_tsv
@@ -36,7 +37,6 @@ def ingest_quarter(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     counts: dict[str, int] = {}
     # each table is parsed exactly once, by its write: read_tsv, not the
     # persisting read_sec_quarter, whose cache nothing here would reuse
@@ -51,6 +51,8 @@ def ingest_quarter(
         )
         (
             out.write.mode("overwrite")
+            # this write's own option: the session's overwrite mode stays
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("quarter")
             .parquet(f"{raw_dir}/{name}")
         )
@@ -62,8 +64,11 @@ def read_raw(
     spark: SparkSession, raw_dir: str, table: str, quarter: str | None = None
 ) -> DataFrame:
     """Read a raw table; ``quarter`` restricts to one partition (pruned
-    at the scan, not filtered after)."""
-    df = spark.read.parquet(f"{raw_dir}/{table}")
+    at the scan, not filtered after). The schema is the one
+    ``ingest_quarter`` writes, so the read runs no footer-inference
+    job."""
+    fields = SEC_SCHEMAS[table].fields + [T.StructField("quarter", T.StringType())]
+    df = spark.read.schema(T.StructType(fields)).parquet(f"{raw_dir}/{table}")
     if quarter is not None:
         df = df.filter(df.quarter == quarter)
     return df

@@ -32,14 +32,21 @@ def test_two_quarters_land(spark, raw_dir):
 
 
 def test_quarter_reingest_is_idempotent(spark, raw_dir, tmp_path_factory):
+    """Re-ingesting a quarter replaces that partition alone, and the
+    dynamic overwrite is the write's own option: the session's mode,
+    which every later overwrite in the process reads, stays as it was."""
     land = str(tmp_path_factory.mktemp("land_q1b"))
     generate_sec_quarter(land, seed=42)
-    before = read_raw(spark, raw_dir, "num", "2024q1").count()
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(mode_key)
+    before_q1 = read_raw(spark, raw_dir, "num", "2024q1").count()
+    before_q2 = read_raw(spark, raw_dir, "num", "2024q2").count()
     ingest_quarter(spark, land, raw_dir, "2024q1")  # re-run same quarter
+    assert spark.conf.get(mode_key) == mode == "STATIC"
     after_q1 = read_raw(spark, raw_dir, "num", "2024q1").count()
     after_q2 = read_raw(spark, raw_dir, "num", "2024q2").count()
-    assert after_q1 == before  # replaced, not appended
-    assert after_q2 > 0  # other partitions untouched
+    assert after_q1 == before_q1  # replaced, not appended
+    assert after_q2 == before_q2 > 0  # other partitions untouched
 
 
 def test_ingest_single_scan_per_table(spark, tmp_path_factory):
@@ -65,6 +72,38 @@ def test_ingest_single_scan_per_table(spark, tmp_path_factory):
     assert all(n > 0 for n in counts.values())
     for name, n in counts.items():
         assert read_raw(spark, raw, name).count() == n
+
+
+def test_schema_carrying_reads_run_no_job(spark, raw_dir, tmp_path):
+    """A ``table`` model's read-back and ``read_raw`` take the schema
+    their write used, so neither runs a Parquet footer-inference job: a
+    one-model table run costs its write's one job, a raw read none."""
+    from sec_financial_data_pipeline_using_snowflake_dbt_spark.plans.registry import (
+        Registry,
+    )
+
+    reg = Registry()
+    reg.model("quarters", ["q"], "table")(lambda t: t["q"])
+    q = spark.createDataFrame([("2024q1",), ("2024q2",)], "quarter string")
+    sc = spark.sparkContext
+
+    def jobs(group, thunk):
+        sc.setJobGroup(group, group)
+        try:
+            out = thunk()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    built, n_run = jobs("table_readback_probe",
+                        lambda: reg.run(spark, {"q": q}, warehouse_dir=str(tmp_path)))
+    raws, n_raw = jobs("read_raw_probe",
+                       lambda: {t: read_raw(spark, raw_dir, t) for t in ("sub", "tag", "num", "pre")})
+    assert (n_run, n_raw) == (1, 0)
+    assert built["quarters"].count() == 2
+    # the schema handed over is the one a footer read infers
+    for t, df in raws.items():
+        assert df.schema == spark.read.parquet(f"{raw_dir}/{t}").schema, t
 
 
 def test_partition_pruning(spark, raw_dir):
