@@ -271,9 +271,6 @@ def main() -> None:
 
     # Each rep runs in a span: its job group is set before t0 and its
     # Spark counters are read after the force, outside the timed region.
-    # Jobs started from a helper thread (the ThreadPoolExecutor stages in
-    # similarity.py, dedup.py and dataprep.py) may not inherit the job
-    # group, so their counters can be missing from that query's row.
     tracer = Tracer(spark, enabled=True)
     best_layers: dict[str, dict] = {}  # per query: best rep of its latest measure()
 

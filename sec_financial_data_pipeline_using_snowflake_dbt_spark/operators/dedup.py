@@ -88,13 +88,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-#: Above this filter size the bloom bitmap is no longer baked as a
-#: literal array (a 2^20-bit filter is 16k longs ≈ 128 KB of plan —
-#: fine; a 10^10-bit one is not) and the probe switches to the
-#: position-table join arm.
-BLOOM_LITERAL_MAX_BITS = 1 << 20
-
-
 def bloom_positions(h: F.Column, m_bits: int, k: int) -> F.Column:
     """``array<long>`` of the ``k`` Bloom bit positions for a content
     hash: position_i = int(md5(h || ':' || i)[:15 hex]) % m_bits. All
@@ -125,8 +118,6 @@ def bloom_dedup(
     existing: DataFrame,
     m_bits: int = 2048,
     k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Bloom-filter ingest dedup: flag each NEW document whose content
     hash is *possibly* already in the EXISTING corpus — the O(m)-memory
@@ -148,92 +139,75 @@ def bloom_dedup(
     - build: existing hashes → k positions each → DISTINCT, output
       bounded by m_bits regardless of corpus rows (one map-side-
       combinable shuffle);
-    - probe, literal arm (``m_bits <= BLOOM_LITERAL_MAX_BITS``): the
-      distinct positions collect into an m_bits/64-word bitmap baked as
-      a literal long array, and the per-doc check is a pure Column fold
-      (element_at + getbit) — ZERO joins and zero shuffles over the new
-      batch;
-    - probe, join arm (larger filters): exploded new positions
-      equi-join the distinct position table (≤ m_bits rows — AQE
-      broadcasts it from its measured size; no baked hint) + one
-      groupBy(doc) count.
+    - probe: the distinct positions collect into an m_bits/64-word
+      bitmap baked as a literal long array, and the per-doc check is a
+      pure Column fold (element_at + getbit) — ZERO joins and zero
+      shuffles over the new batch. The bitmap is m_bits/8 bytes of plan
+      (256 B at the 2048 bits every query uses); a filter of billions
+      of bits is still correct but plans slowly.
 
-    Both arms are bit-identical (property-tested): n_hit counts hash
-    functions (array slots), not distinct positions, so a doc whose k
-    hashes collide on one set bit still reports k hits in both arms.
+    n_hit counts hash functions (array slots), not distinct positions:
+    a doc whose k hashes collide on one set bit still reports k hits.
 
     ``exact_dup`` joins the distinct existing-hash set — corpus-sized,
     the one non-O(m) piece, carried so the operator can REPORT its FP
     rate; production ingest that trusts the filter drops this join and
     keeps the O(m) probe only (documented boundary, not a default).
 
-    The literal arm also runs with a STREAMING ``new`` side against a
-    static ``existing`` corpus (test-pinned): the filter build runs on
-    the static side at plan time, the probe is a stateless narrow
-    fold, and the truth check is a stream-static join — the streaming
-    ingest-dedup deployment shape. The join arm's distinct build makes
-    it batch-only.
+    The probe also runs with a STREAMING ``new`` side against a static
+    ``existing`` corpus (test-pinned): the filter build runs on the
+    static side at plan time, the probe is a stateless narrow fold, and
+    the truth check is a stream-static join — the streaming
+    ingest-dedup deployment shape.
     """
     if m_bits < 64 or k < 1:
         raise ValueError("need m_bits >= 64 and k >= 1")
     nh = new.select(
-        F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("h")
+        F.col(DOC_ID).alias("id"), F.md5(F.col(TEXT)).alias("h")
     ).withColumn("pos", bloom_positions(F.col("h"), m_bits, k))
-    eh = existing.select(F.md5(F.col(text_col)).alias("h")).distinct()
+    eh = existing.select(F.md5(F.col(TEXT)).alias("h")).distinct()
     epos = (
         eh.select(F.explode(bloom_positions(F.col("h"), m_bits, k)).alias("p"))
         .distinct()
     )
 
-    if m_bits <= BLOOM_LITERAL_MAX_BITS:
-        # one bounded job: <= m_bits longs back to the driver, packed
-        # into an m_bits/64-word bitmap literal (the PQ-codebook /
-        # centroid-literal posture)
-        n_words = (m_bits + 63) // 64
-        words = [0] * n_words
-        for r in epos.collect():
-            p = int(r.p)
-            words[p >> 6] |= 1 << (p & 63)
-        # two's-complement: a word with bit 63 set must bake as the
-        # equivalent NEGATIVE long (getbit reads the binary pattern)
-        bm = F.array(
-            *[
-                F.lit(w - (1 << 64) if w >= (1 << 63) else w).cast("long")
-                for w in words
-            ]
-        )
-        hit = lambda p: F.getbit(  # noqa: E731
-            F.element_at(bm, (p / 64).cast("int") + 1), (p % 64).cast("int")
-        )
-        counted = nh.select(
-            "id",
-            "h",
-            # NULL positions (NULL text) count as misses, matching the
-            # join arm and the oracle's match-nothing LEFT JOIN
-            F.aggregate(
-                F.col("pos"),
-                F.lit(0).cast("long"),
-                lambda acc, p: acc + F.coalesce(hit(p), F.lit(0)),
-            ).alias("n_hit"),
-        )
-    else:
-        # positional explode keeps colliding hash slots as separate rows
-        # so n_hit matches the literal arm's per-slot count
-        probe = nh.select("id", F.posexplode("pos").alias("slot", "p"))
-        counted = (
-            probe.join(epos.withColumn("_hit", F.lit(1)), "p", "left")
-            .groupBy("id")
-            .agg(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("_nh"))
-            .join(nh.select("id", "h"), "id")
-            .select("id", "h", F.col("_nh").cast("long").alias("n_hit"))
-        )
+    # one bounded job: <= m_bits longs back to the driver, packed
+    # into an m_bits/64-word bitmap literal (the PQ-codebook /
+    # centroid-literal posture)
+    n_words = (m_bits + 63) // 64
+    words = [0] * n_words
+    for r in epos.collect():
+        p = int(r.p)
+        words[p >> 6] |= 1 << (p & 63)
+    # two's-complement: a word with bit 63 set must bake as the
+    # equivalent NEGATIVE long (getbit reads the binary pattern)
+    bm = F.array(
+        *[
+            F.lit(w - (1 << 64) if w >= (1 << 63) else w).cast("long")
+            for w in words
+        ]
+    )
+    hit = lambda p: F.getbit(  # noqa: E731
+        F.element_at(bm, (p / 64).cast("int") + 1), (p % 64).cast("int")
+    )
+    counted = nh.select(
+        "id",
+        "h",
+        # NULL positions (NULL text) count as misses, matching the
+        # oracle's match-nothing LEFT JOIN
+        F.aggregate(
+            F.col("pos"),
+            F.lit(0).cast("long"),
+            lambda acc, p: acc + F.coalesce(hit(p), F.lit(0)),
+        ).alias("n_hit"),
+    )
 
     truth = eh.select(F.col("h").alias("_eh"), F.lit(1).alias("_seen"))
     out = counted.join(truth, counted.h == F.col("_eh"), "left")
     maybe = (F.col("n_hit") == k).cast("long")
     exact = F.coalesce(F.col("_seen").cast("long"), F.lit(0).cast("long"))
     return out.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias(DOC_ID),
         F.col("n_hit"),
         maybe.alias("maybe_dup"),
         exact.alias("exact_dup"),
@@ -699,30 +673,6 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame
     )
 
 
-def _np_round_half_up(sims, round_to: int):
-    """Vectorized Spark-``F.round`` semantics (decimal HALF_UP) for a
-    numpy similarity matrix/array — np.round is half-to-even and the
-    two disagree exactly on decimal midpoints representable in binary
-    (ADVICE r6). Entries where the scale shift lands within float
-    error of an integer get the decimal-exact ``_round_half_up``
-    recomputation, the only region where the float formulation can
-    disagree with the decimal one."""
-    import numpy as np
-
-    scale = float(10**round_to)
-    shifted = np.abs(sims) * scale + 0.5
-    rounded = np.copysign(np.floor(shifted), sims) / scale
-    border = np.abs(shifted - np.rint(shifted)) < 1e-8
-    if border.any():
-        from .similarity import _round_half_up
-
-        it = np.argwhere(border)
-        for idx in it:
-            key = tuple(idx)
-            rounded[key] = _round_half_up(float(sims[key]), round_to)
-    return rounded
-
-
 def _star_contract(edges: DataFrame, max_rounds: int = 60) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -867,9 +817,14 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     # so the checkpoint's tail back-fills with edge tasks.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     nodes = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
     with ThreadPoolExecutor(max_workers=1) as _pool:
-        _edges_fut = _pool.submit(edges.count)
+        # the pool thread inherits the caller's job group and tags
+        _edges_fut = _pool.submit(
+            inheritable_thread_target(edges.sparkSession)(edges.count)
+        )
         labels = nodes.select(
             "id", F.col("id").alias("cluster_id")
         ).localCheckpoint(eager=True)
@@ -1004,64 +959,6 @@ def keep_best(docs: DataFrame, pairs: DataFrame, score_col: str) -> DataFrame:
     return docs.join(winners, DOC_ID)
 
 
-def _semantic_near_gemm(
-    cells: DataFrame, threshold: float, round_to: int
-) -> DataFrame:
-    """Per-cell SemDeDup verdicts via one BLAS GEMM per cell: for each
-    vector, the count of LOWER-ID cell-mates whose rounded cosine meets
-    ``threshold`` and the smallest such id. Input (id, v, cell); output
-    (id, n_near, witness_id) — only ids with n_near > 0 are emitted
-    (the caller left-joins and coalesces). The qualifying-pair set is
-    reduced inside the kernel, never materialized as rows: output is
-    O(cell size), not O(pairs). Cosine = normalized GEMM rounded to
-    ``round_to`` with Spark ``F.round`` semantics — HALF_UP, away from
-    zero on decimal midpoints, NOT numpy's half-to-even (ADVICE r6):
-    the bulk uses the vectorized floor(|x|·10^p + 0.5) formulation and
-    any entry within float error of an integer boundary of that shift
-    (the only place the formulations can disagree) is recomputed with
-    the decimal-exact ``_round_half_up`` — so the qualifying set
-    matches the Column fold arm bit-for-bit (GEMM dot-product fold
-    order remains the one residual difference; arm agreement is
-    pytest-enforced).
-
-    Memory: one cell's k x k similarity tile must fit per task (a 50k
-    cell at float64 is ~20 GB — size n_cells so cells stay in the
-    hundreds-to-thousands, the SemDeDup posture; tile the GEMM inside
-    this kernel if a skewed cell must exceed that).
-    """
-    import numpy as np
-    import pandas as pd
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"id": [], "n_near": [], "witness_id": []}).astype(
-                {"id": "int64", "n_near": "int64", "witness_id": "int64"}
-            )
-        order = np.argsort(pdf["id"].to_numpy(), kind="stable")
-        ids = pdf["id"].to_numpy()[order]
-        mat = np.vstack(pdf["v"].to_numpy()[order]).astype("float64")
-        norms = np.sqrt((mat * mat).sum(axis=1, keepdims=True))
-        normed = mat / norms
-        sims = normed @ normed.T
-        # Spark F.round semantics (shared _np_round_half_up helper)
-        rounded = _np_round_half_up(sims, round_to)
-        hit = np.triu(rounded >= threshold, k=1)
-        n_near = hit.sum(axis=0)
-        witness_idx = hit.argmax(axis=0)  # first True row = lowest id
-        keep = n_near > 0
-        return pd.DataFrame(
-            {
-                "id": ids[keep],
-                "n_near": n_near[keep].astype("int64"),
-                "witness_id": ids[witness_idx[keep]],
-            }
-        )
-
-    return cells.groupBy("cell").applyInPandas(
-        per_cell, "id long, n_near long, witness_id long"
-    )
-
-
 def semantic_dedup(
     emb: DataFrame,
     dim: int,
@@ -1099,51 +996,29 @@ def semantic_dedup(
     floats only through the compare, so a last-ulp divergence flips a
     row only if a pair's cosine sits within ~1e-12 of the threshold.
 
-    Arms: at or below the oracle-scale term count ``n_cells * dim <=
-    similarity.GEMM_ASSIGN_MIN_TERMS`` the Column arms run end to end
-    (the oracle-bearing configuration); above it Arrow/numpy arms run
-    for BOTH the Lloyd assign and the within-cell pair scoring (one
-    BLAS GEMM per cell instead of per-pair lambda folds) — at 20k
-    vectors x 80 cells the fold arms measure ~41 s vs ~2 s for gemm,
-    same output (arm agreement pytest-enforced).
+    One formulation at every size: Column folds for both the Lloyd
+    assign and the within-cell pair scoring (the oracle-bearing
+    configuration). A cell's pairs are scored one lambda fold each, so
+    large cells plan and run slowly; the SemDeDup answer is more cells.
     """
-    from .similarity import _use_gemm, ivf_assign  # deferred:
+    from .similarity import ivf_assign  # deferred:
     # mirrors similarity's own deferred import of dedup._persist
 
-    use_gemm = _use_gemm(n_cells * dim)
     assigned, _ = ivf_assign(emb, dim, n_centroids=n_cells)
-    # nrm is only read by the fold arm's cosine — the GEMM kernel
-    # normalizes internally from v, so on the large-corpus path the
-    # persisted cache carries (and the persist computes) no norm fold
-    e = _persist(
-        assigned if use_gemm else assigned.withColumn("nrm", V.norm(F.col("v")))
+    e = _persist(assigned.withColumn("nrm", V.norm(F.col("v"))))
+    a = spread(e).alias("a")
+    b = e.alias("b")
+    cos = V.dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
+    near = (
+        a.join(b, F.col("a.cell") == F.col("b.cell"))
+        .filter(F.col("a.id") < F.col("b.id"))
+        .filter(F.round(cos, 6) >= threshold)
+        .groupBy(F.col("b.id").alias("id"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_near"),
+            F.min(F.col("a.id")).alias("witness_id"),
+        )
     )
-    if use_gemm:
-        # one GEMM per cell, and the count/min verdicts are REDUCED
-        # INSIDE the kernel — the qualifying pairs are never
-        # materialized as rows. With near-dup groups of size g the pair
-        # set is O(g^2) while the verdict is O(n); emitting pairs made
-        # the sf10 fixture output-bound at ~10^8 rows for a 2*10^5-row
-        # answer (measured 80 s of pure pair traffic, NOTES_r6).
-        near = _semantic_near_gemm(
-            e.select("id", "v", "cell"), threshold=threshold, round_to=6
-        )
-    else:
-        a = spread(e).alias("a")
-        b = e.alias("b")
-        cos = V.dot(F.col("a.v"), F.col("b.v")) / (
-            F.col("a.nrm") * F.col("b.nrm")
-        )
-        near = (
-            a.join(b, F.col("a.cell") == F.col("b.cell"))
-            .filter(F.col("a.id") < F.col("b.id"))
-            .filter(F.round(cos, 6) >= threshold)
-            .groupBy(F.col("b.id").alias("id"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_near"),
-                F.min(F.col("a.id")).alias("witness_id"),
-            )
-        )
     return (
         e.join(near, "id", "left")
         .select(

@@ -144,62 +144,10 @@ def lsh_topk(
     )
 
 
-#: Above this many literal terms (n_centroids × dim) the centroid set is
-#: no longer baked into the plan as literals: millions of Catalyst
-#: expression nodes risk analysis blow-up and codegen fallback (64 KB
-#: method / constant-pool limits). Past the threshold, assign and probe
-#: selection switch to a broadcast-centroid join (the MLlib formulation)
-#: with identical semantics and tie-breaks.
-MAX_CENTROID_LITERAL_TERMS = 32768
-
-#: Lloyd mean step: up to this vector width the element-wise mean runs
-#: as ``dim`` avg columns in ONE groupBy(cell) (map-side combined, no
-#: posexplode row blow-up); wider vectors fall back to the two-shuffle
-#: posexplode formulation to keep the aggregate column count bounded.
-MAX_MEAN_COLUMNS = 256
-
 #: Decimal places every Lloyd centroid coordinate is rounded to after
 #: the mean step (the ``ivf_assign`` docstring: what makes the quantizer
 #: reproducible across engines, so its SQL oracles replay it exactly).
 ROUND_MEANS = 6
-
-#: (r6 had a MIN_ROWS_FOR_COLUMN_MEAN row-count dispatch here: the
-#: per-column mean built via dim separate agg Columns cost ~1.2 s of
-#: py4j/plan time per iteration, so small corpora used posexplode.
-#: r11 generates the dim avg columns as ONE expression string, which
-#: removed that fixed cost — the column arm is now a wash at 2k rows
-#: and ~26% faster at 500k, so the dispatch and its dedicated count()
-#: job are gone; both formulations are bit-identical under
-#: ``ROUND_MEANS``, pytest-enforced.)
-
-#: Above this many n_centroids x dim terms, the IVF operators route the
-#: Lloyd assign through the Arrow/numpy GEMM arm instead of
-#: the Column fold. The fold's zip_with/aggregate lambdas evaluate per
-#: ELEMENT (~0.2 us each — Catalyst can't codegen across LambdaVariable),
-#: so one assign pass costs rows x n_centroids x dim lambda steps: at
-#: 20k rows x 80 cells x dim 64 that measured ~23 s/pass on local[32],
-#: and unrolling the fold into a literal 5120-term expression chain was
-#: 10x WORSE (codegen blow-up -> interpreted tree walk). The GEMM arm
-#: does the same math as one BLAS call per Arrow batch (~ms). Kept above
-#: the oracle configs' sizes (8 x 64 = 512) so every oracle-bearing
-#: query stays on the bit-exact fold by default.
-GEMM_ASSIGN_MIN_TERMS = 2048
-
-
-def _use_gemm(n_terms: int) -> bool:
-    """ONE spelling of the fold-vs-gemm dispatch shared by the Lloyd
-    fit, ivf_topk's probes, ivfpq_topk and dedup.semantic_dedup —
-    hand-copies of the threshold compare could otherwise drift and
-    route the corpus assign and the probe selection through different
-    arms within a single call."""
-    return n_terms > GEMM_ASSIGN_MIN_TERMS
-
-
-def _centroid_df(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(int(cell), [float(x) for x in cvec]) for cell, cvec in cents],
-        "cell INT, cvec ARRAY<DOUBLE>",
-    )
 
 
 def _dlit(x: float) -> str:
@@ -262,96 +210,6 @@ def _centroid_struct_array(cents: list[tuple[int, list[float]]]) -> F.Column:
     return F.expr(f"array({structs})")
 
 
-def _gemm_assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """Arrow/numpy Lloyd assign: per batch, squared distances to every
-    centroid via the GEMM identity ||v||^2 - 2 v.C^T + ||c||^2, argmin
-    along centroids sorted by cell ASC (numpy's first-min = the lowest
-    cell on exact ties — the fold arm's (dist asc, cell asc) tie-break).
-
-    ARGMIN-equivalent to the fold arm, not bit-identical in the distance:
-    the expansion reorders float ops, so an assignment can differ only
-    when two centroids sit within ~1e-10 relative distance of the same
-    vector without being byte-identical (byte-identical duplicates
-    produce byte-identical distance columns in both arms and tie-break
-    the same way). Arm-equality on real corpora is pytest-enforced;
-    oracle-bearing configs stay below GEMM_ASSIGN_MIN_TERMS and never
-    take this arm on 'auto'.
-    """
-    import numpy as np
-    import pandas as pd
-
-    order = sorted(cents, key=lambda t: t[0])
-    cell_ids = np.array([c for c, _ in order], dtype="int64")
-    cmat = np.array([v for _, v in order], dtype="float64")  # (k, d)
-    cnorm = (cmat * cmat).sum(axis=1)  # (k,)
-
-    def part(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.vstack(pdf["v"].to_numpy()).astype("float64")  # (n, d)
-            d2 = (
-                (mat * mat).sum(axis=1, keepdims=True)
-                - 2.0 * (mat @ cmat.T)
-                + cnorm
-            )
-            idx = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {"id": pdf["id"], "v": pdf["v"], "cell": cell_ids[idx].astype("int32")}
-            )
-
-    # id dtype follows the INPUT (the fold arm is id-type-agnostic; a
-    # hardcoded long here would make a scale-up past the auto threshold
-    # break string/decimal ids that worked on the fold arm)
-    id_t = vecs.schema["id"].dataType.simpleString()
-    return vecs.mapInPandas(part, f"id {id_t}, v array<double>, cell int")
-
-
-def _gemm_probes(
-    q: DataFrame, cents: list[tuple[int, list[float]]], n_probe: int
-) -> DataFrame:
-    """Arrow/numpy probe selection: each query's ``n_probe`` nearest
-    cells by the same GEMM distance identity as ``_gemm_assign``, ties
-    to the lower cell (stable argsort over centroids ordered by cell
-    ASC = the fold arm's (dist asc, cell asc)). Input (query_id, qv,
-    qn); output one row per (query, probed cell)."""
-    import numpy as np
-    import pandas as pd
-
-    order = sorted(cents, key=lambda t: t[0])
-    cell_ids = np.array([c for c, _ in order], dtype="int64")
-    cmat = np.array([v for _, v in order], dtype="float64")
-    cnorm = (cmat * cmat).sum(axis=1)
-    p = min(n_probe, len(order))
-
-    def part(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.vstack(pdf["qv"].to_numpy()).astype("float64")
-            d2 = (
-                (mat * mat).sum(axis=1, keepdims=True)
-                - 2.0 * (mat @ cmat.T)
-                + cnorm
-            )
-            idx = np.argsort(d2, axis=1, kind="stable")[:, :p]  # (n, p)
-            n = len(pdf)
-            rep = np.repeat(np.arange(n), p)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy()[rep],
-                    "qv": pdf["qv"].to_numpy()[rep],
-                    "qn": pdf["qn"].to_numpy()[rep],
-                    "cell": cell_ids[idx.ravel()].astype("int32"),
-                }
-            )
-
-    qid_t = q.schema["query_id"].dataType.simpleString()
-    return q.mapInPandas(
-        part, f"query_id {qid_t}, qv array<double>, qn double, cell int"
-    )
-
-
 def _sqdist(a: F.Column, b: F.Column) -> F.Column:
     """Squared L2 distance as a zip_with/aggregate fold (same expression —
     and therefore the same float evaluation order — on every call site,
@@ -396,13 +254,6 @@ def ivf_assign(
     ``Window.partitionBy(id)`` per iteration). The only shuffle per
     iteration is the groupBy(cell) mean, with map-side combine.
 
-    Above ``MAX_CENTROID_LITERAL_TERMS`` (n_centroids × dim literal
-    terms) the literal fold would bake millions of Catalyst nodes into
-    the plan (analysis blow-up, 64 KB codegen limits — ADVICE r4), so
-    assign switches to a broadcast-centroid join + min(struct) with the
-    identical (dist asc, cell asc) tie-break; bit-equivalence of the two
-    arms is pytest-enforced.
-
     Each centroid coordinate is rounded to ``ROUND_MEANS`` decimal places
     after the mean step. The mean over a distributed partition sum is
     order-nondeterministic in the last ulp; rounding makes the quantizer
@@ -411,14 +262,11 @@ def ivf_assign(
     same Lloyd iterations in SQL and must land on bit-identical
     centroids.
 
-    Assign arms: at or below ``GEMM_ASSIGN_MIN_TERMS`` centroid terms
-    the Column formulations above run (bit-exact vs the unrolled SQL
-    oracle — every oracle-bearing query's arm); above it the Arrow/numpy
-    argmin arm (``_gemm_assign``: same assignments in practice,
-    distances not bit-identical) — at large n_centroids the fold's
-    per-element lambda cost dominates the whole operator (measured
-    23 s/pass at 20k x 80 x 64 vs ~1 s for gemm). The loop always runs
-    both rounds, matching the oracle's unrolled CTE chain.
+    One assign formulation at every size: the literal fold, bit-exact
+    against the unrolled SQL oracle. Its plan carries n_centroids × dim
+    literal terms and evaluates a lambda per element, so it plans and
+    runs slowly far past the 8 × 64 every query uses. The loop always
+    runs both rounds, matching the oracle's unrolled CTE chain.
     """
     assignments, cents, _ = _ivf_fit(corpus, dim, n_centroids)
     centroids = corpus.sparkSession.createDataFrame(
@@ -432,8 +280,6 @@ def _ivf_fit(
     dim: int,
     n_centroids: int = 8,
     n_iters: int = 2,
-    id_col: str = VEC_ID,
-    vec_col: str = EMBEDDING,
     n_first: int = 0,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]], list]:
     """The Lloyd fit behind ``ivf_assign``: returns (assignments, the
@@ -463,7 +309,7 @@ def _ivf_fit(
     # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND, reproduced r12 on the
     # two-arm q_kmeans_quality union; needs_spread docstring).
     proj = corpus.select(
-        F.col(id_col).alias("id"), V.as_double(F.col(vec_col)).alias("v")
+        F.col(VEC_ID).alias("id"), V.as_double(F.col(EMBEDDING)).alias("v")
     )
     rebalance = needs_spread(proj)
     c = _persist(proj)
@@ -473,79 +319,21 @@ def _ivf_fit(
     cents: list[tuple[int, list[float]]] = [
         (i + 1, list(r.v)) for i, r in enumerate(first_rows[:n_centroids])
     ]
-    spark = corpus.sparkSession
-
-    use_gemm = _use_gemm(n_centroids * dim)
 
     def assign(vecs: DataFrame) -> DataFrame:
-        # large centroid sets: per-element lambda cost of the fold is the
-        # bottleneck (GEMM_ASSIGN_MIN_TERMS doc) — one BLAS call per
-        # Arrow batch instead; argmin-equivalence pytest-enforced
-        if use_gemm:
-            return _gemm_assign(vecs, cents)
-        if n_centroids * dim <= MAX_CENTROID_LITERAL_TERMS:
-            nearest = F.element_at(_nearest_cells(F.col("v"), cents), 1)
-            return vecs.withColumn("cell", nearest.cell).select("id", "v", "cell")
-        # large centroid sets: broadcast-join + min(struct(dist, cell)).
-        # Same _sqdist fold (same float order) and the struct min gives
-        # the identical (dist asc, cell asc) tie-break as the literal
-        # path. The scoring groupBy runs over DISTINCT vectors and the
-        # result joins back onto the input, so duplicate rows — same id
-        # or same (id, v) — keep their full multiplicity in both the
-        # returned assignments and the downstream Lloyd mean, exactly as
-        # the row-wise literal arm does (ADVICE r5: the previous
-        # groupBy(id, v) collapsed exact-duplicate rows and silently
-        # under-weighted them in the mean). Costs two bounded shuffles
-        # per assign (distinct + join-back), still far cheaper than a
-        # plan with millions of literal nodes.
-        d = _sqdist(F.col("v"), F.col("cvec"))
-        best_per_v = (
-            vecs.select("v")
-            .distinct()
-            .join(F.broadcast(_centroid_df(spark, cents)))
-            .groupBy("v")
-            .agg(
-                F.min(F.struct(d.alias("dist"), F.col("cell").alias("cell"))).alias(
-                    "best"
-                ),
-            )
-            .select(F.col("v").alias("_bv"), F.col("best.cell").alias("cell"))
-        )
-        return vecs.join(best_per_v, F.col("v") == F.col("_bv")).select(
-            "id", "v", "cell"
-        )
+        nearest = F.element_at(_nearest_cells(F.col("v"), cents), 1)
+        return vecs.withColumn("cell", nearest.cell).select("id", "v", "cell")
 
     def _mean_step(assigned: DataFrame) -> DataFrame:
-        # new centroid = element-wise mean of member vectors
-        if dim <= MAX_MEAN_COLUMNS:
-            # one map-side-combined shuffle: dim avg columns over
-            # groupBy(cell) — no posexplode (dim× row blow-up), no
-            # second shuffle to re-assemble the vector (r6; cut
-            # q_ann_ivf's per-iteration cost ~2x at sf10). Generated as
-            # ONE array(...) expression string (the _dlit lesson): the
-            # r6 small-corpus penalty that motivated a row-count
-            # dispatch was the per-column py4j/plan cost of dim
-            # separate agg Columns — built as one F.expr the arm is a
-            # wash at 2k rows (r11 interleaved A/B, bit-identical
-            # output) and still ~26% faster at 500k, so the dispatch
-            # (and its dedicated cached count() job per query) is gone.
-            terms = ", ".join(
-                f"round(avg(v[{i}]), {ROUND_MEANS})" for i in range(dim)
-            )
-            return assigned.groupBy("cell").agg(
-                F.expr(f"array({terms})").alias("cvec")
-            )
-        # very wide vectors: dim literal agg columns would bloat the
-        # plan/codegen — fall back to the posexplode formulation
-        # (2 shuffles, rows scale with dim)
-        exploded = assigned.select("cell", F.posexplode("v").alias("pos", "x"))
-        return (
-            exploded.groupBy("cell", "pos")
-            .agg(F.round(F.avg("x"), ROUND_MEANS).alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.transform(F.col("pm"), lambda s: s.m).alias("cvec"))
+        # new centroid = element-wise mean of member vectors: one
+        # map-side-combined shuffle of dim avg columns over
+        # groupBy(cell), generated as ONE array(...) expression string
+        # (the _dlit lesson: dim separate agg Columns cost a py4j
+        # round-trip each)
+        terms = ", ".join(
+            f"round(avg(v[{i}]), {ROUND_MEANS})" for i in range(dim)
         )
+        return assigned.groupBy("cell").agg(F.expr(f"array({terms})").alias("cvec"))
 
     for _ in range(n_iters):
         means = _mean_step(assign(c))
@@ -559,87 +347,48 @@ def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
     dim: int,
-    k: int = 5,
-    n_centroids: int = 8,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 3,
 ) -> DataFrame:
-    """IVF approximate top-k: corpus vectors live in their nearest
-    centroid's cell; each query probes its ``n_probe`` nearest cells and
-    scores only those members. The inverted-file analogue of lsh_topk —
+    """IVF approximate top-5 by cosine (rounded to 3 dp) over 8 Lloyd
+    cells: corpus vectors live in their nearest centroid's cell; each
+    query probes its ``n_probe`` nearest cells and scores only those
+    members. The inverted-file analogue of lsh_topk —
     data-adaptive cells instead of fixed hyperplanes.
 
     Probe selection is the same zero-shuffle literal fold as the assign
     step: sort the query's per-centroid distance array, slice the first
     ``n_probe``, explode — a narrow map, no join, no window. The member
     join carries no baked hint; AQE broadcasts the probe side at runtime
-    when its measured size allows (VERDICT r3). One dispatch routes
-    BOTH the corpus assign and the probe selection to the Arrow/numpy
-    arms (_gemm_assign/_gemm_probes) above GEMM_ASSIGN_MIN_TERMS
-    centroid terms — at large n_centroids the
-    per-element lambda cost of the folds dominates the whole query."""
+    when its measured size allows (VERDICT r3)."""
     # centroid rows come straight off the fit's driver-side list (a
     # LocalTableScan collect cost ~0.5 s of query execution per call —
     # measured r12)
-    assignments, cents, _ = _ivf_fit(
-        corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col
-    )
-    use_gemm = _use_gemm(n_centroids * dim)
+    assignments, cents, _ = _ivf_fit(corpus, dim, 8)
     members = assignments.select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "cell"
     ).withColumn("cn", V.norm(F.col("cv")))
 
     q = queries.select(
-        F.col(id_col).alias("query_id"), V.as_double(F.col(vec_col)).alias("qv")
+        F.col(VEC_ID).alias("query_id"), V.as_double(F.col(EMBEDDING)).alias("qv")
     ).withColumn("qn", V.norm(F.col("qv")))
-    if use_gemm:
-        probes = _gemm_probes(q, cents, n_probe)
-    elif n_centroids * dim <= MAX_CENTROID_LITERAL_TERMS:
-        probe_cells = F.slice(_nearest_cells(F.col("qv"), cents), 1, n_probe)
-        probes = (
-            q.withColumn("pc", probe_cells)
-            .select("query_id", "qv", "qn", F.explode("pc").alias("p"))
-            .select("query_id", "qv", "qn", F.col("p.cell").alias("cell"))
-        )
-    else:
-        # broadcast-centroid fallback (see ivf_assign.assign): collect the
-        # per-query distance structs, array_sort (dist asc, cell asc — the
-        # literal path's tie-break), slice the first n_probe
-        d = _sqdist(F.col("qv"), F.col("cvec"))
-        spark = queries.sparkSession
-        # group on (query_id, qv, qn) — duplicate query ids with
-        # different vectors keep independent probe sets (see assign)
-        probes = (
-            q.join(F.broadcast(_centroid_df(spark, cents)))
-            .groupBy("query_id", "qv", "qn")
-            .agg(
-                F.slice(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(d.alias("dist"), F.col("cell").alias("cell"))
-                        )
-                    ),
-                    1,
-                    n_probe,
-                ).alias("pc"),
-            )
-            .select("query_id", "qv", "qn", F.explode("pc").alias("p"))
-            .select("query_id", "qv", "qn", F.col("p.cell").alias("cell"))
-        )
+    probe_cells = F.slice(_nearest_cells(F.col("qv"), cents), 1, n_probe)
+    probes = (
+        q.withColumn("pc", probe_cells)
+        .select("query_id", "qv", "qn", F.explode("pc").alias("p"))
+        .select("query_id", "qv", "qn", F.col("p.cell").alias("cell"))
+    )
     cos = V.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
     scored = (
         members.join(probes, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cos, round_to).alias("cos"))
+        .select("query_id", "neighbor_id", F.round(cos, 3).alias("cos"))
         .filter(F.col("cos").isNotNull())  # zero-norm guard (see brute force)
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
+        F.col("rank") <= 5
     )
 
 
@@ -887,6 +636,21 @@ def pq_encode(corpus: DataFrame, books: list[list[list[float]]], dim: int) -> Da
     )
 
 
+def _collect_queries(queries: DataFrame):
+    """A pool-thread target collecting the query batch as (id, v) rows
+    by id. ``inheritable_thread_target`` hands the thread the caller's
+    job group and tags, so its job is counted with the caller's."""
+    from pyspark import inheritable_thread_target
+
+    return inheritable_thread_target(queries.sparkSession)(
+        lambda: queries.select(
+            F.col(VEC_ID).alias("id"), V.as_double(F.col(EMBEDDING)).alias("v")
+        )
+        .orderBy("id")
+        .collect()
+    )
+
+
 def pq_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5) -> DataFrame:
     """Asymmetric-distance PQ search: top-``k`` neighbors per query by
     ADC (sum over subspaces of the exact distance from the query
@@ -921,13 +685,7 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5) -> Data
     # the training-sample and query-batch collects are independent scan
     # jobs — overlap them (guide §2.6) instead of paying them serially
     with ThreadPoolExecutor(max_workers=1) as _pool:
-        _qfut = _pool.submit(
-            lambda: queries.select(
-                F.col(VEC_ID).alias("id"), V.as_double(F.col(EMBEDDING)).alias("v")
-            )
-            .orderBy("id")
-            .collect()
-        )
+        _qfut = _pool.submit(_collect_queries(queries))
         sample = [
             list(r.v)
             for r in corpus.select(
@@ -1043,25 +801,13 @@ def ivfpq_topk(
     # overlap it with the training's driver jobs (guide §2.6) instead
     # of paying it serially after them
     with ThreadPoolExecutor(max_workers=1) as _pool:
-        _qfut = _pool.submit(
-            lambda: queries.select(
-                F.col(VEC_ID).alias("id"), V.as_double(F.col(EMBEDDING)).alias("v")
-            )
-            .orderBy("id")
-            .collect()
-        )
-        # the fit and the sample path below take the same dispatch
-        # (ADVICE r11: two independent decisions could desync and train
-        # the PQ on cells that disagree with the engine's)
-        use_gemm = _use_gemm(n_centroids * dim)
+        _qfut = _pool.submit(_collect_queries(queries))
         assignments, cents, first_rows = _ivf_fit(
             corpus, dim, n_centroids,
             # fused init (VERDICT r11 #3): the PQ training sample is the
             # same lowest-id projection the init collect already takes —
-            # widen that collect instead of running a second job (the
-            # gemm arm keeps its own engine-cell collect below: pruning
-            # cannot skip an opaque mapInPandas)
-            n_first=0 if use_gemm else n_train,
+            # widen that collect instead of running a second job
+            n_first=n_train,
         )
         _q_collected = _qfut.result()
     cent_map = {cell: cvec for cell, cvec in cents}
@@ -1083,33 +829,19 @@ def ivfpq_topk(
         )
     else:
         enc_vec = F.col("v")
-    if use_gemm:
-        # gemm assign is an opaque mapInPandas — pruning can't skip it,
-        # so collect the engine's cells as before
-        sample_rows = [
-            (list(r.v), r.cell)
-            for r in assignments.select("id", "v", "cell")
-            .orderBy("id")
-            .limit(n_train)
-            .collect()
-        ]
-    else:
-        # fold arm: cell is a pure driver-replicable function of
-        # (v, cents) — _sqdist_py is the same left-to-right fold as the
-        # Column expression and min((dist, cell)) is the same
-        # (dist asc, cell asc) tie-break. The rows themselves came back
-        # with the init collect (n_first — the identical
-        # TakeOrdered over the persisted projection, one job earlier),
-        # so this arm now runs zero jobs.
-        sample_rows = [
-            (
-                list(r.v),
-                min(
-                    (_sqdist_py(list(r.v), cvec), cell) for cell, cvec in cents
-                )[1],
-            )
-            for r in first_rows
-        ]
+    # cell is a pure driver-replicable function of (v, cents):
+    # _sqdist_py is the same left-to-right fold as the Column expression
+    # and min((dist, cell)) is the same (dist asc, cell asc) tie-break.
+    # The rows themselves came back with the init collect (n_first — the
+    # identical TakeOrdered over the persisted projection), so the
+    # training sample costs no job of its own.
+    sample_rows = [
+        (
+            list(r.v),
+            min((_sqdist_py(list(r.v), cvec), cell) for cell, cvec in cents)[1],
+        )
+        for r in first_rows
+    ]
     if residual:
         sample = [
             [x - c for x, c in zip(v, cent_map[cell])] for v, cell in sample_rows

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import text as TX
 from ..functions.text import DOC_ID, TEXT
@@ -1952,15 +1951,6 @@ def bpe_train(docs: DataFrame, n_merges: int = 10) -> DataFrame:
     )
 
 
-#: Above this merge-table size ``bpe_encode_counts`` and
-#: ``bpe_encode_ids`` switch from the Column replace chain to the Arrow-batched ranked
-#: encoder: a real tokenizer ships ~32k merges, and a 32k-deep Column
-#: chain does not plan (Catalyst tree + codegen blow up long before
-#: that — measured: the chain arm is fine at 64, painful past a few
-#: hundred), while the pandas arm is flat in merge count.
-MAX_CHAIN_MERGES = 64
-
-
 def bpe_encode_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned BPE merge table (``bpe_train`` output order
     matters — merges apply sequentially) and report per-document BPE
@@ -1969,41 +1959,26 @@ def bpe_encode_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFra
 
     Returns (id, n_words, n_chars, n_bpe_tokens, chars_per_token).
 
-    Two arms, identical semantics (pytest-pinned equal on random
-    corpora and on the rank-resurrection adversarial case):
-
-    - ``chain`` (oracle parity, small tables): every word becomes its
-      SEP-delimited symbol string and the merge list applies as a fixed
-      chain of plain substring replaces inside ONE array transform.
-      Symbol counting needs no re-split: each symbol carries exactly
-      two SEP bytes, so n_symbols = SEP_count / 2.
-    - ``ranked`` (scale, real ~32k-rule tables): tokenize in Spark
-      (same ``TX.tokens``), then an Arrow-batched ``mapInPandas``
-      encodes each word against a rank dict with a monotone rank
-      floor — the fast-tokenizer move. Per-word results memoize across
-      the partition (Zipf: the hot vocabulary hits the cache).
-
-    Sequential == ranked-with-floor: one greedy left-to-right pass
-    removes EVERY occurrence of its pair (a survivor pair (s1,s2) in
-    the output would have been adjacent in the input and the scan
-    would have merged it), so each merge reaches its fixpoint in one
-    pass and never needs revisiting; the floor forbids re-applying an
-    earlier rank that a later merge resurrects (the replace chain
-    cannot go back either). The merge-table size dispatches: chain up
-    to ``MAX_CHAIN_MERGES`` merges, ranked above.
+    Every word becomes its SEP-delimited symbol string and the merge
+    list applies as a fixed chain of plain substring replaces inside ONE
+    array transform (oracle parity; pytest-pinned against a sequential
+    Python reference on random corpora and on the rank-resurrection
+    adversarial case). One greedy left-to-right replace removes EVERY
+    occurrence of its pair, so each merge reaches its fixpoint in one
+    pass and a pair a later merge resurrects is never revisited.
+    Symbol counting needs no re-split: each symbol carries exactly two
+    SEP bytes, so n_symbols = SEP_count / 2. The chain is one plan node
+    per merge: a real ~32k-rule table is still correct but plans
+    slowly; every query uses 10 merges.
     """
     sep = _BPE_SEP
-    # spread: both arms are per-doc encode maps (codegen'd replace
-    # chain / Arrow mapInPandas) whose cost is CPU, not I/O — a
-    # few-file corpus would serialize them on as few cores (r11
-    # interleaved A/B: bpe_encode/encode_ids/tokenizer_fertility all
-    # win; no-op at scale or on shuffle-bearing inputs).
+    # spread: the per-doc encode map (a codegen'd replace chain) costs
+    # CPU, not I/O — a few-file corpus would serialize it on as few
+    # cores (r11 interleaved A/B: bpe_encode/encode_ids/
+    # tokenizer_fertility all win; no-op at scale or on shuffle-bearing
+    # inputs).
 
     docs = spread(docs)
-    if len(merges) > MAX_CHAIN_MERGES:
-        return _bpe_encode_counts_ranked(
-            docs, merges, DOC_ID, TEXT, 6
-        )
 
     def encode(word):
         s = F.concat_ws(
@@ -2054,123 +2029,6 @@ def bpe_encode_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFra
         F.round(
             F.col("n_chars").cast("double") / F.col("n_bpe_tokens").cast("double"),
             6,
-        ),
-    )
-
-
-def _bpe_apply_ranked(
-    word: str,
-    ranks: dict[tuple[str, str], int],
-    merge_list: list[tuple[str, str]],
-) -> list[str]:
-    """One word through the rank-dict + MONOTONE-FLOOR greedy BPE —
-    the single implementation both ranked arms (counts and ids) share,
-    so the floor/tie-break discipline the oracle parity depends on can
-    never desync between them (the minhash-CTE lesson of r5). Per
-    round: lowest-rank adjacent pair at or above the floor, applied
-    greedily left-to-right non-overlapping; the floor then advances
-    past it (a later merge may resurrect an earlier rank's pair, which
-    the sequential replace chain can never revisit either)."""
-    syms = list(word)
-    floor = 0
-    while len(syms) > 1:
-        best = -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]), -1)
-            if r >= floor and (best == -1 or r < best):
-                best = r
-        if best == -1:
-            break
-        s1, s2 = merge_list[best]
-        out: list[str] = []
-        i = 0
-        n = len(syms)
-        while i < n:
-            if i + 1 < n and syms[i] == s1 and syms[i + 1] == s2:
-                out.append(s1 + s2)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-        floor = best + 1
-    return syms
-
-
-def _bpe_encode_counts_ranked(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    id_col: str,
-    text_col: str,
-    round_to: int,
-) -> DataFrame:
-    """The scale arm of ``bpe_encode_counts``: Arrow-batched per-word
-    BPE with a rank dict + monotone floor (exact sequential-chain
-    semantics — equivalence argument in the dispatcher docstring).
-
-    Plan shape: tokenization stays in Spark (the SAME ``TX.tokens``
-    split, so Java-vs-Python regex whitespace classes can never
-    diverge); ``mapInPandas`` sees (id, words) and is a NARROW map —
-    no shuffle, no collect, merge table broadcast via closure (~32k
-    rules ≈ a few MB). Per-word token counts memoize in a per-partition
-    dict: under a Zipfian vocabulary almost every lookup is a cache
-    hit, so the cost is O(unique words × merges applied), not
-    O(corpus tokens × merges) — the property that makes real
-    merge-table sizes feasible where the literal replace chain cannot
-    even plan.
-    """
-    import pandas as pd
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    merge_list = list(merges)
-    id_field = docs.schema[id_col]
-
-    words = docs.select(
-        F.col(id_col), TX.tokens(F.lower(F.col(text_col))).alias("ws")
-    )
-
-    def encode_partition(batches):
-        cache: dict[str, int] = {}
-
-        def n_syms(word: str) -> int:
-            hit = cache.get(word)
-            if hit is not None:
-                return hit
-            n = len(_bpe_apply_ranked(word, ranks, merge_list))
-            cache[word] = n
-            return n
-
-        for pdf in batches:
-            n_words, n_chars, n_toks = [], [], []
-            for ws in pdf["ws"]:
-                lst = list(ws)
-                n_words.append(len(lst))
-                n_chars.append(sum(len(w) for w in lst))
-                n_toks.append(sum(n_syms(w) for w in lst))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_words": pd.array(n_words, dtype="int64"),
-                    "n_chars": pd.array(n_chars, dtype="int64"),
-                    "n_bpe_tokens": pd.array(n_toks, dtype="int64"),
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType, id_field.nullable),
-            T.StructField("n_words", T.LongType(), False),
-            T.StructField("n_chars", T.LongType(), False),
-            T.StructField("n_bpe_tokens", T.LongType(), False),
-        ]
-    )
-    out = words.mapInPandas(encode_partition, schema)
-    # final projection shared with the chain arm — same F.round HALF_UP
-    return out.withColumn(
-        "chars_per_token",
-        F.round(
-            F.col("n_chars").cast("double") / F.col("n_bpe_tokens").cast("double"),
-            round_to,
         ),
     )
 
@@ -2268,8 +2126,8 @@ def tokenizer_fertility(docs: DataFrame, merges: list[tuple[str, str]]) -> DataF
     ratios rounded to 6 dp and NULL when their denominator is 0.
 
     Scale: the encode is ``bpe_encode_counts``' narrow per-doc map
-    (chain or ranked arm by table size — unchanged dispatch); the
-    stratum attach is an id-equi join (AQE-decided); the only new
+    (the replace chain); the stratum attach is an id-equi join
+    (AQE-decided); the only new
     shuffle is the strata-sized groupBy with map-side combine. Sums are
     exact BIGINTs, so the two divisions are single rounded IEEE ops —
     no float-accumulation parity question (the corpus_stats posture).
@@ -2354,11 +2212,9 @@ def bpe_encode_ids(
     the sequence serialized as a comma-joined string so both engines
     hash the same value (DuckDB/Arrow list renderings differ).
 
-    Same two arms and dispatcher as ``bpe_encode_counts`` (chain =
-    oracle parity at small merge tables; ranked = Arrow-batched
-    mapInPandas with the monotone rank floor for real ~32k-rule
-    tables); unknown symbols map to -1 (unreachable when the vocab is
-    derived from the same corpus).
+    Same replace chain as ``bpe_encode_counts`` (oracle parity);
+    unknown symbols map to -1 (unreachable when the vocab is derived
+    from the same corpus).
     """
     sep = _BPE_SEP
     # spread: same rationale as bpe_encode_counts (the vocab
@@ -2368,8 +2224,6 @@ def bpe_encode_ids(
     docs = spread(docs)
     if vocab is None:
         vocab = bpe_vocab(docs, merges)
-    if len(merges) > MAX_CHAIN_MERGES:
-        return _bpe_encode_ids_ranked(docs, merges, dict(vocab), DOC_ID, TEXT)
 
     def encode(word):
         s = F.concat_ws(
@@ -2415,66 +2269,6 @@ def bpe_encode_ids(
             "ids_csv"
         ),
     )
-
-
-def _bpe_encode_ids_ranked(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    vmap: dict[str, int],
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Scale arm of ``bpe_encode_ids``: the same rank-dict + monotone
-    floor encoder as ``_bpe_encode_counts_ranked``, memoizing the ID
-    LIST per unique word per partition."""
-    import pandas as pd
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    merge_list = list(merges)
-    id_field = docs.schema[id_col]
-
-    words = docs.select(
-        F.col(id_col), TX.tokens(F.lower(F.col(text_col))).alias("ws")
-    )
-
-    def encode_partition(batches):
-        cache: dict[str, list[int]] = {}
-
-        def word_ids(word: str) -> list[int]:
-            hit = cache.get(word)
-            if hit is not None:
-                return hit
-            ids = [
-                vmap.get(s, -1)
-                for s in _bpe_apply_ranked(word, ranks, merge_list)
-            ]
-            cache[word] = ids
-            return ids
-
-        for pdf in batches:
-            n_toks, csvs = [], []
-            for ws in pdf["ws"]:
-                ids: list[int] = []
-                for w in ws:
-                    ids.extend(word_ids(w))
-                n_toks.append(len(ids))
-                csvs.append(",".join(str(i) for i in ids))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_tokens": pd.array(n_toks, dtype="int64"),
-                    "ids_csv": pd.array(csvs, dtype="object"),
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType, id_field.nullable),
-            T.StructField("n_tokens", T.LongType(), False),
-            T.StructField("ids_csv", T.StringType(), False),
-        ]
-    )
-    return words.mapInPandas(encode_partition, schema)
 
 
 def pack_token_ids(docs: DataFrame, budget: int = 2048, n_shards: int = 8) -> DataFrame:

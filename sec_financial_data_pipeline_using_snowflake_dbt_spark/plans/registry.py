@@ -207,7 +207,7 @@ def sec_registry() -> Registry:
         lambda t: D.dim_filings(t["stg_pre"], t["stg_tag"], t["stg_num"], t["stg_sub"])
     )
     r.model("dim_date", [])(
-        lambda t: D.dim_date(SparkSession.getActiveSession())
+        lambda t: D.dim_date(SparkSession.active())
     )
 
     r.model("fact_spine", ["stg_num", "stg_pre", "stg_sub"], "cache")(

@@ -1327,9 +1327,13 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # the pool threads inherit the caller's job group and tags
+    force = inheritable_thread_target(spark)(_force)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(_force, band, "corpus_pipeline: minhash bands")
-        fb = pool.submit(_force, surv, "corpus_pipeline: exact-dedup survivors")
+        fa = pool.submit(force, band, "corpus_pipeline: minhash bands")
+        fb = pool.submit(force, surv, "corpus_pipeline: exact-dedup survivors")
         fa.result()
         fb.result()
     # near-dup arm: LSH candidates -> connected components -> keep the

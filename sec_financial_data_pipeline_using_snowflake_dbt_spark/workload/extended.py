@@ -406,10 +406,7 @@ def _ann_ivf_sql(
 @q("q_ann_ivf", _ann_ivf_sql())
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    return SIM.ivf_topk(
-        emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5, n_centroids=8,
-        n_probe=3,
-    )
+    return SIM.ivf_topk(emb.filter(F.col("vec_id") < 8), emb, dim=64, n_probe=3)
 
 
 # ---------------------------------------------------------------------------
@@ -903,10 +900,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 8)
     exact = SIM.brute_force_topk(qs, emb, k=5)
-    approx = SIM.ivf_topk(
-        emb.filter(F.col("vec_id") < 8), emb, dim=64, k=5, n_centroids=8,
-        n_probe=3,
-    )
+    approx = SIM.ivf_topk(emb.filter(F.col("vec_id") < 8), emb, dim=64, n_probe=3)
     hits = (
         exact.join(
             approx.select("query_id", "neighbor_id"),

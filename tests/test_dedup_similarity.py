@@ -11,7 +11,7 @@ from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators import (
     similarity as SIM,
 )
 
-from .conftest import SF_SMOKE, under_thresholds
+from .conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -85,7 +85,7 @@ def test_similarity_plans_no_unbounded_broadcast(spark, emb):
     queries = emb.filter(F.col("vec_id") < 10)
     for df in (
         SIM.lsh_topk(queries, emb, dim=64),
-        SIM.ivf_topk(queries, emb, dim=64, k=5),
+        SIM.ivf_topk(queries, emb, dim=64),
     ):
         logical = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in logical and "UnresolvedHint" not in logical
@@ -121,75 +121,19 @@ def test_ivf_assign_stage_shuffle_free(spark, emb):
     assert cents.count() == 8
 
 
-def test_ivf_broadcast_fallback_matches_literal_path(spark, emb):
-    """Above MAX_CENTROID_LITERAL_TERMS, ivf assign/probe switch from the
-    literal-centroid fold to a broadcast-centroid join (ADVICE r4: huge
-    centroid sets would bake millions of Catalyst nodes). Both arms use
-    the same _sqdist fold and (dist asc, cell asc) tie-break, so results
-    must be IDENTICAL."""
-    import sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.similarity as S
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    lit_topk = SIM.ivf_topk(queries, emb, dim=64, k=5, n_probe=3)
-    a_lit = {(r.query_id, r.neighbor_id, r.rank, r.cos) for r in lit_topk.collect()}
-    old = S.MAX_CENTROID_LITERAL_TERMS
-    S.MAX_CENTROID_LITERAL_TERMS = 0  # force the join arm
-    try:
-        jn_topk = SIM.ivf_topk(queries, emb, dim=64, k=5, n_probe=3)
-        # the join arm must carry exactly the intended broadcast hint
-        logical = jn_topk._jdf.queryExecution().analyzed().toString()
-        assert "ResolvedHint" in logical or "UnresolvedHint" in logical
-        a_jn = {(r.query_id, r.neighbor_id, r.rank, r.cos) for r in jn_topk.collect()}
-    finally:
-        S.MAX_CENTROID_LITERAL_TERMS = old
-    assert a_lit == a_jn
-
-
-def test_ivf_join_arm_preserves_duplicate_rows(spark, emb):
-    """ADVICE r5: the join arm's old groupBy(id, v) collapsed exact
-    duplicate rows, under-weighting them in the Lloyd mean. Both arms
-    must return one assignment row per INPUT row (duplicates included)
-    and land on bit-identical centroids on a corpus with repeats."""
-    import sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.similarity as S
-
+def test_ivf_assign_preserves_duplicate_rows(spark, emb):
+    """ADVICE r5: the assign returns one row per INPUT row, so exact
+    duplicate rows keep their full weight in the Lloyd mean instead of
+    collapsing; a repeated row lands in its original's cell."""
     base = emb.filter(F.col("vec_id") < 20)
     dup = base.unionAll(emb.filter(F.col("vec_id") < 5))  # 5 exact repeats
-    a_lit, c_lit = SIM.ivf_assign(dup, dim=64, n_centroids=4)
-    rows_lit = sorted((r.id, r.cell) for r in a_lit.collect())
-    cents_lit = {(r.cell, tuple(r.cvec)) for r in c_lit.collect()}
-    old = S.MAX_CENTROID_LITERAL_TERMS
-    S.MAX_CENTROID_LITERAL_TERMS = 0  # force the join arm
-    try:
-        a_jn, c_jn = SIM.ivf_assign(dup, dim=64, n_centroids=4)
-        rows_jn = sorted((r.id, r.cell) for r in a_jn.collect())
-        cents_jn = {(r.cell, tuple(r.cvec)) for r in c_jn.collect()}
-    finally:
-        S.MAX_CENTROID_LITERAL_TERMS = old
-    assert len(rows_lit) == 25  # multiplicity preserved, not collapsed
-    assert rows_lit == rows_jn
-    assert cents_lit == cents_jn
-
-
-def test_ivf_mean_column_and_posexplode_paths_agree(spark, emb):
-    """The r6 single-shuffle column-avg mean must produce the same
-    rounded centroids and assignments as the posexplode fallback used
-    above MAX_MEAN_COLUMNS (ROUND_MEANS pins the last-ulp summation
-    nondeterminism both paths share)."""
-    import sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.similarity as S
-
-    a_col, c_col = SIM.ivf_assign(emb, dim=64, n_centroids=4)
-    cents_col = {(r.cell, tuple(r.cvec)) for r in c_col.collect()}
-    rows_col = sorted((r.id, r.cell) for r in a_col.collect())
-    old = S.MAX_MEAN_COLUMNS
-    S.MAX_MEAN_COLUMNS = 0  # force the posexplode arm
-    try:
-        a_pe, c_pe = SIM.ivf_assign(emb, dim=64, n_centroids=4)
-        cents_pe = {(r.cell, tuple(r.cvec)) for r in c_pe.collect()}
-        rows_pe = sorted((r.id, r.cell) for r in a_pe.collect())
-    finally:
-        S.MAX_MEAN_COLUMNS = old
-    assert cents_col == cents_pe
-    assert rows_col == rows_pe
+    assigned, _ = SIM.ivf_assign(dup, dim=64, n_centroids=4)
+    rows = sorted((r.id, r.cell) for r in assigned.collect())
+    assert len(rows) == 25  # multiplicity preserved, not collapsed
+    cells: dict = {}
+    for vid, cell in rows:
+        cells.setdefault(vid, set()).add(cell)
+    assert all(len(c) == 1 for c in cells.values())
 
 
 def test_simhash_is_16_bit(spark, docs):
@@ -284,8 +228,8 @@ def test_simhash_wide_uses_sign_bit(spark, docs):
 def test_ivf_topk_recall_and_determinism(spark, emb):
     queries = emb.filter(F.col("vec_id") < 10)
     exact = SIM.brute_force_topk(queries, emb, k=5)
-    ivf1 = SIM.ivf_topk(queries, emb, dim=64, k=5, n_centroids=8, n_probe=3)
-    ivf2 = SIM.ivf_topk(queries, emb, dim=64, k=5, n_centroids=8, n_probe=3)
+    ivf1 = SIM.ivf_topk(queries, emb, dim=64, n_probe=3)
+    ivf2 = SIM.ivf_topk(queries, emb, dim=64, n_probe=3)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a1 = {(r.query_id, r.neighbor_id, r.rank) for r in ivf1.collect()}
     a2 = {(r.query_id, r.neighbor_id, r.rank) for r in ivf2.collect()}
@@ -381,6 +325,39 @@ def test_dedup_clusters_chain_and_singletons(spark):
         r.id: r.cluster_id for r in dedup_clusters(pairs, nodes=nodes).collect()
     }
     assert got == {1: 1, 2: 2, 7: 2, 9: 2, 4: 4, 5: 4}
+
+
+def test_dedup_clusters_helper_jobs_join_the_callers_group(spark):
+    """The edge-list count dedup_clusters runs from a pool thread is
+    tracked under the caller's job group, like every job it runs on the
+    caller's own thread."""
+    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.dedup import (
+        dedup_clusters,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def last_job(group: str) -> int:
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return max(tracker.getJobIdsForGroup(group))
+
+    pairs = spark.createDataFrame([(2, 7), (7, 9)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 7, 9)], "id long")
+    try:
+        before = last_job("clusters-before")
+        sc.setJobGroup("clusters", "clusters")
+        got = {r.id: r.cluster_id for r in dedup_clusters(pairs, nodes=nodes).collect()}
+        after = last_job("clusters-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == {1: 1, 2: 2, 7: 2, 9: 2}
+    # job ids are sequential: every id between the two markers is a job
+    # dedup_clusters started, the helper thread's edges.count included
+    started = set(range(before + 1, after))
+    assert started and started <= set(tracker.getJobIdsForGroup("clusters"))
 
 
 def test_dedup_clusters_long_chain_converges(spark):
@@ -922,61 +899,6 @@ def test_semantic_dedup_extremes(spark, emb):
                 assert m.keep == 0 and m.witness_id == ids[0]
 
 
-def _fold_and_gemm(fn):
-    """``fn()`` built once per arm of the fold-vs-gemm dispatch: a
-    threshold no config reaches keeps the Column fold, a zero threshold
-    routes the Arrow/numpy GEMM arm."""
-    return under_thresholds(SIM, "GEMM_ASSIGN_MIN_TERMS", (1 << 62, 0), fn)
-
-
-def test_ivf_assign_gemm_arm_matches_fold(spark, emb):
-    """The Arrow/numpy GEMM assign arm produces the identical
-    (id, cell) assignment as the Column fold arm (argmin equivalence:
-    GEMM_ASSIGN_MIN_TERMS doc), at both an oracle-scale and a
-    large-cell-count configuration."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.similarity import (
-        ivf_assign,
-    )
-
-    for k in (8, 40):
-        (fold, _), (gemm, _) = _fold_and_gemm(
-            lambda: ivf_assign(emb, 64, n_centroids=k)
-        )
-        a = {r.id: r.cell for r in fold.collect()}
-        b = {r.id: r.cell for r in gemm.collect()}
-        assert a == b, f"assign arms diverge at n_centroids={k}"
-
-
-def test_semantic_dedup_gemm_strategy_matches_fold(spark, emb):
-    """semantic_dedup's GEMM arm (GEMM assign + GEMM pair scoring)
-    returns the same rows as its Column fold arm."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.dedup import (
-        semantic_dedup,
-    )
-
-    fold, gemm = _fold_and_gemm(
-        lambda: semantic_dedup(emb, dim=64, n_cells=8, threshold=0.4)
-    )
-    key = lambda r: (r.vec_id, r.cell, r.n_near, r.witness_id, r.keep)  # noqa: E731
-    assert sorted(map(key, fold.collect())) == sorted(map(key, gemm.collect()))
-
-
-def test_ivf_topk_gemm_arm_matches_fold(spark, emb):
-    """ivf_topk with the Arrow/numpy probe+assign arms returns the same
-    result set as the Column fold arms (same cells probed, same rounded
-    cosines, same ranks)."""
-    from sec_financial_data_pipeline_using_snowflake_dbt_spark.operators.similarity import (
-        ivf_topk,
-    )
-    from pyspark.sql import functions as SF
-
-    qs = emb.filter(SF.col("vec_id") < 8)
-    kw = dict(dim=64, k=5, n_centroids=8, n_probe=3)
-    fold, gemm = _fold_and_gemm(lambda: ivf_topk(qs, emb, **kw))
-    key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.cos)  # noqa: E731
-    assert sorted(map(key, fold.collect())) == sorted(map(key, gemm.collect()))
-
-
 def test_bpe_train_greedy_merge_semantics(spark):
     """BPE invariants on a hand-checkable corpus: the top pair merges
     greedily left-to-right ('aaaa' + merge(a,a) yields two 'aa'
@@ -1139,25 +1061,31 @@ def test_cluster_sample_bounds(spark, emb):
 # ---------------------------------------------------------------------------
 # bloom_dedup (r7 late batch)
 # ---------------------------------------------------------------------------
-def _bloom_arms(*args, **kw):
-    """bloom_dedup's literal and join arms on one input: filters up to
-    BLOOM_LITERAL_MAX_BITS take the literal arm, and a zero threshold
-    routes the join arm."""
-    return under_thresholds(
-        DD, "BLOOM_LITERAL_MAX_BITS", (DD.BLOOM_LITERAL_MAX_BITS, 0),
-        lambda: DD.bloom_dedup(*args, **kw),
-    )
+def _bloom_slot_hits(new_texts, existing_texts, m_bits, k):
+    """Per new text, the number of its k Bloom hash slots whose
+    position is set by the existing texts: a plain-Python reference of
+    ``bloom_dedup``'s n_hit (the ``bloom_positions`` md5 derivation)."""
+    import hashlib
+
+    def positions(text):
+        h = hashlib.md5(text.encode()).hexdigest()
+        return [
+            int(hashlib.md5(f"{h}:{i}".encode()).hexdigest()[:15], 16) % m_bits
+            for i in range(k)
+        ]
+
+    bits = {p for t in existing_texts for p in positions(t)}
+    return [sum(p in bits for p in positions(t)) for t in new_texts]
 
 
 def test_bloom_dedup_no_false_negatives_and_arm_agreement(spark):
     """The Bloom guarantee: an exact duplicate can NEVER be missed
     (maybe_dup must be 1 wherever exact_dup is 1); false positives may
-    exist and are flagged. Literal-bitmap and join arms bit-agree."""
+    exist and are flagged. n_hit agrees with the Python reference."""
     rows = [(i, f"doc body {i % 7}") for i in range(40)]  # heavy dup load
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     new, existing = docs.filter("doc_id >= 20"), docs.filter("doc_id < 20")
-    lit_arm, join_arm = _bloom_arms(new, existing, m_bits=256, k=4)
-    got = lit_arm.collect()
+    got = sorted(DD.bloom_dedup(new, existing, m_bits=256, k=4).collect())
     assert len(got) == 20
     for r in got:
         assert not (r.exact_dup == 1 and r.maybe_dup == 0), r  # no false negs
@@ -1166,24 +1094,28 @@ def test_bloom_dedup_no_false_negatives_and_arm_agreement(spark):
     # every new doc's text repeats one of the existing 7 templates here,
     # so everything is an exact dup and must be flagged
     assert all(r.exact_dup == 1 and r.maybe_dup == 1 for r in got)
-    assert lit_arm.exceptAll(join_arm).count() == 0
-    assert join_arm.exceptAll(lit_arm).count() == 0
+    want = _bloom_slot_hits(
+        [t for _, t in rows[20:]], [t for _, t in rows[:20]], 256, 4
+    )
+    assert [r.n_hit for r in got] == want
 
 
 def test_bloom_dedup_counts_hash_slots_not_positions(spark):
     """n_hit counts hash functions: with m_bits tiny enough to force
-    position collisions within one doc's k hashes, both arms still
-    report identical per-slot counts (the semantics the oracle's
-    exploded LEFT JOIN replays)."""
+    position collisions within one doc's k hashes, a doc whose text is
+    in the existing set still reports all k slots (the semantics the
+    oracle's exploded LEFT JOIN replays)."""
     docs = spark.createDataFrame(
         [(0, "alpha"), (1, "beta"), (2, "gamma"), (3, "alpha")],
         "doc_id long, text string",
     )
     new, existing = docs.filter("doc_id >= 2"), docs.filter("doc_id < 2")
-    a, b = _bloom_arms(new, existing, m_bits=64, k=8)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    byid = {r.doc_id: r for r in a.collect()}
+    byid = {r.doc_id: r for r in DD.bloom_dedup(new, existing, m_bits=64, k=8).collect()}
     assert byid[3].exact_dup == 1 and byid[3].maybe_dup == 1
+    assert byid[3].n_hit == 8  # alpha's 8 slots fall on 7 distinct bits
+    assert [byid[2].n_hit, byid[3].n_hit] == _bloom_slot_hits(
+        ["gamma", "alpha"], ["alpha", "beta"], 64, 8
+    )
     with pytest.raises(ValueError):
         DD.bloom_dedup(new, existing, m_bits=32)
 
@@ -1244,15 +1176,14 @@ def test_bloom_and_classifier_null_text_match_oracle(spark):
         "CREATE VIEW documents AS SELECT * FROM (VALUES (0,'alpha'),"
         "(1,NULL),(2,'beta'),(3,'alpha')) t(doc_id, text)"
     )
-    arms = _bloom_arms(
+    got = DD.bloom_dedup(
         docs.filter("doc_id >= 1"), docs.filter("doc_id = 0"), m_bits=256, k=3
     )
-    for arm, got in zip(("literal", "join"), arms):
-        exp = con.execute(_bloom_sql(m_bits=256, k=3, split=1)).df()
-        assert not compare(got, exp, f"bloom-null-{arm}")
-        rows = {r.doc_id: r for r in got.collect()}
-        assert rows[1].n_hit == 0 and rows[1].maybe_dup == 0  # NULL text
-        assert rows[3].exact_dup == 1 and rows[3].maybe_dup == 1
+    exp = con.execute(_bloom_sql(m_bits=256, k=3, split=1)).df()
+    assert not compare(got, exp, "bloom-null")
+    rows = {r.doc_id: r for r in got.collect()}
+    assert rows[1].n_hit == 0 and rows[1].maybe_dup == 0  # NULL text
+    assert rows[3].exact_dup == 1 and rows[3].maybe_dup == 1
 
     cls = TO.hashed_linear_score(docs, dim=64)
     exp = con.execute(

@@ -24,6 +24,12 @@ A fourth check runs over the program *and* the tests: a defaulted
 parameter of a public package function or method that no call at all
 sets to another value is a constant spelled as a parameter, and should
 be one in the body.
+
+A fifth runs over the tests alone: a test that sets a package module's
+UPPER_CASE constant (``monkeypatch.setattr``, ``under_thresholds`` or an
+attribute assignment) reaches a path through that constant rather than
+through an input. Only thresholds that the input's size decides may be
+set so; any other constant's far side is a path no run takes.
 """
 
 from __future__ import annotations
@@ -79,6 +85,26 @@ ALLOWED_OPTIONS: dict[str, str] = {
     "plans/serve.py:filtered_read(sort=<expr>)": "serve API: a caller-chosen page order",
 }
 
+
+#: Package constants tests may set, keyed "<module>:<NAME>": size
+#: thresholds that a program run falls on either side of as its input
+#: grows. (Not checked instead: that some program value falls on each
+#: side of every threshold — once the value is a product such as
+#: ``n_centroids * dim``, the AST cannot decide it.)
+ALLOWED_PATCHED: dict[str, str] = {
+    "operators/textops.py:MAX_DRIVER_WORDS": (
+        "bpe_train: the corpus's distinct-word count picks the driver "
+        "or the distributed trainer"
+    ),
+    "operators/asof.py:AUTO_RANGE_JOIN_MAX_BYTES": (
+        "asof_join_auto: the inputs' size estimate picks the range join "
+        "or the window arm"
+    ),
+    "operators/similarity.py:BROADCAST_QUERY_MAX_BYTES": (
+        "brute_force_topk: the query side's size estimate picks the "
+        "broadcast"
+    ),
+}
 
 #: Defaulted parameters no call sets that stay, keyed
 #: "<module>:<function or Class.method>(<param>)".
@@ -436,6 +462,39 @@ def _unset_defaults() -> dict[str, int]:
     }
 
 
+def _patched_constants() -> dict[str, str]:
+    """Every package constant some test sets, keyed "<module>:<NAME>" →
+    where the first set is: an attribute stored under the constant's
+    name, or a ``setattr``/``under_thresholds`` call naming it in a
+    string (``"NAME"`` or a dotted ``"pkg.module.NAME"``)."""
+    consts: dict[str, list[str]] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        for name, _ in _top_level_defs(_parse(path)):
+            if name.isupper():
+                consts.setdefault(name, []).append(
+                    f"{path.relative_to(PKG).as_posix()}:{name}"
+                )
+    out: dict[str, str] = {}
+    for path in sorted((ROOT / "tests").rglob("*.py")):
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Store):
+                names = [node.attr]
+            elif isinstance(node, ast.Call) and _callee(node) in (
+                "setattr", "under_thresholds"
+            ):
+                names = [
+                    arg.value.rsplit(".", 1)[-1]
+                    for arg in node.args[:2]
+                    if isinstance(arg, ast.Constant) and isinstance(arg.value, str)
+                ]
+            else:
+                continue
+            for name in names:
+                for key in consts.get(name, []):
+                    out.setdefault(key, f"{path.name}:{node.lineno}")
+    return dict(sorted(out.items()))
+
+
 def test_no_package_def_is_reached_from_tests_alone():
     unreached = _unreached(_top_level_defs)
     extra = sorted(k for k in unreached if k not in ALLOWED)
@@ -480,11 +539,24 @@ def test_no_default_is_left_at_its_default():
     )
 
 
+def test_no_threshold_is_patched_from_tests_alone():
+    """A constant no program input moves past is one arm: delete its
+    far side, and test the arm that stays."""
+    patched = _patched_constants()
+    extra = [k for k in patched if k not in ALLOWED_PATCHED]
+    assert not extra, (
+        "package constants set only by tests: "
+        + ", ".join(f"{k} ({patched[k]})" for k in extra)
+    )
+
+
 def test_allowlist_is_current():
-    """An allowlisted def, method, option or default that is gone, or
-    that code now reaches or sets, leaves its list."""
+    """An allowlisted def, method, option, default or patched constant
+    that is gone, or that code now reaches or sets (or tests no longer
+    set), leaves its list."""
     stale = sorted(set(ALLOWED) - set(_unreached(_top_level_defs)))
     stale += sorted(set(ALLOWED_METHODS) - set(_unreached(_public_methods)))
     stale += sorted(set(ALLOWED_OPTIONS) - set(_test_only_arms()))
     stale += sorted(set(ALLOWED_DEFAULTS) - set(_unset_defaults()))
+    stale += sorted(set(ALLOWED_PATCHED) - set(_patched_constants()))
     assert not stale, f"remove from the allowlist: {stale}"

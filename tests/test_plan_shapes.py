@@ -157,7 +157,7 @@ def test_hashed_linear_score_is_shuffle_free(spark):
 
 
 def test_bloom_dedup_literal_probe_has_no_probe_side_join(spark):
-    """The literal-bitmap arm's probe is inline Column math: the ONLY
+    """The literal-bitmap probe is inline Column math: the ONLY
     join in the plan is the exact-truth hash join the FP measurement
     carries (and it must be a broadcast, never a sort-merge); the two
     exchanges are the bounded distinct builds on the existing side."""

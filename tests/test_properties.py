@@ -302,12 +302,33 @@ def test_bpe_train_matches_sequential_reference(spark, texts):
     assert got == expected
 
 
-def _bpe_chain_and_ranked(encode):
-    """Rows of ``encode()`` under bpe's chain arm (a threshold no table
-    reaches) and its ranked arm (a threshold every table passes)."""
-    return under_thresholds(
-        TO, "MAX_CHAIN_MERGES", (1 << 30, -1),
-        lambda: {r.doc_id: tuple(r) for r in encode().collect()},
+def _bpe_seq_encode(word: str, merges: list[tuple[str, str]]) -> list[str]:
+    """One word through the merge list applied in order, each merge a
+    greedy left-to-right non-overlapping pass: the sequential reference
+    the BPE encoders must match (the same loop the train property test
+    trusts)."""
+    syms = list(word)
+    for s1, s2 in merges:
+        out, i = [], 0
+        while i < len(syms):
+            if i + 1 < len(syms) and syms[i] == s1 and syms[i + 1] == s2:
+                out.append(s1 + s2)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        syms = out
+    return syms
+
+
+def _bpe_counts_reference(text: str, merges: list[tuple[str, str]]):
+    """(n_words, n_chars, n_bpe_tokens) of ``bpe_encode_counts`` for one
+    document, from ``_bpe_seq_encode``."""
+    words = text.lower().split()
+    return (
+        len(words),
+        sum(len(w) for w in words),
+        sum(len(_bpe_seq_encode(w, merges)) for w in words),
     )
 
 
@@ -318,50 +339,38 @@ def _bpe_chain_and_ranked(encode):
 )
 @settings(**_SETTINGS)
 def test_bpe_encode_arms_agree(spark, texts, n_merges):
-    """bpe_encode_counts' ranked (mapInPandas, rank dict + monotone
-    floor) arm == the chain (oracle-parity literal replace) arm on
-    random corpora with merges trained on the same corpus — the exact
-    sequential-semantics guarantee that lets auto-dispatch swap arms
-    by merge-table size."""
+    """bpe_encode_counts' replace chain == the sequential Python
+    reference on random corpora with merges trained on the same corpus:
+    word, char and BPE-token counts per document, and the rounded
+    chars-per-token ratio (NULL on a document with no tokens)."""
     rows = [(i, t) for i, t in enumerate(texts)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     merges = [
         (r.lhs, r.rhs) for r in TO.bpe_train(docs, n_merges=n_merges).collect()
     ]
-    chain, ranked = _bpe_chain_and_ranked(
-        lambda: TO.bpe_encode_counts(docs, merges)
-    )
-    assert chain == ranked
+    got = {r.doc_id: r for r in TO.bpe_encode_counts(docs, merges).collect()}
+    assert sorted(got) == [i for i, _ in rows]
+    for i, t in rows:
+        r = got[i]
+        n_words, n_chars, n_toks = _bpe_counts_reference(t, merges)
+        assert (r.n_words, r.n_chars, r.n_bpe_tokens) == (n_words, n_chars, n_toks)
+        # F.round's HALF_UP on the double ratio; NULL when 0 tokens
+        want = _r6(n_chars / n_toks) if n_toks else None
+        assert r.chars_per_token == want
 
 
 def test_bpe_encode_rank_resurrection(spark):
-    """The floor discipline: merges=[("a","bc"),("b","c")] on "abc" —
-    applying rank 1 creates the pair of rank 0, which the sequential
-    chain can never revisit. A naive min-rank loop (no floor) would
-    collapse "abc" to ONE token; both arms must yield TWO."""
+    """merges=[("a","bc"),("b","c")] on "abc": applying rank 1 creates
+    the pair of rank 0, which the sequential chain can never revisit. A
+    naive min-rank loop would collapse "abc" to ONE token; the encoder
+    must yield TWO."""
     docs = spark.createDataFrame(
         [(0, "abc"), (1, "abc bc a b c")], "doc_id long, text string"
     )
     merges = [("a", "bc"), ("b", "c")]
-    chain, ranked = _bpe_chain_and_ranked(
-        lambda: TO.bpe_encode_counts(docs, merges)
-    )
-    assert chain == ranked
-    assert chain[0][3] == 2  # n_bpe_tokens: (a)(bc), NOT (abc)
-
-
-def test_bpe_encode_auto_dispatch(spark):
-    """chain at small tables, ranked above MAX_CHAIN_MERGES — and both
-    produce the same rows either way (the 'aaaa' overlap word
-    exercises greedy non-overlapping replacement in both arms)."""
-    docs = spark.createDataFrame([(0, "aaaa aaa aa a")], "doc_id long, text string")
-    merges = [("a", "a"), ("aa", "aa"), ("aa", "a")]
-    small = TO.bpe_encode_counts(docs, merges)
-    assert "MapInPandas" not in small._jdf.queryExecution().executedPlan().toString()
-    big = merges + [(f"x{i}", f"y{i}") for i in range(TO.MAX_CHAIN_MERGES)]
-    ranked = TO.bpe_encode_counts(docs, big)
-    assert "MapInPandas" in ranked._jdf.queryExecution().executedPlan().toString()
-    assert [tuple(r) for r in ranked.collect()] == [tuple(r) for r in small.collect()]
+    got = {r.doc_id: r for r in TO.bpe_encode_counts(docs, merges).collect()}
+    assert got[0].n_bpe_tokens == 2  # (a)(bc), NOT (abc)
+    assert got[1].n_bpe_tokens == _bpe_counts_reference("abc bc a b c", merges)[2]
 
 
 @given(
@@ -371,38 +380,20 @@ def test_bpe_encode_auto_dispatch(spark):
 )
 @settings(**_SETTINGS)
 def test_bpe_encode_ids_arms_agree_and_match_reference(spark, texts, n_merges):
-    """bpe_encode_ids' chain and ranked arms agree on random corpora,
-    AND the emitted id sequence equals a sequential Python reference:
-    tokenize → per-word sequential merge application (same loop the
-    train property test trusts) → lookup in the bpe_vocab numbering.
-    This pins the ORDER of the sequence, which the counts encoder
-    never checks."""
+    """bpe_encode_ids' emitted id sequence equals a sequential Python
+    reference on random corpora: tokenize → per-word sequential merge
+    application → lookup in the bpe_vocab numbering. This pins the
+    ORDER of the sequence, which the counts encoder never checks."""
     rows = [(i, t) for i, t in enumerate(texts)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     merges = [
         (r.lhs, r.rhs) for r in TO.bpe_train(docs, n_merges=n_merges).collect()
     ]
     vocab = dict(TO.bpe_vocab(docs, merges))
-    chain, ranked = _bpe_chain_and_ranked(lambda: TO.bpe_encode_ids(docs, merges))
-    assert chain == ranked
-
-    def seq_encode(word: str) -> list[str]:
-        syms = list(word)
-        for s1, s2 in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == s1 and syms[i + 1] == s2:
-                    out.append(s1 + s2)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
+    got = {r.doc_id: tuple(r) for r in TO.bpe_encode_ids(docs, merges).collect()}
     for i, t in rows:
-        ids = [vocab[s] for w in t.lower().split() for s in seq_encode(w)]
-        assert chain[i] == (i, len(ids), ",".join(map(str, ids)))
+        ids = [vocab[s] for w in t.lower().split() for s in _bpe_seq_encode(w, merges)]
+        assert got[i] == (i, len(ids), ",".join(map(str, ids)))
 
 
 def test_bpe_vocab_first_id_wins_on_duplicate_symbol(spark):
@@ -1096,7 +1087,7 @@ def test_minhash_delta_equals_filtered_whole_corpus(spark, texts, split):
 )
 @settings(**_SETTINGS)
 def test_bloom_dedup_matches_reference(spark, texts, split, m_bits, k):
-    """Both bloom_dedup probe arms == a plain-Python Bloom filter built
+    """bloom_dedup == a plain-Python Bloom filter built
     with the same md5 position derivation — over corpora dense with
     exact duplicates, every split point (all-new / all-existing
     included), tiny filters (guaranteed collisions), and k up to 4.
@@ -1131,16 +1122,11 @@ def test_bloom_dedup_matches_reference(spark, texts, split, m_bits, k):
         want[doc_id] = (n_hit, maybe, exact, maybe * (1 - exact))
         assert not (exact and not maybe)  # reference sanity: Bloom law
 
-    # the literal arm below BLOOM_LITERAL_MAX_BITS, the join arm at 0
-    arms = under_thresholds(
-        DD, "BLOOM_LITERAL_MAX_BITS", (DD.BLOOM_LITERAL_MAX_BITS, 0),
-        lambda: {
-            r.doc_id: (r.n_hit, r.maybe_dup, r.exact_dup, r.false_positive)
-            for r in DD.bloom_dedup(new, existing, m_bits=m_bits, k=k).collect()
-        },
-    )
-    for arm, got in zip(("literal", "join"), arms):
-        assert got == want, arm
+    got = {
+        r.doc_id: (r.n_hit, r.maybe_dup, r.exact_dup, r.false_positive)
+        for r in DD.bloom_dedup(new, existing, m_bits=m_bits, k=k).collect()
+    }
+    assert got == want
 
 
 @given(

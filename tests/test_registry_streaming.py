@@ -87,6 +87,31 @@ def test_registry_rejects_unknown_names(spark, raw):
         reg.run(spark, dict(raw), select=["dim_date"])
 
 
+def test_registry_runs_off_the_main_thread(spark):
+    """A model that needs the session finds it from any thread: a plain
+    ``threading.Thread`` has no thread-local active session, so the
+    lookup must fall back to the process's one."""
+    import threading
+
+    out: dict = {}
+
+    def build():
+        try:
+            out["n"] = sec_registry().run(spark, {}, select=["dim_date"])[
+                "dim_date"
+            ].count()
+        except Exception as e:  # re-raised on the test's thread below
+            out["error"] = e
+
+    t = threading.Thread(target=build)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    if "error" in out:
+        raise out["error"]
+    assert out["n"] == 11323
+
+
 def test_registry_lineage_artifact(tmp_path_factory):
     import json
 
@@ -202,7 +227,7 @@ def test_classifier_and_bloom_probe_run_on_streams(spark):
     """Streaming-ingest shapes for the new curation stages: the
     hashed-linear classifier's derived arm is a stateless narrow fold,
     so the SAME code runs unchanged on a readStream source; and
-    bloom_dedup's literal arm probes a STREAMING new batch against a
+    bloom_dedup's bitmap probe runs on a STREAMING new batch against a
     STATIC seen corpus — the filter build (bounded distinct + collect)
     runs on the static side at plan time, the probe is a narrow fold,
     and the exact-truth check is a stream-static broadcast join. Both
